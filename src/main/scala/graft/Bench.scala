@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * JVM/codegen/session startup so the timed numbers measure plans, not
   * warmup (VERDICT r01: first-run queries absorbed ~16s of warmup).
   * Failures are recorded per-query ("errors" map, elapsed -1) instead of
-  * being swallowed as fast successes. */
+  * being swallowed as fast successes; warm-up and layout-setup failures
+  * go to stderr and, when there are any, to a "setup_errors" map in the
+  * file sink. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,11 +35,16 @@ object Bench {
     // an empty run (total=0) — warn like Verify does (ADVICE r12).
     only.foreach(_.diff(benchQueries.keySet).foreach(n =>
       System.err.println(s"[bench] WARNING: unknown query name '$n' ignored")))
+    // untimed steps: a failure must not stop the run, nor go unseen
+    var setupErrors = Vector.empty[(String, String)]
+    def setupStep(step: String)(f: => Unit): Unit =
+      try f catch { case e: Throwable =>
+        System.err.println(s"[bench] $step failed: $e")
+        setupErrors :+= step -> e.toString
+      }
     benchQueries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-    }
+      .foreach { case (name, fn) => setupStep(s"warmup/$name")(fn(spark, warmDir).count()) }
     // drop the warmup pass's checkpoint blocks before timing starts
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     // The write-once physical layouts (bucketed tables, partitioned
@@ -45,8 +52,8 @@ object Bench {
     // them for the timed dir up front so q_bucketed_join / q_dpp_join /
     // q_partition_pruned time the steady-state exchange-free/pruned
     // read, not the layout write they'd pay exactly once in production.
-    try graft.sources.Bucketed.setup(spark, sfDir) catch { case _: Throwable => () }
-    try { graft.sources.Partitioned.setup(spark, sfDir); () } catch { case _: Throwable => () }
+    setupStep("setup/bucketed")(graft.sources.Bucketed.setup(spark, sfDir))
+    setupStep("setup/partitioned") { graft.sources.Partitioned.setup(spark, sfDir); () }
 
     var times  = Vector.empty[(String, Double)]
     var errors = Vector.empty[(String, String)]
@@ -101,7 +108,8 @@ object Bench {
         .filterNot { case (id, _) => graft.ops.SharedArtifacts.isProtected(id) }
         .values.foreach(_.unpersist(blocking = false))
     }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
     def qjson(fmt: Double => String) =
       times.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
@@ -136,8 +144,10 @@ object Bench {
           math.max(timesMap.getOrElse(k, 0.0), 0.0) }.sum
         s"${jstr(fam)}:{${jstr("total")}:${full(tot)},${jstr("keys")}:$keys}"
     }.mkString("{", ",", "}")
+    val setupJson = if (setupErrors.isEmpty) "" else setupErrors
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(""","setup_errors":{""", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(full)},"errors":$es,"artifact":$ms,"families":$famJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(full)},"errors":$es,"artifact":$ms,"families":$famJson$setupJson,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),

@@ -13,6 +13,10 @@ import org.apache.spark.sql.functions._
   * reference flattens into GlossaryTermInfo customProperties (dbt ids,
   * calc method, dims/grains/filters/tags, `meta_*` passthrough,
   * upstream dataset URNs) becomes an entry of a map column here.
+  *
+  * The records are one projection of the once-parsed metric rows plus
+  * two driver-built relations (the root node, and the category nodes
+  * from the manifest [[Summary]]), so emitting them is one stage.
   */
 object Glossary {
 
@@ -21,14 +25,21 @@ object Glossary {
   private def nodeUrn(name: Column): Column = concat(lit("urn:li:glossaryNode:"), name)
   private def termUrn(name: Column): Column = concat(lit("urn:li:glossaryTerm:"), name)
 
-  private def category: Column =
-    coalesce(element_at(col("meta"), "datahub_glossary_category"), lit("Uncategorized"))
+  /** A metric's glossary category path, from its `meta` map. */
+  private[meta] def category(meta: Column): Column =
+    coalesce(element_at(meta, "datahub_glossary_category"), lit("Uncategorized"))
 
   /** All glossary records (root node + category nodes + term per metric)
     * with columns: entity_type, urn, name, definition, parent_urn,
-    * custom_properties. `lineage` is [[Lineage.resolve]] output, used to
-    * fill the `upstream_datasets` property. */
-  def records(metrics: DataFrame, lineage: DataFrame, root: String = DefaultRoot): DataFrame = {
+    * custom_properties, term_source. `metrics` must be
+    * [[graft.model.Manifest.metrics]] of the parsed table that `summary`
+    * ([[Summary.of]]) was built from, with no filtering: the category
+    * nodes come from the summary's category set, so a subset of the
+    * metrics would leave category nodes with no terms under them. The
+    * summary's dataset-URN lookup gives the `upstream_datasets`
+    * property, so the records plan has no join and no exchange and reads
+    * `metrics` once. */
+  def records(metrics: DataFrame, summary: Summary, root: String = DefaultRoot): DataFrame = {
     val spark = metrics.sparkSession
     import spark.implicits._
 
@@ -39,7 +50,8 @@ object Glossary {
       .withColumn("parent_urn", lit(null).cast("string"))
       .withColumn("custom_properties", lit(null).cast("map<string,string>"))
 
-    val cats = metrics.select(category.as("cat")).distinct()
+    // one partition: the category nodes land in one sink file
+    val cats = summary.categories.toDF("cat").coalesce(1)
       .select(
         lit("glossaryNode").as("entity_type"),
         nodeUrn(concat(lit(s"$root."), regexp_replace(col("cat"), "/", "."))).as("urn"),
@@ -48,16 +60,11 @@ object Glossary {
         lit(s"urn:li:glossaryNode:$root").as("parent_urn"),
         lit(null).cast("map<string,string>").as("custom_properties"))
 
-    // upstream dataset URNs per metric, in depends_on order
-    val upstream = lineage
-      .filter(col("dataset_urn").isNotNull)
-      .groupBy(col("metric_id"))
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("dep_pos"), col("dataset_urn")))),
-        s => s.getField("dataset_urn")), ", ").as("upstream_datasets"))
-
-    val withUp = metrics.join(broadcast(upstream),
-      metrics("unique_id") === upstream("metric_id"), "left")
+    // upstream dataset URNs per metric, in depends_on order; unresolved
+    // deps are left out, and none at all gives "" (dropped below)
+    val upstream = array_join(filter(
+      transform(coalesce(col("depends_on.nodes"), array()), summary.datasetUrn(_)),
+      _.isNotNull), ", ")
 
     // reference custom-properties flattening (:269-304); null/empty
     // entries are dropped, matching the reference's conditional adds
@@ -73,7 +80,7 @@ object Glossary {
         lit("time_grains"), array_join(coalesce(col("time_grains"), array()), ", "),
         lit("filters"), when(size(col("filters")) > 0, to_json(col("filters"))),
         lit("tags"), array_join(coalesce(col("tags"), array()), ", "),
-        lit("upstream_datasets"), col("upstream_datasets")),
+        lit("upstream_datasets"), upstream),
       (_, v) => v.isNotNull && v =!= "")
 
     val metaProps: Column = transform_keys(
@@ -83,8 +90,8 @@ object Glossary {
     // reference GlossaryTermInfo: name=label||name, definition=
     // description||fallback (empty string also falls back, like
     // Python's `or`), termSource="dbt" (:310-316)
-    val catPath = regexp_replace(category, "/", ".")
-    val terms = withUp.select(
+    val catPath = regexp_replace(category(col("meta")), "/", ".")
+    val terms = metrics.select(
       lit("glossaryTerm").as("entity_type"),
       termUrn(concat_ws(".", lit(root), catPath, col("name"))).as("urn"),
       when(col("label").isNotNull && col("label") =!= "", col("label"))

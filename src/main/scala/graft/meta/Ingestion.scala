@@ -1,6 +1,6 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.model.Manifest
 import graft.sources.MetadataSink
 
@@ -11,16 +11,20 @@ import graft.sources.MetadataSink
   * that validates without writing.
   *
   * Where the reference emits one REST call per record from a driver
-  * loop, this plans the whole run as DataFrame transforms and performs
+  * loop, this plans the whole run as DataFrame transforms over the
+  * once-parsed entity table ([[graft.model.Manifest.parse]]) and performs
   * ONE distributed write — the same records, scalable to manifests of
-  * any size.
+  * any size. One aggregate ([[Summary.of]]) gives the driver the counts,
+  * the category set and the dataset-URN lookup; the records then write
+  * in one exchange-free stage, and the parsed table's checkpoint is
+  * released before returning.
   */
 object Ingestion {
 
   /** `malformed` counts metric entries skipped by the permissive parse
-    * (non-object JSON) — the reference logs each and continues
-    * (reference: dbt_metrics_to_datahub.py:355-359); one bad entry
-    * degrades to a flagged count here, never a failed run. */
+    * (non-object JSON, null included) — the reference logs each and
+    * continues (reference: dbt_metrics_to_datahub.py:355-359); one bad
+    * entry degrades to a flagged count here, never a failed run. */
   final case class Result(metrics: Long, records: Long, outPath: Option[String],
                           malformed: Long = 0)
 
@@ -31,26 +35,14 @@ object Ingestion {
           platform: String = "dbt", env: String = "PROD",
           format: String = "parquet", dryRun: Boolean = false,
           ordered: Boolean = true): Result = {
-    val parsed  = Manifest.parse(spark, manifestJson)
-    val metrics = Manifest.metrics(parsed)
-    val lineage = Lineage.resolve(metrics, Manifest.nodes(parsed),
-      Manifest.sources(parsed), platform, env)
-    val records = Glossary.records(metrics, lineage, glossaryRoot)
-    // ordered (default): parents-first partitions, mirroring the
-    // reference's nodes-before-terms emit sequence (:337-352)
-    val emitted = MetadataSink.emit(records, outPath, format, dryRun, ordered = ordered)
-    Result(metrics.count(), emitted.records, emitted.path,
-      Manifest.malformed(parsed, "metrics").count())
-  }
-
-  /** All glossary records for a manifest, without emitting. */
-  def records(spark: SparkSession, manifestJson: String,
-              glossaryRoot: String = Glossary.DefaultRoot,
-              platform: String = "dbt", env: String = "PROD"): DataFrame = {
-    val parsed  = Manifest.parse(spark, manifestJson)
-    val metrics = Manifest.metrics(parsed)
-    val lineage = Lineage.resolve(metrics, Manifest.nodes(parsed),
-      Manifest.sources(parsed), platform, env)
-    Glossary.records(metrics, lineage, glossaryRoot)
+    val parsed = Manifest.parse(spark, manifestJson)
+    try {
+      val summary = Summary.of(parsed, platform, env)
+      val records = Glossary.records(Manifest.metrics(parsed), summary, glossaryRoot)
+      // ordered (default): parents-first partitions, mirroring the
+      // reference's nodes-before-terms emit sequence (:337-352)
+      val emitted = MetadataSink.emit(records, outPath, format, dryRun, ordered = ordered)
+      Result(summary.metrics, emitted.records, emitted.path, summary.malformed)
+    } finally Manifest.release(parsed)
   }
 }

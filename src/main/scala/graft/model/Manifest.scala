@@ -3,14 +3,19 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** dbt `manifest.json` → DataFrames.
   *
   * Re-expresses the reference's `load_manifest` / `parse_metrics` /
   * `parse_semantic_models` (reference: dbt_metrics_to_datahub.py:119-170)
-  * as Spark transformations: the manifest is parsed with `from_json`
-  * using `MapType` schemas (manifest sections are JSON objects keyed by
-  * unique_id), then each section's map explodes into one row per entity.
+  * as Spark transformations. [[parse]] builds the manifest's ENTITY
+  * TABLE once: one row per entity of every section (manifest sections
+  * are JSON objects keyed by unique_id), each entity parsed once into
+  * its section's struct, behind a lazy `localCheckpoint`. The section
+  * views ([[metrics]], [[nodes]], [[sources]], [[semanticModels]],
+  * [[malformed]]) are projections of that table and parse no JSON, so
+  * every branch of a downstream plan reads the same parsed rows.
   *
   * Driver-side work is O(1): only the raw JSON string moves through the
   * session; all shaping happens in the plan, so a multi-thousand-node
@@ -69,20 +74,55 @@ object Manifest {
     "metrics" -> metricType, "nodes" -> nodeType,
     "sources" -> sourceType, "semantic_models" -> semanticModelType)
 
-  /** One-row DataFrame holding each manifest section as a RAW JSON
-    * string (`from_json` with string-typed map values passes object
-    * values through verbatim). Entities then parse INDIVIDUALLY in
-    * [[section]], so one mangled entry degrades to a skipped+flagged
-    * row instead of nullifying the whole section map — the Spark
-    * re-expression of the reference's per-metric try/except-and-
-    * continue (reference: dbt_metrics_to_datahub.py:355-359). A
-    * single-shot typed `from_json` would return NULL for the entire
-    * section when any one entry fails to conform. */
+  /** The entity table: `section`, `unique_id`, `well_formed`,
+    * `raw_entity` (kept only where not well-formed) and one struct column
+    * per section (`metrics`, `nodes`, `sources`, `semantic_models`),
+    * filled on that section's well-formed rows.
+    *
+    * Sections pass through `from_json` as string-valued maps, so each
+    * entity's raw JSON arrives verbatim and parses INDIVIDUALLY: one
+    * mangled entry degrades to a skipped+flagged row instead of
+    * nullifying the whole section map — the Spark re-expression of the
+    * reference's per-metric try/except-and-continue (reference:
+    * dbt_metrics_to_datahub.py:355-359). An entity that is not a JSON
+    * object (number, array, string, null) cannot carry the section's
+    * fields and is the malformed case; wrong-TYPED fields inside an
+    * object degrade to per-field nulls (PERMISSIVE).
+    *
+    * The table is checkpointed lazily: the first action parses it, and
+    * every later read of any section reuses those rows. The checkpoint
+    * pins the rows in the block manager and cuts their lineage: a lost
+    * block fails later reads instead of re-parsing the JSON. [[release]]
+    * drops the blocks once the caller is done with the table; otherwise
+    * Spark's context cleaner drops them after the table is
+    * garbage-collected. */
   def parse(spark: SparkSession, manifestJson: String): DataFrame = {
     import spark.implicits._
-    Seq(manifestJson).toDF("raw")
-      .select(from_json(col("raw"), MapType(StringType, StringType)).as("sections"))
+    val jsonMap = MapType(StringType, StringType)
+    val entities = Seq(manifestJson).toDF("raw")
+      .select(explode(from_json(col("raw"), jsonMap)).as(Seq("section", "body")))
+      .where(col("section").isin(sectionSchemas.keys.toSeq: _*))
+      .select(col("section"),
+        explode(from_json(col("body"), jsonMap)).as(Seq("unique_id", "raw_entity")))
+      // rlike on a JSON-null entity is null: coalesce keeps it malformed
+      .withColumn("well_formed", coalesce(col("raw_entity").rlike("^\\s*\\{"), lit(false)))
+    entities
+      .select(Seq(col("section"), col("unique_id"), col("well_formed"),
+          when(!col("well_formed"), col("raw_entity")).as("raw_entity")) ++
+        sectionSchemas.map { case (field, schema) =>
+          when(col("section") === field && col("well_formed"),
+            from_json(col("raw_entity"), schema)).as(field)
+        }: _*)
+      .localCheckpoint(eager = false)
   }
+
+  /** Drop the checkpointed blocks of a [[parse]] table. Neither the
+    * table nor any DataFrame built on it may be read afterwards. */
+  def release(parsed: DataFrame): Unit =
+    parsed.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** The built-in test fixture (same logical content the reference's own
     * test manifest exercises: 3 metrics, 2 models, 2 sources). */
@@ -99,27 +139,17 @@ object Manifest {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
-  /** unique_id, raw entity JSON, parsed struct. An entity that is not a
-    * JSON object (number, array, string, null) cannot carry the
-    * section's fields and is the malformed case; wrong-TYPED fields
-    * inside an object degrade to per-field nulls (PERMISSIVE). */
-  private def entities(parsed: DataFrame, field: String): DataFrame =
-    parsed
-      .select(explode(from_json(element_at(col("sections"), lit(field)),
-        MapType(StringType, StringType))).as(Seq("unique_id", "raw_entity")))
-      .withColumn("well_formed", col("raw_entity").rlike("^\\s*\\{"))
-      .withColumn("e", from_json(col("raw_entity"), sectionSchemas(field)))
-
   private def section(parsed: DataFrame, field: String): DataFrame =
-    entities(parsed, field).where(col("well_formed"))
-      .select(col("unique_id"), col("e.*"))
+    parsed.where(col("section") === field && col("well_formed"))
+      .select(col("unique_id"), col(s"$field.*"))
 
   /** The entries [[section]] SKIPPED: unique_id + raw JSON of entities
-    * that are not JSON objects. The reference logs these and continues
-    * (:355-359); callers surface them for observability instead of the
-    * whole ingestion failing. */
+    * that are not JSON objects (`raw_entity` is null for a JSON-null
+    * entry). The reference logs these and continues (:355-359); callers
+    * surface them for observability instead of the whole ingestion
+    * failing. */
   def malformed(parsed: DataFrame, field: String): DataFrame =
-    entities(parsed, field).where(!col("well_formed"))
+    parsed.where(col("section") === field && !col("well_formed"))
       .select(col("unique_id"), col("raw_entity"))
 
   /** metrics section → one row per metric (reference parse_metrics :125-150). */

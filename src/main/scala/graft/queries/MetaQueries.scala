@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Manifest
-import graft.meta.{Glossary, Lineage}
+import graft.meta.{Glossary, Lineage, Summary}
 
 /** §2 items 13-15: the reference's own manifest → glossary → lineage
   * pipeline, as DataFrame transforms over the built-in fixture manifest
@@ -73,8 +73,7 @@ object MetaQueries {
     // oracle can re-derive the exact string
     "meta_glossary" -> ((s, _) => {
       val p = parsed(s)
-      val lin = Lineage.resolve(Manifest.metrics(p), Manifest.nodes(p), Manifest.sources(p))
-      Glossary.records(Manifest.metrics(p), lin)
+      Glossary.records(Manifest.metrics(p), Summary.of(p))
         .withColumn("custom_properties",
           array_join(transform(array_sort(map_entries(col("custom_properties"))),
             e => concat(e.getField("key"), lit("="), e.getField("value"))), "; "))
@@ -96,7 +95,7 @@ object MetaQueries {
 
     "meta_lineage" -> ((s, _) => {
       val p = parsed(s)
-      Lineage.resolve(Manifest.metrics(p), Manifest.nodes(p), Manifest.sources(p))
+      Lineage.resolve(Manifest.metrics(p), Summary.of(p))
         .withColumn("dep_pos", col("dep_pos").cast("bigint"))
         .orderBy("metric_id", "dep_pos")
     }),

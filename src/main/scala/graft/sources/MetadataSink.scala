@@ -35,20 +35,22 @@ object MetadataSink {
   /** Write `records` to `path` as `format` ("parquet" | "json");
     * `dryRun=true` validates + counts without writing; `ordered=true`
     * partitions the sink by parents-first `emit_order` (requires
-    * entity_type/parent_urn columns — glossary-shaped records). */
+    * entity_type/parent_urn columns — glossary-shaped records). The
+    * returned count reads the sink back with the schema just written,
+    * so the read needs no schema-inference pass over the files. */
   def emit(records: DataFrame, path: String, format: String = "parquet",
            dryRun: Boolean = false, ordered: Boolean = false): EmitResult = {
     require(Set("parquet", "json")(format), s"unsupported sink format: $format")
     if (dryRun) EmitResult(records.count(), None)
-    else if (ordered) {
-      require(records.columns.contains("entity_type") && records.columns.contains("parent_urn"),
+    else {
+      require(!ordered ||
+        (records.columns.contains("entity_type") && records.columns.contains("parent_urn")),
         "ordered emit needs glossary-shaped records (entity_type, parent_urn)")
-      records.withColumn("emit_order", emitOrder)
-        .write.mode("overwrite").partitionBy("emit_order").format(format).save(path)
-      EmitResult(records.sparkSession.read.format(format).load(path).count(), Some(path))
-    } else {
-      records.write.mode("overwrite").format(format).save(path)
-      EmitResult(records.sparkSession.read.format(format).load(path).count(), Some(path))
+      val out = if (ordered) records.withColumn("emit_order", emitOrder) else records
+      val writer = out.write.mode("overwrite").format(format)
+      (if (ordered) writer.partitionBy("emit_order") else writer).save(path)
+      EmitResult(records.sparkSession.read.schema(out.schema).format(format).load(path).count(),
+        Some(path))
     }
   }
 }

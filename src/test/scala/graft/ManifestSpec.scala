@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.model.Manifest
-import graft.meta.{Glossary, Lineage}
+import graft.meta.{Glossary, Lineage, Summary}
 import graft.sources.MetadataSink
 
 /** Asserts the manifest → glossary → lineage pipeline emits exactly the
@@ -14,9 +14,9 @@ class ManifestSpec extends AnyFunSuite {
 
   private lazy val parsed  = Manifest.parse(spark, Manifest.fixtureJson)
   private lazy val metrics = Manifest.metrics(parsed)
-  private lazy val lineage =
-    Lineage.resolve(metrics, Manifest.nodes(parsed), Manifest.sources(parsed))
-  private lazy val glossary = Glossary.records(metrics, lineage)
+  private lazy val summary = Summary.of(parsed)
+  private lazy val lineage = Lineage.resolve(metrics, summary)
+  private lazy val glossary = Glossary.records(metrics, summary)
 
   test("parse_metrics finds all metrics with calc methods and grains") {
     val rows = metrics.orderBy("unique_id").collect()
@@ -47,8 +47,7 @@ class ManifestSpec extends AnyFunSuite {
   test("lineage resolves source deps via identifier") {
     // the customers model depends on a source; Lineage.resolve only needs
     // (unique_id, depends_on), so it works over the nodes table too
-    val nodes = Manifest.nodes(parsed)
-    val resolved = Lineage.resolve(nodes, nodes, Manifest.sources(parsed))
+    val resolved = Lineage.resolve(Manifest.nodes(parsed), summary)
     val urn = resolved
       .filter(col("metric_id") === "model.test_dbt_project.customers")
       .select("dataset_urn").collect().map(_.getString(0))
@@ -159,8 +158,7 @@ class ManifestSpec extends AnyFunSuite {
         |"sources": {"source.p.s1": {"database": "DB", "schema": "SC",
         |  "name": "Src1", "identifier": ""}}}""".stripMargin
     val p = Manifest.parse(spark, mJson)
-    val urns = Lineage.resolve(Manifest.metrics(p), Manifest.nodes(p),
-        Manifest.sources(p))
+    val urns = Lineage.resolve(Manifest.metrics(p), Summary.of(p))
       .orderBy("dep_pos").select("dataset_urn").collect().map(_.getString(0))
     assert(urns.toSeq == Seq(
       "urn:li:dataset:(urn:li:dataPlatform:dbt,db.sc.tbl1,PROD)",
@@ -188,6 +186,114 @@ class ManifestSpec extends AnyFunSuite {
     val res = graft.meta.Ingestion.run(spark, mJson, "/tmp/graft_ingest_malformed",
       dryRun = true)
     assert(res.metrics == 2 && res.malformed == 1)
+  }
+
+  test("a JSON-null metric entry counts as malformed, not dropped") {
+    // rlike on a null raw entity is null; well_formed must still be false
+    val mJson =
+      """{"metrics": {
+        |  "metric.p.good": {"name": "good", "calculation_method": "sum",
+        |    "expression": "x", "depends_on": {"nodes": []}},
+        |  "metric.p.null": null},
+        |"nodes": {}, "sources": {}}""".stripMargin
+    val bad = Manifest.malformed(Manifest.parse(spark, mJson), "metrics").collect()
+    assert(bad.map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("metric.p.null", null)))
+    val res = graft.meta.Ingestion.run(spark, mJson, "/tmp/graft_ingest_null")
+    assert(res.metrics == 1 && res.malformed == 1 && res.records == 3)
+  }
+
+  // dep resolution through the summary's lookup: `x.p.dup` is both a
+  // model and a source; `model.p.ghost` is neither
+  private lazy val lookupManifest = Manifest.parse(spark,
+    """{"metrics": {
+      |  "metric.p.multi": {"name": "multi",
+      |    "depends_on": {"nodes": ["source.p.s1", "model.p.t2", "model.p.t1"]}},
+      |  "metric.p.partial": {"name": "partial",
+      |    "depends_on": {"nodes": ["model.p.ghost", "model.p.t1"]}},
+      |  "metric.p.dup": {"name": "dup", "depends_on": {"nodes": ["x.p.dup"]}},
+      |  "metric.p.none": {"name": "none", "depends_on": {"nodes": []}},
+      |  "metric.p.absent": {"name": "absent"}},
+      |"nodes": {
+      |  "model.p.t1": {"database": "DB", "schema": "SC", "name": "T1"},
+      |  "model.p.t2": {"database": "DB", "schema": "SC", "name": "T2"},
+      |  "x.p.dup": {"database": "DB", "schema": "M", "name": "DUP"}},
+      |"sources": {
+      |  "source.p.s1": {"database": "DB", "schema": "RAW", "name": "S1"},
+      |  "x.p.dup": {"database": "DB", "schema": "S", "name": "DUP"}}}""".stripMargin)
+  private lazy val lookupSummary = Summary.of(lookupManifest)
+  private def urn(name: String) = s"urn:li:dataset:(urn:li:dataPlatform:dbt,$name,PROD)"
+  private def resolvedUrns(metricId: String): Seq[String] =
+    Lineage.resolve(Manifest.metrics(lookupManifest), lookupSummary)
+      .filter(col("metric_id") === metricId).orderBy("dep_pos")
+      .select("dataset_urn").collect().map(_.getString(0)).toSeq
+  private def upstream(name: String): Option[String] =
+    Glossary.records(Manifest.metrics(lookupManifest), lookupSummary)
+      .filter(col("name") === name && col("entity_type") === "glossaryTerm")
+      .select("custom_properties").head().getAs[Map[String, String]](0)
+      .get("upstream_datasets")
+
+  test("an unresolved dep keeps a null URN and is left out of upstream_datasets") {
+    assert(resolvedUrns("metric.p.partial") == Seq(null, urn("db.sc.t1")))
+    assert(upstream("partial").contains(urn("db.sc.t1")))
+  }
+
+  test("an id that is both a model and a source resolves to the model's URN") {
+    assert(resolvedUrns("metric.p.dup") == Seq(urn("db.m.dup")))
+    assert(upstream("dup").contains(urn("db.m.dup")))
+  }
+
+  test("upstream_datasets follows depends_on order across several deps") {
+    val inOrder = Seq(urn("db.raw.s1"), urn("db.sc.t2"), urn("db.sc.t1"))
+    assert(resolvedUrns("metric.p.multi") == inOrder)
+    assert(upstream("multi").contains(inOrder.mkString(", ")))
+  }
+
+  test("a metric without deps has no upstream_datasets key") {
+    assert(upstream("none").isEmpty && upstream("absent").isEmpty)
+    // lineage keeps one null row per dep-less metric, as posexplode_outer does
+    assert(resolvedUrns("metric.p.none") == Seq(null))
+  }
+
+  test("Ingestion.run on the fixture starts at most 5 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.phase"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("ingest") => jobs.incrementAndGet()
+          case Some("marker") => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "ingest")
+      val res = graft.meta.Ingestion.run(spark, Manifest.fixtureJson, "/tmp/graft_ingest_jobs")
+      assert(res.records == 7)
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every ingestion job start has been counted
+      sc.setLocalProperty(tag, "marker")
+      spark.range(1).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get <= 5, s"Ingestion.run started ${jobs.get} jobs")
+    // and the write stays one file per emit_order directory
+    new java.io.File("/tmp/graft_ingest_jobs").listFiles().filter(_.isDirectory).foreach { d =>
+      assert(d.list().count(_.startsWith("part-")) == 1, s"${d.getName}: ${d.list().toSeq}")
+    }
+  }
+
+  test("Ingestion.run releases the parsed table's checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    graft.meta.Ingestion.run(spark, Manifest.fixtureJson, "/tmp/graft_ingest_release")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("meta_diff classifies drift between the two fixture deploys") {
