@@ -2,6 +2,7 @@ package graft.meta
 
 import org.apache.spark.sql.SparkSession
 import graft.model.Manifest
+import graft.ops.PlanBarrier
 import graft.sources.MetadataSink
 
 /** End-to-end manifest ingestion — the analog of the reference's main
@@ -43,6 +44,6 @@ object Ingestion {
       // reference's nodes-before-terms emit sequence (:337-352)
       val emitted = MetadataSink.emit(records, outPath, format, dryRun, ordered = ordered)
       Result(summary.metrics, emitted.records, emitted.path, summary.malformed)
-    } finally Manifest.release(parsed)
+    } finally PlanBarrier.release(parsed)
   }
 }

@@ -3,7 +3,6 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** dbt `manifest.json` → DataFrames.
   *
@@ -92,10 +91,10 @@ object Manifest {
     * The table is checkpointed lazily: the first action parses it, and
     * every later read of any section reuses those rows. The checkpoint
     * pins the rows in the block manager and cuts their lineage: a lost
-    * block fails later reads instead of re-parsing the JSON. [[release]]
-    * drops the blocks once the caller is done with the table; otherwise
-    * Spark's context cleaner drops them after the table is
-    * garbage-collected. */
+    * block fails later reads instead of re-parsing the JSON.
+    * [[graft.ops.PlanBarrier.release]] drops the blocks once the caller
+    * is done with the table; otherwise Spark's context cleaner drops
+    * them after the table is garbage-collected. */
   def parse(spark: SparkSession, manifestJson: String): DataFrame = {
     import spark.implicits._
     val jsonMap = MapType(StringType, StringType)
@@ -115,14 +114,6 @@ object Manifest {
         }: _*)
       .localCheckpoint(eager = false)
   }
-
-  /** Drop the checkpointed blocks of a [[parse]] table. Neither the
-    * table nor any DataFrame built on it may be read afterwards. */
-  def release(parsed: DataFrame): Unit =
-    parsed.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** The built-in test fixture (same logical content the reference's own
     * test manifest exercises: 3 metrics, 2 models, 2 sources). */

@@ -100,12 +100,7 @@ object Cluster {
     var labels = PlanBarrier.cut(nodes.select(col("id"), col("id").as("comp")))
     var iter = 0
     var converged = false
-    // env-gated dev probe (the GRAFT_FUNNEL_PROBE pattern): per-round
-    // wall time, so a slow CC consumer can be attributed to round count
-    // vs per-round cost without touching the loop
-    val probe = sys.env.contains("GRAFT_CC_PROBE")
     while (!converged && iter < maxIter) {
-      val t0 = if (probe) System.nanoTime() else 0L
       val nbrMin = sym.join(labels, sym("dst") === labels("id"))
         .groupBy("src").agg(min("comp").as("nbr_comp"))
       // carry a per-row changed flag through the iterate so convergence
@@ -128,8 +123,6 @@ object Cluster {
       converged = next.filter(col("chg")).limit(1).count() == 0
       labels = next.select("id", "comp")
       iter += 1
-      if (probe) System.err.println(
-        f"CCROUND $iter ${(System.nanoTime() - t0) / 1e9}%.2f converged=$converged")
     }
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -161,71 +154,5 @@ object Cluster {
       .join(linked.select(col("id").as("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
       .unionByName(families)
-  }
-
-  /** [[dedupClusters]] restricted to the families a landing shard
-    * actually touched (VERDICT r16 item 3) — the incremental member
-    * for generation-cadence folds.
-    *
-    * Given the PREVIOUS generation's labels + pair set, the only
-    * vertices whose component can change are: docs that LEFT the
-    * corpus (their family may split), endpoints of ADDED or REMOVED
-    * pairs (their families may merge or split), and brand-NEW docs.
-    * Every other family's membership and pair structure is unchanged
-    * — an unchanged pair cannot straddle two families (its endpoints
-    * were already connected) — so its snapshot labels are final. CC
-    * re-runs ONLY on the touched families' surviving members plus the
-    * new docs, with pairs restricted to that vertex set (closed by the
-    * straddle argument); labels are per-component minima, so the
-    * restricted run equals the global run on those components exactly.
-    * Identical by construction to `dedupClusters(docs, pairs)`;
-    * ClusterSpec pins the equality, StreamingSpec holds the funnel to
-    * the batch oracle through it. */
-  def incrementalClusters(docs: DataFrame, pairs: DataFrame,
-                          prevClusters: DataFrame,
-                          prevPairs: DataFrame): DataFrame = {
-    // caller contract: docs/pairs arrive checkpointed (the fold passes
-    // its s2docs/pairs checkpoints) and prevClusters/prevPairs are
-    // plain snapshot scans — re-checkpointing them here paid two extra
-    // execution barriers per generation for tables that are already
-    // cheap to re-read (r18; every barrier under AQE runs its subtree
-    // synchronously at construction)
-    val cur = docs.select("doc_id")
-    val ps = pairs.select("id1", "id2")
-    val leftDocs = prevClusters.select("doc_id")
-      .join(cur, Seq("doc_id"), "left_anti")
-    // added ∪ removed pairs in ONE full-outer pass — a pair on exactly
-    // one side of the diff is a delta edge; its endpoints are touched
-    val pairDiff = ps.withColumn("in_cur", lit(1))
-      .join(prevPairs.select("id1", "id2").withColumn("in_prev", lit(1)),
-        Seq("id1", "id2"), "full_outer")
-      .filter(col("in_cur").isNull || col("in_prev").isNull)
-      .select("id1", "id2")
-    val touchedDocs = leftDocs
-      .unionByName(pairDiff.select(col("id1").as("doc_id")))
-      .unionByName(pairDiff.select(col("id2").as("doc_id")))
-      .distinct()
-    val touchedFam = prevClusters
-      .join(touchedDocs, Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct()
-      .localCheckpoint(false) // keep-side anti-join AND re-run side
-    val newDocs = cur.join(prevClusters.select("doc_id"),
-      Seq("doc_id"), "left_anti")
-    val reVerts = prevClusters
-      .join(touchedFam, Seq("cluster_id"), "left_semi")
-      .select("doc_id")
-      .join(cur, Seq("doc_id"), "left_semi") // only surviving members
-      .unionByName(newDocs)
-      .distinct()
-      .localCheckpoint(false) // pair restriction ×2 AND the CC run
-    val rePairs = ps
-      .join(reVerts.select(col("doc_id").as("id1")), Seq("id1"), "left_semi")
-      .join(reVerts.select(col("doc_id").as("id2")), Seq("id2"), "left_semi")
-    // no survivor filter needed: an exited doc is in leftDocs, so its
-    // family is touched — every untouched family's members all survive
-    val keep = prevClusters
-      .join(touchedFam, Seq("cluster_id"), "left_anti")
-      .select("doc_id", "cluster_id") // USING join fronts the key
-    keep.unionByName(dedupClusters(reVerts, rePairs))
   }
 }

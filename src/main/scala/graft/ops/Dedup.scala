@@ -147,137 +147,6 @@ object Dedup {
       .select(col("id1"), col("id2"), col("shared"), jac.as("jaccard"))
   }
 
-  /** Carryable intermediate state of the posting-pair derivation for a
-    * GENERATION-cadence caller ([[jaccardPairsStateful]]): the capped
-    * bucket table, the PRE-threshold per-pair shared-bucket counts, and
-    * the per-doc capped-bucket sizes, plus the doc set they were built
-    * over. All session-lifetime localCheckpoints — state of ONE
-    * operator invocation, never persisted across runs. */
-  final case class PostingPairState(docs: DataFrame, buckets: DataFrame,
-                                    pairShared: DataFrame, sizes: DataFrame)
-
-  /** [[jaccardPairsFromPostings]] with DELTA-RESTRICTED re-derivation
-    * across generations (VERDICT r17 item 1 — guide §1.2/§2.4: do not
-    * recompute buckets whose content provably did not change).
-    *
-    * `postStore` is the append-only (doc_id, s) posting store over ALL
-    * landed docs; `docs` the CURRENT survivor ids. With no `prev`, this
-    * is exactly [[jaccardPairsFromPostings]](postStore ⋈ docs) with its
-    * intermediates exposed. With `prev`:
-    *
-    *   1. Δdocs = docs entered ∪ docs left since `prev.docs` (one
-    *      full-outer diff). A doc's posting rows are immutable once
-    *      landed, so a shingle bucket's MEMBERSHIP under `docs` differs
-    *      from its membership under `prev.docs` iff some Δdoc carries
-    *      that shingle — the touched set T = distinct shingles of
-    *      Δdocs' postings. Buckets with s ∉ T are byte-identical,
-    *      including their DF-cap status (cap is a function of
-    *      membership), so the cap-crossing hazard the full-recompute
-    *      comment used to guard is handled BY CONSTRUCTION: every
-    *      bucket whose DF could have crossed the cap is in T and is
-    *      re-derived from the current postings.
-    *   2. shared(a,b) = Σ over capped buckets containing both; n_sh(a)
-    *      = #capped buckets containing a. Both decompose over the
-    *      touched/untouched bucket partition, so the new totals are
-    *      old − (old touched contribution) + (new touched
-    *      contribution): a signed ledger merge over the carried
-    *      pre-threshold tables, never a corpus-wide groupBy. Old
-    *      over-cap buckets contributed nothing and are simply absent
-    *      from the carried capped table.
-    *   3. The threshold filter is a pure function of (pairShared,
-    *      sizes), re-applied at emission.
-    *
-    * Identity to the one-shot derivation per generation is pinned in
-    * DedupSpec (including forced cap-crossings both ways). At landing
-    * scale the delta work is O(shard postings + touched buckets), not
-    * O(corpus postings). When the survivor diff is a large FRACTION of
-    * the corpus, the full path is cheaper (measured at sf0.1's
-    * half-corpus generations: the touched set covers most buckets, so
-    * the restricted rebuild plus the ledger merge exceeds one full
-    * derivation) — the CALLER makes that choice by passing `prev` only
-    * when its shard is small relative to the corpus (shard size is
-    * deployment metadata, known before the job — no data probing);
-    * either choice emits identical rows. */
-  def jaccardPairsStateful(postStore: DataFrame, docs: DataFrame,
-                           prev: Option[PostingPairState],
-                           threshold: Double = 0.8, maxDF: Int = 50)
-      : (DataFrame, PostingPairState) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def cappedOf(post: DataFrame): DataFrame = post
-      .groupBy("s").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxDF)
-    def pairsOf(buckets: DataFrame, sign: Long): DataFrame =
-      bucketPairs(buckets).groupBy("id1", "id2")
-        .agg((count(lit(1)) * lit(sign)).as("shared"))
-    def sizesOf(buckets: DataFrame, sign: Long): DataFrame = buckets
-      .select(explode(col("ids")).as("doc_id"))
-      .groupBy("doc_id").agg((count(lit(1)) * lit(sign)).as("n_sh"))
-    // `docs` must arrive checkpointed or cheap to recompute (the fold
-    // passes its s2docs checkpoint) — carried un-checkpointed, so no
-    // extra barrier is paid here
-    val cur = docs.select("doc_id")
-    // one full-path build: buckets checkpointed (three consumers); the
-    // carried ledgers stay LAZY — the pair/size aggregation executes
-    // once inside the emission job, and a later generation recomputes
-    // the depth-1 aggregation from the bucket checkpoint only if one
-    // actually consumes the carried state
-    def buildFull(): (DataFrame, DataFrame, DataFrame) = {
-      val b = cappedOf(postStore.join(cur, "doc_id")).localCheckpoint(false)
-      (b, pairsOf(b, 1L), sizesOf(b, 1L))
-    }
-    val (buckets, pairShared, sizes) = prev match {
-      case None => buildFull()
-      case Some(st) =>
-        val delta = cur.withColumn("in_cur", lit(1))
-          .join(st.docs.select("doc_id").withColumn("in_prev", lit(1)),
-            Seq("doc_id"), "full_outer")
-          .filter(col("in_cur").isNull || col("in_prev").isNull)
-          .select("doc_id")
-          .localCheckpoint(false) // the touched set AND (lazily) audits
-        val touched = postStore.join(delta, "doc_id").select("s").distinct()
-          .localCheckpoint(false) // restricts postings, old and new buckets
-        val newTouched = cappedOf(
-            postStore.join(touched, Seq("s"), "left_semi").join(cur, "doc_id"))
-          .localCheckpoint(false) // bucket union, pair adds, size adds
-        val oldTouched = st.buckets.join(touched, Seq("s"), "left_semi")
-        // checkpoint barriers under AQE execute their subtree at
-        // construction, so the two carried ledgers — mutually
-        // independent given their checkpointed inputs — materialize
-        // as CONCURRENT driver jobs (guide §2.6), not two serial ones
-        val pF = Future(st.pairShared
-          .unionByName(pairsOf(newTouched, 1L))
-          .unionByName(pairsOf(oldTouched, -1L))
-          .groupBy("id1", "id2").agg(sum("shared").as("shared"))
-          .filter(col("shared") > 0)
-          .localCheckpoint(false))
-        val zF = Future(st.sizes
-          .unionByName(sizesOf(newTouched, 1L))
-          .unionByName(sizesOf(oldTouched, -1L))
-          .groupBy("doc_id").agg(sum("n_sh").as("n_sh"))
-          .filter(col("n_sh") > 0)
-          .localCheckpoint(false))
-        // the carried bucket union materializes as a third concurrent
-        // job: leaving it lazy would accrete one union+anti-join of
-        // plan per consecutive delta generation (the r12 loop-lineage
-        // hazard) on the table every later delta reads twice
-        val bF = Future(st.buckets.join(touched, Seq("s"), "left_anti")
-          .unionByName(newTouched)
-          .localCheckpoint(false))
-        (Await.result(bF, Duration.Inf), Await.result(pF, Duration.Inf),
-          Await.result(zF, Duration.Inf))
-    }
-    val melted = pairShared.select(col("id1"), col("id2"), col("shared"),
-      explode(array(col("id1"), col("id2"))).as("doc_id"))
-    val jac = col("shared") / (col("s12") - col("shared"))
-    val out = melted.join(sizes, "doc_id")
-      .groupBy("id1", "id2", "shared").agg(sum(col("n_sh")).as("s12"))
-      .filter(jac >= threshold)
-      .select(col("id1"), col("id2"), col("shared"), jac.as("jaccard"))
-    (out, PostingPairState(cur, buckets, pairShared, sizes))
-  }
-
   /** Containment near-dup pairs over the same DF-capped shingle space
     * as [[ngramJaccard]]: containment = shared / min(|A|, |B|) ≥
     * tNum/tDen, tested by integer cross-multiplication so no float
@@ -403,41 +272,6 @@ object Dedup {
       .filter(col("shared") * tDen >= (col("s12") - col("shared")) * tNum)
       .select(col("id1"), col("id2"), col("shared"),
         (col("shared") / (col("s12") - col("shared"))).as("jaccard"))
-  }
-
-  /** The r17 shape of [[prefixFilterJaccard]] — kept only as the parity
-    * oracle for DedupSpec (same contract, separately derived plan). */
-  private[graft] def prefixFilterJaccardRef(docs: DataFrame, n: Int = 3,
-                          tNum: Int = 4, tDen: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ex = shingleSets(docs, n)
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      .localCheckpoint(false) // feeds df, sizes, prefixes, and the verify
-    val df    = ex.groupBy("s").agg(count(lit(1)).as("df"))
-    val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("s"))
-    val pre = ex.join(df, "s").join(sizes, "doc_id")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <=
-        col("n") - expr(s"(n * $tNum + ${tDen - 1}) div $tDen") + 1)
-      .select("doc_id", "s")
-      .localCheckpoint(false) // both sides of the candidate self-join
-    val cands = pre.select(col("doc_id").as("id1"), col("s"))
-      .join(pre.select(col("doc_id").as("id2"), col("s")), Seq("s"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val inter = cands
-      .join(ex.select(col("doc_id").as("id1"), col("s")), Seq("id1"))
-      .join(ex.select(col("doc_id").as("id2"), col("s")), Seq("id2", "s"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("shared"))
-    inter
-      .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
-      .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
-      .filter(col("shared") * tDen >=
-        (col("n1") + col("n2") - col("shared")) * tNum)
-      .select(col("id1"), col("id2"), col("shared"),
-        (col("shared") / (col("n1") + col("n2") - col("shared")))
-          .as("jaccard"))
   }
 
   /** MinHash signatures: one row per doc, `sig` = array of k minima of

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,9 +41,9 @@ object FunnelStore {
   final case class Stores(meta: DataFrame, shingles: DataFrame,
                           grams: DataFrame, feat: DataFrame)
 
-  /** The per-batch-FOLDED counters (VERDICT r14 item 2): the funnel
-    * stages whose state is additive or keyed-mergeable do not need the
-    * per-landing re-derivation at all —
+  /** The per-batch-FOLDED inputs of [[funnel]] (VERDICT r14 item 2):
+    * the funnel stages whose state is additive or keyed-mergeable do
+    * not need the per-landing re-derivation at all —
     *   - `raw`: (source, n_docs, sum_chars) landing totals, folded by
     *     plain sums (the stream_pii_ingest pattern);
     *   - `winners`: the exact-dedup presence store (norm_h, doc_id) —
@@ -55,19 +55,15 @@ object FunnelStore {
     *     duplicated-span token coverage, maintained per GENERATION by
     *     [[coverageIncrement]] instead of re-reduced from the full
     *     gram store.
-    * [[funnel]] consumes these for stage 0, the exact-dedup survivor
-    * set, and the substring-survivor filter, so each landing
-    * generation re-derives only the remaining GLOBAL stages (the
-    * frozen-classifier gate, budget, decontamination, split) — on
-    * 100 TB the per-landing bill for the foldable stages drops from
-    * O(store) to O(Δ). `clusters` (VERDICT r16 item 3) lets the
-    * caller hand in an incrementally maintained family table
-    * ([[Cluster.incrementalClusters]] over its pair/cluster
-    * snapshots); the funnel then skips its own pair generation + CC
-    * entirely. The caller owns the equality obligation (the
-    * incremental table must equal the one-shot
-    * `dedupClusters(s2, pairsFromPostings(shingles(s2)))` — pinned in
-    * ClusterSpec/StreamingSpec). It is a THUNK, first forced at the
+    * [[funnel]] takes stage 0, the exact-dedup survivor set and the
+    * substring-survivor filter from these, so each landing generation
+    * re-derives only the remaining GLOBAL stages (the frozen-classifier
+    * gate, budget, decontamination, split) — on 100 TB the per-landing
+    * bill for the foldable stages drops from O(store) to O(Δ).
+    *
+    * `clusters` is the family table
+    * `dedupClusters(s2, jaccardPairsFromPostings(shingles ⋈ s2))` over
+    * the substring survivors. It is a THUNK, first forced at the
     * funnel's near-dup stage (r18, guide §2.6): the caller builds the
     * pair+CC chain as a concurrent driver job and the funnel's
     * emission head (meta/exact-dedup/substring checkpoints — which
@@ -76,8 +72,8 @@ object FunnelStore {
     * materialized (checkpointed) table — the funnel reads it twice
     * (family-root filter + split join) and does NOT re-anchor it. */
   final case class Folded(raw: DataFrame, winners: DataFrame,
-                          coverage: Option[DataFrame] = None,
-                          clusters: Option[() => DataFrame] = None)
+                          coverage: DataFrame,
+                          clusters: () => DataFrame)
 
   /** One generation's increment of the substring-coverage state — the
     * dedup_substring_incremental shape (history reduces ONCE) applied
@@ -227,139 +223,68 @@ object FunnelStore {
   }
 
   /** The full funnel accounting (pipeline_e2e_v2's 12 rows) derived
-    * from the stores alone. Stage semantics are the batch capstone's:
-    * exact dedup (min-id per norm hash) → substring dedup (drop docs
-    * with >20% duplicated-span coverage; coverage re-derived from the
-    * gram store via the dupSpans island identity — Σ islands
-    * (max−min+L), so no per-position table is ever stored) → near-dup
-    * family collapse (hashed-posting jaccard pairs + CC roots) → rule
-    * quality gate with the frozen store-trained classifier's agreement
-    * cells → per-source budget → decontamination (store shingles vs
-    * the bench docs' store shingles) → leakage-safe family split.
+    * from the stores and the [[Folded]] inputs. Stage semantics are the
+    * batch capstone's: exact dedup (min-id per norm hash, from the
+    * folded winner store) → substring dedup (drop docs with >20%
+    * duplicated-span coverage, from the folded coverage table) →
+    * near-dup family collapse (the caller's hashed-posting jaccard
+    * pairs + CC roots) → rule quality gate with the frozen
+    * store-trained classifier's agreement cells → per-source budget →
+    * decontamination (store shingles vs the bench docs' store
+    * shingles) → leakage-safe family split. Results equal the one-shot
+    * funnel by the fold-merge argument on [[Folded]]; StreamingSpec
+    * pins it.
     *
-    * With `folded` (the landing-cadence caller), stage 0 reads the
-    * additive raw counters and the exact-dedup survivor set comes from
-    * the per-batch-maintained winner store instead of a corpus-wide
-    * `GROUP BY norm_h` — see [[Folded]]. Results are identical by the
-    * fold-merge argument there; StreamingSpec pins it. */
-  def funnel(st: Stores, spanLen: Int = 16,
-             folded: Option[Folded] = None,
-             trained: Option[() => DataFrame] = None): DataFrame = {
+    * `trained` returns the frozen classifier's weight table
+    * ([[QualityClf.trainOnFeatures]] over the feature store) — a thunk
+    * for the same reason `Folded.clusters` is: the caller trains
+    * concurrently and the weights are first needed after the emission
+    * head has materialized. */
+  def funnel(st: Stores, folded: Folded,
+             trained: () => DataFrame): DataFrame = {
     val spark = st.meta.sparkSession
     import spark.implicits._
     graft.functions.GraftHash64.register(spark)
-    // stage-level dev timing: set GRAFT_FUNNEL_PROBE=1 to print each
-    // stage's forced materialization time (zero cost when unset) — the
-    // profiling loop that attributed the fold bill to the CC collapse
-    // and the store-fed training, i.e. the per-generation audit itself
-    def probeT[A](n: String)(b: => A): A =
-      if (sys.env.contains("GRAFT_FUNNEL_PROBE")) {
-        val t0 = System.nanoTime(); val r = b
-        System.err.println(f"FUNNELSTAGE $n ${(System.nanoTime()-t0)/1e9}%.2f")
-        r
-      } else b
-    def probe(n: String, d: DataFrame): Unit =
-      if (sys.env.contains("GRAFT_FUNNEL_PROBE")) {
-        val t0 = System.nanoTime()
-        val c = d.count()
-        System.err.println(f"FUNNELSTAGE $n ${(System.nanoTime()-t0)/1e9}%.2f rows=$c")
-      }
     val meta = st.meta.localCheckpoint(false)
-    probe("meta", meta)
     def acct(idx: Int, name: String, d: DataFrame): DataFrame =
       d.agg(count(lit(1)).as("n_docs"),
           coalesce(sum("n_chars").cast("bigint"), lit(0L)).as("sum_chars"))
         .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
           col("n_docs"), col("sum_chars"))
-    val rawRow = folded match {
-      case Some(f) =>
-        f.raw.agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-            coalesce(sum("sum_chars").cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(0L).as("stage_idx"), lit("raw").as("stage"),
-            col("n_docs"), col("sum_chars"))
-      case None => acct(0, "raw", meta)
-    }
-    // folded path: s1 is one broadcast semi-join of two checkpointed
-    // tables — cheaper to recompute for its second consumer (the
-    // exact-dedup acct row) than to pay another synchronous barrier
-    // (r18; the one-shot path's groupBy+join derivation keeps the
-    // anchor: it feeds the corpus-wide dup reduction too)
-    val s1 = folded match {
-      case Some(f) =>
-        meta.join(f.winners.select("doc_id"), Seq("doc_id"), "left_semi")
-      case None =>
-        meta.groupBy("norm_h").agg(min("doc_id").as("doc_id"))
-          .join(meta, "doc_id")
-          .localCheckpoint(false)
-    }
-    // substring stage: dup coverage per doc — from the incrementally
-    // maintained store when the caller folds one ([[coverageIncrement]]),
-    // else re-derived corpus-wide from the gram store (one-shot path)
-    val dup = folded.flatMap(_.coverage).getOrElse {
-      val g1 = st.grams.join(s1.select("doc_id"), "doc_id")
-        .localCheckpoint(false) // df count AND the dup-start flags
-      val dupH = g1.groupBy("h").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 2).select("h")
-      val wd = Window.partitionBy("doc_id").orderBy("pos")
-      g1.join(dupH, Seq("h"), "left_semi")
-        .select("doc_id", "pos")
-        .withColumn("prev", lag("pos", 1).over(wd))
-        .withColumn("nw",
-          when(col("prev").isNull || col("pos") - col("prev") > spanLen, 1L)
-            .otherwise(0L))
-        .withColumn("island", sum("nw").over(wd))
-        .groupBy("doc_id", "island")
-        .agg((max("pos") - min("pos") + spanLen).cast("long").as("len"))
-        .groupBy("doc_id").agg(sum("len").as("dup_tokens"))
-    }
-    val s2 = s1.join(dup, Seq("doc_id"), "left")
+    val rawRow = folded.raw
+      .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
+        coalesce(sum("sum_chars").cast("bigint"), lit(0L)).as("sum_chars"))
+      .select(lit(0L).as("stage_idx"), lit("raw").as("stage"),
+        col("n_docs"), col("sum_chars"))
+    // s1 is one broadcast semi-join of two checkpointed tables — cheaper
+    // to recompute for its second consumer (the exact-dedup acct row)
+    // than to pay another synchronous barrier (r18)
+    val s1 = meta.join(folded.winners.select("doc_id"), Seq("doc_id"), "left_semi")
+    val s2 = s1.join(folded.coverage, Seq("doc_id"), "left")
       .filter(coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
       .drop("dup_tokens")
       .localCheckpoint(false)
-    probe("s1", s1); probe("s2", s2)
     // frozen classifier margins, materialized BEFORE the near-dup
     // stage forces the caller's pair+CC thunk (r18, guide §2.6): the
     // per-doc weight sum is independent of the family collapse, so it
     // runs under the CC chain's tail instead of inside the final
     // emission job. Computed over s2 ⊇ s3 — per-doc sums are identical
     // per doc, and the s3 inner join below drops the collapsed docs.
-    // `trained` is a thunk for the same reason `Folded.clusters` is:
-    // the caller trains concurrently and the weights are first needed
-    // HERE, after the emission head has already materialized.
-    val wts = trained.map(th => probeT("trainwait")(th()))
-      .getOrElse(probeT("train")(
-        QualityClf.trainOnFeatures(st.feat, meta.select("doc_id", "y"))._2))
+    // The trainer is integer-deterministic, so the caller's
+    // concurrently trained weights are byte-identical to an inline
+    // train.
     val marg = st.feat.join(s2.select("doc_id"), "doc_id")
-      .join(broadcast(wts), Seq("b"), "left")
+      .join(broadcast(trained()), Seq("b"), "left")
       .groupBy("doc_id")
       .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
       .localCheckpoint(false)
-    // near-dup collapse over the substring survivors — from the
-    // caller's concurrently-built family table when folded carries one
-    // (forced HERE, after the emission head has materialized under the
-    // caller's pair+CC jobs; arrives checkpointed — see [[Folded]]),
-    // else pairs from the hashed shingle store + CC
-    val clusters = folded.flatMap(_.clusters).map(th => probeT("ccwait")(th()))
-      .getOrElse {
-        val pairs = probeT("pairs")(Dedup.jaccardPairsFromPostings(
-          st.shingles.join(s2.select("doc_id"), "doc_id"))
-          .select("id1", "id2"))
-        probeT("cc")(Cluster.dedupClusters(s2.select("doc_id"), pairs)
-          .localCheckpoint(false))
-      }
-    probe("clusters", clusters)
+    // near-dup collapse over the substring survivors — forced HERE,
+    // after the emission head has materialized under the caller's
+    // pair+CC jobs; arrives checkpointed (see [[Folded]])
+    val clusters = folded.clusters()
     val s3 = s2.join(clusters.filter(col("doc_id") === col("cluster_id"))
         .select("doc_id"), "doc_id")
       .localCheckpoint(false)
-    probe("s3", s3)
-    // frozen classifier agreement over s3; `trained` lets a
-    // landing-cadence caller train CONCURRENTLY with the
-    // coverage/pair/CC chain (guide §2.6 — the training reads only the
-    // stores, so it is independent of every other fold stage); the
-    // trainer is integer-deterministic, so an injected weight table is
-    // byte-identical to the inline train. The margins themselves were
-    // materialized above, before the family collapse was forced.
-    probe("marg", marg)
     val agree = s3.join(marg, "doc_id")
       .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
         when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
@@ -378,17 +303,15 @@ object FunnelStore {
     // the budget rank REPARTITIONS it immediately and the quality acct
     // row re-filters s3 in one cheap stage (r18 barrier trim)
     val s4 = s3.filter(col("quality_score") >= 0.5)
-    probe("s4", s4)
     // budget prior via the (source, blk) two-level cumsum — a plain
     // partitionBy("source") window is one task per source at scale
-    val s5 = probeT("rank")(Rank.perGroupRunningSum(
+    val s5 = Rank.perGroupRunningSum(
         s4.select("doc_id", "source", "n_chars", "quality_score"),
         "source", "n_chars",
         Seq(col("quality_score").desc, col("doc_id")))
       .select("doc_id", "source", "n_chars", "prior")
       .filter(col("prior") < 25000L)
-      .localCheckpoint(false))
-    probe("s5", s5)
+      .localCheckpoint(false)
     // decontamination from the shingle store: containment of each
     // selected doc against the bench docs (doc_id < 25), any >= 0.5
     val bench = st.shingles
@@ -404,15 +327,11 @@ object FunnelStore {
       .select("doc_id").distinct()
     val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
-    probe("cs", cs); probe("s6", s6)
     val bucket = shiftrightunsigned(call_function("graft_hash64",
       col("cluster_id").cast("string"), lit(7L)), 52)
     val s7 = s6.join(clusters.select("doc_id", "cluster_id"), "doc_id")
       .filter(bucket < 3277)
-    probe("s7", s7.localCheckpoint(false))
-    probe("agreeRows", agreeRows.localCheckpoint(false))
-    probe("rawRow", rawRow.localCheckpoint(false))
-    val out = rawRow
+    rawRow
       .unionByName(acct(1, "exact_dedup", s1))
       .unionByName(acct(2, "substring_dedup", s2))
       .unionByName(acct(3, "near_dedup", s3))
@@ -422,7 +341,5 @@ object FunnelStore {
       .unionByName(acct(7, "split_train", s7))
       .unionByName(agreeRows)
       .orderBy("stage_idx")
-    probe("FINAL", out)
-    out
   }
 }

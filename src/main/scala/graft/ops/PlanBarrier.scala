@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, GraftBarrier}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage + statistics barrier for loop-carried DataFrames.
   *
@@ -37,4 +38,16 @@ object PlanBarrier {
     * bodies here join on keys and aggregate, and AQE re-plans them from
     * actual shuffle sizes. */
   def cut(df: DataFrame): DataFrame = GraftBarrier.localCheckpointStatsReset(df)
+
+  /** Drop the blocks of a local checkpoint. `Dataset.unpersist()`
+    * releases nothing here: the checkpoint is not in the CacheManager,
+    * so its RDD stays in `sc.getPersistentRDDs` until the context
+    * cleaner collects it. This unpersists the RDD under every
+    * `LogicalRDD` leaf of `checkpointed`'s plan instead. Neither the
+    * table nor any DataFrame built on it may be read afterwards. */
+  def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

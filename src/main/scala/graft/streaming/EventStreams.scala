@@ -68,9 +68,9 @@ object EventStreams {
     * keeps four stores per partition) — so the right width follows
     * STATE VOLUME, not batch shuffle width. The events state here is
     * tens of thousands of rows; 32-wide state quadruples the commit
-    * fan-out for nothing (Profile "streams" at sf0.1: range join
-    * 10.7 s → 4.2 s from this sizing). A 100 TB deployment with
-    * billions of state rows raises it, independently of the batch
+    * fan-out for nothing (per-batch StreamingQueryProgress at sf0.1:
+    * range join 10.7 s → 4.2 s from this sizing). A 100 TB deployment
+    * with billions of state rows raises it, independently of the batch
     * width. */
   val StateParts = 8
 
@@ -100,12 +100,12 @@ object EventStreams {
                            compact: Option[DataFrame => DataFrame] = None): Unit = {
     // materialize the keyed partial ONCE (it is a bounded aggregate —
     // |keys| rows) so the write job doesn't re-execute the whole
-    // per-batch plan a second time; unpersist after the write (ADVICE
+    // per-batch plan a second time; release it after the write (ADVICE
     // r16 — checkpointed blocks otherwise accumulate per batch for the
     // stream's lifetime)
     val part = local.localCheckpoint()
     try part.coalesce(files).write.mode("overwrite").parquet(s"$path/b$batchId")
-    finally { part.unpersist(); () }
+    finally graft.ops.PlanBarrier.release(part)
     compact.foreach(f => ledgerCompact(local.sparkSession, path, f))
   }
 
@@ -1364,11 +1364,13 @@ object EventStreams {
     * [[graft.ops.FunnelStore.Folded]]): raw landing counters fold by
     * plain sums and the exact-dedup presence store folds by keyed
     * min-id merge, so each generation's re-derivation covers only the
-    * global stages. The stores make that re-derivation compact-integer
-    * work (the lakehouse shape global pipeline stages actually run
-    * on); the final fold provably equals the one-shot pipeline_e2e_v2
-    * (StreamingSpec pins row-set equality; the oracle is the batch
-    * funnel's replay verbatim). */
+    * global stages. The near-dup family collapse is one of them: each
+    * generation re-derives its pairs and connected components in full
+    * over the current substring survivors. The stores make that
+    * re-derivation compact-integer work (the lakehouse shape global
+    * pipeline stages actually run on); the final fold provably equals
+    * the one-shot pipeline_e2e_v2 (StreamingSpec pins row-set
+    * equality; the oracle is the batch funnel's replay verbatim). */
   def pipelineIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val base = graft.sources.Scratch.dir("graft_pipe_stream")
     val (stage, ckpt) = (s"$base/stage", s"$base/ckpt")
@@ -1448,25 +1450,11 @@ object EventStreams {
     // generation pays only its delta plus the affected-doc sweep)
     val (winSnap, covSnap, dupLedger) =
       (s"$base/winsnap", s"$base/covsnap", s"$base/dupledger")
-    val (pairSnap, clusSnap) = (s"$base/pairsnap", s"$base/clussnap")
     var gen = 0
-    // carried intermediate state of the near-dup pair derivation
-    // (VERDICT r17 item 1): generation g re-derives only the posting
-    // buckets the landing shard (or a coverage-dropped doc) touched and
-    // ledger-merges the carried pre-threshold counts — session-lifetime
-    // state of THIS key's invocation, equality to the one-shot
-    // derivation pinned in StreamingSpec
-    var pairState: Option[graft.ops.Dedup.PostingPairState] = None
     // the fold works compact integer/hash stores, not raw text — the
     // same state-volume-sized width the passes use (32-wide exchanges
     // across the funnel's ~30 small aggregate stages are pure task
     // overhead at this store size)
-    def foldProbe[A](n: String)(b: => A): A =
-      if (sys.env.contains("GRAFT_FUNNEL_PROBE")) {
-        val t0 = System.nanoTime(); val r = b
-        System.err.println(f"FOLDSTAGE $n ${(System.nanoTime() - t0) / 1e9}%.2f")
-        r
-      } else b
     def fold(): Unit = withStateParts(spark) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -1482,19 +1470,18 @@ object EventStreams {
         graft.ops.QualityClf.trainOnFeatures(fx,
           meta.select("doc_id", "y"))._2
       }
-      val winners = foldProbe("winners")(spark.read
+      val winners = spark.read
         .option("recursiveFileLookup", "true")
         .parquet(exactDir)
         .groupBy("norm_h").agg(min("doc_id").as("doc_id"))
-        .localCheckpoint(false)) // increment + funnel + snapshot write
+        .localCheckpoint(false) // increment + funnel + snapshot write
       val prev = Option.when(gen > 1)(gen - 1)
-      val (dupAdd, newCov) = foldProbe("covinc")(
-        graft.ops.FunnelStore.coverageIncrement(
-          gr, winners,
-          prev.map(g => spark.read.parquet(s"$winSnap/g$g")),
-          prev.map(g => spark.read.parquet(s"$covSnap/g$g")),
-          prev.map(_ => spark.read.option("recursiveFileLookup", "true")
-            .parquet(dupLedger))))
+      val (dupAdd, newCov) = graft.ops.FunnelStore.coverageIncrement(
+        gr, winners,
+        prev.map(g => spark.read.parquet(s"$winSnap/g$g")),
+        prev.map(g => spark.read.parquet(s"$covSnap/g$g")),
+        prev.map(_ => spark.read.option("recursiveFileLookup", "true")
+          .parquet(dupLedger)))
       // one materialization of the new coverage serves the snapshot
       // write, the survivor filter and the funnel — the old shape wrote
       // it to parquet and read it straight back, a same-fold I/O round
@@ -1502,45 +1489,25 @@ object EventStreams {
       // themselves are for the NEXT generation only, so they proceed
       // concurrently with this fold's compute
       val cov = newCov.localCheckpoint(false)
-      val covWriteF = Future(foldProbe("covwrite") {
+      val covWriteF = Future {
         dupAdd.coalesce(4).write.mode("overwrite").parquet(s"$dupLedger/g$gen")
         cov.coalesce(4).write.mode("overwrite").parquet(s"$covSnap/g$gen")
         winners.select("doc_id").coalesce(4)
           .write.mode("overwrite").parquet(s"$winSnap/g$gen")
-      })
-      // INCREMENTAL family collapse (VERDICT r16 item 3): recompute the
-      // substring-survivor set, delta-restrict the pair re-derivation
-      // to the posting buckets this generation's survivor changes
-      // touched (Dedup.jaccardPairsStateful — VERDICT r17 item 1; the
-      // DF-cap hazard the old full-recompute comment guarded is closed
-      // by construction there: a bucket whose cap status can change is
-      // definitionally touched and re-derived from current postings),
-      // then re-run CC only on the families the landing shard touched;
-      // untouched families read from the previous generation's
-      // snapshot (Cluster.incrementalClusters). Same survivor formula
-      // as the funnel's s1→s2 chain, so the handed-in table is the
-      // funnel's own.
+      }
+      // family collapse over the substring survivors — same survivor
+      // formula as the funnel's s1→s2 chain, so the handed-in table is
+      // the funnel's own. Pairs and CC are re-derived in full every
+      // generation: this operator's generations are ¾ and ¼ of the
+      // corpus (genThreshold), where re-deriving only what a shard
+      // touched measured slower than the full paths (pairs 2.2 vs
+      // 1.6 s, CC 3.4 vs 1.9 s at sf0.1 — OPTIMIZATION_r18.md).
       val s2docs = meta.select("doc_id", "n_tokens")
         .join(winners.select("doc_id"), Seq("doc_id"), "left_semi")
         .join(cov, Seq("doc_id"), "left")
         .filter(coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
         .select("doc_id")
-        .localCheckpoint(false) // pair postings AND both CC branches
-      // SHARD-SIZE ROUTING (r18, measured): the two delta machineries —
-      // jaccardPairsStateful's touched-bucket restriction and
-      // Cluster.incrementalClusters' touched-family restriction — win
-      // when the landing shard is SMALL relative to the corpus (their
-      // work is O(delta + touched)); THIS operator's staged generations
-      // are construction-time HALVES (genThreshold mid-split), where
-      // paired probes show the diff machinery costing more than the
-      // full re-derivation it avoids (pairs 2.2 vs 1.6 s, cc 3.4 vs
-      // 1.9 s at sf0.1 — OPTIMIZATION_r18.md). Both paths are
-      // equality-pinned (DedupSpec/ClusterSpec/StreamingSpec), so the
-      // routing is performance-only; shard size is deployment metadata
-      // known before the job, never probed from data. A daily-shard
-      // deployment flips it; GRAFT_SMALL_SHARD=1 forces the delta
-      // paths for probing.
-      val smallShard = sys.env.get("GRAFT_SMALL_SHARD").contains("1")
+        .localCheckpoint(false) // pair postings AND the CC's doc set
       // the whole pair+CC chain runs as ONE concurrent driver job
       // (r18, guide §2.6): it reads only s2docs (checkpointed above)
       // and the stores, so the funnel's emission head — meta/exact-
@@ -1549,55 +1516,27 @@ object EventStreams {
       // funnel forces the thunk at its near-dup stage, the first
       // consumer. Plans and results are unchanged — only the
       // serialization between the two independent job chains goes.
-      val pcF = Future {
-        val pairs = foldProbe("pairs") {
-          val (p, st) = graft.ops.Dedup.jaccardPairsStateful(
-            sh, s2docs, pairState.filter(_ => smallShard))
-          pairState = Some(st)
-          p.select("id1", "id2")
-            .localCheckpoint(false) // CC input AND the pair snapshot write
-        }
-        val clusters = foldProbe("cc")((prev.filter(_ => smallShard) match {
-          case None => graft.ops.Cluster.dedupClusters(s2docs, pairs)
-          case Some(g0) => graft.ops.Cluster.incrementalClusters(
-            s2docs, pairs,
-            spark.read.parquet(s"$clusSnap/g$g0"),
-            spark.read.parquet(s"$pairSnap/g$g0"))
-        }).localCheckpoint(false)) // funnel consumer AND the snapshot write
-        (pairs, clusters)
+      val clustersF = Future {
+        val pairs = graft.ops.Dedup.jaccardPairsFromPostings(
+          sh.join(s2docs, "doc_id")).select("id1", "id2")
+        graft.ops.Cluster.dedupClusters(s2docs, pairs)
+          .localCheckpoint(false) // family-root filter AND the split join
       }
-      // next-generation state only — overlaps the funnel's own jobs
-      val snapWriteF = pcF.map { case (pairs, clusters) =>
-        foldProbe("snapwrite") {
-          pairs.coalesce(4).write.mode("overwrite").parquet(s"$pairSnap/g$gen")
-          clusters.coalesce(4).write.mode("overwrite").parquet(s"$clusSnap/g$gen")
-        }
-      }
-      foldProbe("emit")(graft.ops.FunnelStore
+      graft.ops.FunnelStore
         .funnel(graft.ops.FunnelStore.Stores(meta, sh, gr, fx),
-          folded = Some(graft.ops.FunnelStore.Folded(
+          graft.ops.FunnelStore.Folded(
             ledgerSums(spark, rawDir, Seq("source"),
               Seq("n_docs", "sum_chars")),
-            winners,
-            Some(cov),
-            clusters = Some(() => Await.result(pcF, Duration.Inf)._2))),
-          trained = Some(() => Await.result(trainF, Duration.Inf)))
-        .write.mode("overwrite").parquet(acctDir))
+            winners, cov,
+            () => Await.result(clustersF, Duration.Inf)),
+          () => Await.result(trainF, Duration.Inf))
+        .write.mode("overwrite").parquet(acctDir)
       Await.result(covWriteF, Duration.Inf)
-      Await.result(snapWriteF, Duration.Inf)
       ()
     }
-    // same env-gated dev probe as FunnelStore.funnel: attribute the
-    // key's wall time to stage/landing/fold phases
-    def phase[A](n: String)(b: => A): A =
-      if (sys.env.contains("GRAFT_FUNNEL_PROBE")) {
-        val t0 = System.nanoTime(); val r = b
-        System.err.println(f"PIPEPHASE $n ${(System.nanoTime() - t0) / 1e9}%.2f")
-        r
-      } else b
-    phase("stage")(stageGens(docs, thr, stage))
-    promoteGen(stage, 1); phase("pass1")(pass()); phase("fold1")(fold())
-    promoteGen(stage, 2); phase("pass2")(pass()); phase("fold2")(fold())
+    stageGens(docs, thr, stage)
+    promoteGen(stage, 1); pass(); fold()
+    promoteGen(stage, 2); pass(); fold()
     spark.read.parquet(acctDir).orderBy("stage_idx")
   }
 

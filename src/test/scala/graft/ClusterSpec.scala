@@ -150,39 +150,33 @@ class ClusterSpec extends AnyFunSuite {
     }
   }
 
-  test("incremental clusters equal the one-shot CC across merges, splits, exits") {
-    // VERDICT r16 item 3 — the generation-cadence family collapse must
-    // re-run CC only on touched families yet equal dedupClusters
-    // exactly. Exercise every delta class at once:
-    //   gen1: {1,2,3} chain, {10,11} pair, {20,21,22} triangle,
-    //         singletons 30, 40, 50
-    //   gen2: doc 2 EXITS (splits {1,2,3} into {1} and {3}),
-    //         pair (11,20) ADDED (merges two old families),
-    //         pair (20,21) REMOVED (triangle survives via 20-22,21-22),
-    //         pair (40,41) ADDED with NEW doc 41, new singleton 60,
-    //         old-old pair (30,50) ADDED (the cap-admission case: two
-    //         previously-untouched singletons pair up with no new doc)
-    val docs1 = Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L, 22L, 30L, 40L, 50L).toDF("doc_id")
-    val pairs1 = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (20L, 22L),
-      (21L, 22L)).toDF("id1", "id2")
-    val snap = Cluster.dedupClusters(docs1, pairs1).localCheckpoint(false)
+  test("dedup clusters resolve splits, cross-family merges and new docs to min ids") {
+    // the second generation of a landing corpus whose first generation
+    // held a {1,2,3} chain, a {10,11} pair, a {20,21,22} triangle and
+    // singletons 30, 40, 50 — the streaming funnel re-derives families
+    // over such a graph in full every generation:
+    //   doc 2 EXITS (splits {1,2,3} into {1} and {3}),
+    //   pair (11,20) ADDED (merges two old families),
+    //   pair (20,21) REMOVED (triangle survives via 20-22,21-22),
+    //   pair (40,41) ADDED with NEW doc 41, new singleton 60,
+    //   old-old pair (30,50) ADDED (two former singletons pair up
+    //   with no new doc)
     val docs2 = Seq(1L, 3L, 10L, 11L, 20L, 21L, 22L, 30L, 40L, 41L, 50L, 60L)
       .toDF("doc_id")
     val pairs2 = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 22L), (21L, 22L),
       (11L, 20L), (40L, 41L), (30L, 50L))
       .filter { case (a, b) => a != 2L && b != 2L } // doc 2 left the corpus
       .toDF("id1", "id2")
-    val want = Cluster.dedupClusters(docs2, pairs2)
+    val got = Cluster.dedupClusters(docs2, pairs2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val got = Cluster.incrementalClusters(docs2, pairs2, snap, pairs1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == want, "incremental CC diverged from the one-shot run")
-    // spot-check the semantics the deltas were built to exercise
-    assert(want(1L) == 1L && want(3L) == 3L, "family split on doc exit")
-    assert(want(10L) == 10L && want(20L) == 10L && want(22L) == 10L,
+    assert(got == Map(1L -> 1L, 3L -> 3L, 10L -> 10L, 11L -> 10L, 20L -> 10L,
+      21L -> 10L, 22L -> 10L, 30L -> 30L, 40L -> 40L, 41L -> 40L, 50L -> 30L,
+      60L -> 60L))
+    assert(got(1L) == 1L && got(3L) == 3L, "family split on doc exit")
+    assert(got(10L) == 10L && got(20L) == 10L && got(22L) == 10L,
       "added cross-family pair must merge")
-    assert(want(30L) == 30L && want(50L) == 30L, "old-old pair must merge")
-    assert(want(41L) == 40L && want(60L) == 60L)
+    assert(got(30L) == 30L && got(50L) == 30L, "old-old pair must merge")
+    assert(got(41L) == 40L && got(60L) == 60L)
   }
 
   test("funnel steps are monotonically non-increasing and windows enforced") {

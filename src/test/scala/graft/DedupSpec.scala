@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Similarity}
 import graft.sources.Tables
@@ -505,6 +506,41 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  /** The r17 shape of [[Dedup.prefixFilterJaccard]] — the parity
+    * oracle for the test below (same contract, separately derived plan). */
+  private def prefixFilterJaccardRef(docs: DataFrame, n: Int = 3,
+                          tNum: Int = 4, tDen: Int = 5): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val ex = Dedup.shingleSets(docs, n)
+      .select(col("doc_id"), explode(col("sh")).as("s"))
+      .localCheckpoint(false) // feeds df, sizes, prefixes, and the verify
+    val df    = ex.groupBy("s").agg(count(lit(1)).as("df"))
+    val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("s"))
+    val pre = ex.join(df, "s").join(sizes, "doc_id")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <=
+        col("n") - expr(s"(n * $tNum + ${tDen - 1}) div $tDen") + 1)
+      .select("doc_id", "s")
+      .localCheckpoint(false) // both sides of the candidate self-join
+    val cands = pre.select(col("doc_id").as("id1"), col("s"))
+      .join(pre.select(col("doc_id").as("id2"), col("s")), Seq("s"))
+      .filter(col("id1") < col("id2"))
+      .select("id1", "id2").distinct()
+    val inter = cands
+      .join(ex.select(col("doc_id").as("id1"), col("s")), Seq("id1"))
+      .join(ex.select(col("doc_id").as("id2"), col("s")), Seq("id2", "s"))
+      .groupBy("id1", "id2").agg(count(lit(1)).as("shared"))
+    inter
+      .join(sizes.select(col("doc_id").as("id1"), col("n").as("n1")), "id1")
+      .join(sizes.select(col("doc_id").as("id2"), col("n").as("n2")), "id2")
+      .filter(col("shared") * tDen >=
+        (col("n1") + col("n2") - col("shared")) * tNum)
+      .select(col("id1"), col("id2"), col("shared"),
+        (col("shared") / (col("n1") + col("n2") - col("shared")))
+          .as("jaccard"))
+  }
+
   test("prefix filter r18 plan is row-identical to the r17 reference shape") {
     // the r18 rewrite (df from bucket size, map-side candidate pairs,
     // array_intersect verify on attached shingle arrays) must emit the
@@ -518,7 +554,7 @@ class DedupSpec extends AnyFunSuite {
       .toMap
     for ((tNum, tDen) <- Seq((4, 5), (1, 2))) {
       val got = asMap(Dedup.prefixFilterJaccard(docs, 3, tNum, tDen))
-      val ref = asMap(Dedup.prefixFilterJaccardRef(docs, 3, tNum, tDen))
+      val ref = asMap(prefixFilterJaccardRef(docs, 3, tNum, tDen))
       assert(got == ref, s"t=$tNum/$tDen " +
         s"missing=${ref.keySet.diff(got.keySet)} extra=${got.keySet.diff(ref.keySet)} " +
         s"diff=${ref.collect { case (k, v) if got.get(k).exists(_ != v) => (k, v, got(k)) }}")
@@ -731,59 +767,5 @@ class DedupSpec extends AnyFunSuite {
       }
     }
     assert(sawDup, "corpus should contain at least one duplicated gram")
-  }
-
-  test("stateful posting pairs equal the one-shot derivation across " +
-      "generations, including DF-cap crossings both ways") {
-    // VERDICT r17 item 1 — the generation-cadence delta restriction
-    // must equal jaccardPairsFromPostings exactly per generation. The
-    // synthetic store forces every hazard class at maxDF = 3:
-    //   bucket A {1,2,3,4}: OVER cap gen1; doc 4 exits gen2 → {1,2,3}
-    //     crosses UNDER the cap (admits old-old pairs, the case the
-    //     old full-recompute comment guarded);
-    //   bucket B {1,2}: under cap gen1; new docs 6,7 land gen2 →
-    //     {1,2,6,7} crosses OVER the cap (old pair (1,2) must LOSE B's
-    //     contribution);
-    //   bucket C {2,3}: untouched both gens (carried verbatim);
-    //   bucket D {6,7}: brand new. gen3 then retires doc 6 to exercise
-    //   state carried FROM a delta-built generation (lazy bucket union).
-    // padding docs 101..120 (one singleton shingle each, present in
-    // every generation) make the diffs realistic minorities; gen 4
-    // retires most of the padding at once so the delta ledger also
-    // holds under a mass exit (the caller owns the full-vs-delta
-    // routing — here every generation after the first takes the DELTA
-    // branch)
-    val padding = (101L to 120L).map(i => i -> s"P$i")
-    val post = (Seq(
-      1L -> "A", 2L -> "A", 3L -> "A", 4L -> "A",
-      1L -> "B", 2L -> "B", 6L -> "B", 7L -> "B",
-      2L -> "C", 3L -> "C",
-      6L -> "D", 7L -> "D",
-      1L -> "E", 2L -> "E", 3L -> "E", 4L -> "E", 6L -> "E"
-    ) ++ padding).toDF("doc_id", "s")
-    val pad = padding.map(_._1)
-    val gens = Seq(
-      Seq(1L, 2L, 3L, 4L, 5L) ++ pad,
-      Seq(1L, 2L, 3L, 5L, 6L, 7L) ++ pad,
-      Seq(1L, 2L, 3L, 5L, 7L) ++ pad,
-      Seq(1L, 2L, 3L, 5L, 7L) ++ pad.take(3))
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    var st: Option[Dedup.PostingPairState] = None
-    gens.foreach { g =>
-      val docs = g.toDF("doc_id").localCheckpoint(false)
-      val (got, next) =
-        Dedup.jaccardPairsStateful(post, docs, st, threshold = 0.2, maxDF = 3)
-      st = Some(next)
-      val want = Dedup.jaccardPairsFromPostings(post.join(docs, "doc_id"),
-        threshold = 0.2, maxDF = 3)
-      assert(got.collect().map(key).sorted.toSeq ==
-          want.collect().map(key).sorted.toSeq,
-        s"generation ${g.mkString(",")} diverged from the one-shot pairs")
-    }
-    // the cap-crossing admissions actually happened (guard the fixture)
-    val fin = st.get
-    val bucketA = fin.buckets.filter(col("s") === "A").collect()
-    assert(bucketA.length == 1, "bucket A must be under cap after exits")
   }
 }

@@ -362,6 +362,43 @@ class StreamingSpec extends AnyFunSuite {
         s"batchOnly=${oneShot.diff(streamed).take(4)}")
   }
 
+  test("one stream_pipeline_e2e call stays under its Spark job bound") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.phase"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    // the fold's concurrent driver jobs run on pool threads that need
+    // not inherit the caller's local properties, so every job start
+    // before the marker is counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("marker") => drained.countDown()
+          case _ => jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val rows = SparkEntry.queries("stream_pipeline_e2e")(spark, sf).collect()
+      assert(rows.length == 12)
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every job of the call has been counted
+      sc.setLocalProperty(tag, "marker")
+      spark.range(1).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    // measured at this fixture: 333-335 jobs per call over 11 calls,
+    // in the suite and alone (AQE's runtime broadcast jobs and the
+    // micro-batch count vary with timing); 359-360 while the fold still
+    // wrote pair/cluster snapshots and ran discarded checkpoint jobs.
+    // The bound leaves that timing spread some headroom.
+    assert(jobs.get <= 340, s"stream_pipeline_e2e started ${jobs.get} jobs")
+  }
+
   test("streaming quality scoring equals the one-shot gen1-frozen batch scoring") {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
@@ -507,6 +544,19 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toString)
     assert(streamed.sameElements(batch),
       "folded-store token cut diverged from the one-shot global cumsum")
+  }
+
+  test("ledgerAppend releases its batch checkpoint") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val path = graft.sources.Scratch.dir("graft_ledger_release").toString
+    val entry = Seq(("web", 3L), ("code", 5L)).toDF("source", "n_docs")
+    // compare id sets, not sizes: the context cleaner may drop an
+    // unrelated RDD meanwhile
+    val before = sc.getPersistentRDDs.keySet
+    graft.streaming.EventStreams.ledgerAppend(entry, path, 0L)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(spark.read.parquet(s"$path/b0").count() == 2)
   }
 
   test("ledger compaction: compacted == uncompacted == one-shot, dirs bounded") {
