@@ -64,11 +64,14 @@ object FunnelStore {
     * `clusters` is the family table
     * `dedupClusters(s2, jaccardPairsFromPostings(shingles ⋈ s2))` over
     * the substring survivors. It is a THUNK, first forced at the
-    * funnel's near-dup stage (r18, guide §2.6): the caller builds the
-    * pair+CC chain as a concurrent driver job and the funnel's
-    * emission head (meta/exact-dedup/substring checkpoints — which
-    * read only winners+coverage) materializes under the chain's tail
-    * instead of after it. The thunk must return an already-
+    * funnel's near-dup stage (r18, guide §2.6): the caller forks the
+    * pair+CC chain as a [[graft.exec.Par]] branch and passes the
+    * branch's `join`, so the funnel's emission head (meta/exact-dedup/
+    * substring checkpoints — which read only winners+coverage)
+    * materializes under the chain's tail instead of after it. Forcing
+    * the thunk rethrows the branch's own failure; the caller's scope,
+    * which encloses the funnel call, cancels and waits for the branch
+    * if the funnel fails first. The thunk must return an already-
     * materialized (checkpointed) table — the funnel reads it twice
     * (family-root filter + split join) and does NOT re-anchor it. */
   final case class Folded(raw: DataFrame, winners: DataFrame,
@@ -115,79 +118,76 @@ object FunnelStore {
     // presence-store-sized anti-join per GENERATION fold, `isEmpty`
     // short-circuits at the first violation row. The check reads only
     // the two winner sets — independent of every increment stage — so
-    // it runs as a concurrent driver job (guide §2.6) and is awaited
-    // before the increment is returned: same fail-before-use
+    // it runs as a concurrent driver job (guide §2.6) whose scope
+    // closes before the increment is returned: same fail-before-use
     // semantics, no serial corpus action on the fold's critical path.
-    val precheckF = prevWinners.map { pw =>
-      import scala.concurrent.ExecutionContext.Implicits.global
-      scala.concurrent.Future {
-        require(pw.select("doc_id")
+    graft.exec.Par.scope { par =>
+      prevWinners.foreach { pw =>
+        par.fork(require(pw.select("doc_id")
             .join(winners.select("doc_id"), Seq("doc_id"), "left_anti")
             .isEmpty,
           "coverageIncrement precondition violated: a prior winner was " +
-            "evicted (winner set must be append-only)")
+            "evicted (winner set must be append-only)"))
       }
+      val deltaW = prevWinners match {
+        case Some(pw) =>
+          winners.select("doc_id")
+            .join(pw.select("doc_id"), Seq("doc_id"), "left_anti")
+        case None => winners.select("doc_id")
+      }
+      val deltaG = grams.join(deltaW, "doc_id")
+        .localCheckpoint(false) // delta counts AND the affected-doc sweep
+      val dc = deltaG.groupBy("h").agg(count(lit(1)).as("dc"))
+        .localCheckpoint(false) // old-count restriction AND the crossing test
+      val dupAdd = ((prevWinners, prevDup) match {
+        case (Some(pw), Some(pd)) =>
+          // for h ∉ prior dup set the old count is 0 or 1 (≥2 would BE in
+          // the set), so the crossing test needs no old-count aggregation:
+          // dc ≥ 2 crosses outright; dc == 1 crosses iff the gram occurs
+          // at all among prior winners — pure membership, one semi-join
+          val fresh = dc.join(pd.select("h"), Seq("h"), "left_anti")
+          fresh.filter(col("dc") >= 2).select("h")
+            .unionByName(fresh.filter(col("dc") === 1).select("h")
+              .join(grams.join(pw.select("doc_id"), "doc_id").select("h"),
+                Seq("h"), "left_semi"))
+        case _ => dc.filter(col("dc") >= 2).select("h")
+      }).localCheckpoint(false) // ledger entry, affected docs, dup flags
+      val affected = (prevWinners match {
+        case Some(pw) =>
+          grams.join(dupAdd, Seq("h"), "left_semi").select("doc_id")
+            .distinct()
+            .join(pw.select("doc_id"), Seq("doc_id"), "left_semi")
+            .unionByName(deltaW)
+        case None => deltaW
+      }).distinct().localCheckpoint(false) // sweep input AND the cov merge
+      val dupSet = prevDup match {
+        case Some(pd) => pd.select("h").unionByName(dupAdd)
+        case None => dupAdd
+      }
+      // first generation: affected == the delta exactly, whose grams are
+      // already checkpointed — no second pass over the raw store
+      val affectedGrams =
+        if (prevWinners.isEmpty) deltaG else grams.join(affected, "doc_id")
+      val dupPos = affectedGrams
+        .join(dupSet, Seq("h"), "left_semi")
+        .select("doc_id", "pos")
+      val wd = Window.partitionBy("doc_id").orderBy("pos")
+      val recomputed = dupPos
+        .withColumn("prev", lag("pos", 1).over(wd))
+        .withColumn("nw",
+          when(col("prev").isNull || col("pos") - col("prev") > spanLen, 1L)
+            .otherwise(0L))
+        .withColumn("island", sum("nw").over(wd))
+        .groupBy("doc_id", "island")
+        .agg((max("pos") - min("pos") + spanLen).cast("long").as("len"))
+        .groupBy("doc_id").agg(sum("len").as("dup_tokens"))
+      val newCov = prevCov match {
+        case Some(pc) =>
+          pc.join(affected, Seq("doc_id"), "left_anti").unionByName(recomputed)
+        case None => recomputed
+      }
+      (dupAdd, newCov)
     }
-    val deltaW = prevWinners match {
-      case Some(pw) =>
-        winners.select("doc_id")
-          .join(pw.select("doc_id"), Seq("doc_id"), "left_anti")
-      case None => winners.select("doc_id")
-    }
-    val deltaG = grams.join(deltaW, "doc_id")
-      .localCheckpoint(false) // delta counts AND the affected-doc sweep
-    val dc = deltaG.groupBy("h").agg(count(lit(1)).as("dc"))
-      .localCheckpoint(false) // old-count restriction AND the crossing test
-    val dupAdd = ((prevWinners, prevDup) match {
-      case (Some(pw), Some(pd)) =>
-        // for h ∉ prior dup set the old count is 0 or 1 (≥2 would BE in
-        // the set), so the crossing test needs no old-count aggregation:
-        // dc ≥ 2 crosses outright; dc == 1 crosses iff the gram occurs
-        // at all among prior winners — pure membership, one semi-join
-        val fresh = dc.join(pd.select("h"), Seq("h"), "left_anti")
-        fresh.filter(col("dc") >= 2).select("h")
-          .unionByName(fresh.filter(col("dc") === 1).select("h")
-            .join(grams.join(pw.select("doc_id"), "doc_id").select("h"),
-              Seq("h"), "left_semi"))
-      case _ => dc.filter(col("dc") >= 2).select("h")
-    }).localCheckpoint(false) // ledger entry, affected docs, dup flags
-    val affected = (prevWinners match {
-      case Some(pw) =>
-        grams.join(dupAdd, Seq("h"), "left_semi").select("doc_id")
-          .distinct()
-          .join(pw.select("doc_id"), Seq("doc_id"), "left_semi")
-          .unionByName(deltaW)
-      case None => deltaW
-    }).distinct().localCheckpoint(false) // sweep input AND the cov merge
-    val dupSet = prevDup match {
-      case Some(pd) => pd.select("h").unionByName(dupAdd)
-      case None => dupAdd
-    }
-    // first generation: affected == the delta exactly, whose grams are
-    // already checkpointed — no second pass over the raw store
-    val affectedGrams =
-      if (prevWinners.isEmpty) deltaG else grams.join(affected, "doc_id")
-    val dupPos = affectedGrams
-      .join(dupSet, Seq("h"), "left_semi")
-      .select("doc_id", "pos")
-    val wd = Window.partitionBy("doc_id").orderBy("pos")
-    val recomputed = dupPos
-      .withColumn("prev", lag("pos", 1).over(wd))
-      .withColumn("nw",
-        when(col("prev").isNull || col("pos") - col("prev") > spanLen, 1L)
-          .otherwise(0L))
-      .withColumn("island", sum("nw").over(wd))
-      .groupBy("doc_id", "island")
-      .agg((max("pos") - min("pos") + spanLen).cast("long").as("len"))
-      .groupBy("doc_id").agg(sum("len").as("dup_tokens"))
-    val newCov = prevCov match {
-      case Some(pc) =>
-        pc.join(affected, Seq("doc_id"), "left_anti").unionByName(recomputed)
-      case None => recomputed
-    }
-    precheckF.foreach(
-      scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
-    (dupAdd, newCov)
   }
 
   /** Map-side per-landing-batch extraction: everything the funnel will
@@ -237,9 +237,10 @@ object FunnelStore {
     *
     * `trained` returns the frozen classifier's weight table
     * ([[QualityClf.trainOnFeatures]] over the feature store) — a thunk
-    * for the same reason `Folded.clusters` is: the caller trains
-    * concurrently and the weights are first needed after the emission
-    * head has materialized. */
+    * for the same reason, and under the same contract, as
+    * `Folded.clusters`: the caller trains in a [[graft.exec.Par]]
+    * branch and the weights are first needed after the emission head
+    * has materialized. */
   def funnel(st: Stores, folded: Folded,
              trained: () => DataFrame): DataFrame = {
     val spark = st.meta.sparkSession

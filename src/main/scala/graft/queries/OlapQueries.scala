@@ -3205,14 +3205,9 @@ object OlapQueries {
       // the two curve-rank passes are independent and each contains an
       // eager (driver-blocking) checkpoint pin — build them as
       // concurrent driver jobs (guide §2.6) and union the results
-      val built = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fs = Seq(Future(files("d", "hilbert")), Future(files("z", "zorder")))
-        fs.map(Await.result(_, Duration.Inf))
-      }
-      built.reduce(_ unionByName _)
+      val (hilbert, zorder) =
+        graft.exec.Par.both(files("d", "hilbert"), files("z", "zorder"))
+      hilbert.unionByName(zorder)
         .groupBy("layout", "bucket")
         .agg(count(lit(1)).as("n_rows"),
           min("ck").as("ck_min"), max("ck").as("ck_max"),

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table.
@@ -182,6 +183,13 @@ object EventStreams {
   private def genThreshold(docs0: DataFrame, key: String = "doc_id"): Long =
     docs0.agg(expr(s"3*(max($key)+1) div 4").as("t")).head().getLong(0)
 
+  /** The midpoint split of `key`'s range, `lo/2 + hi/2` (each half
+    * taken first, so the sum cannot overflow). */
+  private def midThreshold(df: DataFrame, key: String): Long = {
+    val b = df.agg(min(key), max(key)).head()
+    b.getLong(0) / 2 + b.getLong(1) / 2
+  }
+
   /** One-scan two-generation staging: writes both landing generations
     * in a SINGLE corpus scan partitioned by generation; [[promoteGen]]
     * then renames each generation into the watched stage dir just
@@ -190,8 +198,7 @@ object EventStreams {
     * which pinned the full corpus text in executor memory (a
     * non-starter at 100 TB) and paid the cache scan twice. */
   private def stageGens(docs0: DataFrame, thr: Long, stage: String,
-                        key: String = "doc_id",
-                        recordsPerFile: Long = 2048L): Unit = {
+                        key: String, recordsPerFile: Long): Unit = {
     // several landing files, not one giant one: the micro-batch's map
     // parallelism is bounded by file/row-group splits, and real landing
     // zones arrive as many objects anyway. Size by ROW WEIGHT — the
@@ -218,16 +225,68 @@ object EventStreams {
     else { java.nio.file.Files.createDirectories(dst.toPath); () }
   }
 
-  /** Runs `body` (which must start AND drain its streaming query —
-    * all entry points here are synchronous AvailableNow runs) with
-    * shuffle partitions scoped to [[StateParts]]; the session's batch
-    * width is restored after. Safe because the surrounding Verify /
-    * Bench / spec harnesses execute queries sequentially. */
+  /** The landing loop of every two-generation streaming operator:
+    * stages `raw` split at `thr` on `key` ([[stageGens]]), then for
+    * generation 1 and 2 promotes it ([[promoteGen]]) and runs the
+    * per-generation pass on the stage dir's file stream, whose schema is
+    * `raw`'s own. Both passes use the caller's one checkpoint, so each
+    * reads only the files its generation added.
+    *
+    * `perGen` is evaluated ONCE, alongside the staging write (a
+    * [[graft.exec.Par]] branch): an operator with a model frozen at
+    * generation 1 builds it in front of the pass function it returns,
+    * and the build overlaps staging. */
+  private def landGens(spark: SparkSession, raw: DataFrame, thr: Long,
+                       stage: String, key: String = "doc_id",
+                       recordsPerFile: Long = 2048L)
+                      (perGen: => DataFrame => Unit): Unit = {
+    val (_, pass) = graft.exec.Par.both(
+      stageGens(raw, thr, stage, key, recordsPerFile), perGen)
+    val src = spark.readStream.schema(raw.schema)
+      .option("recursiveFileLookup", "true").parquet(stage)
+    for (gen <- 1 to 2) { promoteGen(stage, gen); pass(src) }
+  }
+
+  /** Runs `body` with shuffle partitions scoped to [[StateParts]] and
+    * restores the session's batch width after. The conf is session-wide,
+    * so the invariant is that no job of this caller's runs past either
+    * switch: the body drains its streaming queries before returning, and
+    * every overlapped job it starts lives in a [[graft.exec.Par]] scope
+    * that closes inside the body. */
   private def withStateParts[T](spark: SparkSession)(body: => T): T = {
     val key  = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, StateParts)
     try body finally spark.conf.set(key, prev)
+  }
+
+  /** Drains a stream: starts `writer` with an AvailableNow trigger under
+    * [[withStateParts]] and blocks until it terminates. Every streaming
+    * query here runs through it. `writer` is evaluated inside the scoped
+    * width, so whatever it plans on the way (a history snapshot) plans
+    * at the state width too. */
+  private def drain(spark: SparkSession)(writer: => DataStreamWriter[_]): Unit =
+    withStateParts(spark) {
+      writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+
+  /** Drains `src` through `foreachBatch` with checkpoint `ckpt`. `f` is
+    * evaluated once per drain, at its start (see [[drain]]). */
+  private def eachBatch(spark: SparkSession, src: DataFrame, ckpt: String,
+                        mode: String = "append")
+                       (f: => (DataFrame, Long) => Unit): Unit =
+    drain(spark)(src.writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt).foreachBatch(f))
+
+  /** Drains an append-mode stream into a parquet file sink under `out`
+    * (executor-side writes, never driver memory) and reads it back. */
+  private def runToFileSink(spark: SparkSession, stream: Dataset[_],
+                            out: java.nio.file.Path): DataFrame = {
+    drain(spark)(stream.writeStream.format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", s"$out/chk")
+      .outputMode("append"))
+    spark.read.parquet(s"$out/data")
   }
 
   /** Shared stream head: the events file source (glob-filtered to the
@@ -252,15 +311,8 @@ object EventStreams {
   private def runToMemorySink(spark: SparkSession, agg: DataFrame,
                               tag: String): DataFrame = {
     val sink = s"graft_stream_${tag}_${runId.incrementAndGet()}"
-    withStateParts(spark) {
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark)(agg.writeStream.format("memory").queryName(sink)
+      .outputMode("complete"))
     spark.table(sink)
   }
 
@@ -334,53 +386,9 @@ object EventStreams {
       .select(col("ts"), b, r)
       .groupBy(window(col("ts"), "1 day").as("w"), col("bucket"))
       .agg(max("rho").as("rho"))
-    withStateParts(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.select(col("w.start").as("period"), col("bucket"), col("rho"))
-            .write.mode("append").parquet(deltaDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-  }
-
-  /** Per-SOURCE sibling of [[hllRefreshPass]]: the batch
-    * hll_source_snapshots fold moved onto the streaming checkpoint
-    * cadence. State is the (source, bucket) → max(rho) grid — bounded
-    * at sources × 4096 whatever the corpus size — maintained by an
-    * update-mode aggregation (no window: the group key is a dimension,
-    * not time) whose changed rows append as parquet deltas; the
-    * checkpoint's file-source log guarantees a later pass reads only
-    * newly staged generations, and the max-merge absorbs deltas in any
-    * order. */
-  def hllSourceRefreshPass(spark: SparkSession, stageDir: String,
-                           ckptDir: String, deltaDir: String): Unit = {
-    val stageSchema = StructType(Seq(
-      StructField("source", StringType), StructField("k", StringType)))
-    val (b, r) = graft.ops.HllSketch.bucketRho(spark, col("k"))
-    val agg = spark.readStream
-      .schema(stageSchema)
-      .option("recursiveFileLookup", "true")
-      .parquet(stageDir)
-      .select(col("source"), b, r)
-      .groupBy("source", "bucket")
-      .agg(max("rho").as("rho"))
-    withStateParts(spark) {
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckptDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(deltaDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    eachBatch(spark, agg, ckptDir, "update") { (batch, _) =>
+      batch.select(col("w.start").as("period"), col("bucket"), col("rho"))
+        .write.mode("append").parquet(deltaDir)
     }
   }
 
@@ -388,7 +396,12 @@ object EventStreams {
     * in TWO generations (split at the doc_id midpoint, exactly like
     * the batch hll_source_snapshots) staged as narrow
     * (source, md5(text)) files; both AvailableNow passes share one
-    * checkpoint, so pass 2 reads ONLY generation 2's files.
+    * checkpoint, so pass 2 reads ONLY generation 2's files. Each pass
+    * is the per-SOURCE sibling of [[hllRefreshPass]]: state is the
+    * (source, bucket) → max(rho) grid — bounded at sources × 4096
+    * whatever the corpus size — maintained by an update-mode
+    * aggregation (no window: the group key is a dimension, not time)
+    * whose changed rows append as parquet deltas.
     * Mergeability of max-rho state makes the two-pass result equal the
     * one-shot estimate over the full corpus — which is its oracle. */
   def sourceDistinctIncremental(spark: SparkSession, sfDir: String): DataFrame = {
@@ -397,15 +410,17 @@ object EventStreams {
     val raw = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
         md5(col("text").cast("binary")).as("k"))
-    val bounds = raw.agg(min("doc_id").as("lo"), max("doc_id").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-    // one text scan stages both generations; the stream's narrower
-    // schema prunes the staged doc_id column at read time
-    stageGens(raw, mid, stage)
-    promoteGen(stage, 1)
-    hllSourceRefreshPass(spark, stage, ckpt, delta)
-    promoteGen(stage, 2)
-    hllSourceRefreshPass(spark, stage, ckpt, delta)
+    // one text scan stages both generations; the pass's projection
+    // prunes the staged doc_id column at read time
+    landGens(spark, raw, midThreshold(raw, "doc_id"), stage) { src =>
+      val (b, r) = graft.ops.HllSketch.bucketRho(spark, col("k"))
+      val agg = src.select(col("source"), b, r)
+        .groupBy("source", "bucket")
+        .agg(max("rho").as("rho"))
+      eachBatch(spark, agg, ckpt, "update") { (batch, _) =>
+        batch.write.mode("append").parquet(delta)
+      }
+    }
     graft.ops.HllSketch.estimate(
         spark.read.parquet(delta).groupBy("source", "bucket")
           .agg(max("rho").as("rho")),
@@ -433,44 +448,26 @@ object EventStreams {
     val (stage, ckpt, delta) = (s"$base/stage", s"$base/ckpt", s"$base/delta")
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val thr = emb.agg(expr("3*(max(vec_id)+1) div 4").as("t")).head().getLong(0)
-    // train once, reuse the literal-centroid column in both passes;
-    // the quantizer build reads only gen-1 vectors — independent of
-    // staging, so it overlaps the stage writes as a concurrent driver
-    // job (guide §2.6; results identical, the train is deterministic)
-    val cellColF = scala.concurrent.Future(
-      graft.ops.Similarity.frozenCellExpr(emb, cells = 8,
-        buildFilter = col("vec_id") < thr)(col("v"), col("nrm")))(
-      scala.concurrent.ExecutionContext.Implicits.global)
     val raw = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(graft.ops.Dedup.dot(col("v"), col("v"))))
-    val stageSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType)))
-    def pass(cellCol: org.apache.spark.sql.Column): Unit = withStateParts(spark) {
-      val agg = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .withColumn("cell", cellCol)
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n_vecs"),
-          sum(when(col("vec_id") >= thr, 1L).otherwise(0L)).as("n_landed"))
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+    landGens(spark, raw, thr, stage, key = "vec_id") {
+      // train once, reuse the literal-centroid column in both passes;
+      // the quantizer build reads only gen-1 vectors — independent of
+      // staging, so it overlaps the stage writes as a concurrent driver
+      // job (guide §2.6; results identical, the train is deterministic)
+      val cellCol = graft.ops.Similarity.frozenCellExpr(emb, cells = 8,
+        buildFilter = col("vec_id") < thr)(col("v"), col("nrm"))
+      src => {
+        val agg = src.withColumn("cell", cellCol)
+          .groupBy("cell")
+          .agg(count(lit(1)).as("n_vecs"),
+            sum(when(col("vec_id") >= thr, 1L).otherwise(0L)).as("n_landed"))
+        eachBatch(spark, agg, ckpt, "update") { (batch, _) =>
           batch.write.mode("append").parquet(delta)
-          ()
         }
-        .start()
-      q.awaitTermination()
+      }
     }
-    stageGens(raw, thr, stage, key = "vec_id")
-    val cellCol = scala.concurrent.Await.result(cellColF,
-      scala.concurrent.duration.Duration.Inf)
-    promoteGen(stage, 1); pass(cellCol)
-    promoteGen(stage, 2); pass(cellCol)
     spark.read.parquet(delta).groupBy("cell")
       .agg(max("n_vecs").as("n_vecs"), max("n_landed").as("n_landed"))
       .orderBy("cell")
@@ -500,37 +497,25 @@ object EventStreams {
     val (store, ctr) = (s"$base/store", s"$base/ctr")
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val thr = emb.agg(expr("3*(max(vec_id)+1) div 4").as("t")).head().getLong(0)
-    // quantizer build overlaps staging (the ivfIngestOccupancy move)
-    val cellColF = scala.concurrent.Future(
-      graft.ops.Similarity.frozenCellExpr(emb,
-        cells = graft.ops.Similarity.semCells(emb, col("vec_id") < thr),
-        buildFilter = col("vec_id") < thr)(col("v"), col("nrm")))(
-      scala.concurrent.ExecutionContext.Implicits.global)
     val raw = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(graft.ops.Dedup.dot(col("v"), col("v"))))
-    val stageSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType)))
-    def pass(cellCol: org.apache.spark.sql.Column): Unit = withStateParts(spark) {
-      // history = everything staged BEFORE this pass, frozen once
-      val snapshot =
-        if (new java.io.File(store).exists)
-          spark.read.parquet(store)
-            .select(col("cell"), col("v").as("hv"), col("nrm").as("hn"))
-            .localCheckpoint(false)
-        else spark.range(0).select(col("id").cast("int").as("cell"),
-          lit(null).cast("array<double>").as("hv"),
-          lit(null).cast("double").as("hn"))
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .withColumn("cell", cellCol)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
+    landGens(spark, raw, thr, stage, key = "vec_id") {
+      // quantizer build overlaps staging (the ivfIngestOccupancy move)
+      val cellCol = graft.ops.Similarity.frozenCellExpr(emb,
+        cells = graft.ops.Similarity.semCells(emb, col("vec_id") < thr),
+        buildFilter = col("vec_id") < thr)(col("v"), col("nrm"))
+      src => eachBatch(spark, src.withColumn("cell", cellCol), ckpt) {
+        // history = everything staged BEFORE this pass, frozen once
+        val snapshot =
+          if (new java.io.File(store).exists)
+            spark.read.parquet(store)
+              .select(col("cell"), col("v").as("hv"), col("nrm").as("hn"))
+              .localCheckpoint(false)
+          else spark.range(0).select(col("id").cast("int").as("cell"),
+            lit(null).cast("array<double>").as("hv"),
+            lit(null).cast("double").as("hn"))
+        (batch0, bid) => {
           val batch = batch0.localCheckpoint(false) // counters AND store
           val hits = batch.join(snapshot, Seq("cell"))
             .filter(graft.ops.Dedup.dot(col("v"), col("hv"))
@@ -546,16 +531,9 @@ object EventStreams {
           // O(delta) store growth: the batch's vectors with their cells
           batch.select("vec_id", "cell", "v", "nrm")
             .write.mode("append").parquet(store)
-          ()
         }
-        .start()
-      q.awaitTermination()
+      }
     }
-    stageGens(raw, thr, stage, key = "vec_id")
-    val cellCol = scala.concurrent.Await.result(cellColF,
-      scala.concurrent.duration.Duration.Inf)
-    promoteGen(stage, 1); pass(cellCol)
-    promoteGen(stage, 2); pass(cellCol)
     ledgerSums(spark, ctr, Seq("cell"), Seq("n_vecs", "n_hist_dup_vecs"))
       .select(col("cell").cast("long").as("cell"), col("n_vecs"),
         col("n_hist_dup_vecs"))
@@ -580,32 +558,23 @@ object EventStreams {
     val (store, ctr) = (s"$base/store", s"$base/ctr")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
     def chunks(df: DataFrame): DataFrame = df.select(
       col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"),
       posexplode(array(col("c0"), col("c1"), col("c2"), col("c3")))
         .as(Seq("ci", "cv")))
-    def pass(): Unit = withStateParts(spark) {
-      // history = everything staged BEFORE this pass, frozen once
-      val snapshot =
-        if (new java.io.File(store).exists)
-          chunks(spark.read.parquet(store))
-            .select(col("ci"), col("cv"), col("c0").as("h0"),
-              col("c1").as("h1"), col("c2").as("h2"), col("c3").as("h3"))
-            .localCheckpoint(false)
-        else spark.range(0).select(col("id").cast("int").as("ci"),
-          lit(0L).as("cv"), lit(0L).as("h0"), lit(0L).as("h1"),
-          lit(0L).as("h2"), lit(0L).as("h3"))
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) {
+        // history = everything staged BEFORE this pass, frozen once
+        val snapshot =
+          if (new java.io.File(store).exists)
+            chunks(spark.read.parquet(store))
+              .select(col("ci"), col("cv"), col("c0").as("h0"),
+                col("c1").as("h1"), col("c2").as("h2"), col("c3").as("h3"))
+              .localCheckpoint(false)
+          else spark.range(0).select(col("id").cast("int").as("ci"),
+            lit(0L).as("cv"), lit(0L).as("h0"), lit(0L).as("h1"),
+            lit(0L).as("h2"), lit(0L).as("h3"))
+        (batch0, bid) => {
           val sigs = graft.ops.Multimodal.phashBatch(batch0).toDF()
             .select("doc_id", "c0", "c1", "c2", "c3")
             .join(batch0.select("doc_id", "source"), "doc_id")
@@ -627,14 +596,9 @@ object EventStreams {
           // O(delta) store growth: the batch's 32-byte signatures
           sigs.select("doc_id", "c0", "c1", "c2", "c3")
             .write.mode("append").parquet(store)
-          ()
         }
-        .start()
-      q.awaitTermination()
+      }
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     ledgerSums(spark, ctr, Seq("source"), Seq("n_imgs", "n_hist_dup_imgs"))
       .orderBy("source")
   }
@@ -659,48 +623,31 @@ object EventStreams {
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     val thr = genThreshold(docs)
-    // the frozen gen-1 train (8 serial corpus reductions) reads only
-    // gen-1 docs — independent of staging, so it overlaps the stage
-    // writes + first stream startup as a concurrent driver job (§2.6);
-    // the trainer is integer-deterministic, results unchanged
-    val wF = scala.concurrent.Future(graft.ops.QualityClf
-      .train(docs.filter(col("doc_id") < thr))._2
-      .localCheckpoint(false))( // frozen gen1 model, reused by every batch
-      scala.concurrent.ExecutionContext.Implicits.global)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    def pass(w: DataFrame): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val marg = graft.ops.QualityClf.features(batch)
-            .join(broadcast(w), Seq("b"), "left")
-            .groupBy("doc_id")
-            .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
-          val local = graft.ops.QualityClf.labels(batch)
-            .join(marg, "doc_id")
-            .select(
-              when(col("y") === 1, 1L).otherwise(0L).as("rule_keep"),
-              when(col("marg") > 0, 1L).otherwise(0L).as("clf_keep"),
-              when(col("doc_id") >= thr, 1L).otherwise(0L).as("landed"))
-            .groupBy("rule_keep", "clf_keep")
-            .agg(count(lit(1)).as("n_docs"), sum("landed").as("n_landed"))
-          ledgerAppend(local, store, bid, compact =
-            Some(sumFold(Seq("rule_keep", "clf_keep"),
-              Seq("n_docs", "n_landed"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, docs, thr, stage) {
+      // the frozen gen-1 train (8 serial corpus reductions) reads only
+      // gen-1 docs — independent of staging, so it overlaps the stage
+      // writes as a concurrent driver job (§2.6); the trainer is
+      // integer-deterministic, results unchanged
+      val w = graft.ops.QualityClf.train(docs.filter(col("doc_id") < thr))._2
+        .localCheckpoint(false) // frozen gen1 model, reused by every batch
+      src => eachBatch(spark, src, ckpt) { (batch, bid) =>
+        val marg = graft.ops.QualityClf.features(batch)
+          .join(broadcast(w), Seq("b"), "left")
+          .groupBy("doc_id")
+          .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
+        val local = graft.ops.QualityClf.labels(batch)
+          .join(marg, "doc_id")
+          .select(
+            when(col("y") === 1, 1L).otherwise(0L).as("rule_keep"),
+            when(col("marg") > 0, 1L).otherwise(0L).as("clf_keep"),
+            when(col("doc_id") >= thr, 1L).otherwise(0L).as("landed"))
+          .groupBy("rule_keep", "clf_keep")
+          .agg(count(lit(1)).as("n_docs"), sum("landed").as("n_landed"))
+        ledgerAppend(local, store, bid, compact =
+          Some(sumFold(Seq("rule_keep", "clf_keep"),
+            Seq("n_docs", "n_landed"))))
+      }
     }
-    stageGens(docs, thr, stage)
-    val w = scala.concurrent.Await.result(wF,
-      scala.concurrent.duration.Duration.Inf)
-    promoteGen(stage, 1); pass(w)
-    promoteGen(stage, 2); pass(w)
     ledgerSums(spark, store, Seq("rule_keep", "clf_keep"),
         Seq("n_docs", "n_landed"))
       .orderBy("rule_keep", "clf_keep")
@@ -731,53 +678,36 @@ object EventStreams {
       .select(col("doc_id"), col("source"), col("lang"), col("text"))
     val thr = genThreshold(docs)
     val gen1 = docs.filter(col("doc_id") < thr)
-    // frozen gen-1 ratio table, reused by every batch — built
-    // concurrently with staging (the qualityScoreIngest move)
-    val lrF = scala.concurrent.Future(graft.ops.Select.ratioFromCounts(
-        graft.ops.Select.docBucketCounts(gen1, buckets, seed),
-        gen1.filter(expr("lang = 'en'")).select("doc_id"), buckets)
-      .localCheckpoint(false))(
-      scala.concurrent.ExecutionContext.Implicits.global)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(lr: DataFrame): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
-          val batch = batch0.localCheckpoint(false) // scored + joined back
-          val u4 = graft.ops.Select.docBucketCounts(batch, buckets, seed)
-            .join(broadcast(lr), "b")
-            .groupBy("doc_id")
-            .agg(round(sum(col("c") * col("lr")) * 10000).cast("bigint").as("u4"))
-          // ADVICE r14: LEFT join back so a doc whose every bucket is
-          // absent from the frozen gen-1 table (or that has no tokens)
-          // still lands in n_docs with score 0 — the documented
-          // absent-bucket-contributes-0 convention made total
-          val local = batch.select("doc_id", "source")
-            .join(u4, Seq("doc_id"), "left")
-            .withColumn("u4", coalesce(col("u4"), lit(0L)))
-            .groupBy("source")
-            .agg(count(lit(1)).as("n_docs"),
-              sum(when(col("doc_id") >= thr, 1L).otherwise(0L)).as("n_landed"),
-              sum(when(col("u4") >= 0, 1L).otherwise(0L)).as("n_sel"),
-              sum("u4").as("sum_u4"))
-          ledgerAppend(local, store, bid, compact =
-            Some(sumFold(Seq("source"),
-              Seq("n_docs", "n_landed", "n_sel", "sum_u4"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, docs.drop("lang"), thr, stage) {
+      // frozen gen-1 ratio table, reused by every batch — built
+      // concurrently with staging (the qualityScoreIngest move)
+      val lr = graft.ops.Select.ratioFromCounts(
+          graft.ops.Select.docBucketCounts(gen1, buckets, seed),
+          gen1.filter(expr("lang = 'en'")).select("doc_id"), buckets)
+        .localCheckpoint(false)
+      src => eachBatch(spark, src, ckpt) { (batch0, bid) =>
+        val batch = batch0.localCheckpoint(false) // scored + joined back
+        val u4 = graft.ops.Select.docBucketCounts(batch, buckets, seed)
+          .join(broadcast(lr), "b")
+          .groupBy("doc_id")
+          .agg(round(sum(col("c") * col("lr")) * 10000).cast("bigint").as("u4"))
+        // ADVICE r14: LEFT join back so a doc whose every bucket is
+        // absent from the frozen gen-1 table (or that has no tokens)
+        // still lands in n_docs with score 0 — the documented
+        // absent-bucket-contributes-0 convention made total
+        val local = batch.select("doc_id", "source")
+          .join(u4, Seq("doc_id"), "left")
+          .withColumn("u4", coalesce(col("u4"), lit(0L)))
+          .groupBy("source")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(when(col("doc_id") >= thr, 1L).otherwise(0L)).as("n_landed"),
+            sum(when(col("u4") >= 0, 1L).otherwise(0L)).as("n_sel"),
+            sum("u4").as("sum_u4"))
+        ledgerAppend(local, store, bid, compact =
+          Some(sumFold(Seq("source"),
+            Seq("n_docs", "n_landed", "n_sel", "sum_u4"))))
+      }
     }
-    stageGens(docs.drop("lang"), thr, stage)
-    val lr = scala.concurrent.Await.result(lrF,
-      scala.concurrent.duration.Duration.Inf)
-    promoteGen(stage, 1); pass(lr)
-    promoteGen(stage, 2); pass(lr)
     ledgerSums(spark, store, Seq("source"),
         Seq("n_docs", "n_landed", "n_sel", "sum_u4"))
       .withColumn("avg_logw",
@@ -801,31 +731,16 @@ object EventStreams {
     val (stage, ckpt, store) = (s"$base/stage", s"$base/ckpt", s"$base/store")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
     val sums = Seq("n_docs", "n_docs_pii", "n_email", "n_ip", "n_phone",
       "n_card", "n_card_reject", "chars_cut", "n_residual")
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          // per-batch partials land as an idempotent ledger entry —
-          // a retried batch overwrites its own, never double-counts
-          ledgerAppend(graft.ops.TextAnalysis.piiCounters(batch), store, bid,
-            compact = Some(sumFold(Seq("source"), sums)))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        // per-batch partials land as an idempotent ledger entry —
+        // a retried batch overwrites its own, never double-counts
+        ledgerAppend(graft.ops.TextAnalysis.piiCounters(batch), store, bid,
+          compact = Some(sumFold(Seq("source"), sums)))
+      }
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     ledgerSums(spark, store, Seq("source"), sums)
       .withColumn("clean_rate",
         round(lit(1.0) - col("n_docs_pii") / col("n_docs"), 4))
@@ -869,39 +784,23 @@ object EventStreams {
     val (histDir, metaDir) = (s"$base/hist", s"$base/meta")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val scored = graft.ops.TextAnalysis.quality(batch)
-            .join(batch.select("doc_id", "source"), "doc_id")
-            .select(col("doc_id"), col("source"),
-              round(col("quality_score") * 10000).cast("long").as("qs_u4"),
-              col("n_chars").cast("long").as("n_chars"))
-            .localCheckpoint(false) // histogram fold AND metadata append
-          ledgerAppend(scored.groupBy("source", "qs_u4")
-              .agg(count(lit(1)).as("n_docs"),
-                sum("n_chars").as("sum_chars")),
-            histDir, bid,
-            compact = Some(sumFold(Seq("source", "qs_u4"),
-              Seq("n_docs", "sum_chars"))))
-          scored.coalesce(4).write.mode("append").parquet(metaDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        val scored = graft.ops.TextAnalysis.quality(batch)
+          .join(batch.select("doc_id", "source"), "doc_id")
+          .select(col("doc_id"), col("source"),
+            round(col("quality_score") * 10000).cast("long").as("qs_u4"),
+            col("n_chars").cast("long").as("n_chars"))
+          .localCheckpoint(false) // histogram fold AND metadata append
+        ledgerAppend(scored.groupBy("source", "qs_u4")
+            .agg(count(lit(1)).as("n_docs"),
+              sum("n_chars").as("sum_chars")),
+          histDir, bid,
+          compact = Some(sumFold(Seq("source", "qs_u4"),
+            Seq("n_docs", "sum_chars"))))
+        scored.coalesce(4).write.mode("append").parquet(metaDir)
+      }
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     val W = org.apache.spark.sql.expressions.Window
     val hist = ledgerSums(spark, histDir, Seq("source", "qs_u4"),
         Seq("n_docs", "sum_chars"))
@@ -945,6 +844,29 @@ object EventStreams {
       .orderBy("source")
   }
 
+  /** The landing both curriculum members share: each batch scores its
+    * own docs and folds the qu4 → (n_docs, sum_tokens) histogram ledger
+    * plus the compact per-doc (doc_id, n_tokens, qu4) metadata append. */
+  private def landQualityHistogram(spark: SparkSession, docs: DataFrame,
+                                   stage: String, ckpt: String,
+                                   histDir: String, metaDir: String): Unit =
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        val scored = graft.ops.TextAnalysis.quality(batch)
+          .select(col("doc_id"),
+            col("n_tokens").cast("long").as("n_tokens"),
+            round(col("quality_score") * 10000).cast("long").as("qu4"))
+          .localCheckpoint(false) // histogram fold AND metadata append
+        ledgerAppend(scored.groupBy("qu4")
+            .agg(count(lit(1)).as("n_docs"),
+              sum("n_tokens").as("sum_tokens")),
+          histDir, bid,
+          compact = Some(sumFold(Seq("qu4"),
+            Seq("n_docs", "sum_tokens"))))
+        scored.coalesce(4).write.mode("append").parquet(metaDir)
+      }
+    }
+
   /** Curriculum shard plan at LANDING cadence — corpus_curriculum's
     * streaming member (completing the selection layer's streaming
     * column alongside [[budgetSelectIngest]]): the (quality DESC,
@@ -979,38 +901,7 @@ object EventStreams {
     val (histDir, metaDir) = (s"$base/hist", s"$base/meta")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val scored = graft.ops.TextAnalysis.quality(batch)
-            .select(col("doc_id"),
-              col("n_tokens").cast("long").as("n_tokens"),
-              round(col("quality_score") * 10000).cast("long").as("qu4"))
-            .localCheckpoint(false) // histogram fold AND metadata append
-          ledgerAppend(scored.groupBy("qu4")
-              .agg(count(lit(1)).as("n_docs"),
-                sum("n_tokens").as("sum_tokens")),
-            histDir, bid,
-            compact = Some(sumFold(Seq("qu4"),
-              Seq("n_docs", "sum_tokens"))))
-          scored.coalesce(4).write.mode("append").parquet(metaDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
+    landQualityHistogram(spark, docs, stage, ckpt, histDir, metaDir)
     val W = org.apache.spark.sql.expressions.Window
     val hist = ledgerSums(spark, histDir, Seq("qu4"),
         Seq("n_docs", "sum_tokens"))
@@ -1078,38 +969,7 @@ object EventStreams {
     val (histDir, metaDir) = (s"$base/hist", s"$base/meta")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val scored = graft.ops.TextAnalysis.quality(batch)
-            .select(col("doc_id"),
-              col("n_tokens").cast("long").as("n_tokens"),
-              round(col("quality_score") * 10000).cast("long").as("qu4"))
-            .localCheckpoint(false) // histogram fold AND metadata append
-          ledgerAppend(scored.groupBy("qu4")
-              .agg(count(lit(1)).as("n_docs"),
-                sum("n_tokens").as("sum_tokens")),
-            histDir, bid,
-            compact = Some(sumFold(Seq("qu4"),
-              Seq("n_docs", "sum_tokens"))))
-          scored.coalesce(4).write.mode("append").parquet(metaDir)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
+    landQualityHistogram(spark, docs, stage, ckpt, histDir, metaDir)
     val W = org.apache.spark.sql.expressions.Window
     val hist = ledgerSums(spark, histDir, Seq("qu4"),
         Seq("n_docs", "sum_tokens"))
@@ -1172,34 +1032,19 @@ object EventStreams {
     val (cntStore, domStore) = (s"$base/cnt", s"$base/dom")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
-          val batch = batch0.localCheckpoint(false) // counts + doc fold
-          ledgerAppend(
-            graft.ops.Select.domainBucketCounts(batch, buckets, seed),
-            cntStore, bid,
-            compact = Some(sumFold(Seq("source", "b"), Seq("c"))))
-          ledgerAppend(
-            batch.groupBy("source").agg(count(lit(1)).as("n_docs")),
-            domStore, bid,
-            compact = Some(sumFold(Seq("source"), Seq("n_docs"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch0, bid) =>
+        val batch = batch0.localCheckpoint(false) // counts + doc fold
+        ledgerAppend(
+          graft.ops.Select.domainBucketCounts(batch, buckets, seed),
+          cntStore, bid,
+          compact = Some(sumFold(Seq("source", "b"), Seq("c"))))
+        ledgerAppend(
+          batch.groupBy("source").agg(count(lit(1)).as("n_docs")),
+          domStore, bid,
+          compact = Some(sumFold(Seq("source"), Seq("n_docs"))))
+      }
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     graft.ops.Select.doremiFromCounts(
         ledgerSums(spark, cntStore, Seq("source", "b"), Seq("c")),
         ledgerSums(spark, domStore, Seq("source"), Seq("n_docs"))
@@ -1233,33 +1078,18 @@ object EventStreams {
     graft.functions.GraftHash64.register(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, _: Long) =>
-          val batch = batch0.localCheckpoint(false) // postings + doc list
-          graft.ops.Dedup.shingleSets(batch, 8)
-            .select(col("doc_id"), explode(col("sh")).as("g"))
-            .select(col("doc_id"),
-              call_function("graft_hash64", col("g"), lit(31L)).as("gh"))
-            .coalesce(4).write.mode("append").parquet(postStore)
-          batch.select("doc_id").coalesce(1)
-            .write.mode("append").parquet(docStore)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch0, _) =>
+        val batch = batch0.localCheckpoint(false) // postings + doc list
+        graft.ops.Dedup.shingleSets(batch, 8)
+          .select(col("doc_id"), explode(col("sh")).as("g"))
+          .select(col("doc_id"),
+            call_function("graft_hash64", col("g"), lit(31L)).as("gh"))
+          .coalesce(4).write.mode("append").parquet(postStore)
+        batch.select("doc_id").coalesce(1)
+          .write.mode("append").parquet(docStore)
+      }
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     val post = spark.read.parquet(postStore).localCheckpoint(false)
     val dft = post.groupBy("gh").agg(count(lit(1)).as("df"))
     val per = post.join(dft, "gh")
@@ -1298,23 +1128,14 @@ object EventStreams {
     val (grams, ctr) = (s"$base/grams", s"$base/ctr")
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      // history = everything staged BEFORE this pass, frozen once
-      val snapshot =
-        if (new java.io.File(grams).exists)
-          spark.read.parquet(grams).distinct().localCheckpoint(false)
-        else spark.emptyDataFrame.withColumn("h", lit(0L)).select("h").limit(0)
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) {
+        // history = everything staged BEFORE this pass, frozen once
+        val snapshot =
+          if (new java.io.File(grams).exists)
+            spark.read.parquet(grams).distinct().localCheckpoint(false)
+          else spark.emptyDataFrame.withColumn("h", lit(0L)).select("h").limit(0)
+        (batch, bid) => {
           val g = graft.ops.Suffix.gramHashes(batch, spanLen)
             .filter(col("full"))
             .join(batch.select("doc_id", "source"), "doc_id")
@@ -1332,14 +1153,9 @@ object EventStreams {
           g.select("h").distinct()
             .join(snapshot, Seq("h"), "left_anti")
             .write.mode("append").parquet(grams)
-          ()
         }
-        .start()
-      q.awaitTermination()
+      }
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     ledgerSums(spark, ctr, Seq("source"), Seq("n_grams", "n_hist_dup_starts"))
       .orderBy("source")
   }
@@ -1379,67 +1195,6 @@ object EventStreams {
     val acctDir = s"$base/acct"
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    val thr = genThreshold(docs)
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          // one cached copy of the landing text feeds all four extracts
-          val batch = batch0.localCheckpoint(false)
-          val st = graft.ops.FunnelStore.extract(batch)
-          val meta = st.meta.localCheckpoint(false) // store + both folds
-          // compact appends: a landing shard writes a few well-sized
-          // files per store, not one file per shuffle partition — the
-          // small-files discipline layout_compaction_plan audits.
-          // The four store writes and the two ledger folds are mutually
-          // independent, so they run as concurrent driver-submitted
-          // jobs (guide §2.6 — later jobs back-fill the tail of earlier
-          // ones); results are unchanged, only the serialization goes.
-          val writes =
-            Seq(meta, st.shingles, st.grams, st.feat).zip(dirs).map {
-              case (df, dir) => Future {
-                df.coalesce(4).write.mode("append").parquet(dir)
-              }
-            } ++ Seq(
-              // VERDICT r14 item 2 — the foldable stages fold PER BATCH
-              // (FunnelStore.Folded): additive raw landing counters land
-              // as idempotent ledger entries (a retried batch overwrites
-              // its own — no double count under at-least-once) ...
-              Future {
-                ledgerAppend(meta.groupBy("source")
-                    .agg(count(lit(1)).as("n_docs"),
-                      sum("n_chars").as("sum_chars")),
-                  rawDir, bid,
-                  compact = Some(sumFold(Seq("source"),
-                    Seq("n_docs", "sum_chars"))))
-              },
-              // ... and the exact-dedup presence store: min is
-              // associative+commutative, so per-batch keyed minima
-              // ledger the same way and the generation-cadence merge
-              // equals the one-shot GROUP BY norm_h — the old shape
-              // REWROTE the whole corpus-sized winner store every batch
-              Future {
-                ledgerAppend(meta.groupBy("norm_h")
-                    .agg(min("doc_id").as("doc_id")),
-                  exactDir, bid, files = 4,
-                  compact = Some(
-                    _.groupBy("norm_h").agg(min("doc_id").as("doc_id"))))
-              })
-          writes.foreach(Await.result(_, Duration.Inf))
-        }
-        .start()
-      q.awaitTermination()
-    }
     // landing-cadence accounting: the GLOBAL funnel stages re-derived
     // from the stores after every generation (a production run would
     // publish this as the corpus snapshot's audit table); the foldable
@@ -1455,10 +1210,7 @@ object EventStreams {
     // same state-volume-sized width the passes use (32-wide exchanges
     // across the funnel's ~30 small aggregate stages are pure task
     // overhead at this store size)
-    def fold(): Unit = withStateParts(spark) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
+    def fold(): Unit = withStateParts(spark)(graft.exec.Par.scope { par =>
       gen += 1
       val Seq(meta, sh, gr, fx) = dirs.map(spark.read.parquet(_))
       // the frozen classifier trains from the feature store + labels
@@ -1466,10 +1218,8 @@ object EventStreams {
       // overlaps it as a concurrent driver job (guide §2.6); the
       // trainer is integer-deterministic, so the injected weights are
       // byte-identical to an inline train inside the funnel
-      val trainF = Future {
-        graft.ops.QualityClf.trainOnFeatures(fx,
-          meta.select("doc_id", "y"))._2
-      }
+      val train = par.fork(graft.ops.QualityClf.trainOnFeatures(fx,
+        meta.select("doc_id", "y"))._2)
       val winners = spark.read
         .option("recursiveFileLookup", "true")
         .parquet(exactDir)
@@ -1487,9 +1237,9 @@ object EventStreams {
       // it to parquet and read it straight back, a same-fold I/O round
       // trip the next consumer had to WAIT on; the snapshot writes
       // themselves are for the NEXT generation only, so they proceed
-      // concurrently with this fold's compute
+      // concurrently with this fold's compute (the scope waits for them)
       val cov = newCov.localCheckpoint(false)
-      val covWriteF = Future {
+      par.fork {
         dupAdd.coalesce(4).write.mode("overwrite").parquet(s"$dupLedger/g$gen")
         cov.coalesce(4).write.mode("overwrite").parquet(s"$covSnap/g$gen")
         winners.select("doc_id").coalesce(4)
@@ -1516,7 +1266,7 @@ object EventStreams {
       // funnel forces the thunk at its near-dup stage, the first
       // consumer. Plans and results are unchanged — only the
       // serialization between the two independent job chains goes.
-      val clustersF = Future {
+      val clusters = par.fork {
         val pairs = graft.ops.Dedup.jaccardPairsFromPostings(
           sh.join(s2docs, "doc_id")).select("id1", "id2")
         graft.ops.Cluster.dedupClusters(s2docs, pairs)
@@ -1527,16 +1277,52 @@ object EventStreams {
           graft.ops.FunnelStore.Folded(
             ledgerSums(spark, rawDir, Seq("source"),
               Seq("n_docs", "sum_chars")),
-            winners, cov,
-            () => Await.result(clustersF, Duration.Inf)),
-          () => Await.result(trainF, Duration.Inf))
+            winners, cov, () => clusters.join()),
+          () => train.join())
         .write.mode("overwrite").parquet(acctDir)
-      Await.result(covWriteF, Duration.Inf)
-      ()
+    })
+    landGens(spark, docs, genThreshold(docs), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch0, bid) =>
+        // one cached copy of the landing text feeds all four extracts
+        val batch = batch0.localCheckpoint(false)
+        val st = graft.ops.FunnelStore.extract(batch)
+        val meta = st.meta.localCheckpoint(false) // store + both folds
+        // compact appends: a landing shard writes a few well-sized
+        // files per store, not one file per shuffle partition — the
+        // small-files discipline layout_compaction_plan audits.
+        // The four store writes and the two ledger folds are mutually
+        // independent, so they run as concurrent driver-submitted
+        // jobs (guide §2.6 — later jobs back-fill the tail of earlier
+        // ones); results are unchanged, only the serialization goes.
+        graft.exec.Par.scope { par =>
+          Seq(meta, st.shingles, st.grams, st.feat).zip(dirs).foreach {
+            case (df, dir) =>
+              par.fork(df.coalesce(4).write.mode("append").parquet(dir))
+          }
+          // VERDICT r14 item 2 — the foldable stages fold PER BATCH
+          // (FunnelStore.Folded): additive raw landing counters land
+          // as idempotent ledger entries (a retried batch overwrites
+          // its own — no double count under at-least-once) ...
+          par.fork(ledgerAppend(meta.groupBy("source")
+              .agg(count(lit(1)).as("n_docs"),
+                sum("n_chars").as("sum_chars")),
+            rawDir, bid,
+            compact = Some(sumFold(Seq("source"),
+              Seq("n_docs", "sum_chars")))))
+          // ... and the exact-dedup presence store: min is
+          // associative+commutative, so per-batch keyed minima
+          // ledger the same way and the generation-cadence merge
+          // equals the one-shot GROUP BY norm_h — the old shape
+          // REWROTE the whole corpus-sized winner store every batch
+          par.fork(ledgerAppend(meta.groupBy("norm_h")
+              .agg(min("doc_id").as("doc_id")),
+            exactDir, bid, files = 4,
+            compact = Some(
+              _.groupBy("norm_h").agg(min("doc_id").as("doc_id")))))
+        }
+      }
+      fold()
     }
-    stageGens(docs, thr, stage)
-    promoteGen(stage, 1); pass(); fold()
-    promoteGen(stage, 2); pass(); fold()
     spark.read.parquet(acctDir).orderBy("stage_idx")
   }
 
@@ -1559,35 +1345,19 @@ object EventStreams {
       .select(col("doc_id"), col("n_chars"),
         call_function("graft_hash64", col("doc_id").cast("string"), lit(13L))
           .as("h"))
-    val bounds = raw.agg(min("doc_id").as("lo"), max("doc_id").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-    val stageSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("n_chars", LongType),
-      StructField("h", LongType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          // hash-min bottom-k is mergeable: each batch ledgers its own
-          // local k rows; the emission re-limit over |batches|·k rows
-          // equals the one-shot bottom-k (idempotent under retry)
-          // merge law: hash-min bottom-k is mergeable, so compaction's
-          // re-limit over (snapshot ∪ folded entries) keeps exactly
-          // the store's k candidate rows
-          ledgerAppend(batch.orderBy(col("h").asc, col("doc_id")).limit(k),
-            store, bid,
-            compact = Some(_.orderBy(col("h").asc, col("doc_id")).limit(k)))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, raw, midThreshold(raw, "doc_id"), stage) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        // hash-min bottom-k is mergeable: each batch ledgers its own
+        // local k rows; the emission re-limit over |batches|·k rows
+        // equals the one-shot bottom-k (idempotent under retry)
+        // merge law: hash-min bottom-k is mergeable, so compaction's
+        // re-limit over (snapshot ∪ folded entries) keeps exactly
+        // the store's k candidate rows
+        ledgerAppend(batch.orderBy(col("h").asc, col("doc_id")).limit(k),
+          store, bid,
+          compact = Some(_.orderBy(col("h").asc, col("doc_id")).limit(k)))
+      }
     }
-    stageGens(raw, mid, stage)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     spark.read.option("recursiveFileLookup", "true").parquet(store)
       .orderBy(col("h").asc, col("doc_id")).limit(k)
   }
@@ -1608,41 +1378,27 @@ object EventStreams {
     graft.functions.GraftHash64.register(spark)
     val raw = graft.sources.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id").cast("string").as("k"))
-    val bounds = raw.agg(min("event_id").as("lo"), max("event_id").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-    val stageSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("k", StringType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val ss = batch.sparkSession
-          graft.functions.GraftHash64.register(ss)
-          def sign(j: Int) = lit(1L) - lit(2L) *
-            pmod(call_function("graft_hash64", col("k"), lit((301 + j).toLong)), lit(2L))
-          val xs = (0 until 8).map(j =>
-            coalesce(sum(sign(j)), lit(0L)).as(s"x$j"))
-          val local = batch.agg(xs.head, xs.tail: _*)
-            .withColumn("n", lit(batch.count()))
-            .select(col("n"),
-              posexplode(array((0 until 8).map(j => col(s"x$j")): _*))
-                .as(Seq("est_id", "x")))
-            .select(col("est_id").cast("long").as("est_id"), col("x"), col("n"))
-          // the sketch is LINEAR: per-batch states ledger and add at
-          // emission (idempotent under retry)
-          ledgerAppend(local, store, bid, compact =
-            Some(sumFold(Seq("est_id"), Seq("x", "n"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, raw, midThreshold(raw, "event_id"), stage,
+        key = "event_id", recordsPerFile = 65536L) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        val ss = batch.sparkSession
+        graft.functions.GraftHash64.register(ss)
+        def sign(j: Int) = lit(1L) - lit(2L) *
+          pmod(call_function("graft_hash64", col("k"), lit((301 + j).toLong)), lit(2L))
+        val xs = (0 until 8).map(j =>
+          coalesce(sum(sign(j)), lit(0L)).as(s"x$j"))
+        val local = batch.agg(xs.head, xs.tail: _*)
+          .withColumn("n", lit(batch.count()))
+          .select(col("n"),
+            posexplode(array((0 until 8).map(j => col(s"x$j")): _*))
+              .as(Seq("est_id", "x")))
+          .select(col("est_id").cast("long").as("est_id"), col("x"), col("n"))
+        // the sketch is LINEAR: per-batch states ledger and add at
+        // emission (idempotent under retry)
+        ledgerAppend(local, store, bid, compact =
+          Some(sumFold(Seq("est_id"), Seq("x", "n"))))
+      }
     }
-    stageGens(raw, mid, stage, key = "event_id", recordsPerFile = 65536L)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     ledgerSums(spark, store, Seq("est_id"), Seq("x", "n"))
       .withColumn("x_sq", expr("x*x"))
       .withColumn("est_f2", expr("(2*sum(x_sq) OVER () + 8) div 16"))
@@ -1669,31 +1425,16 @@ object EventStreams {
     val (stage, ckpt, store) = (s"$base/stage", s"$base/ckpt", s"$base/store")
     val raw = graft.sources.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), to_date(col("ts")).as("dt"))
-    val bounds = raw.agg(min("event_id").as("lo"), max("event_id").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-    val stageSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("dt", DateType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          // daily counts are additive state: ledger per batch, sum at
-          // read time (idempotent under retry)
-          ledgerAppend(batch.groupBy("event_type", "dt")
-            .agg(count(lit(1)).as("y")), store, bid,
-            compact = Some(sumFold(Seq("event_type", "dt"), Seq("y"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, raw, midThreshold(raw, "event_id"), stage,
+        key = "event_id", recordsPerFile = 65536L) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        // daily counts are additive state: ledger per batch, sum at
+        // read time (idempotent under retry)
+        ledgerAppend(batch.groupBy("event_type", "dt")
+          .agg(count(lit(1)).as("y")), store, bid,
+          compact = Some(sumFold(Seq("event_type", "dt"), Seq("y"))))
+      }
     }
-    stageGens(raw, mid, stage, key = "event_id", recordsPerFile = 65536L)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     graft.ops.Cusum.fromDaily(
       ledgerSums(spark, store, Seq("event_type", "dt"), Seq("y")))
   }
@@ -1722,38 +1463,22 @@ object EventStreams {
       when(col("o_orderdate") < lit("1992-01-01").cast("timestamp") ||
         col("o_orderdate") >= lit("2003-01-01").cast("timestamp"), 1L)
         .otherwise(0L).as("v_date"))
-    val bounds = raw.agg(min("o_orderkey").as("lo"), max("o_orderkey").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-    val stageSchema = StructType(Seq(
-      StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-      StructField("v_null", LongType), StructField("v_price", LongType),
-      StructField("v_date", LongType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val fk = batch.join(custkeys,
-            batch("o_custkey") === custkeys("c_custkey"),
-            "left_anti").agg(count(lit(1)).as("v_fk"))
-          val counters = batch.agg(count(lit(1)).as("n"),
-            sum("v_null").as("v_null"), sum("v_price").as("v_price"),
-            sum("v_date").as("v_date"))
-          val local = graft.ops.Scalars.withScalar(
-            counters, col("n"), fk, col("v_fk"))
-          ledgerAppend(local, store, bid, compact =
-            Some(sumFold(Seq(),
-              Seq("n", "v_null", "v_price", "v_date", "v_fk"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, raw, midThreshold(raw, "o_orderkey"), stage,
+        key = "o_orderkey", recordsPerFile = 65536L) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        val fk = batch.join(custkeys,
+          batch("o_custkey") === custkeys("c_custkey"),
+          "left_anti").agg(count(lit(1)).as("v_fk"))
+        val counters = batch.agg(count(lit(1)).as("n"),
+          sum("v_null").as("v_null"), sum("v_price").as("v_price"),
+          sum("v_date").as("v_date"))
+        val local = graft.ops.Scalars.withScalar(
+          counters, col("n"), fk, col("v_fk"))
+        ledgerAppend(local, store, bid, compact =
+          Some(sumFold(Seq(),
+            Seq("n", "v_null", "v_price", "v_date", "v_fk"))))
+      }
     }
-    stageGens(raw, mid, stage, key = "o_orderkey", recordsPerFile = 65536L)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     ledgerSums(spark, store, Seq(),
         Seq("n", "v_null", "v_price", "v_date", "v_fk"))
       .select(posexplode(array(
@@ -1793,50 +1518,36 @@ object EventStreams {
     val (keys, ctr) = (s"$base/keys", s"$base/ctr")
     val raw = graft.sources.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"))
-    val bounds = raw.agg(min("event_id").as("lo"), max("event_id").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
-    val stageSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType)))
-    def pass(): Unit = withStateParts(spark) {
-      val q = spark.readStream.schema(stageSchema)
-        .option("recursiveFileLookup", "true").parquet(stage)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val ss = batch.sparkSession
-          val bk = batch.select(col("user_id")).distinct()
-          // first-seen keys, exactly-once: the presence store is ALSO
-          // batch-keyed (the ledger convention) — the anti-join reads
-          // only STRICTLY-PRIOR batches' entries (a retried batch's own
-          // failed-attempt entry is excluded, so it re-decides against
-          // the same history and overwrites its own entry), and the
-          // decision set is MATERIALIZED before the write
-          val priorDirs = Option(new java.io.File(keys).listFiles())
-            .map(_.collect {
-              case f if f.isDirectory && f.getName != s"b$bid" => f.getPath
-            }).getOrElse(Array.empty[String])
-          val newKeys = (if (priorDirs.nonEmpty)
-              bk.join(ss.read.parquet(priorDirs.toIndexedSeq: _*),
-                Seq("user_id"), "left_anti")
-            else bk).localCheckpoint(false)
-          newKeys.coalesce(1).write.mode("overwrite").parquet(s"$keys/b$bid")
-          val local = graft.ops.Scalars.withScalar(
-              batch.agg(count(lit(1)).as("n"),
-                count_distinct(col("user_id")).as("d")),
-              col("n"),
-              newKeys.agg(count(lit(1)).as("nu")), col("nu"))
-            .select(col("n"), (col("n") - col("d")).as("intra"), col("nu"))
-          ledgerAppend(local, ctr, bid, compact =
-            Some(sumFold(Seq(), Seq("n", "intra", "nu"))))
-        }
-        .start()
-      q.awaitTermination()
+    landGens(spark, raw, midThreshold(raw, "event_id"), stage,
+        key = "event_id", recordsPerFile = 65536L) { src =>
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        val ss = batch.sparkSession
+        val bk = batch.select(col("user_id")).distinct()
+        // first-seen keys, exactly-once: the presence store is ALSO
+        // batch-keyed (the ledger convention) — the anti-join reads
+        // only STRICTLY-PRIOR batches' entries (a retried batch's own
+        // failed-attempt entry is excluded, so it re-decides against
+        // the same history and overwrites its own entry), and the
+        // decision set is MATERIALIZED before the write
+        val priorDirs = Option(new java.io.File(keys).listFiles())
+          .map(_.collect {
+            case f if f.isDirectory && f.getName != s"b$bid" => f.getPath
+          }).getOrElse(Array.empty[String])
+        val newKeys = (if (priorDirs.nonEmpty)
+            bk.join(ss.read.parquet(priorDirs.toIndexedSeq: _*),
+              Seq("user_id"), "left_anti")
+          else bk).localCheckpoint(false)
+        newKeys.coalesce(1).write.mode("overwrite").parquet(s"$keys/b$bid")
+        val local = graft.ops.Scalars.withScalar(
+            batch.agg(count(lit(1)).as("n"),
+              count_distinct(col("user_id")).as("d")),
+            col("n"),
+            newKeys.agg(count(lit(1)).as("nu")), col("nu"))
+          .select(col("n"), (col("n") - col("d")).as("intra"), col("nu"))
+        ledgerAppend(local, ctr, bid, compact =
+          Some(sumFold(Seq(), Seq("n", "intra", "nu"))))
+      }
     }
-    stageGens(raw, mid, stage, key = "event_id", recordsPerFile = 65536L)
-    promoteGen(stage, 1); pass()
-    promoteGen(stage, 2); pass()
     ledgerSums(spark, ctr, Seq(), Seq("n", "intra", "nu"))
       .select(lit("user_id_unique").as("rule"),
         col("n").as("n_checked"), col("nu").as("n_unique"),
@@ -1873,8 +1584,7 @@ object EventStreams {
       // all the sketch needs — stage stays narrow; ts staged as micros
       .select(unix_micros(tsUtc(spark, sfDir)).as("ts_us"), col("user_id"))
       .localCheckpoint(false)  // one source scan feeds bounds + both stages
-    val bounds = raw.agg(min("ts_us").as("lo"), max("ts_us").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
+    val mid = midThreshold(raw, "ts_us")
     raw.filter(col("ts_us") < mid).write.parquet(s"$stage/day1")
     hllRefreshPass(spark, stage, ckpt, delta)
     raw.filter(col("ts_us") >= mid).write.parquet(s"$stage/day2")
@@ -1931,21 +1641,13 @@ object EventStreams {
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", "1")
       .parquet(stage)
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val next = new java.io.File(s"$dims/v${id + 1}")
-          if (!next.exists()) { // idempotent re-delivery
-            graft.ops.Scd2.merge(
-                spark.read.parquet(s"$dims/v$id"), batch, key = "o_orderkey")
-              .write.parquet(next.toString)
-          }
-          ()
-        }
-        .start()
-      q.awaitTermination()
+    eachBatch(spark, stream, ckpt) { (batch, id) =>
+      val next = new java.io.File(s"$dims/v${id + 1}")
+      if (!next.exists()) { // idempotent re-delivery
+        graft.ops.Scd2.merge(
+            spark.read.parquet(s"$dims/v$id"), batch, key = "o_orderkey")
+          .write.parquet(next.toString)
+      }
     }
     val latest = new java.io.File(dims).list().map(_.stripPrefix("v").toInt).max
     spark.read.parquet(s"$dims/v$latest")
@@ -1991,19 +1693,7 @@ object EventStreams {
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
 
-    val out = graft.sources.Scratch.dir("graft_stream_dedup_")
-    withStateParts(spark) {
-      val q = doubled.writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    spark.read.parquet(s"$out/data")
+    runToFileSink(spark, doubled, graft.sources.Scratch.dir("graft_stream_dedup_"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), count_distinct(col("event_id")).as("n_distinct"))
       .orderBy("event_type")
@@ -2031,18 +1721,7 @@ object EventStreams {
       .groupBy(col("event_type"), col("n_orders").isNotNull.cast("bigint").as("has_orders"))
       .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
 
-    val sink = s"graft_stream_enrich_${runId.incrementAndGet()}"
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    spark.table(sink)
+    runToMemorySink(spark, stream, "enrich")
       .select(col("event_type"), col("has_orders"), col("n_events"),
         round(col("sum_value"), 2).as("sum_value"))
       .orderBy("event_type", "has_orders")
@@ -2076,18 +1755,7 @@ object EventStreams {
       .groupBy("doc_id", "bench_id")
       .agg(first("n_sh").as("n_sh"), count(lit(1)).as("shared"))
 
-    val sink = s"graft_stream_contam_${runId.incrementAndGet()}"
-    withStateParts(spark) {
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    spark.table(sink)
+    runToMemorySink(spark, agg, "contam")
       .withColumn("cont", col("shared").cast("double") / col("n_sh"))
       .groupBy("doc_id")
       .agg(max(struct(col("cont"), (-col("bench_id")).as("nb"))).as("w"))
@@ -2133,19 +1801,7 @@ object EventStreams {
     val joined = signups.join(errors,
       expr("user_id = euser AND ets >= sts AND ets < sts + interval 1 hour"))
 
-    val out = graft.sources.Scratch.dir("graft_stream_rjoin_")
-    withStateParts(spark) {
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    spark.read.parquet(s"$out/data")
+    runToFileSink(spark, joined, graft.sources.Scratch.dir("graft_stream_rjoin_"))
       .groupBy("signup_id")
       .agg(count(lit(1)).as("n_errors"))
       .orderBy("signup_id")
@@ -2222,20 +1878,9 @@ object EventStreams {
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
 
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
     // batch tail over the emitted day records: activity counts per
     // day, churn from observed gaps + each user's open last day
-    val rec = spark.read.parquet(s"$base/data").localCheckpoint(false)
+    val rec = runToFileSink(spark, stream, base).localCheckpoint(false)
     val act = rec.groupBy("dn").agg(
       sum(when(col("cls") === "new", 1L).otherwise(0L)).as("n_new"),
       sum(when(col("cls") === "retained", 1L).otherwise(0L)).as("n_retained"),
@@ -2331,8 +1976,7 @@ object EventStreams {
         col("user_id"),
         unix_micros(tsUtc(spark, sfDir)).as("ts_us"))
       .localCheckpoint(false)
-    val bounds = raw.agg(min("ts_us").as("lo"), max("ts_us").as("hi")).head()
-    val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
+    val mid = midThreshold(raw, "ts_us")
     raw.filter(col("ts_us") < mid).select("shard", "user_id")
       .coalesce(1).write.parquet(s"$base/stage/h1")
     raw.filter(col("ts_us") >= mid).select("shard", "user_id")
@@ -2352,23 +1996,13 @@ object EventStreams {
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
 
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
+    val emitted = runToFileSink(spark, stream, base)
     // batch tail: each shard's LATEST summary (max n_seen is monotone
     // per shard; the header row guarantees every batch is represented
     // even when the summary itself is empty), then the bounded
     // driver-side mergeable-summaries fold via the shared reduction
     val w = org.apache.spark.sql.expressions.Window.partitionBy("shard")
-    val fin = spark.read.parquet(s"$base/data")
+    val fin = emitted
       .withColumn("mx", max("n_seen").over(w))
       .filter(col("n_seen") === col("mx"))
       .select("shard", "n_seen", "err", "tag", "est")
@@ -2455,21 +2089,9 @@ object EventStreams {
     // (executor-side parquet writes), never driver memory; the
     // session_id assignment is then a normal batch window over the
     // sink files.
-    val out = graft.sources.Scratch.dir("graft_stream_sessions_")
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
     // session_id is assigned per user by start time after the fact (the
     // stateful operator emits sessions unordered across batches)
-    spark.read.parquet(s"$out/data")
+    runToFileSink(spark, stream, graft.sources.Scratch.dir("graft_stream_sessions_"))
       .withColumn("session_id",
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy("start_us")).cast("long"))
@@ -2520,19 +2142,7 @@ object EventStreams {
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
 
-    val out = graft.sources.Scratch.dir("graft_stream_collapse_")
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/chk")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-    spark.read.parquet(s"$out/data")
+    runToFileSink(spark, stream, graft.sources.Scratch.dir("graft_stream_collapse_"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), sum("kept").as("n_kept"))
       .select(col("event_type"), col("n_events"), col("n_kept"),

@@ -1,0 +1,57 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The Scala sources of `src/main`, line by line, for static scans. */
+object MainSources {
+  lazy val lines: Seq[(java.io.File, Vector[String])] = {
+    val root = new java.io.File("src/main/scala")
+    require(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try (f, src.getLines().toVector) finally src.close()
+    }
+  }
+}
+
+/** Concurrent driver jobs run only through `graft.exec.Par` (which
+  * cancels, waits for and attributes them), every streaming query is
+  * drained by `EventStreams.drain`, and generations land only through
+  * `EventStreams.landGens`. A second copy of any of these is where a
+  * job could leak past its caller again. */
+class ParScanSpec extends AnyFunSuite {
+  import MainSources.lines
+
+  test("src/main overlaps jobs only through graft.exec.Par") {
+    val raw = """scala\.concurrent|\bFuture\b|\bAwait\b|\bExecutionContext\b""".r
+    val offenders = for {
+      (f, ls) <- lines if !f.getPath.endsWith("graft/exec/Par.scala")
+      (line, i) <- ls.zipWithIndex if raw.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("one AvailableNow drain and one landing loop") {
+    def sites(pattern: String) = for {
+      (f, ls) <- lines
+      (line, i) <- ls.zipWithIndex if line.contains(pattern)
+    } yield (f.getName, i)
+    assert(sites("Trigger.AvailableNow()").length == 1,
+      sites("Trigger.AvailableNow()"))
+    val es = lines.collectFirst {
+      case (f, ls) if f.getName == "EventStreams.scala" => ls
+    }.get
+    val start = es.indexWhere(_.contains("private def landGens("))
+    val end = es.indexWhere(_ == "  }", start)
+    assert(start >= 0 && end > start)
+    for (helper <- Seq("stageGens(", "promoteGen(")) {
+      val calls = sites(helper).filterNot { case (_, i) =>
+        es(i).contains(s"private def $helper") }
+      assert(calls.nonEmpty && calls.forall { case (file, i) =>
+          file == "EventStreams.scala" && i > start && i < end },
+        s"$helper called outside landGens: $calls")
+    }
+  }
+}

@@ -366,20 +366,23 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val tag = "graft.spec.phase"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val (tagged, untagged) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
     val drained = new java.util.concurrent.CountDownLatch(1)
-    // the fold's concurrent driver jobs run on pool threads that need
-    // not inherit the caller's local properties, so every job start
-    // before the marker is counted
+    // the call runs under a local property; every job it starts — on
+    // this thread, the streaming queries' threads, AQE's broadcast
+    // threads or a Par branch — must carry it
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)) match {
-          case Some("marker") => drained.countDown()
-          case _ => jobs.incrementAndGet()
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "call" => tagged.incrementAndGet()
+          case "marker" => drained.countDown()
+          case _ => untagged.incrementAndGet()
         }
     }
     sc.addSparkListener(listener)
     try {
+      sc.setLocalProperty(tag, "call")
       val rows = SparkEntry.queries("stream_pipeline_e2e")(spark, sf).collect()
       assert(rows.length == 12)
       // the bus delivers events in order: once the marker job's start
@@ -391,12 +394,14 @@ class StreamingSpec extends AnyFunSuite {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
+    assert(untagged.get == 0,
+      s"${untagged.get} of the call's jobs lost the caller's local properties")
     // measured at this fixture: 333-335 jobs per call over 11 calls,
     // in the suite and alone (AQE's runtime broadcast jobs and the
     // micro-batch count vary with timing); 359-360 while the fold still
     // wrote pair/cluster snapshots and ran discarded checkpoint jobs.
     // The bound leaves that timing spread some headroom.
-    assert(jobs.get <= 340, s"stream_pipeline_e2e started ${jobs.get} jobs")
+    assert(tagged.get <= 340, s"stream_pipeline_e2e started ${tagged.get} jobs")
   }
 
   test("streaming quality scoring equals the one-shot gen1-frozen batch scoring") {
