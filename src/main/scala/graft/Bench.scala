@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * emits ONE JSON line. A full warmup pass at sf0.001 first absorbs
@@ -13,13 +12,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Sessions.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.sources.Sessions.local("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     // The bench surface is the gated queries PLUS the non-gated

@@ -68,13 +68,7 @@ object Ingest {
       System.err.println(s"[ingest] $err")
       sys.exit(2)
     case Right(c) =>
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = graft.sources.Sessions.tune(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false"))
-        .getOrCreate()
+      val spark = graft.sources.Sessions.local("graft-ingest")
       spark.sparkContext.setLogLevel("WARN")
       try {
         val r = run(spark, c)

@@ -93,13 +93,7 @@ object Replay {
         System.err.println(s"[replay] $err")
         sys.exit(2)
       case Right((path, format)) =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = graft.sources.Sessions.tune(
-          SparkSession.builder()
-            .master(s"local[$cpus]")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.ui.enabled", "false"))
-          .getOrCreate()
+        val spark = graft.sources.Sessions.local("graft-replay")
         spark.sparkContext.setLogLevel("ERROR")
         try {
           val r = replay(spark, path, format, line => println(line))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -29,13 +28,7 @@ object Verify {
       System.err.println(s"[verify] WARNING: unknown query name '$n' ignored"))
     new java.io.File(outDir).mkdirs()
     if (!oracleOnly) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = graft.sources.Sessions.tune(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false"))
-        .getOrCreate()
+      val spark = graft.sources.Sessions.local("graft-verify")
       spark.sparkContext.setLogLevel("WARN")
       queries
         .filter { case (name, _) => only.isEmpty || only(name) }

@@ -18,10 +18,14 @@ import org.apache.spark.sql.functions._
   * landing into four append-only integer/hash stores
   * ([[extract]] — doc meta, shingle hashes, gram hashes, classifier
   * features; each O(tokens) rows of fixed-width columns, appended
-  * O(Δ) per shard), and every landing generation re-derives the funnel
-  * accounting from the stores ([[funnel]]) — compact-store compute,
-  * never raw-text re-reads. This is how FineWeb-style pipelines
-  * actually schedule global stages across snapshots.
+  * O(Δ) per shard), and every landing generation re-derives the whole
+  * funnel accounting from those four stores alone ([[dedup]], then
+  * [[funnel]]) — compact-store compute, never raw-text re-reads, and
+  * no other persisted state: the raw counters, the exact-dedup
+  * winners and the substring coverage are each one aggregate over a
+  * store, cheaper to re-derive than to keep a ledger or snapshot of.
+  * This is how FineWeb-style pipelines actually schedule global stages
+  * across snapshots.
   *
   * Identity contract: norm text and shingles live in the stores as
   * 64-bit portable hashes (the signature-store convention of
@@ -40,155 +44,6 @@ object FunnelStore {
 
   final case class Stores(meta: DataFrame, shingles: DataFrame,
                           grams: DataFrame, feat: DataFrame)
-
-  /** The per-batch-FOLDED inputs of [[funnel]] (VERDICT r14 item 2):
-    * the funnel stages whose state is additive or keyed-mergeable do
-    * not need the per-landing re-derivation at all —
-    *   - `raw`: (source, n_docs, sum_chars) landing totals, folded by
-    *     plain sums (the stream_pii_ingest pattern);
-    *   - `winners`: the exact-dedup presence store (norm_h, doc_id) —
-    *     min-id per norm hash, folded per batch by union + keyed min
-    *     (min is mergeable, so the store equals the one-shot
-    *     `GROUP BY norm_h` over everything ever landed regardless of
-    *     how history was sharded);
-    *   - `coverage` (r16, VERDICT r15 item 5): the per-doc
-    *     duplicated-span token coverage, maintained per GENERATION by
-    *     [[coverageIncrement]] instead of re-reduced from the full
-    *     gram store.
-    * [[funnel]] takes stage 0, the exact-dedup survivor set and the
-    * substring-survivor filter from these, so each landing generation
-    * re-derives only the remaining GLOBAL stages (the frozen-classifier
-    * gate, budget, decontamination, split) — on 100 TB the per-landing
-    * bill for the foldable stages drops from O(store) to O(Δ).
-    *
-    * `clusters` is the family table
-    * `dedupClusters(s2, jaccardPairsFromPostings(shingles ⋈ s2))` over
-    * the substring survivors. It is a THUNK, first forced at the
-    * funnel's near-dup stage (r18, guide §2.6): the caller forks the
-    * pair+CC chain as a [[graft.exec.Par]] branch and passes the
-    * branch's `join`, so the funnel's emission head (meta/exact-dedup/
-    * substring checkpoints — which read only winners+coverage)
-    * materializes under the chain's tail instead of after it. Forcing
-    * the thunk rethrows the branch's own failure; the caller's scope,
-    * which encloses the funnel call, cancels and waits for the branch
-    * if the funnel fails first. The thunk must return an already-
-    * materialized (checkpointed) table — the funnel reads it twice
-    * (family-root filter + split join) and does NOT re-anchor it. */
-  final case class Folded(raw: DataFrame, winners: DataFrame,
-                          coverage: DataFrame,
-                          clusters: () => DataFrame)
-
-  /** One generation's increment of the substring-coverage state — the
-    * dedup_substring_incremental shape (history reduces ONCE) applied
-    * to the funnel's coverage stage. The exact-dedup winner set is
-    * APPEND-ONLY (a winner is the min doc_id per norm hash and landing
-    * ids only grow, so history winners never lose), which makes gram
-    * dup status MONOTONE (0→dup, never back) and a doc's coverage
-    * recomputable from the dup set alone:
-    *
-    *   1. delta counts: gram occurrences of the NEW winners' grams
-    *      only — a Δ-sized groupBy, never the corpus;
-    *   2. old counts are recomputed for the DELTA'S grams only (one
-    *      semi-join-restricted pass over prior winners' grams — at a
-    *      small daily Δ the delta-gram set broadcasts, so the store
-    *      scan is map-side; 16-gram occurrences are near-unique, so
-    *      the matched groupBy is tiny);
-    *   3. `dupAdd`: grams whose count crossed 2 this generation
-    *      (h ∉ prior dup set ∧ old+Δ ≥ 2) — the ONLY persisted gram
-    *      state is the dup SET itself, an append-only ledger of the
-    *      duplicated minority (singleton grams, the overwhelming bulk
-    *      of a 16-gram table, are never written anywhere);
-    *   4. the island sweep reruns ONLY on affected docs (prior winners
-    *      holding a newly-dup gram ∪ the new winners); every other
-    *      doc's dup flags are unchanged, so its stored coverage is
-    *      still exact.
-    *
-    * Returns (dupAdd, newCov). The caller appends dupAdd to its
-    * dup-set ledger and replaces its coverage table with newCov (one
-    * row per doc with any duplicated span — sparse). */
-  def coverageIncrement(grams: DataFrame, winners: DataFrame,
-                        prevWinners: Option[DataFrame],
-                        prevCov: Option[DataFrame],
-                        prevDup: Option[DataFrame],
-                        spanLen: Int = 16): (DataFrame, DataFrame) = {
-    // the whole increment algebra rests on the winner set being
-    // APPEND-ONLY; a caller landing smaller ids would evict a prior
-    // winner whose grams then silently stay in the counts (ADVICE r16
-    // — fail loudly on the violated precondition instead). One
-    // presence-store-sized anti-join per GENERATION fold, `isEmpty`
-    // short-circuits at the first violation row. The check reads only
-    // the two winner sets — independent of every increment stage — so
-    // it runs as a concurrent driver job (guide §2.6) whose scope
-    // closes before the increment is returned: same fail-before-use
-    // semantics, no serial corpus action on the fold's critical path.
-    graft.exec.Par.scope { par =>
-      prevWinners.foreach { pw =>
-        par.fork(require(pw.select("doc_id")
-            .join(winners.select("doc_id"), Seq("doc_id"), "left_anti")
-            .isEmpty,
-          "coverageIncrement precondition violated: a prior winner was " +
-            "evicted (winner set must be append-only)"))
-      }
-      val deltaW = prevWinners match {
-        case Some(pw) =>
-          winners.select("doc_id")
-            .join(pw.select("doc_id"), Seq("doc_id"), "left_anti")
-        case None => winners.select("doc_id")
-      }
-      val deltaG = grams.join(deltaW, "doc_id")
-        .localCheckpoint(false) // delta counts AND the affected-doc sweep
-      val dc = deltaG.groupBy("h").agg(count(lit(1)).as("dc"))
-        .localCheckpoint(false) // old-count restriction AND the crossing test
-      val dupAdd = ((prevWinners, prevDup) match {
-        case (Some(pw), Some(pd)) =>
-          // for h ∉ prior dup set the old count is 0 or 1 (≥2 would BE in
-          // the set), so the crossing test needs no old-count aggregation:
-          // dc ≥ 2 crosses outright; dc == 1 crosses iff the gram occurs
-          // at all among prior winners — pure membership, one semi-join
-          val fresh = dc.join(pd.select("h"), Seq("h"), "left_anti")
-          fresh.filter(col("dc") >= 2).select("h")
-            .unionByName(fresh.filter(col("dc") === 1).select("h")
-              .join(grams.join(pw.select("doc_id"), "doc_id").select("h"),
-                Seq("h"), "left_semi"))
-        case _ => dc.filter(col("dc") >= 2).select("h")
-      }).localCheckpoint(false) // ledger entry, affected docs, dup flags
-      val affected = (prevWinners match {
-        case Some(pw) =>
-          grams.join(dupAdd, Seq("h"), "left_semi").select("doc_id")
-            .distinct()
-            .join(pw.select("doc_id"), Seq("doc_id"), "left_semi")
-            .unionByName(deltaW)
-        case None => deltaW
-      }).distinct().localCheckpoint(false) // sweep input AND the cov merge
-      val dupSet = prevDup match {
-        case Some(pd) => pd.select("h").unionByName(dupAdd)
-        case None => dupAdd
-      }
-      // first generation: affected == the delta exactly, whose grams are
-      // already checkpointed — no second pass over the raw store
-      val affectedGrams =
-        if (prevWinners.isEmpty) deltaG else grams.join(affected, "doc_id")
-      val dupPos = affectedGrams
-        .join(dupSet, Seq("h"), "left_semi")
-        .select("doc_id", "pos")
-      val wd = Window.partitionBy("doc_id").orderBy("pos")
-      val recomputed = dupPos
-        .withColumn("prev", lag("pos", 1).over(wd))
-        .withColumn("nw",
-          when(col("prev").isNull || col("pos") - col("prev") > spanLen, 1L)
-            .otherwise(0L))
-        .withColumn("island", sum("nw").over(wd))
-        .groupBy("doc_id", "island")
-        .agg((max("pos") - min("pos") + spanLen).cast("long").as("len"))
-        .groupBy("doc_id").agg(sum("len").as("dup_tokens"))
-      val newCov = prevCov match {
-        case Some(pc) =>
-          pc.join(affected, Seq("doc_id"), "left_anti").unionByName(recomputed)
-        case None => recomputed
-      }
-      (dupAdd, newCov)
-    }
-  }
 
   /** Map-side per-landing-batch extraction: everything the funnel will
     * ever need from this shard's raw text.
@@ -222,49 +77,86 @@ object FunnelStore {
     Stores(meta, shingles, grams, feat)
   }
 
+  /** Per-doc duplicated-span token coverage of the docs in `docs`
+    * (any frame with `doc_id`), from the gram store: their grams, the
+    * grams occurring at ≥ 2 of their positions, and one island sweep
+    * per doc over the duplicated starts — overlapping or abutting
+    * spans merge, so an island starting at p and ending at q covers
+    * q - p + spanLen tokens. One row (doc_id, dup_tokens) per doc with
+    * any duplicated span; every other doc's coverage is 0. Equals
+    * [[Suffix.dupSpanStats]]' nonzero `dup_tokens` over the same docs
+    * up to 64-bit gram-hash identity (DedupSpec pins it). */
+  def coverage(grams: DataFrame, docs: DataFrame,
+               spanLen: Int = 16): DataFrame = {
+    val g = grams.join(docs.select("doc_id"), "doc_id")
+    val dup = g.groupBy("h").agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2).select("h")
+    val wd = Window.partitionBy("doc_id").orderBy("pos")
+    g.join(dup, Seq("h"), "left_semi").select("doc_id", "pos")
+      .withColumn("prev", lag("pos", 1).over(wd))
+      .withColumn("nw",
+        when(col("prev").isNull || col("pos") - col("prev") > spanLen, 1L)
+          .otherwise(0L))
+      .withColumn("island", sum("nw").over(wd))
+      .groupBy("doc_id", "island")
+      .agg((max("pos") - min("pos") + spanLen).cast("long").as("len"))
+      .groupBy("doc_id").agg(sum("len").as("dup_tokens"))
+  }
+
+  /** The funnel's two dedup stages, derived once from the meta and gram
+    * stores: the exact-dedup survivors (the min doc_id per norm hash)
+    * as their meta rows, each flagged `keep` when its duplicated-span
+    * coverage among those survivors is at most 20% of its tokens — the
+    * substring-dedup survivors are the `keep` rows. Checkpointed: it
+    * feeds the caller's pair+CC chain and [[funnel]]. */
+  def dedup(meta: DataFrame, grams: DataFrame,
+            spanLen: Int = 16): DataFrame = {
+    val s1 = meta.join(meta.groupBy("norm_h").agg(min("doc_id").as("doc_id"))
+      .select("doc_id"), Seq("doc_id"), "left_semi")
+    s1.join(coverage(grams, s1, spanLen), Seq("doc_id"), "left")
+      .withColumn("keep",
+        coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
+      .drop("dup_tokens")
+      .localCheckpoint(false)
+  }
+
   /** The full funnel accounting (pipeline_e2e_v2's 12 rows) derived
-    * from the stores and the [[Folded]] inputs. Stage semantics are the
-    * batch capstone's: exact dedup (min-id per norm hash, from the
-    * folded winner store) → substring dedup (drop docs with >20%
-    * duplicated-span coverage, from the folded coverage table) →
-    * near-dup family collapse (the caller's hashed-posting jaccard
-    * pairs + CC roots) → rule quality gate with the frozen
-    * store-trained classifier's agreement cells → per-source budget →
+    * from the stores and the [[dedup]] table. Stage semantics are the
+    * batch capstone's: exact dedup (min-id per norm hash) → substring
+    * dedup (drop docs with >20% duplicated-span coverage) → near-dup
+    * family collapse (the caller's hashed-posting jaccard pairs + CC
+    * roots) → rule quality gate with the frozen store-trained
+    * classifier's agreement cells → per-source budget →
     * decontamination (store shingles vs the bench docs' store
-    * shingles) → leakage-safe family split. Results equal the one-shot
-    * funnel by the fold-merge argument on [[Folded]]; StreamingSpec
-    * pins it.
+    * shingles) → leakage-safe family split. Every stage reads the
+    * complete stores, so the result equals the one-shot funnel over
+    * everything landed so far; StreamingSpec pins it.
     *
-    * `trained` returns the frozen classifier's weight table
-    * ([[QualityClf.trainOnFeatures]] over the feature store) — a thunk
-    * for the same reason, and under the same contract, as
-    * `Folded.clusters`: the caller trains in a [[graft.exec.Par]]
-    * branch and the weights are first needed after the emission head
-    * has materialized. */
-  def funnel(st: Stores, folded: Folded,
+    * `clusters` is the family table
+    * `dedupClusters(s2, jaccardPairsFromPostings(shingles ⋈ s2))` over
+    * the substring survivors `s2` of `dd`, and `trained` the frozen
+    * classifier's weight table ([[QualityClf.trainOnFeatures]] over the
+    * feature store). Both are THUNKS, first forced after the emission
+    * head has materialized: the caller runs each in a
+    * [[graft.exec.Par]] branch and passes the branch's `join`, so the
+    * head's jobs run under the branches' tails instead of after them.
+    * Forcing a thunk rethrows its branch's own failure; the caller's
+    * scope, which encloses the funnel call, cancels and waits for the
+    * branches if the funnel fails first. `clusters` must return an
+    * already-materialized (checkpointed) table — the funnel reads it
+    * twice (family-root filter + split join) and does NOT re-anchor
+    * it. */
+  def funnel(st: Stores, dd: DataFrame, clusters: () => DataFrame,
              trained: () => DataFrame): DataFrame = {
     val spark = st.meta.sparkSession
     import spark.implicits._
     graft.functions.GraftHash64.register(spark)
-    val meta = st.meta.localCheckpoint(false)
     def acct(idx: Int, name: String, d: DataFrame): DataFrame =
       d.agg(count(lit(1)).as("n_docs"),
           coalesce(sum("n_chars").cast("bigint"), lit(0L)).as("sum_chars"))
         .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
           col("n_docs"), col("sum_chars"))
-    val rawRow = folded.raw
-      .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
-        coalesce(sum("sum_chars").cast("bigint"), lit(0L)).as("sum_chars"))
-      .select(lit(0L).as("stage_idx"), lit("raw").as("stage"),
-        col("n_docs"), col("sum_chars"))
-    // s1 is one broadcast semi-join of two checkpointed tables — cheaper
-    // to recompute for its second consumer (the exact-dedup acct row)
-    // than to pay another synchronous barrier (r18)
-    val s1 = meta.join(folded.winners.select("doc_id"), Seq("doc_id"), "left_semi")
-    val s2 = s1.join(folded.coverage, Seq("doc_id"), "left")
-      .filter(coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
-      .drop("dup_tokens")
-      .localCheckpoint(false)
+    val s2 = dd.filter(col("keep")).drop("keep")
     // frozen classifier margins, materialized BEFORE the near-dup
     // stage forces the caller's pair+CC thunk (r18, guide §2.6): the
     // per-doc weight sum is independent of the family collapse, so it
@@ -281,9 +173,9 @@ object FunnelStore {
       .localCheckpoint(false)
     // near-dup collapse over the substring survivors — forced HERE,
     // after the emission head has materialized under the caller's
-    // pair+CC jobs; arrives checkpointed (see [[Folded]])
-    val clusters = folded.clusters()
-    val s3 = s2.join(clusters.filter(col("doc_id") === col("cluster_id"))
+    // pair+CC jobs; arrives checkpointed
+    val families = clusters()
+    val s3 = s2.join(families.filter(col("doc_id") === col("cluster_id"))
         .select("doc_id"), "doc_id")
       .localCheckpoint(false)
     val agree = s3.join(marg, "doc_id")
@@ -316,7 +208,7 @@ object FunnelStore {
     // decontamination from the shingle store: containment of each
     // selected doc against the bench docs (doc_id < 25), any >= 0.5
     val bench = st.shingles
-      .join(meta.filter(col("doc_id") < 25).select("doc_id"), "doc_id")
+      .join(st.meta.filter(col("doc_id") < 25).select("doc_id"), "doc_id")
       .select(col("doc_id").as("bench_id"), col("s"))
     val cs = st.shingles.join(s5.select("doc_id"), "doc_id")
       .localCheckpoint(false) // sizes AND the shared-shingle join
@@ -330,10 +222,10 @@ object FunnelStore {
       .localCheckpoint(false)
     val bucket = shiftrightunsigned(call_function("graft_hash64",
       col("cluster_id").cast("string"), lit(7L)), 52)
-    val s7 = s6.join(clusters.select("doc_id", "cluster_id"), "doc_id")
+    val s7 = s6.join(families.select("doc_id", "cluster_id"), "doc_id")
       .filter(bucket < 3277)
-    rawRow
-      .unionByName(acct(1, "exact_dedup", s1))
+    acct(0, "raw", st.meta)
+      .unionByName(acct(1, "exact_dedup", dd))
       .unionByName(acct(2, "substring_dedup", s2))
       .unionByName(acct(3, "near_dedup", s3))
       .unionByName(acct(4, "quality", s4))

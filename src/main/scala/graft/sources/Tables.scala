@@ -55,7 +55,7 @@ object Tables {
   }
 }
 
-/** Session-level configuration shared by Verify, Bench and tests. */
+/** Session-level configuration shared by the entry points and tests. */
 object Sessions {
   /** Confs every graft session needs; applied at build time so no query
     * or loader ever mutates a live session. */
@@ -85,4 +85,15 @@ object Sessions {
 
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     required.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The entry points' session: local mode on `SPARK_GRAFT_CPUS` cores
+    * (default 4), shuffle width equal to the cores, no UI. */
+  def local(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    tune(SparkSession.builder().appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+  }
 }

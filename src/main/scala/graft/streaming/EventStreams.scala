@@ -97,7 +97,6 @@ object EventStreams {
     * passing it bounds the store's directory count for the stream's
     * lifetime. */
   private[graft] def ledgerAppend(local: DataFrame, path: String, batchId: Long,
-                           files: Int = 1,
                            compact: Option[DataFrame => DataFrame] = None): Unit = {
     // materialize the keyed partial ONCE (it is a bounded aggregate —
     // |keys| rows) so the write job doesn't re-execute the whole
@@ -105,7 +104,7 @@ object EventStreams {
     // r16 — checkpointed blocks otherwise accumulate per batch for the
     // stream's lifetime)
     val part = local.localCheckpoint()
-    try part.coalesce(files).write.mode("overwrite").parquet(s"$path/b$batchId")
+    try part.coalesce(1).write.mode("overwrite").parquet(s"$path/b$batchId")
     finally graft.ops.PlanBarrier.release(part)
     compact.foreach(f => ledgerCompact(local.sparkSession, path, f))
   }
@@ -1168,22 +1167,23 @@ object EventStreams {
     * classifier features; O(Δ) appends of fixed-width rows, raw text
     * never re-read), and after each generation the full funnel
     * accounting is re-derived from the stores alone
-    * ([[graft.ops.FunnelStore.funnel]]).
+    * ([[graft.ops.FunnelStore.dedup]], then
+    * [[graft.ops.FunnelStore.funnel]]).
     *
-    * Why re-derive (most of it) instead of folding counters: the
-    * funnel's decisions are GLOBAL — a landing shard can bridge two
-    * near-dup families and evict a former root, raise a history doc's
-    * duplicated-span coverage over the drop line, or displace a budget
-    * selection — so no bounded per-key state can reproduce the
-    * one-shot result for THOSE stages. The stages that ARE additive or
-    * keyed-mergeable do fold per batch (r15, VERDICT r14 item 2 —
-    * [[graft.ops.FunnelStore.Folded]]): raw landing counters fold by
-    * plain sums and the exact-dedup presence store folds by keyed
-    * min-id merge, so each generation's re-derivation covers only the
-    * global stages. The near-dup family collapse is one of them: each
-    * generation re-derives its pairs and connected components in full
-    * over the current substring survivors. The stores make that
-    * re-derivation compact-integer work (the lakehouse shape global
+    * Why re-derive instead of folding counters: the funnel's decisions
+    * are GLOBAL — a landing shard can bridge two near-dup families and
+    * evict a former root, raise a history doc's duplicated-span
+    * coverage over the drop line, or displace a budget selection — so
+    * no bounded per-key state can reproduce the one-shot result. Even
+    * the stages that could fold per batch (raw counters, the exact-
+    * dedup winners) are one aggregate over the meta store, so nothing
+    * but the four stores is persisted: each generation re-derives
+    * winners, substring coverage, near-dup pairs and connected
+    * components in full. This operator's generations are ¾ and ¼ of
+    * the corpus ([[genThreshold]]), where re-deriving only what a shard
+    * touched measured slower than the full paths (pairs 2.2 vs 1.6 s,
+    * CC 3.4 vs 1.9 s at sf0.1 — OPTIMIZATION_r18.md). The stores make
+    * the re-derivation compact-integer work (the lakehouse shape global
     * pipeline stages actually run on); the final fold provably equals
     * the one-shot pipeline_e2e_v2 (StreamingSpec pins row-set
     * equality; the oracle is the batch funnel's replay verbatim). */
@@ -1191,134 +1191,59 @@ object EventStreams {
     val base = graft.sources.Scratch.dir("graft_pipe_stream")
     val (stage, ckpt) = (s"$base/stage", s"$base/ckpt")
     val dirs = Seq("meta", "shingles", "grams", "feat").map(n => s"$base/$n")
-    val (rawDir, exactDir) = (s"$base/rawctr", s"$base/exact")
     val acctDir = s"$base/acct"
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))
-    // landing-cadence accounting: the GLOBAL funnel stages re-derived
-    // from the stores after every generation (a production run would
-    // publish this as the corpus snapshot's audit table); the foldable
-    // stages arrive pre-folded — raw counters and the exact-dedup
-    // winner set from their batch ledgers, and the substring coverage
-    // from the per-generation increment (VERDICT r15 item 5:
-    // FunnelStore.coverageIncrement — history grams reduce ONCE; each
-    // generation pays only its delta plus the affected-doc sweep)
-    val (winSnap, covSnap, dupLedger) =
-      (s"$base/winsnap", s"$base/covsnap", s"$base/dupledger")
-    var gen = 0
-    // the fold works compact integer/hash stores, not raw text — the
-    // same state-volume-sized width the passes use (32-wide exchanges
-    // across the funnel's ~30 small aggregate stages are pure task
-    // overhead at this store size)
+    // landing-cadence accounting: the funnel re-derived from the stores
+    // after every generation (a production run would publish this as
+    // the corpus snapshot's audit table). The fold works compact
+    // integer/hash stores, not raw text — the same state-volume-sized
+    // width the passes use (32-wide exchanges across the funnel's ~30
+    // small aggregate stages are pure task overhead at this store size)
     def fold(): Unit = withStateParts(spark)(graft.exec.Par.scope { par =>
-      gen += 1
       val Seq(meta, sh, gr, fx) = dirs.map(spark.read.parquet(_))
       // the frozen classifier trains from the feature store + labels
-      // ONLY — independent of the whole coverage/pair/CC chain, so it
-      // overlaps it as a concurrent driver job (guide §2.6); the
-      // trainer is integer-deterministic, so the injected weights are
-      // byte-identical to an inline train inside the funnel
+      // ONLY — independent of the dedup/pair/CC chain, so it overlaps
+      // it as a concurrent driver job; the trainer is integer-
+      // deterministic, so the injected weights are byte-identical to
+      // an inline train inside the funnel
       val train = par.fork(graft.ops.QualityClf.trainOnFeatures(fx,
         meta.select("doc_id", "y"))._2)
-      val winners = spark.read
-        .option("recursiveFileLookup", "true")
-        .parquet(exactDir)
-        .groupBy("norm_h").agg(min("doc_id").as("doc_id"))
-        .localCheckpoint(false) // increment + funnel + snapshot write
-      val prev = Option.when(gen > 1)(gen - 1)
-      val (dupAdd, newCov) = graft.ops.FunnelStore.coverageIncrement(
-        gr, winners,
-        prev.map(g => spark.read.parquet(s"$winSnap/g$g")),
-        prev.map(g => spark.read.parquet(s"$covSnap/g$g")),
-        prev.map(_ => spark.read.option("recursiveFileLookup", "true")
-          .parquet(dupLedger)))
-      // one materialization of the new coverage serves the snapshot
-      // write, the survivor filter and the funnel — the old shape wrote
-      // it to parquet and read it straight back, a same-fold I/O round
-      // trip the next consumer had to WAIT on; the snapshot writes
-      // themselves are for the NEXT generation only, so they proceed
-      // concurrently with this fold's compute (the scope waits for them)
-      val cov = newCov.localCheckpoint(false)
-      par.fork {
-        dupAdd.coalesce(4).write.mode("overwrite").parquet(s"$dupLedger/g$gen")
-        cov.coalesce(4).write.mode("overwrite").parquet(s"$covSnap/g$gen")
-        winners.select("doc_id").coalesce(4)
-          .write.mode("overwrite").parquet(s"$winSnap/g$gen")
-      }
-      // family collapse over the substring survivors — same survivor
-      // formula as the funnel's s1→s2 chain, so the handed-in table is
-      // the funnel's own. Pairs and CC are re-derived in full every
-      // generation: this operator's generations are ¾ and ¼ of the
-      // corpus (genThreshold), where re-deriving only what a shard
-      // touched measured slower than the full paths (pairs 2.2 vs
-      // 1.6 s, CC 3.4 vs 1.9 s at sf0.1 — OPTIMIZATION_r18.md).
-      val s2docs = meta.select("doc_id", "n_tokens")
-        .join(winners.select("doc_id"), Seq("doc_id"), "left_semi")
-        .join(cov, Seq("doc_id"), "left")
-        .filter(coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
-        .select("doc_id")
-        .localCheckpoint(false) // pair postings AND the CC's doc set
-      // the whole pair+CC chain runs as ONE concurrent driver job
-      // (r18, guide §2.6): it reads only s2docs (checkpointed above)
-      // and the stores, so the funnel's emission head — meta/exact-
-      // dedup/substring checkpoints, which need only winners+coverage —
+      val dd = graft.ops.FunnelStore.dedup(meta, gr)
+      // the family collapse over the substring survivors runs as ONE
+      // concurrent driver job: it reads only the checkpointed dedup
+      // table and the shingle store, so the funnel's emission head
       // materializes under this chain's tail instead of after it; the
       // funnel forces the thunk at its near-dup stage, the first
-      // consumer. Plans and results are unchanged — only the
-      // serialization between the two independent job chains goes.
+      // consumer
       val clusters = par.fork {
+        val s2 = dd.filter(col("keep")).select("doc_id")
         val pairs = graft.ops.Dedup.jaccardPairsFromPostings(
-          sh.join(s2docs, "doc_id")).select("id1", "id2")
-        graft.ops.Cluster.dedupClusters(s2docs, pairs)
+          sh.join(s2, "doc_id")).select("id1", "id2")
+        graft.ops.Cluster.dedupClusters(s2, pairs)
           .localCheckpoint(false) // family-root filter AND the split join
       }
       graft.ops.FunnelStore
-        .funnel(graft.ops.FunnelStore.Stores(meta, sh, gr, fx),
-          graft.ops.FunnelStore.Folded(
-            ledgerSums(spark, rawDir, Seq("source"),
-              Seq("n_docs", "sum_chars")),
-            winners, cov, () => clusters.join()),
-          () => train.join())
+        .funnel(graft.ops.FunnelStore.Stores(meta, sh, gr, fx), dd,
+          () => clusters.join(), () => train.join())
         .write.mode("overwrite").parquet(acctDir)
     })
     landGens(spark, docs, genThreshold(docs), stage) { src =>
-      eachBatch(spark, src, ckpt) { (batch0, bid) =>
+      eachBatch(spark, src, ckpt) { (batch0, _) =>
         // one cached copy of the landing text feeds all four extracts
         val batch = batch0.localCheckpoint(false)
         val st = graft.ops.FunnelStore.extract(batch)
-        val meta = st.meta.localCheckpoint(false) // store + both folds
         // compact appends: a landing shard writes a few well-sized
         // files per store, not one file per shuffle partition — the
         // small-files discipline layout_compaction_plan audits.
-        // The four store writes and the two ledger folds are mutually
-        // independent, so they run as concurrent driver-submitted
-        // jobs (guide §2.6 — later jobs back-fill the tail of earlier
-        // ones); results are unchanged, only the serialization goes.
+        // The four store writes are mutually independent, so they run
+        // as concurrent driver-submitted jobs (later jobs back-fill the
+        // tail of earlier ones)
         graft.exec.Par.scope { par =>
-          Seq(meta, st.shingles, st.grams, st.feat).zip(dirs).foreach {
+          Seq(st.meta, st.shingles, st.grams, st.feat).zip(dirs).foreach {
             case (df, dir) =>
               par.fork(df.coalesce(4).write.mode("append").parquet(dir))
           }
-          // VERDICT r14 item 2 — the foldable stages fold PER BATCH
-          // (FunnelStore.Folded): additive raw landing counters land
-          // as idempotent ledger entries (a retried batch overwrites
-          // its own — no double count under at-least-once) ...
-          par.fork(ledgerAppend(meta.groupBy("source")
-              .agg(count(lit(1)).as("n_docs"),
-                sum("n_chars").as("sum_chars")),
-            rawDir, bid,
-            compact = Some(sumFold(Seq("source"),
-              Seq("n_docs", "sum_chars")))))
-          // ... and the exact-dedup presence store: min is
-          // associative+commutative, so per-batch keyed minima
-          // ledger the same way and the generation-cadence merge
-          // equals the one-shot GROUP BY norm_h — the old shape
-          // REWROTE the whole corpus-sized winner store every batch
-          par.fork(ledgerAppend(meta.groupBy("norm_h")
-              .agg(min("doc_id").as("doc_id")),
-            exactDir, bid, files = 4,
-            compact = Some(
-              _.groupBy("norm_h").agg(min("doc_id").as("doc_id")))))
         }
       }
       fold()

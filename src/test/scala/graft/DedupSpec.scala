@@ -309,6 +309,29 @@ class DedupSpec extends AnyFunSuite {
     assert(ref.nonEmpty, "fixture has no shared spans across sources")
   }
 
+  test("funnel coverage from the gram store equals dupSpanStats' nonzero rows") {
+    // the streaming funnel's substring stage re-derives coverage from
+    // 64-bit gram hashes with an island sweep; the batch funnel counts
+    // suffix-rank duplicates with a window max — both over every doc
+    // and over the exact-dedup winners the funnel actually feeds it
+    import graft.ops.{FunnelStore, Suffix}
+    val docs = Tables.documents(spark, sf).select("doc_id", "source", "text")
+    val st = FunnelStore.extract(docs)
+    val winners = st.meta.groupBy("norm_h").agg(min("doc_id").as("doc_id"))
+    for ((name, in) <- Seq("every doc" -> docs,
+                           "exact-dedup winners" ->
+                             docs.join(winners, Seq("doc_id"), "left_semi"))) {
+      def cov(df: DataFrame) = df.select("doc_id", "dup_tokens").as[(Long, Long)]
+        .collect().toMap
+      val got = cov(FunnelStore.coverage(st.grams, in))
+      val ref = cov(Suffix.dupSpanStats(in).filter(col("dup_tokens") > 0))
+      assert(got == ref, s"$name: coverage diverged: " +
+        s"missing=${ref.toSet.diff(got.toSet).take(3)} " +
+        s"extra=${got.toSet.diff(ref.toSet).take(3)}")
+      assert(ref.nonEmpty, s"$name: no doc has a duplicated span — dead test")
+    }
+  }
+
   test("tf-idf cosine join equals the quadratic capped-space reference") {
     // independent Scala replay: same u3 idf quantization (BigDecimal
     // HALF_UP, Spark's round), integer weights, BigInt cross-multiplied
