@@ -145,7 +145,9 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] writing $outPath failed: $e")
+    }
     spark.stop()
   }
 }

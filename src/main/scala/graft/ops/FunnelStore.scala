@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,9 +36,15 @@ import org.apache.spark.sql.functions._
   * [[funnel]] over the complete stores provably equals
   * `pipeline_e2e_v2` (StreamingSpec pins row-set equality): every
   * stage consumes the same per-doc facts the batch funnel derives from
-  * text, and every decision rule is shared code
-  * ([[Dedup.jaccardPairsFromPostings]], [[Cluster.dedupClusters]],
-  * [[QualityClf.trainOnFeatures]]) or the same column expressions.
+  * text, and every decision rule is shared code — the funnel stages
+  * defined here ([[acct]], [[agreement]], [[familyRoots]], [[budget]],
+  * [[splitTrain]]), which the batch capstones `pipeline_e2e` v1–v4
+  * call too (with [[textQuality]] and [[decontam]], their raw-text
+  * stages), and the operators [[Dedup.jaccardPairsFromPostings]],
+  * [[Cluster.dedupClusters]], [[QualityClf.trainOnFeatures]] and
+  * [[QualityClf.margins]]. Where a funnel differs on purpose (v1's INT
+  * stage_idx, v2/v3's anchored quality gate), the difference sits at
+  * its call site.
   */
 object FunnelStore {
 
@@ -120,6 +126,93 @@ object FunnelStore {
       .localCheckpoint(false)
   }
 
+  /** One stage-accounting row (stage_idx BIGINT, stage, n_docs,
+    * sum_chars): `d`'s row count and the sum of `chars` over it (0 when
+    * `d` is empty). */
+  def acct(idx: Long, name: String, d: DataFrame, chars: Column): DataFrame =
+    d.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
+      .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
+        col("n_docs"), col("sum_chars"))
+
+  /** The rule quality gate's input: per-doc [[TextAnalysis.quality]] of
+    * `d`'s (doc_id, text) with its source joined back. */
+  def textQuality(d: DataFrame): DataFrame =
+    TextAnalysis.quality(d.select("doc_id", "text"))
+      .join(d.select("doc_id", "source"), "doc_id")
+
+  /** The four rule×classifier agreement cells over the gate's input
+    * `gated` (doc_id, quality_score, n_chars) and the frozen
+    * classifier's margins `marg` ([[QualityClf.margins]]) as accounting
+    * rows `first` .. `first + 3` (gate_rule<r>_clf<c>); every cell is
+    * present, empty ones as zeros. */
+  def agreement(gated: DataFrame, marg: DataFrame, first: Long): DataFrame = {
+    val spark = gated.sparkSession
+    import spark.implicits._
+    val agree = gated.join(marg, "doc_id")
+      .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
+        when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
+      .groupBy("rk", "ck")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("n_chars").cast("bigint").as("sum_chars"))
+    Seq((0L, 0L), (0L, 1L), (1L, 0L), (1L, 1L))
+      .toDF("rk", "ck")
+      .join(agree, Seq("rk", "ck"), "left")
+      .select((lit(first) + col("rk") * 2 + col("ck")).as("stage_idx"),
+        concat(lit("gate_rule"), col("rk"), lit("_clf"), col("ck"))
+          .as("stage"),
+        coalesce(col("n_docs"), lit(0L)).as("n_docs"),
+        coalesce(col("sum_chars"), lit(0L)).as("sum_chars"))
+  }
+
+  /** The near-dup family collapse: the rows of `d` that are their
+    * family's root in `families` (doc_id, cluster_id), checkpointed. */
+  def familyRoots(d: DataFrame, families: DataFrame): DataFrame =
+    d.join(families.filter(col("doc_id") === col("cluster_id"))
+        .select("doc_id"), "doc_id")
+      .localCheckpoint(false)
+
+  /** The per-source budget window: `d`'s docs ranked per source by
+    * `by` descending, then doc_id, kept while the source's exclusive
+    * running char sum is under 25,000 (the doc that crosses the line
+    * is kept) — (doc_id, source, n_chars, prior), checkpointed. The
+    * prior is [[Rank.perGroupRunningSum]]'s (source, blk) two-level
+    * cumsum — a plain partitionBy("source") window is one task per
+    * source at scale. */
+  def budget(d: DataFrame, by: String): DataFrame =
+    Rank.perGroupRunningSum(d.select("doc_id", "source", "n_chars", by),
+        "source", "n_chars", Seq(col(by).desc, col("doc_id")))
+      .select("doc_id", "source", "n_chars", "prior")
+      .filter(col("prior") < 25000L)
+      .localCheckpoint(false)
+
+  /** Eval decontamination over raw text: the rows of `sel` whose text
+    * in `docs` (doc_id, text, ...) has 3-shingle containment below 0.5
+    * against every eval stand-in (doc_id < 25, the `contamination`
+    * operator's convention), checkpointed. Shingling runs only on
+    * `sel`'s docs; [[Contamination.check]] broadcasts the bench side. */
+  def decontam(sel: DataFrame, docs: DataFrame): DataFrame = {
+    val flagged = Contamination.check(
+        sel.select("doc_id").join(docs, "doc_id").select("doc_id", "text"),
+        docs.filter(col("doc_id") < 25).select("doc_id", "text"),
+        n = 3, threshold = 0.5)
+      .filter(col("contaminated") === 1).select("doc_id")
+    sel.join(flagged, Seq("doc_id"), "left_anti")
+      .localCheckpoint(false)
+  }
+
+  /** The leakage-safe train split: the rows of `d` whose FAMILY ROOT
+    * (cluster_id in `families`) hashes into the train share (the top
+    * 12 hash bits < 3277 of 4096, the split_leakage 'family' scheme),
+    * so surviving near-dup relatives ride together. */
+  def splitTrain(d: DataFrame, families: DataFrame): DataFrame = {
+    graft.functions.GraftHash64.register(d.sparkSession)
+    val bucket = shiftrightunsigned(call_function("graft_hash64",
+      col("cluster_id").cast("string"), lit(7L)), 52)
+    d.join(families.select("doc_id", "cluster_id"), "doc_id")
+      .filter(bucket < 3277)
+  }
+
   /** The full funnel accounting (pipeline_e2e_v2's 12 rows) derived
     * from the stores and the [[dedup]] table. Stage semantics are the
     * batch capstone's: exact dedup (min-id per norm hash) → substring
@@ -148,14 +241,6 @@ object FunnelStore {
     * it. */
   def funnel(st: Stores, dd: DataFrame, clusters: () => DataFrame,
              trained: () => DataFrame): DataFrame = {
-    val spark = st.meta.sparkSession
-    import spark.implicits._
-    graft.functions.GraftHash64.register(spark)
-    def acct(idx: Int, name: String, d: DataFrame): DataFrame =
-      d.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("n_chars").cast("bigint"), lit(0L)).as("sum_chars"))
-        .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-          col("n_docs"), col("sum_chars"))
     val s2 = dd.filter(col("keep")).drop("keep")
     // frozen classifier margins, materialized BEFORE the near-dup
     // stage forces the caller's pair+CC thunk (r18, guide §2.6): the
@@ -166,45 +251,19 @@ object FunnelStore {
     // The trainer is integer-deterministic, so the caller's
     // concurrently trained weights are byte-identical to an inline
     // train.
-    val marg = st.feat.join(s2.select("doc_id"), "doc_id")
-      .join(broadcast(trained()), Seq("b"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
+    val marg = QualityClf.margins(
+        st.feat.join(s2.select("doc_id"), "doc_id"), trained())
       .localCheckpoint(false)
     // near-dup collapse over the substring survivors — forced HERE,
     // after the emission head has materialized under the caller's
     // pair+CC jobs; arrives checkpointed
     val families = clusters()
-    val s3 = s2.join(families.filter(col("doc_id") === col("cluster_id"))
-        .select("doc_id"), "doc_id")
-      .localCheckpoint(false)
-    val agree = s3.join(marg, "doc_id")
-      .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
-        when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
-      .groupBy("rk", "ck")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("n_chars").cast("bigint").as("sum_chars"))
-    val agreeRows = Seq((0L, 0L), (0L, 1L), (1L, 0L), (1L, 1L))
-      .toDF("rk", "ck")
-      .join(agree, Seq("rk", "ck"), "left")
-      .select((lit(8L) + col("rk") * 2 + col("ck")).as("stage_idx"),
-        concat(lit("gate_rule"), col("rk"), lit("_clf"), col("ck"))
-          .as("stage"),
-        coalesce(col("n_docs"), lit(0L)).as("n_docs"),
-        coalesce(col("sum_chars"), lit(0L)).as("sum_chars"))
+    val s3 = familyRoots(s2, families)
     // no anchor: a one-predicate filter over the checkpointed s3 —
     // the budget rank REPARTITIONS it immediately and the quality acct
     // row re-filters s3 in one cheap stage (r18 barrier trim)
     val s4 = s3.filter(col("quality_score") >= 0.5)
-    // budget prior via the (source, blk) two-level cumsum — a plain
-    // partitionBy("source") window is one task per source at scale
-    val s5 = Rank.perGroupRunningSum(
-        s4.select("doc_id", "source", "n_chars", "quality_score"),
-        "source", "n_chars",
-        Seq(col("quality_score").desc, col("doc_id")))
-      .select("doc_id", "source", "n_chars", "prior")
-      .filter(col("prior") < 25000L)
-      .localCheckpoint(false)
+    val s5 = budget(s4, "quality_score")
     // decontamination from the shingle store: containment of each
     // selected doc against the bench docs (doc_id < 25), any >= 0.5
     val bench = st.shingles
@@ -220,19 +279,17 @@ object FunnelStore {
       .select("doc_id").distinct()
     val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
-    val bucket = shiftrightunsigned(call_function("graft_hash64",
-      col("cluster_id").cast("string"), lit(7L)), 52)
-    val s7 = s6.join(families.select("doc_id", "cluster_id"), "doc_id")
-      .filter(bucket < 3277)
-    acct(0, "raw", st.meta)
-      .unionByName(acct(1, "exact_dedup", dd))
-      .unionByName(acct(2, "substring_dedup", s2))
-      .unionByName(acct(3, "near_dedup", s3))
-      .unionByName(acct(4, "quality", s4))
-      .unionByName(acct(5, "budget", s5))
-      .unionByName(acct(6, "decontam", s6))
-      .unionByName(acct(7, "split_train", s7))
-      .unionByName(agreeRows)
+    val s7 = splitTrain(s6, families)
+    val chars = col("n_chars")
+    acct(0, "raw", st.meta, chars)
+      .unionByName(acct(1, "exact_dedup", dd, chars))
+      .unionByName(acct(2, "substring_dedup", s2, chars))
+      .unionByName(acct(3, "near_dedup", s3, chars))
+      .unionByName(acct(4, "quality", s4, chars))
+      .unionByName(acct(5, "budget", s5, chars))
+      .unionByName(acct(6, "decontam", s6, chars))
+      .unionByName(acct(7, "split_train", s7, chars))
+      .unionByName(agreement(s3, marg, 8))
       .orderBy("stage_idx")
   }
 }

@@ -53,6 +53,14 @@ object QualityClf {
       .unionByName(docs.select(col("doc_id"), lit(-1L).as("b")))
   }
 
+  /** Per-doc margin (doc_id, marg) of the weight table `w` (b, w)
+    * over the feature rows `fx` (doc_id, b); buckets without a weight
+    * add 0. */
+  def margins(fx: DataFrame, w: DataFrame): DataFrame =
+    fx.join(broadcast(w), Seq("b"), "left")
+      .groupBy("doc_id")
+      .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
+
   /** Weak labels distilled from the rule-based gate: y ∈ {−1, +1}. */
   def labels(docs: DataFrame): DataFrame =
     TextAnalysis.filterChain(docs)
@@ -159,11 +167,7 @@ object QualityClf {
     * entry point for callers sharing one frozen model across keys. */
   def scoreAgreementWith(docs: DataFrame, w: DataFrame,
                          buckets: Int = 256): DataFrame = {
-    val fx = features(docs, buckets)
-    val sc = fx.join(broadcast(w), Seq("b"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
-    labels(docs).join(sc, "doc_id")
+    labels(docs).join(margins(features(docs, buckets), w), "doc_id")
       .select(
         when(col("y") === 1, 1L).otherwise(0L).as("rule_keep"),
         when(col("marg") > 0, 1L).otherwise(0L).as("clf_keep"))

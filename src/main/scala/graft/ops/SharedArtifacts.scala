@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftBarrier}
+import org.apache.spark.sql.{DataFrame, GraftBarrier, SparkSession}
 
-/** Registry of long-lived shared materializations (cross-query memos
-  * like [[Suffix.corpusRanks]]).
+/** Registry of long-lived shared materializations: the cross-query
+  * memos ([[memo]], the one memo body every corpus artifact uses, and
+  * [[Suffix.corpusRanks]], which extends its levels in place).
   *
   * Bench drops every persistent RDD between timed queries so each key
   * is measured against a clean block store — correct for PRIVATE
@@ -61,6 +62,42 @@ object SharedArtifacts {
     builds.incrementAndGet()
     bump(famBuilds, family)
     (cp, id)
+  }
+
+  // every memo's entries, keyed (application, family, dir@fingerprint):
+  // the artifact and the RDD ids of the frames it shared. Guarded by
+  // the object's lock, which [[memo]] holds for a whole build (lock
+  // order: SharedArtifacts, then Suffix — a build may read the
+  // corpusRanks memo, never the reverse).
+  private val entries =
+    scala.collection.mutable.HashMap.empty[(String, String, String), (Any, Seq[Int])]
+
+  /** The one memo body of the cross-query artifacts: the artifact of
+    * `family` for the corpus at `dir` is built at most once per
+    * (application, corpus content) and served to every later call. On
+    * a miss `build` runs with a `share` function that turns one frame
+    * into a sweep-exempt shared checkpoint, counts it eagerly (call it
+    * in dependency order) and records its RDD id. A served call counts
+    * one hit; an entry with any shared RDD swept or unpersisted is
+    * rebuilt instead of read. */
+  def memo[T](s: SparkSession, dir: String, family: String)
+             (build: (DataFrame => DataFrame) => T): T = synchronized {
+    val sc = s.sparkContext
+    val key = (sc.applicationId, family, dir + "@" + corpusFingerprint(dir))
+    entries.get(key) match {
+      case Some((v, rdds)) if rdds.forall(sc.getPersistentRDDs.contains) =>
+        noteHit(family); v.asInstanceOf[T]
+      case _ =>
+        val rdds = Seq.newBuilder[Int]
+        val v = build { df =>
+          val (cp, id) = checkpoint(df, family)
+          cp.count()
+          rdds += id
+          cp
+        }
+        entries(key) = (v, rdds.result())
+        v
+    }
   }
 
   /** True if `rddId` belongs to a registered shared artifact. */

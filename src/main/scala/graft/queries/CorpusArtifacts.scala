@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.ops.{Cluster, Dedup, SharedArtifacts}
 import graft.sources.Tables
 
@@ -13,22 +14,13 @@ import graft.sources.Tables
   * of them also run the identical CC collapse on its output; a
   * production system computes the family table ONCE and every
   * downstream view reads it — that steady-state is what the memo
-  * models. Shared sweep-exempt checkpoints, eager in dependency
-  * order, liveness-checked (the corpusRanks conventions); results are
-  * deterministic (DF-capped posting buckets + exact verify; min-id CC
+  * models. Each artifact is one [[SharedArtifacts.memo]] entry; the
+  * later r17 additions (perceptual-hash and semantic-dedup tables)
+  * follow the same rule. Results are deterministic (DF-capped posting buckets + exact verify; min-id CC
   * labels), so every consumer is byte-identical to a private rebuild. */
 private[queries] object CorpusArtifacts {
 
-  private final case class Entry(df: DataFrame, rddIds: Seq[Int])
-  private val pairMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
-  private val clMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
-
-  private final case class HnswEntry(ix: graft.ops.Hnsw.Index,
-                                     rddIds: Seq[Int])
-  private val hnswMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), HnswEntry]
+  import SharedArtifacts.memo
 
   /** The full-corpus layered-graph ANN index — `Hnsw.build(embeddings,
     * m = 6)` is made identically by ann_hnsw, ann_hnsw_recall and
@@ -39,98 +31,25 @@ private[queries] object CorpusArtifacts {
     * there). ann_hnsw_append is NOT a consumer: its frozen-history
     * graph + shard attachment is the operator's own story. */
   def hnswIndex(s: SparkSession, dir: String): graft.ops.Hnsw.Index =
-    synchronized {
-      val sc = s.sparkContext
-      val key = (sc.applicationId,
-        dir + "@" + SharedArtifacts.corpusFingerprint(dir))
-      hnswMemo.get(key) match {
-        case Some(e) if e.rddIds.forall(sc.getPersistentRDDs.contains) =>
-          SharedArtifacts.noteHit("hnsw_index"); e.ix
-        case _ =>
-          val ix0 = graft.ops.Hnsw.build(Tables.embeddings(s, dir), m = 6,
-            materializeUppers = true)
-          val parts = Seq(ix0.e, ix0.adj2, ix0.adj1, ix0.adj0)
-            .map(SharedArtifacts.checkpoint(_, "hnsw_index"))
-          parts.foreach(_._1.count()) // eager, dependency order
-          val ix = graft.ops.Hnsw.Index(parts(0)._1, parts(1)._1,
-            parts(2)._1, parts(3)._1, ix0.entry)
-          hnswMemo(key) = HnswEntry(ix, parts.map(_._2))
-          ix
-      }
+    memo(s, dir, "hnsw_index") { share =>
+      val ix = graft.ops.Hnsw.build(Tables.embeddings(s, dir), m = 6,
+        materializeUppers = true)
+      graft.ops.Hnsw.Index(share(ix.e), share(ix.adj2), share(ix.adj1),
+        share(ix.adj0), ix.entry)
     }
 
   /** Verified near-dup pairs over the full documents table —
     * `Dedup.ngramJaccard(documents, n = 3, threshold = 0.8, maxDF = 50)`,
     * full output columns. */
   def nearDupPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val sc = s.sparkContext
-      val key = (sc.applicationId,
-        dir + "@" + SharedArtifacts.corpusFingerprint(dir))
-      pairMemo.get(key) match {
-        case Some(e) if e.rddIds.forall(sc.getPersistentRDDs.contains) =>
-          SharedArtifacts.noteHit("neardup_pairs"); e.df
-        case _ =>
-          val (df, id) = SharedArtifacts.checkpoint(
-            Dedup.ngramJaccard(Tables.documents(s, dir),
-              n = 3, threshold = 0.8, maxDF = 50), "neardup_pairs")
-          df.count()
-          pairMemo(key) = Entry(df, Seq(id))
-          df
-      }
-    }
+    memo(s, dir, "neardup_pairs")(_(Dedup.ngramJaccard(
+      Tables.documents(s, dir), n = 3, threshold = 0.8, maxDF = 50)))
 
   /** Converged CC family labels (doc_id, cluster_id) over
     * [[nearDupPairs]] for the full documents table. */
   def nearDupClusters(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val sc = s.sparkContext
-      val key = (sc.applicationId,
-        dir + "@" + SharedArtifacts.corpusFingerprint(dir))
-      clMemo.get(key) match {
-        case Some(e) if e.rddIds.forall(sc.getPersistentRDDs.contains) =>
-          SharedArtifacts.noteHit("neardup_clusters"); e.df
-        case _ =>
-          val (df, id) = SharedArtifacts.checkpoint(
-            Cluster.dedupClusters(Tables.documents(s, dir),
-              nearDupPairs(s, dir)), "neardup_clusters")
-          df.count()
-          clMemo(key) = Entry(df, Seq(id))
-          df
-      }
-    }
-
-  /** Generic one-table memo body shared by the r17 artifact additions:
-    * build → sweep-exempt checkpoint → eager materialize → serve, with
-    * the standard liveness re-check. */
-  private def memoized(memo: scala.collection.concurrent.TrieMap[(String, String), Entry],
-                       s: SparkSession, dir: String, family: String)
-                      (build: => DataFrame): DataFrame =
-    synchronized {
-      val sc = s.sparkContext
-      val key = (sc.applicationId,
-        dir + "@" + SharedArtifacts.corpusFingerprint(dir))
-      memo.get(key) match {
-        case Some(e) if e.rddIds.forall(sc.getPersistentRDDs.contains) =>
-          SharedArtifacts.noteHit(family); e.df
-        case _ =>
-          val (df, id) = SharedArtifacts.checkpoint(build, family)
-          df.count()
-          memo(key) = Entry(df, Seq(id))
-          df
-      }
-    }
-
-  private val phashSigMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
-  private val phashPairMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
-  private val semAsgMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
-  private val semPairMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
-  private val semRootMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Entry]
+    memo(s, dir, "neardup_clusters")(_(Cluster.dedupClusters(
+      Tables.documents(s, dir), nearDupPairs(s, dir))))
 
   /** The full-corpus perceptual-hash signature table —
     * `Multimodal.phashBatch(documents)` with every output column. Four
@@ -140,20 +59,16 @@ private[queries] object CorpusArtifacts {
     * deterministic, so one shared pass is byte-identical per consumer
     * (r17 — the decode is the family's dominant per-key cost). */
   def phashSigs(s: SparkSession, dir: String): DataFrame =
-    memoized(phashSigMemo, s, dir, "phash_sigs")(
-      graft.ops.Multimodal.phashBatch(Tables.documents(s, dir)).toDF())
+    memo(s, dir, "phash_sigs")(_(
+      graft.ops.Multimodal.phashBatch(Tables.documents(s, dir)).toDF()))
 
   /** Verified radius-3 pigeonhole pairs over [[phashSigs]] — shared by
     * mm_phash_dedup (emits them) and mm_phash_families (CC over them):
     * the byte-identical `Multimodal.phashPairs(documents)` output. */
   def phashNearDupPairs(s: SparkSession, dir: String): DataFrame =
-    memoized(phashPairMemo, s, dir, "phash_pairs")(
-      graft.ops.Multimodal.phashPairsFromSigs(phashSigs(s, dir)
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("c0"),
-          org.apache.spark.sql.functions.col("c1"),
-          org.apache.spark.sql.functions.col("c2"),
-          org.apache.spark.sql.functions.col("c3"))))
+    memo(s, dir, "phash_pairs")(_(
+      graft.ops.Multimodal.phashPairsFromSigs(
+        phashSigs(s, dir).select("doc_id", "c0", "c1", "c2", "c3"))))
 
   /** The semantic-dedup coarse assignment — `Similarity.ivfAssignWithSim`
     * on the √n-cell dial (vec_id, v, nrm, cell, cos_u4). `cell` equals
@@ -163,10 +78,10 @@ private[queries] object CorpusArtifacts {
     * all read this one table; three keys each re-trained the identical
     * quantizer and re-assigned the identical corpus before r17. */
   def semAssigned(s: SparkSession, dir: String): DataFrame =
-    memoized(semAsgMemo, s, dir, "sem_assigned") {
+    memo(s, dir, "sem_assigned") { share =>
       val emb = Tables.embeddings(s, dir)
-      graft.ops.Similarity.ivfAssignWithSim(emb,
-        cells = graft.ops.Similarity.semCells(emb), lloydIters = 1)
+      share(graft.ops.Similarity.ivfAssignWithSim(emb,
+        cells = graft.ops.Similarity.semCells(emb), lloydIters = 1))
     }
 
   /** In-cell near-dup candidate pairs over [[semAssigned]] at the
@@ -175,19 +90,18 @@ private[queries] object CorpusArtifacts {
     * same double expression each key computed inline, so the filtered
     * row-set is byte-identical per threshold. */
   def semPairs30(s: SparkSession, dir: String): DataFrame =
-    memoized(semPairMemo, s, dir, "sem_pairs") {
-      import org.apache.spark.sql.functions._
+    memo(s, dir, "sem_pairs") { share =>
       val assigned = semAssigned(s, dir)
       val a = assigned.select(col("cell"), col("vec_id").as("id1"),
         col("v").as("v1"), col("nrm").as("nrm1"))
       val b = assigned.select(col("cell"), col("vec_id").as("id2"),
         col("v").as("v2"), col("nrm").as("nrm2"))
-      a.join(b, Seq("cell"))
+      share(a.join(b, Seq("cell"))
         .filter(col("id1") < col("id2"))
         .withColumn("cos",
           Dedup.dot(col("v1"), col("v2")) / (col("nrm1") * col("nrm2")))
         .filter(col("cos") >= 0.30)
-        .select(col("cell"), col("id1"), col("id2"), col("cos"))
+        .select(col("cell"), col("id1"), col("id2"), col("cos")))
     }
 
   /** Converged CC roots at the family's canonical 0.35 threshold —
@@ -195,11 +109,7 @@ private[queries] object CorpusArtifacts {
     * Shared by dedup_semantic, dedup_semantic_sweep's middle rung and
     * emb_d4_prune (all three ran the identical collapse). */
   def semRoots35(s: SparkSession, dir: String): DataFrame =
-    memoized(semRootMemo, s, dir, "sem_roots") {
-      import org.apache.spark.sql.functions._
-      Cluster.dedupClusters(
-        semAssigned(s, dir).select(col("vec_id").as("doc_id")),
-        semPairs30(s, dir).filter(col("cos") >= 0.35)
-          .select("id1", "id2"))
-    }
+    memo(s, dir, "sem_roots")(_(Cluster.dedupClusters(
+      semAssigned(s, dir).select(col("vec_id").as("doc_id")),
+      semPairs30(s, dir).filter(col("cos") >= 0.35).select("id1", "id2"))))
 }

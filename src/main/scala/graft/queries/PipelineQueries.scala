@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Cluster, Dedup, Multimodal, Rank, Scalars, Similarity, TextAnalysis, TopK}
+import graft.ops.{Cluster, Dedup, FunnelStore, Multimodal, Rank, Scalars, Similarity, TextAnalysis, TopK}
 import graft.sources.Tables
 
 /** §2 items 22-34: the LLM-training-data-pipeline operator families
@@ -1596,63 +1596,33 @@ object PipelineQueries {
     // operator a user actually schedules; the per-stage counts are the
     // run's audit log.
     "pipeline_e2e" -> ((s, dir) => {
-      graft.functions.GraftHash64.register(s)
       // raw + exact-dedup stages from the shared capstone prelude
       // (one build serves pipeline_e2e/v2/v4 — see CapstonePrelude)
       val (docs, s1) = CapstonePrelude.base(s, dir)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       // the family table is reused by BOTH stage 2 (root filter) and
       // stage 6 (family-root split hash) — checkpoint once
-      val clusters = Cluster.dedupClusters(s1,
-          Dedup.ngramJaccard(s1, n = 3, threshold = 0.8, maxDF = 50))
-        .localCheckpoint(false)
-      val s2 = s1.join(clusters.filter(col("doc_id") === col("cluster_id"))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint(false)
-      val s3 = TextAnalysis.quality(s2.select("doc_id", "text"))
-        .join(s2.select("doc_id", "source"), "doc_id")
+      val clusters = CapstonePrelude.families(s1).localCheckpoint(false)
+      val s2 = FunnelStore.familyRoots(s1, clusters)
+      val s3 = FunnelStore.textQuality(s2)
         .filter(col("quality_score") >= 0.5)
         .localCheckpoint(false)
-      // budget prior via the (source, blk) two-level cumsum — a plain
-      // partitionBy("source") window is one task per source at scale
-      val s4 = graft.ops.Rank.perGroupRunningSum(
-          s3.select("doc_id", "source", "n_chars", "quality_score"),
-          "source", "n_chars",
-          Seq(col("quality_score").desc, col("doc_id")))
-        .select("doc_id", "source", "n_chars", "prior")
-        .filter(col("prior") < 25000L)
-        .localCheckpoint(false)
+      val s4 = FunnelStore.budget(s3, "quality_score")
       // stage 5: eval decontamination — the selected docs are shingle-
-      // checked against the eval stand-in (doc_id < 25, the same
-      // convention as the `contamination` operator); containment ≥ 0.5
-      // is cut. Shingling runs only on the stage-4 survivors; the
-      // benchmark side broadcasts inside Contamination.check.
-      val flagged = graft.ops.Contamination.check(
-          s4.select("doc_id").join(docs, "doc_id").select("doc_id", "text"),
-          docs.filter(col("doc_id") < 25).select("doc_id", "text"),
-          n = 3, threshold = 0.5)
-        .filter(col("contaminated") === 1).select("doc_id")
-      val s5 = s4.join(flagged, Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
+      // checked against the eval stand-ins; containment ≥ 0.5 is cut
+      val s5 = FunnelStore.decontam(s4, docs)
       // stage 6: leakage-safe split — hash the doc's FAMILY ROOT
-      // (cluster_id from stage 2), the split_leakage 'family' scheme,
-      // so any surviving near-dup relatives ride together; the train
-      // share is what actually ships to training.
-      val bucket = shiftrightunsigned(call_function("graft_hash64",
-        col("cluster_id").cast("string"), lit(7L)), 52)
-      val s6 = s5.join(clusters.select("doc_id", "cluster_id"), "doc_id")
-        .filter(bucket < 3277)
-      acct(0, "raw", docs, length(col("text")))
-        .unionByName(acct(1, "exact_dedup", s1, length(col("text"))))
-        .unionByName(acct(2, "near_dedup", s2, length(col("text"))))
-        .unionByName(acct(3, "quality", s3, col("n_chars")))
-        .unionByName(acct(4, "budget", s4, col("n_chars")))
-        .unionByName(acct(5, "decontam", s5, col("n_chars")))
-        .unionByName(acct(6, "split_train", s6, col("n_chars")))
+      // (cluster_id from stage 2); the train share is what actually
+      // ships to training
+      val s6 = FunnelStore.splitTrain(s5, clusters)
+      val text = length(col("text"))
+      FunnelStore.acct(0, "raw", docs, text)
+        .unionByName(FunnelStore.acct(1, "exact_dedup", s1, text))
+        .unionByName(FunnelStore.acct(2, "near_dedup", s2, text))
+        .unionByName(FunnelStore.acct(3, "quality", s3, col("n_chars")))
+        .unionByName(FunnelStore.acct(4, "budget", s4, col("n_chars")))
+        .unionByName(FunnelStore.acct(5, "decontam", s5, col("n_chars")))
+        .unionByName(FunnelStore.acct(6, "split_train", s6, col("n_chars")))
+        .withColumn("stage_idx", col("stage_idx").cast("int")) // v1's INT schema
         .orderBy("stage_idx")
     }),
 
@@ -1674,77 +1644,36 @@ object PipelineQueries {
     // accounting schema is v1's (stage_idx, stage, n_docs, sum_chars),
     // stage_idx BIGINT.
     "pipeline_e2e_v2" -> ((s, dir) => {
-      graft.functions.GraftHash64.register(s)
-      import s.implicits._
       // raw → exact dedup → substring survivors from the shared
       // capstone prelude (one build serves pipeline_e2e/v2/v4)
       val (docs, s1, s2) = CapstonePrelude.withSubstring(s, dir)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       // stage 3: near-dup family collapse over the substring survivors
       // (shared artifact — v2/v4/v3-fast-path make the identical call)
       val clusters = CapstonePrelude.clusters(s, dir)
-      val s3 = s2.join(clusters.filter(col("doc_id") === col("cluster_id"))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint(false)
+      val s3 = FunnelStore.familyRoots(s2, clusters)
       // stage 4: rule gate; the frozen learned gate scores the SAME
       // population for the agreement audit
-      val q = TextAnalysis.quality(s3.select("doc_id", "text"))
-        .join(s3.select("doc_id", "source"), "doc_id")
+      val q = FunnelStore.textQuality(s3)
         .localCheckpoint(false) // gate filter AND the agreement rollup
       val s4 = q.filter(col("quality_score") >= 0.5)
         .localCheckpoint(false)
-      val wts = CapstonePrelude.clfFull(s, dir)._2
-      val marg = graft.ops.QualityClf.features(s3.select("doc_id", "text"))
-        .join(broadcast(wts), Seq("b"), "left")
-        .groupBy("doc_id")
-        .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
-      val agree = q.join(marg, "doc_id")
-        .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
-          when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
-        .groupBy("rk", "ck")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").cast("bigint").as("sum_chars"))
-      val agreeRows = Seq((0L, 0L), (0L, 1L), (1L, 0L), (1L, 1L))
-        .toDF("rk", "ck")
-        .join(agree, Seq("rk", "ck"), "left")
-        .select((lit(8L) + col("rk") * 2 + col("ck")).as("stage_idx"),
-          concat(lit("gate_rule"), col("rk"), lit("_clf"), col("ck"))
-            .as("stage"),
-          coalesce(col("n_docs"), lit(0L)).as("n_docs"),
-          coalesce(col("sum_chars"), lit(0L)).as("sum_chars"))
-      // stages 5-7: v1's budget selection (the (source, blk) two-level
-      // cumsum — see corpus_select_budget), decontamination, family split
-      val s5 = graft.ops.Rank.perGroupRunningSum(
-          s4.select("doc_id", "source", "n_chars", "quality_score"),
-          "source", "n_chars",
-          Seq(col("quality_score").desc, col("doc_id")))
-        .select("doc_id", "source", "n_chars", "prior")
-        .filter(col("prior") < 25000L)
-        .localCheckpoint(false)
-      val flagged = graft.ops.Contamination.check(
-          s5.select("doc_id").join(docs, "doc_id").select("doc_id", "text"),
-          docs.filter(col("doc_id") < 25).select("doc_id", "text"),
-          n = 3, threshold = 0.5)
-        .filter(col("contaminated") === 1).select("doc_id")
-      val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
-      val bucket = shiftrightunsigned(call_function("graft_hash64",
-        col("cluster_id").cast("string"), lit(7L)), 52)
-      val s7 = s6.join(clusters.select("doc_id", "cluster_id"), "doc_id")
-        .filter(bucket < 3277)
-      acct(0, "raw", docs, length(col("text")))
-        .unionByName(acct(1, "exact_dedup", s1, length(col("text"))))
-        .unionByName(acct(2, "substring_dedup", s2, length(col("text"))))
-        .unionByName(acct(3, "near_dedup", s3, length(col("text"))))
-        .unionByName(acct(4, "quality", s4, col("n_chars")))
-        .unionByName(acct(5, "budget", s5, col("n_chars")))
-        .unionByName(acct(6, "decontam", s6, col("n_chars")))
-        .unionByName(acct(7, "split_train", s7, col("n_chars")))
-        .unionByName(agreeRows)
+      val marg = graft.ops.QualityClf.margins(
+        graft.ops.QualityClf.features(s3.select("doc_id", "text")),
+        CapstonePrelude.clfFull(s, dir)._2)
+      // stages 5-7: v1's budget selection, decontamination, family split
+      val s5 = FunnelStore.budget(s4, "quality_score")
+      val s6 = FunnelStore.decontam(s5, docs)
+      val s7 = FunnelStore.splitTrain(s6, clusters)
+      val text = length(col("text"))
+      FunnelStore.acct(0, "raw", docs, text)
+        .unionByName(FunnelStore.acct(1, "exact_dedup", s1, text))
+        .unionByName(FunnelStore.acct(2, "substring_dedup", s2, text))
+        .unionByName(FunnelStore.acct(3, "near_dedup", s3, text))
+        .unionByName(FunnelStore.acct(4, "quality", s4, col("n_chars")))
+        .unionByName(FunnelStore.acct(5, "budget", s5, col("n_chars")))
+        .unionByName(FunnelStore.acct(6, "decontam", s6, col("n_chars")))
+        .unionByName(FunnelStore.acct(7, "split_train", s7, col("n_chars")))
+        .unionByName(FunnelStore.agreement(q, marg, 8))
         .orderBy("stage_idx")
     }),
 
@@ -1763,17 +1692,10 @@ object PipelineQueries {
     // 6 dsir_select, 7 budget, 8 decontam, 9 split_train,
     // 10-13 rule×clf gate agreement.
     "pipeline_e2e_v3" -> ((s, dir) => {
-      graft.functions.GraftHash64.register(s)
-      import s.implicits._
       import graft.ops.TextAnalysis.{PiiEmailRe, PiiIpRe, PiiPhoneRe}
       val docs = Tables.documents(s, dir)
         .select("doc_id", "text", "source", "lang")
         .localCheckpoint(false)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       val s0 = docs.filter(
           regexp_count(col("text"), lit(PiiEmailRe)) +
             regexp_count(col("text"), lit(PiiIpRe)) +
@@ -1781,42 +1703,24 @@ object PipelineQueries {
         .localCheckpoint(false)
       // quarantine emptiness is one bounded count; when NOTHING drops,
       // the dedup chain downstream is BY CONSTRUCTION v2's over the
-      // same corpus (ScaleOpsSpec pins v3 stages 2-4 == v2 stages 1-3),
+      // same corpus (ScaleOpsSpec pins v3 stages 2-5 == v2 stages 1-4),
       // so the shared prelude/cluster artifacts substitute for a
-      // private rebuild — adaptive reuse, exact by the emptiness check
+      // private rebuild — adaptive reuse, exact by the emptiness check.
+      // Otherwise the same stage functions run over the quarantine
+      // survivors (a row subset of the corpus, as substringSurvivors
+      // requires)
       val (s1, s2, clusters) =
         if (s0.count() == docs.count()) {
           val (_, ps1, ps2) = CapstonePrelude.withSubstring(s, dir)
           (ps1, ps2, CapstonePrelude.clusters(s, dir))
         } else {
-          val p1 = s0.groupBy(Dedup.normText(col("text")).as("norm"))
-            .agg(min("doc_id").as("doc_id"))
-            .join(s0, "doc_id").select("doc_id", "text", "source")
+          val p1 = CapstonePrelude.exactDedup(s0).localCheckpoint(false)
+          val p2 = CapstonePrelude.substringSurvivors(s, dir, p1)
             .localCheckpoint(false)
-          // r17: p1 is a row-subset of the raw corpus (quarantine drops
-          // docs, never edits text), so the full-corpus suffix ranks
-          // restricted to p1's ids give the identical duplicate
-          // frequencies as a p1-private construction (rank equality is
-          // textual identity) — the CapstonePrelude.withSubstring move
-          val (rPos, rLv) = graft.ops.Suffix.corpusRanks(
-            Tables.documents(s, dir), dir)
-          val p1ids = p1.select("doc_id")
-          val sub = graft.ops.Suffix.dupSpanStats(p1.select("doc_id", "text"),
-            spanLen = 16,
-            pre = Some((rPos.join(p1ids, "doc_id"),
-              Map(16 -> rLv(16).join(p1ids, "doc_id")))))
-          val p2 = p1.join(sub.filter(col("dup_tokens") * 5 <= col("n_tokens"))
-              .select("doc_id"), "doc_id")
-            .localCheckpoint(false)
-          (p1, p2, Cluster.dedupClusters(p2,
-              Dedup.ngramJaccard(p2, n = 3, threshold = 0.8, maxDF = 50))
-            .localCheckpoint(false))
+          (p1, p2, CapstonePrelude.families(p2).localCheckpoint(false))
         }
-      val s3 = s2.join(clusters.filter(col("doc_id") === col("cluster_id"))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint(false)
-      val q = TextAnalysis.quality(s3.select("doc_id", "text"))
-        .join(s3.select("doc_id", "source"), "doc_id")
+      val s3 = FunnelStore.familyRoots(s2, clusters)
+      val q = FunnelStore.textQuality(s3)
         .localCheckpoint(false) // gate filter AND the agreement rollup
       val s4 = q.filter(col("quality_score") >= 0.5)
         .localCheckpoint(false) // feeds the DSIR train AND the join back
@@ -1828,54 +1732,24 @@ object PipelineQueries {
         .filter(col("rnk") <= expr("n_s4 div 2")).select("doc_id")
         .join(s4, "doc_id")
         .localCheckpoint(false)
-      val wts = CapstonePrelude.clfFull(s, dir)._2
-      val marg = graft.ops.QualityClf.features(s3.select("doc_id", "text"))
-        .join(broadcast(wts), Seq("b"), "left")
-        .groupBy("doc_id")
-        .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
-      val agree = q.join(marg, "doc_id")
-        .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
-          when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
-        .groupBy("rk", "ck")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").cast("bigint").as("sum_chars"))
-      val agreeRows = Seq((0L, 0L), (0L, 1L), (1L, 0L), (1L, 1L))
-        .toDF("rk", "ck")
-        .join(agree, Seq("rk", "ck"), "left")
-        .select((lit(10L) + col("rk") * 2 + col("ck")).as("stage_idx"),
-          concat(lit("gate_rule"), col("rk"), lit("_clf"), col("ck"))
-            .as("stage"),
-          coalesce(col("n_docs"), lit(0L)).as("n_docs"),
-          coalesce(col("sum_chars"), lit(0L)).as("sum_chars"))
-      val s5 = graft.ops.Rank.perGroupRunningSum(
-          s45.select("doc_id", "source", "n_chars", "quality_score"),
-          "source", "n_chars",
-          Seq(col("quality_score").desc, col("doc_id")))
-        .select("doc_id", "source", "n_chars", "prior")
-        .filter(col("prior") < 25000L)
-        .localCheckpoint(false)
-      val flagged = graft.ops.Contamination.check(
-          s5.select("doc_id").join(docs, "doc_id").select("doc_id", "text"),
-          docs.filter(col("doc_id") < 25).select("doc_id", "text"),
-          n = 3, threshold = 0.5)
-        .filter(col("contaminated") === 1).select("doc_id")
-      val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
-        .localCheckpoint(false)
-      val bucket = shiftrightunsigned(call_function("graft_hash64",
-        col("cluster_id").cast("string"), lit(7L)), 52)
-      val s7 = s6.join(clusters.select("doc_id", "cluster_id"), "doc_id")
-        .filter(bucket < 3277)
-      acct(0, "raw", docs, length(col("text")))
-        .unionByName(acct(1, "pii_scrub", s0, length(col("text"))))
-        .unionByName(acct(2, "exact_dedup", s1, length(col("text"))))
-        .unionByName(acct(3, "substring_dedup", s2, length(col("text"))))
-        .unionByName(acct(4, "near_dedup", s3, length(col("text"))))
-        .unionByName(acct(5, "quality", s4, col("n_chars")))
-        .unionByName(acct(6, "dsir_select", s45, col("n_chars")))
-        .unionByName(acct(7, "budget", s5, col("n_chars")))
-        .unionByName(acct(8, "decontam", s6, col("n_chars")))
-        .unionByName(acct(9, "split_train", s7, col("n_chars")))
-        .unionByName(agreeRows)
+      val marg = graft.ops.QualityClf.margins(
+        graft.ops.QualityClf.features(s3.select("doc_id", "text")),
+        CapstonePrelude.clfFull(s, dir)._2)
+      val s5 = FunnelStore.budget(s45, "quality_score")
+      val s6 = FunnelStore.decontam(s5, docs)
+      val s7 = FunnelStore.splitTrain(s6, clusters)
+      val text = length(col("text"))
+      FunnelStore.acct(0, "raw", docs, text)
+        .unionByName(FunnelStore.acct(1, "pii_scrub", s0, text))
+        .unionByName(FunnelStore.acct(2, "exact_dedup", s1, text))
+        .unionByName(FunnelStore.acct(3, "substring_dedup", s2, text))
+        .unionByName(FunnelStore.acct(4, "near_dedup", s3, text))
+        .unionByName(FunnelStore.acct(5, "quality", s4, col("n_chars")))
+        .unionByName(FunnelStore.acct(6, "dsir_select", s45, col("n_chars")))
+        .unionByName(FunnelStore.acct(7, "budget", s5, col("n_chars")))
+        .unionByName(FunnelStore.acct(8, "decontam", s6, col("n_chars")))
+        .unionByName(FunnelStore.acct(9, "split_train", s7, col("n_chars")))
+        .unionByName(FunnelStore.agreement(q, marg, 10))
         .orderBy("stage_idx")
     }),
 
@@ -1895,36 +1769,19 @@ object PipelineQueries {
     // engines, no float boundary) with a doc_id tiebreak. Row 8:
     // the overlap of the two selected sets — the head-to-head readout.
     "pipeline_e2e_v4" -> ((s, dir) => {
-      graft.functions.GraftHash64.register(s)
       // shared prelude: raw → exact dedup → substring survivors (both
       // branches consume the survivors)
       val (docs, s1, s2) = CapstonePrelude.withSubstring(s, dir)
-      def acct(idx: Int, name: String, d: DataFrame, chars: Column): DataFrame =
-        d.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(chars).cast("bigint"), lit(0L)).as("sum_chars"))
-          .select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
-            col("n_docs"), col("sum_chars"))
       // per-doc quality over the SHARED substring survivors — the hard
       // branch filters it post-collapse, the soft branch directly
-      val q = TextAnalysis.quality(s2.select("doc_id", "text"))
-        .join(s2.select("doc_id", "source"), "doc_id")
-        .localCheckpoint(false)
+      val q = FunnelStore.textQuality(s2).localCheckpoint(false)
       // HARD: v2's family collapse (the shared artifact) + rule gate +
       // quality-ordered budget
-      val clusters = CapstonePrelude.clusters(s, dir)
-      val s3h = s2.join(clusters.filter(col("doc_id") === col("cluster_id"))
-          .select("doc_id"), "doc_id")
-        .localCheckpoint(false)
+      val s3h = FunnelStore.familyRoots(s2, CapstonePrelude.clusters(s, dir))
       val s4h = q.join(s3h.select("doc_id"), "doc_id")
         .filter(col("quality_score") >= 0.5)
         .localCheckpoint(false)
-      val s5h = graft.ops.Rank.perGroupRunningSum(
-          s4h.select("doc_id", "source", "n_chars", "quality_score"),
-          "source", "n_chars",
-          Seq(col("quality_score").desc, col("doc_id")))
-        .select("doc_id", "source", "n_chars", "prior")
-        .filter(col("prior") < 25000L)
-        .localCheckpoint(false) // budget row AND the overlap join
+      val s5h = FunnelStore.budget(s4h, "quality_score")
       // SOFT: the dedup_soft_weights algebra over the same survivors
       val ex = Dedup.shingleSets(s2.select("doc_id", "text"), 8)
         .select(col("doc_id"), explode(col("sh")).as("g"))
@@ -1944,23 +1801,18 @@ object PipelineQueries {
         .join(swt, "doc_id")
         .withColumn("prio", col("qu4") * col("weight_u4"))
         .localCheckpoint(false)
-      val s5s = graft.ops.Rank.perGroupRunningSum(
-          s4s.select("doc_id", "source", "n_chars", "prio"),
-          "source", "n_chars",
-          Seq(col("prio").desc, col("doc_id")))
-        .select("doc_id", "source", "n_chars", "prior")
-        .filter(col("prior") < 25000L)
-        .localCheckpoint(false) // budget row AND the overlap join
+      val s5s = FunnelStore.budget(s4s, "prio")
       val overlap = s5s.join(s5h.select("doc_id"), "doc_id")
-      acct(0, "raw", docs, length(col("text")))
-        .unionByName(acct(1, "exact_dedup", s1, length(col("text"))))
-        .unionByName(acct(2, "substring_dedup", s2, length(col("text"))))
-        .unionByName(acct(3, "hard_near_dedup", s3h, length(col("text"))))
-        .unionByName(acct(4, "hard_quality", s4h, col("n_chars")))
-        .unionByName(acct(5, "hard_budget", s5h, col("n_chars")))
-        .unionByName(acct(6, "soft_quality", s4s, col("n_chars")))
-        .unionByName(acct(7, "soft_budget", s5s, col("n_chars")))
-        .unionByName(acct(8, "overlap_budget", overlap, col("n_chars")))
+      val text = length(col("text"))
+      FunnelStore.acct(0, "raw", docs, text)
+        .unionByName(FunnelStore.acct(1, "exact_dedup", s1, text))
+        .unionByName(FunnelStore.acct(2, "substring_dedup", s2, text))
+        .unionByName(FunnelStore.acct(3, "hard_near_dedup", s3h, text))
+        .unionByName(FunnelStore.acct(4, "hard_quality", s4h, col("n_chars")))
+        .unionByName(FunnelStore.acct(5, "hard_budget", s5h, col("n_chars")))
+        .unionByName(FunnelStore.acct(6, "soft_quality", s4s, col("n_chars")))
+        .unionByName(FunnelStore.acct(7, "soft_budget", s5s, col("n_chars")))
+        .unionByName(FunnelStore.acct(8, "overlap_budget", overlap, col("n_chars")))
         .orderBy("stage_idx")
     }),
 

@@ -630,10 +630,8 @@ object EventStreams {
       val w = graft.ops.QualityClf.train(docs.filter(col("doc_id") < thr))._2
         .localCheckpoint(false) // frozen gen1 model, reused by every batch
       src => eachBatch(spark, src, ckpt) { (batch, bid) =>
-        val marg = graft.ops.QualityClf.features(batch)
-          .join(broadcast(w), Seq("b"), "left")
-          .groupBy("doc_id")
-          .agg(sum(coalesce(col("w"), lit(0L))).as("marg"))
+        val marg = graft.ops.QualityClf.margins(
+          graft.ops.QualityClf.features(batch), w)
         val local = graft.ops.QualityClf.labels(batch)
           .join(marg, "doc_id")
           .select(

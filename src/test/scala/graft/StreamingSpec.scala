@@ -4,6 +4,44 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
+/** The Spark jobs one call starts: `f` runs under a local property,
+  * and every job it starts — on this thread, the streaming queries'
+  * threads, AQE's broadcast threads or a Par branch — must carry it.
+  * Returns (jobs with the property, jobs without it). */
+object CallJobs {
+  def count(spark: org.apache.spark.sql.SparkSession)(f: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.phase"
+    val (tagged, untagged) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "call" => tagged.incrementAndGet()
+          case "marker" => drained.countDown()
+          case _ => untagged.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "call")
+      f
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every job of the call has been counted
+      sc.setLocalProperty(tag, "marker")
+      spark.range(1).collect()
+      require(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start never arrived")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    (tagged.get, untagged.get)
+  }
+}
+
 class StreamingSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -363,46 +401,19 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("one stream_pipeline_e2e call stays under its Spark job bound") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = "graft.spec.phase"
-    val (tagged, untagged) = (new java.util.concurrent.atomic.AtomicInteger,
-      new java.util.concurrent.atomic.AtomicInteger)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    // the call runs under a local property; every job it starts — on
-    // this thread, the streaming queries' threads, AQE's broadcast
-    // threads or a Par branch — must carry it
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)).orNull match {
-          case "call" => tagged.incrementAndGet()
-          case "marker" => drained.countDown()
-          case _ => untagged.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "call")
+    val (tagged, untagged) = CallJobs.count(spark) {
       val rows = SparkEntry.queries("stream_pipeline_e2e")(spark, sf).collect()
       assert(rows.length == 12)
-      // the bus delivers events in order: once the marker job's start
-      // arrives, every job of the call has been counted
-      sc.setLocalProperty(tag, "marker")
-      spark.range(1).collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
     }
-    assert(untagged.get == 0,
-      s"${untagged.get} of the call's jobs lost the caller's local properties")
+    assert(untagged == 0,
+      s"$untagged of the call's jobs lost the caller's local properties")
     // measured at this fixture: 278-279 jobs per call over 5 calls in
     // one JVM (AQE's runtime broadcast jobs and the micro-batch count
     // vary with timing); 333-335 while the fold kept the coverage
     // increment, its three snapshot stores and the two per-batch
     // ledgers, 359-360 while it also wrote pair/cluster snapshots. The
     // bound leaves that timing spread 5 jobs of headroom.
-    assert(tagged.get <= 284, s"stream_pipeline_e2e started ${tagged.get} jobs")
+    assert(tagged <= 284, s"stream_pipeline_e2e started $tagged jobs")
   }
 
   test("streaming quality scoring equals the one-shot gen1-frozen batch scoring") {
