@@ -7,7 +7,8 @@ package graft
   * Failures are recorded per-query ("errors" map, elapsed -1) instead of
   * being swallowed as fast successes; warm-up and layout-setup failures
   * go to stderr and, when there are any, to a "setup_errors" map in the
-  * file sink. */
+  * file sink. Per key, the file sink's "codegen" map holds the classes
+  * compiled and the seconds spent compiling them. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -63,11 +64,15 @@ object Bench {
     // regressions are adjudicable without cross-referencing memo
     // internals (cold-payer reshuffling made single keys unreadable).
     var famTouch = Vector.empty[(String, String, String)]
+    // (key, classes compiled, compile seconds): Janino compiles are a
+    // fixed per-key cost the timings alone cannot separate from plans
+    var codegen = Vector.empty[(String, Long, Double)]
     benchQueries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       val (b0, h0) = graft.ops.SharedArtifacts.counters
       val f0 = graft.ops.SharedArtifacts.familyCounters
+      val (c0, ct0) = compiles()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -76,6 +81,8 @@ object Bench {
         times  :+= name -> -1.0
         errors :+= name -> e.getClass.getSimpleName
       }
+      val (c1, ct1) = compiles()
+      codegen :+= ((name, c1 - c0, (ct1 - ct0) / 1e9))
       val (b1, h1) = graft.ops.SharedArtifacts.counters
       if (b1 > b0) marks :+= name -> "cold"
       else if (h1 > h0) marks :+= name -> "shared"
@@ -137,10 +144,13 @@ object Bench {
           math.max(timesMap.getOrElse(k, 0.0), 0.0) }.sum
         s"${jstr(fam)}:{${jstr("total")}:${full(tot)},${jstr("keys")}:$keys}"
     }.mkString("{", ",", "}")
+    val cgJson = codegen.map { case (k, n, sec) =>
+      s"${jstr(k)}:{${jstr("compiles")}:$n,${jstr("compile_s")}:${full(sec)}}"
+    }.mkString("{", ",", "}")
     val setupJson = if (setupErrors.isEmpty) "" else setupErrors
       .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(""","setup_errors":{""", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(full)},"errors":$es,"artifact":$ms,"families":$famJson$setupJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(full)},"errors":$es,"artifact":$ms,"families":$famJson,"codegen":$cgJson$setupJson,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
@@ -150,4 +160,10 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** (classes compiled, nanoseconds spent compiling) by this JVM so far:
+    * every Janino compile, driver and task side, of every session. */
+  private def compiles(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 }

@@ -115,36 +115,50 @@ object Dedup {
     * shingle store holds 64-bit shingle hashes instead of strings
     * (identity-by-portable-hash is the signature-store contract), and
     * the pair logic is identical for either `s` type. Same DF cap,
-    * same capped-space jaccard. */
+    * same capped-space jaccard. An action: returns the pairs as a
+    * materialized local checkpoint (see [[withBuckets]]). */
   def jaccardPairsFromPostings(post: DataFrame, threshold: Double = 0.8,
                                maxDF: Int = 50): DataFrame = {
     // the bucket table feeds BOTH the pair counts and the per-doc sizes;
-    // localCheckpoint materializes it once (executor-local blocks, freed
-    // on GC) instead of re-executing the explode+groupBy chain per
-    // consumer — the standard staging move for a shared dedup
-    // intermediate; at open scale this is where the buckets would be
-    // written to storage between stages
-    val buckets = post
+    // it is materialized once (see [[withBuckets]]) instead of
+    // re-executing the explode+groupBy chain per consumer — at open
+    // scale this is where the buckets would be written to storage
+    // between stages
+    withBuckets(post
       .groupBy("s").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxDF)
-      .localCheckpoint(false)
-    val pairs = bucketPairs(buckets)
-      .groupBy("id1", "id2").agg(count(lit(1)).as("shared"))
-    val sizes = buckets
-      .select(explode(col("ids")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // melt each pair to its two member ids so the per-doc sizes table
-    // joins ONCE (sum of the two sizes per pair), not once per side —
-    // without a cache, every join against `sizes` would re-execute its
-    // whole bucket chain
-    val melted = pairs.select(col("id1"), col("id2"), col("shared"),
-      explode(array(col("id1"), col("id2"))).as("doc_id"))
-    val summed = melted.join(sizes, "doc_id")
-      .groupBy("id1", "id2", "shared").agg(sum(col("n_sh")).as("s12"))
-    val jac = col("shared") / (col("s12") - col("shared"))
-    summed
-      .filter(jac >= threshold)
-      .select(col("id1"), col("id2"), col("shared"), jac.as("jaccard"))
+      .filter(size(col("ids")) <= maxDF)) { buckets =>
+      val pairs = bucketPairs(buckets)
+        .groupBy("id1", "id2").agg(count(lit(1)).as("shared"))
+      val sizes = buckets
+        .select(explode(col("ids")).as("doc_id"))
+        .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+      // melt each pair to its two member ids so the per-doc sizes table
+      // joins ONCE (sum of the two sizes per pair), not once per side —
+      // without a cache, every join against `sizes` would re-execute its
+      // whole bucket chain
+      val melted = pairs.select(col("id1"), col("id2"), col("shared"),
+        explode(array(col("id1"), col("id2"))).as("doc_id"))
+      val summed = melted.join(sizes, "doc_id")
+        .groupBy("id1", "id2", "shared").agg(sum(col("n_sh")).as("s12"))
+      val jac = col("shared") / (col("s12") - col("shared"))
+      summed
+        .filter(jac >= threshold)
+        .select(col("id1"), col("id2"), col("shared"), jac.as("jaccard"))
+    }
+  }
+
+  /** `pairsOf(buckets)` over `buckets` checkpointed EAGERLY, returned
+    * as an eager checkpoint too, with the bucket blocks released. A lazy
+    * bucket checkpoint read by the pair branch and the size branch,
+    * whose stages run at once, was computed by both (the second copy
+    * logged "Block rdd_N_0 already exists" and was thrown away); the
+    * eager one is computed once, before either branch starts. An
+    * action: runs the bucket and pair jobs before it returns. */
+  private def withBuckets(buckets: DataFrame)(
+      pairsOf: DataFrame => DataFrame): DataFrame = {
+    val b = buckets.localCheckpoint(true)
+    try pairsOf(b).localCheckpoint(true)
+    finally PlanBarrier.release(b)
   }
 
   /** Containment near-dup pairs over the same DF-capped shingle space
@@ -158,29 +172,31 @@ object Dedup {
     * sizes (the sizes table is corpus-sized — never broadcast), kept
     * per SIDE rather than summed because the ratio needs min, not
     * union. Output: id1, id2, shared, n1, n2, containment (unrounded
-    * integer-ratio division — bit-identical cross-engine). */
+    * integer-ratio division — bit-identical cross-engine). An action,
+    * like [[jaccardPairsFromPostings]]. */
   def ngramContainment(docs: DataFrame, n: Int = 3, tNum: Int = 9,
                        tDen: Int = 10, maxDF: Int = 50): DataFrame = {
-    val buckets = cappedBuckets(docs, n, maxDF).localCheckpoint(false)
-    val pairs = bucketPairs(buckets)
-      .groupBy("id1", "id2").agg(count(lit(1)).as("shared"))
-    val sizes = buckets
-      .select(explode(col("ids")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val melted = pairs.select(col("id1"), col("id2"), col("shared"),
-      explode(array(
-        struct(col("id1").as("doc_id"), lit(1).as("side")),
-        struct(col("id2").as("doc_id"), lit(2).as("side")))).as("m"))
-      .select(col("id1"), col("id2"), col("shared"),
-        col("m.doc_id").as("doc_id"), col("m.side").as("side"))
-    melted.join(sizes, "doc_id")
-      .groupBy("id1", "id2", "shared")
-      .agg(min(when(col("side") === 1, col("n_sh"))).as("n1"),
-        min(when(col("side") === 2, col("n_sh"))).as("n2"))
-      .filter(col("shared") * tDen >= least(col("n1"), col("n2")) * tNum)
-      .select(col("id1"), col("id2"), col("shared"), col("n1"), col("n2"),
-        (col("shared").cast("double") / least(col("n1"), col("n2")))
-          .as("containment"))
+    withBuckets(cappedBuckets(docs, n, maxDF)) { buckets =>
+      val pairs = bucketPairs(buckets)
+        .groupBy("id1", "id2").agg(count(lit(1)).as("shared"))
+      val sizes = buckets
+        .select(explode(col("ids")).as("doc_id"))
+        .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+      val melted = pairs.select(col("id1"), col("id2"), col("shared"),
+        explode(array(
+          struct(col("id1").as("doc_id"), lit(1).as("side")),
+          struct(col("id2").as("doc_id"), lit(2).as("side")))).as("m"))
+        .select(col("id1"), col("id2"), col("shared"),
+          col("m.doc_id").as("doc_id"), col("m.side").as("side"))
+      melted.join(sizes, "doc_id")
+        .groupBy("id1", "id2", "shared")
+        .agg(min(when(col("side") === 1, col("n_sh"))).as("n1"),
+          min(when(col("side") === 2, col("n_sh"))).as("n2"))
+        .filter(col("shared") * tDen >= least(col("n1"), col("n2")) * tNum)
+        .select(col("id1"), col("id2"), col("shared"), col("n1"), col("n2"),
+          (col("shared").cast("double") / least(col("n1"), col("n2")))
+            .as("containment"))
+    }
   }
 
   /** EXACT-recall similarity join via prefix filtering (PPJoin-style):

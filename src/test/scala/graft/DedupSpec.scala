@@ -3,12 +3,37 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, PlanBarrier, Similarity}
 import graft.sources.Tables
 
 class DedupSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
+
+  test("the bucket-pair joins return a materialized table and release their buckets") {
+    // a lazy bucket checkpoint read by the pair and size stages at once
+    // was computed by both ("Block rdd_N_0 already exists"); the eager
+    // one is computed before either stage starts, then released
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val docs = Tables.documents(spark, sf)
+    for ((name, pairs) <- Seq[(String, () => DataFrame)](
+        "ngramJaccard" -> (() => Dedup.ngramJaccard(docs)),
+        "ngramContainment" -> (() => Dedup.ngramContainment(docs)))) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = pairs()
+      val leaf = out.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd
+        case p => fail(s"$name returned an unmaterialized plan:\n$p")
+      }
+      assert(sc.getPersistentRDDs.keySet -- before == Set(leaf.id),
+        s"$name left checkpoints other than its result's")
+      val cached = sc.getRDDStorageInfo.find(_.id == leaf.id)
+      assert(cached.exists(i => i.numCachedPartitions == i.numPartitions),
+        s"$name's result is not materialized: $cached")
+      PlanBarrier.release(out)
+    }
+  }
 
   test("containment join equals the quadratic capped-space reference") {
     val docs = Tables.documents(spark, sf)

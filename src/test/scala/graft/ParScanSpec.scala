@@ -33,6 +33,18 @@ class ParScanSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
+  test("src/main adds no session artifacts") {
+    // Sessions.required turns artifact isolation off so that every
+    // session shares one executor class loader (and one codegen cache);
+    // a jar or file added to one session would then reach all of them
+    val artifact = """addArtifact|addJar|addFile|spark\.jars""".r
+    val offenders = for {
+      (f, ls) <- lines
+      (line, i) <- ls.zipWithIndex if artifact.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
   test("one AvailableNow drain and one landing loop") {
     def sites(pattern: String) = for {
       (f, ls) <- lines
