@@ -31,15 +31,8 @@ object Bucketed {
     // table DIRECTORY can survive without a catalog entry — drop both
     for (t <- Seq("graft_orders_b", "graft_lineitem_b")) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(loc)
-      }
+      Scratch.delete(java.nio.file.Paths.get(
+        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
     }
     Tables.orders(spark, sfDir)
       .write.mode("overwrite")

@@ -26,14 +26,16 @@ object Scratch {
     p
   }
 
+  /** Recursively delete `p`, if it exists. Best effort: an entry that
+    * cannot be deleted stays, and the rest still goes. */
+  def delete(p: Path): Unit =
+    try
+      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
+        .forEach(f => { try Files.deleteIfExists(f) catch { case _: Exception => () }; () })
+    catch { case _: Exception => () }
+
   private def drain(): Unit = {
     var p = dirs.poll()
-    while (p != null) {
-      try
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => { try Files.deleteIfExists(f) catch { case _: Exception => () }; () })
-      catch { case _: Exception => () }
-      p = dirs.poll()
-    }
+    while (p != null) { delete(p); p = dirs.poll() }
   }
 }

@@ -75,106 +75,24 @@ object EventStreams {
     * width. */
   val StateParts = 8
 
-  /** ADDITIVE counter stores at landing cadence, written as a per-batch
-    * LEDGER instead of a read-modify-write fold. The old fold read the
-    * whole store, re-aggregated history + batch, and did two parquet
-    * round trips (`.next` then overwrite) EVERY batch; it was also not
-    * crash-atomic under foreachBatch's at-least-once contract — a
-    * retried batch re-folded its partials and double-counted. The
-    * ledger writes the batch's keyed partial sums to `$path/b<batchId>`
-    * with mode=overwrite: a retried batch overwrites ITS OWN entry
-    * (idempotent, exactly-once effect), history is never re-read at
-    * landing, and the fold happens ONCE at emission. Ledger entries are
-    * one tiny keyed row-set per batch; [[ledgerCompact]] folds old
-    * entries into a snapshot partition once the raw count passes its
-    * threshold — the emission read stays (snapshot + recent)·|keys|,
-    * never |batches|-sized. Only for stores NO later batch reads back;
-    * mid-stream-consumed state (the append-only posting/signature
-    * stores) keeps its existing shape.
-    *
-    * `compact` is the store's merge law (keyed sums / keyed minima /
-    * bottom-k re-limit — anything with fold(fold(A) ∪ B) = fold(A ∪ B));
-    * passing it bounds the store's directory count for the stream's
-    * lifetime. */
-  private[graft] def ledgerAppend(local: DataFrame, path: String, batchId: Long,
-                           compact: Option[DataFrame => DataFrame] = None): Unit = {
-    // materialize the keyed partial ONCE (it is a bounded aggregate —
-    // |keys| rows) so the write job doesn't re-execute the whole
-    // per-batch plan a second time; release it after the write (ADVICE
-    // r16 — checkpointed blocks otherwise accumulate per batch for the
-    // stream's lifetime)
-    val part = local.localCheckpoint()
-    try part.coalesce(1).write.mode("overwrite").parquet(s"$path/b$batchId")
-    finally graft.ops.PlanBarrier.release(part)
-    compact.foreach(f => ledgerCompact(local.sparkSession, path, f))
-  }
-
-  /** Raw ledger entries kept OUT of the snapshot: foreachBatch is
-    * at-least-once, and a retried batch stays idempotent only while its
-    * own `b<id>` dir still exists to overwrite — folding it into the
-    * snapshot and then replaying it would double-count. Retries replay
-    * the newest uncommitted batch (never one `keepRecent` commits
-    * back), so keeping the tail raw preserves the exactly-once
-    * effect. */
-  private[graft] val LedgerKeepRecent = 4
-
-  /** Compact a [[ledgerAppend]] store: fold every raw batch entry
-    * except the `keepRecent` newest — plus any existing snapshot —
-    * into ONE snapshot partition (`$path/snap`), then drop the folded
-    * batch dirs. No-ops until the raw count passes 4·keepRecent, so
-    * landing cadence pays a fold every ~3·keepRecent batches, not every
-    * batch (the emission read stays bounded by snap + 4·keepRecent tiny
-    * dirs either way; the wider trigger just amortizes the fold jobs —
-    * r17: the 2·keepRecent trigger cost the short-run streaming keys
-    * 2-4 extra fold jobs each for no bound improvement). The snapshot
-    * holds pre-folded rows in the entry schema, so every consumer's
-    * recursive read + merge law is unchanged.
-    *
-    * The swap stages into an underscore-prefixed temp dir (hidden from Spark's
-    * file lister, so a crashed compaction can never double-read) and
-    * finishes with local renames; a distributed deployment would run
-    * the same fold through its table format's transactional commit. */
-  private[graft] def ledgerCompact(ss: SparkSession, path: String,
-                            fold: DataFrame => DataFrame,
-                            keepRecent: Int = LedgerKeepRecent): Unit = {
-    val root = new java.io.File(path)
-    val tmp = new java.io.File(root, "_snap_tmp")
-    if (tmp.exists()) deleteRec(tmp) // crashed-compaction leftover
-    val batches = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.matches("b\\d+"))
-      .sortBy(f => f.getName.drop(1).toLong)
-    if (batches.length > 4 * keepRecent) {
-      val toFold = batches.dropRight(keepRecent)
-      val snapDir = new java.io.File(root, "snap")
-      val srcs = toFold.map(_.getPath).toIndexedSeq ++
-        Option.when(snapDir.exists())(snapDir.getPath)
-      fold(ss.read.parquet(srcs: _*))
-        .coalesce(1).write.parquet(tmp.getPath)
-      toFold.foreach(deleteRec)
-      if (snapDir.exists()) deleteRec(snapDir)
-      require(tmp.renameTo(snapDir), s"ledger compaction swap failed at $path")
-    }
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(); ()
-  }
-
-  /** The keyed-sum merge law most counter ledgers share — both the
-    * emission fold ([[ledgerSums]]) and the compaction fold. */
-  private[graft] def sumFold(keys: Seq[String], sums: Seq[String])
-                     (df: DataFrame): DataFrame =
+  /** The keyed-sum merge law of the counter stores: per `keys`, the sum
+    * of every other column. Compaction and emission both fold with it. */
+  private[graft] def sumFold(keys: String*)(df: DataFrame): DataFrame = {
+    val sums = df.columns.filterNot(keys.contains)
     df.groupBy(keys.map(col): _*)
-      .agg(sum(sums.head).as(sums.head),
-        sums.tail.map(c => sum(c).as(c)): _*)
+      .agg(sum(sums.head).as(sums.head), sums.tail.map(c => sum(c).as(c)).toSeq: _*)
+  }
 
-  /** Fold a [[ledgerAppend]] store: sum every `sums` column per `keys`.
-    * Emission-time only. */
-  private[graft] def ledgerSums(ss: SparkSession, path: String, keys: Seq[String],
-                         sums: Seq[String]): DataFrame =
-    sumFold(keys, sums)(
-      ss.read.option("recursiveFileLookup", "true").parquet(path))
+  /** Lands one batch's keyed partial sums as its [[Store]] entry in
+    * counter store `dir`, and compacts the store by [[sumFold]]. */
+  private def addSums(local: DataFrame, dir: String, bid: Long, keys: String*): Unit = {
+    Store.put(local.coalesce(1), dir, bid)
+    Store.compact(local.sparkSession, dir, sumFold(keys: _*))
+  }
+
+  /** A counter store's totals per `keys`. Emission-time only. */
+  private[graft] def storeSums(ss: SparkSession, dir: String, keys: String*): DataFrame =
+    sumFold(keys: _*)(Store.read(ss, dir))
 
   /** The landing-generation split point: docs below the threshold land
     * in generation 1, the rest in generation 2 (3/4 : 1/4). Reads ONE
@@ -210,8 +128,8 @@ object EventStreams {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
   }
 
-  /** Make generation `gen` visible to the file-source stream (local
-    * rename; a distributed deployment promotes via its committer).
+  /** Make generation `gen` visible to the file-source stream
+    * ([[Store.commit]]).
     * `partitionBy("__gen")` writes NO directory for an empty
     * generation (a degenerate threshold or tiny corpus), so a missing
     * source dir promotes as an empty pass, not a failure (ADVICE
@@ -219,8 +137,7 @@ object EventStreams {
   private def promoteGen(stage: String, gen: Int): Unit = {
     val src = new java.io.File(s"$stage.parts/__gen=$gen")
     val dst = new java.io.File(s"$stage/gen$gen")
-    if (src.exists()) require(src.renameTo(dst),
-      s"failed to promote generation $gen into $stage")
+    if (src.exists()) Store.commit(src.getPath, dst.getPath)
     else { java.nio.file.Files.createDirectories(dst.toPath); () }
   }
 
@@ -244,6 +161,27 @@ object EventStreams {
     val src = spark.readStream.schema(raw.schema)
       .option("recursiveFileLookup", "true").parquet(stage)
     for (gen <- 1 to 2) { promoteGen(stage, gen); pass(src) }
+  }
+
+  /** Stages `waves` under `stage`, one file each, and returns the file
+    * stream that delivers them in order, one micro-batch per wave
+    * (`maxFilesPerTrigger` = 1). The file source orders files by mtime,
+    * and two writes can land in the same clock tick, so each wave's
+    * mtime is pinned: distinct, in wave order, and recent (so
+    * FileStreamSource's maxFileAge never ages an early wave out). One
+    * file per wave keeps a wave in one batch: a wave split across files
+    * would deliver a key's rows out of order across batches. */
+  private def orderedWaves(spark: SparkSession, stage: String,
+                           waves: DataFrame*): DataFrame = {
+    for ((w, i) <- waves.zipWithIndex) w.coalesce(1).write.parquet(s"$stage/w$i")
+    val now = System.currentTimeMillis()
+    for (i <- waves.indices; f <- new java.io.File(s"$stage/w$i").listFiles())
+      f.setLastModified(now - 60000L * (waves.length - 1 - i))
+    spark.readStream
+      .schema(StructType(waves.head.schema.map(_.copy(nullable = true))))
+      .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(stage)
   }
 
   /** Runs `body` with shuffle partitions scoped to [[StateParts]] and
@@ -385,9 +323,9 @@ object EventStreams {
       .select(col("ts"), b, r)
       .groupBy(window(col("ts"), "1 day").as("w"), col("bucket"))
       .agg(max("rho").as("rho"))
-    eachBatch(spark, agg, ckptDir, "update") { (batch, _) =>
-      batch.select(col("w.start").as("period"), col("bucket"), col("rho"))
-        .write.mode("append").parquet(deltaDir)
+    eachBatch(spark, agg, ckptDir, "update") { (batch, bid) =>
+      Store.put(batch.select(col("w.start").as("period"), col("bucket"),
+        col("rho")), deltaDir, bid)
     }
   }
 
@@ -416,12 +354,10 @@ object EventStreams {
       val agg = src.select(col("source"), b, r)
         .groupBy("source", "bucket")
         .agg(max("rho").as("rho"))
-      eachBatch(spark, agg, ckpt, "update") { (batch, _) =>
-        batch.write.mode("append").parquet(delta)
-      }
+      eachBatch(spark, agg, ckpt, "update")(Store.put(_, delta, _))
     }
     graft.ops.HllSketch.estimate(
-        spark.read.parquet(delta).groupBy("source", "bucket")
+        Store.read(spark, delta).groupBy("source", "bucket")
           .agg(max("rho").as("rho")),
         Seq("source"))
       .withColumnRenamed("est", "est_distinct_texts")
@@ -462,12 +398,10 @@ object EventStreams {
           .groupBy("cell")
           .agg(count(lit(1)).as("n_vecs"),
             sum(when(col("vec_id") >= thr, 1L).otherwise(0L)).as("n_landed"))
-        eachBatch(spark, agg, ckpt, "update") { (batch, _) =>
-          batch.write.mode("append").parquet(delta)
-        }
+        eachBatch(spark, agg, ckpt, "update")(Store.put(_, delta, _))
       }
     }
-    spark.read.parquet(delta).groupBy("cell")
+    Store.read(spark, delta).groupBy("cell")
       .agg(max("n_vecs").as("n_vecs"), max("n_landed").as("n_landed"))
       .orderBy("cell")
   }
@@ -506,14 +440,10 @@ object EventStreams {
         buildFilter = col("vec_id") < thr)(col("v"), col("nrm"))
       src => eachBatch(spark, src.withColumn("cell", cellCol), ckpt) {
         // history = everything staged BEFORE this pass, frozen once
-        val snapshot =
-          if (new java.io.File(store).exists)
-            spark.read.parquet(store)
-              .select(col("cell"), col("v").as("hv"), col("nrm").as("hn"))
-              .localCheckpoint(false)
-          else spark.range(0).select(col("id").cast("int").as("cell"),
-            lit(null).cast("array<double>").as("hv"),
-            lit(null).cast("double").as("hn"))
+        val snapshot = Store.read(spark, store,
+            StructType.fromDDL("cell int, v array<double>, nrm double"))
+          .select(col("cell"), col("v").as("hv"), col("nrm").as("hn"))
+          .localCheckpoint(false)
         (batch0, bid) => {
           val batch = batch0.localCheckpoint(false) // counters AND store
           val hits = batch.join(snapshot, Seq("cell"))
@@ -525,15 +455,13 @@ object EventStreams {
             .join(hits, Seq("cell"), "left")
             .select(col("cell"), col("n_vecs"),
               coalesce(col("n_hist_dup_vecs"), lit(0L)).as("n_hist_dup_vecs"))
-          ledgerAppend(local, ctr, bid, compact =
-            Some(sumFold(Seq("cell"), Seq("n_vecs", "n_hist_dup_vecs"))))
+          addSums(local, ctr, bid, "cell")
           // O(delta) store growth: the batch's vectors with their cells
-          batch.select("vec_id", "cell", "v", "nrm")
-            .write.mode("append").parquet(store)
+          Store.put(batch.select("vec_id", "cell", "v", "nrm"), store, bid)
         }
       }
     }
-    ledgerSums(spark, ctr, Seq("cell"), Seq("n_vecs", "n_hist_dup_vecs"))
+    storeSums(spark, ctr, "cell")
       .select(col("cell").cast("long").as("cell"), col("n_vecs"),
         col("n_hist_dup_vecs"))
       .orderBy("cell")
@@ -564,15 +492,11 @@ object EventStreams {
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) {
         // history = everything staged BEFORE this pass, frozen once
-        val snapshot =
-          if (new java.io.File(store).exists)
-            chunks(spark.read.parquet(store))
-              .select(col("ci"), col("cv"), col("c0").as("h0"),
-                col("c1").as("h1"), col("c2").as("h2"), col("c3").as("h3"))
-              .localCheckpoint(false)
-          else spark.range(0).select(col("id").cast("int").as("ci"),
-            lit(0L).as("cv"), lit(0L).as("h0"), lit(0L).as("h1"),
-            lit(0L).as("h2"), lit(0L).as("h3"))
+        val snapshot = chunks(Store.read(spark, store, StructType.fromDDL(
+            "doc_id bigint, c0 bigint, c1 bigint, c2 bigint, c3 bigint")))
+          .select(col("ci"), col("cv"), col("c0").as("h0"),
+            col("c1").as("h1"), col("c2").as("h2"), col("c3").as("h3"))
+          .localCheckpoint(false)
         (batch0, bid) => {
           val sigs = graft.ops.Multimodal.phashBatch(batch0).toDF()
             .select("doc_id", "c0", "c1", "c2", "c3")
@@ -590,16 +514,13 @@ object EventStreams {
             .join(hits, Seq("source"), "left")
             .select(col("source"), col("n_imgs"),
               coalesce(col("n_hist_dup_imgs"), lit(0L)).as("n_hist_dup_imgs"))
-          ledgerAppend(local, ctr, bid, compact =
-            Some(sumFold(Seq("source"), Seq("n_imgs", "n_hist_dup_imgs"))))
+          addSums(local, ctr, bid, "source")
           // O(delta) store growth: the batch's 32-byte signatures
-          sigs.select("doc_id", "c0", "c1", "c2", "c3")
-            .write.mode("append").parquet(store)
+          Store.put(sigs.select("doc_id", "c0", "c1", "c2", "c3"), store, bid)
         }
       }
     }
-    ledgerSums(spark, ctr, Seq("source"), Seq("n_imgs", "n_hist_dup_imgs"))
-      .orderBy("source")
+    storeSums(spark, ctr, "source").orderBy("source")
   }
 
   /** Streaming application of the LEARNED quality gate while shards
@@ -640,13 +561,10 @@ object EventStreams {
             when(col("doc_id") >= thr, 1L).otherwise(0L).as("landed"))
           .groupBy("rule_keep", "clf_keep")
           .agg(count(lit(1)).as("n_docs"), sum("landed").as("n_landed"))
-        ledgerAppend(local, store, bid, compact =
-          Some(sumFold(Seq("rule_keep", "clf_keep"),
-            Seq("n_docs", "n_landed"))))
+        addSums(local, store, bid, "rule_keep", "clf_keep")
       }
     }
-    ledgerSums(spark, store, Seq("rule_keep", "clf_keep"),
-        Seq("n_docs", "n_landed"))
+    storeSums(spark, store, "rule_keep", "clf_keep")
       .orderBy("rule_keep", "clf_keep")
   }
 
@@ -700,13 +618,10 @@ object EventStreams {
             sum(when(col("doc_id") >= thr, 1L).otherwise(0L)).as("n_landed"),
             sum(when(col("u4") >= 0, 1L).otherwise(0L)).as("n_sel"),
             sum("u4").as("sum_u4"))
-        ledgerAppend(local, store, bid, compact =
-          Some(sumFold(Seq("source"),
-            Seq("n_docs", "n_landed", "n_sel", "sum_u4"))))
+        addSums(local, store, bid, "source")
       }
     }
-    ledgerSums(spark, store, Seq("source"),
-        Seq("n_docs", "n_landed", "n_sel", "sum_u4"))
+    storeSums(spark, store, "source")
       .withColumn("avg_logw",
         round(col("sum_u4") / (col("n_docs") * 10000.0), 4))
       .select("source", "n_docs", "n_landed", "n_sel", "sum_u4", "avg_logw")
@@ -732,13 +647,12 @@ object EventStreams {
       "n_card", "n_card_reject", "chars_cut", "n_residual")
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) { (batch, bid) =>
-        // per-batch partials land as an idempotent ledger entry —
-        // a retried batch overwrites its own, never double-counts
-        ledgerAppend(graft.ops.TextAnalysis.piiCounters(batch), store, bid,
-          compact = Some(sumFold(Seq("source"), sums)))
+        // per-batch partials land as the batch's own store entry — a
+        // retried batch overwrites it, never double-counts
+        addSums(graft.ops.TextAnalysis.piiCounters(batch), store, bid, "source")
       }
     }
-    ledgerSums(spark, store, Seq("source"), sums)
+    storeSums(spark, store, "source")
       .withColumn("clean_rate",
         round(lit(1.0) - col("n_docs_pii") / col("n_docs"), 4))
       .select((Seq("source") ++ sums ++ Seq("clean_rate")).map(col): _*)
@@ -756,7 +670,7 @@ object EventStreams {
     * it). Each landing batch therefore scores only its own docs
     * (map-side) and folds TWO stores:
     *   - the (source, qs_u4) → (n_docs, sum_chars) histogram — an
-    *     additive ledger (+compaction), ≤ |sources|·10001 rows of
+    *     additive counter store (+compaction), ≤ |sources|·10001 rows of
     *     state no matter the corpus;
     *   - a compact per-doc quality-metadata table (doc_id, source,
     *     qs_u4, n_chars — ~24 bytes/doc, never the text), O(Δ)
@@ -789,18 +703,14 @@ object EventStreams {
             round(col("quality_score") * 10000).cast("long").as("qs_u4"),
             col("n_chars").cast("long").as("n_chars"))
           .localCheckpoint(false) // histogram fold AND metadata append
-        ledgerAppend(scored.groupBy("source", "qs_u4")
-            .agg(count(lit(1)).as("n_docs"),
-              sum("n_chars").as("sum_chars")),
-          histDir, bid,
-          compact = Some(sumFold(Seq("source", "qs_u4"),
-            Seq("n_docs", "sum_chars"))))
-        scored.coalesce(4).write.mode("append").parquet(metaDir)
+        addSums(scored.groupBy("source", "qs_u4")
+            .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars")),
+          histDir, bid, "source", "qs_u4")
+        Store.put(scored.coalesce(4), metaDir, bid)
       }
     }
     val W = org.apache.spark.sql.expressions.Window
-    val hist = ledgerSums(spark, histDir, Seq("source", "qs_u4"),
-        Seq("n_docs", "sum_chars"))
+    val hist = storeSums(spark, histDir, "source", "qs_u4")
       .localCheckpoint(false) // prefix window, boundary pick, rollup
     // per-source exclusive prefix over the BOUNDED histogram (≤
     // |sources|·10001 rows — the dial-bounded-window doctrine)
@@ -818,7 +728,7 @@ object EventStreams {
     val boundary = pref
       .filter(col("p") < budget && col("p") + col("sum_chars") > budget)
       .select("source", "qs_u4", "p")
-    val bDocs = spark.read.parquet(metaDir)
+    val bDocs = Store.read(spark, metaDir)
       .join(broadcast(boundary), Seq("source", "qs_u4"))
     // prune before the cumsum: a selected doc costs ≥ 1 char, so only
     // the budget smallest doc_ids can still land under the line
@@ -842,7 +752,7 @@ object EventStreams {
   }
 
   /** The landing both curriculum members share: each batch scores its
-    * own docs and folds the qu4 → (n_docs, sum_tokens) histogram ledger
+    * own docs and folds the qu4 → (n_docs, sum_tokens) histogram store
     * plus the compact per-doc (doc_id, n_tokens, qu4) metadata append. */
   private def landQualityHistogram(spark: SparkSession, docs: DataFrame,
                                    stage: String, ckpt: String,
@@ -854,13 +764,10 @@ object EventStreams {
             col("n_tokens").cast("long").as("n_tokens"),
             round(col("quality_score") * 10000).cast("long").as("qu4"))
           .localCheckpoint(false) // histogram fold AND metadata append
-        ledgerAppend(scored.groupBy("qu4")
-            .agg(count(lit(1)).as("n_docs"),
-              sum("n_tokens").as("sum_tokens")),
-          histDir, bid,
-          compact = Some(sumFold(Seq("qu4"),
-            Seq("n_docs", "sum_tokens"))))
-        scored.coalesce(4).write.mode("append").parquet(metaDir)
+        addSums(scored.groupBy("qu4")
+            .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens")),
+          histDir, bid, "qu4")
+        Store.put(scored.coalesce(4), metaDir, bid)
       }
     }
 
@@ -873,7 +780,7 @@ object EventStreams {
     *
     * Same bounded-dial insight as the budget member: quality_score is
     * round(·, 4), so scores live on qu4 ∈ [0, 10000] and each landing
-    * batch folds a qu4 → (n_docs, sum_tokens) histogram ledger
+    * batch folds a qu4 → (n_docs, sum_tokens) histogram store
     * (+compaction; ≤ 10001 rows of state) plus a compact per-doc
     * (doc_id, qu4, n_tokens) metadata append (~24 B/doc, never text).
     *
@@ -900,8 +807,7 @@ object EventStreams {
       .select(col("doc_id"), col("source"), col("text"))
     landQualityHistogram(spark, docs, stage, ckpt, histDir, metaDir)
     val W = org.apache.spark.sql.expressions.Window
-    val hist = ledgerSums(spark, histDir, Seq("qu4"),
-        Seq("n_docs", "sum_tokens"))
+    val hist = storeSums(spark, histDir, "qu4")
       .localCheckpoint(false) // prefix window AND the total
     val tot = hist.agg(sum("n_docs").cast("long").as("n_total"))
     // exclusive doc-count prefix over the BOUNDED dial (≤ 10001 rows —
@@ -921,7 +827,7 @@ object EventStreams {
         min("qu4").as("min_qu4"), max("qu4").as("max_qu4"))
     val crossKeys = pref.filter(col("s_first") =!= col("s_last"))
       .select("qu4", "p") // ≤ nShards − 1 rows
-    val cDocs = spark.read.parquet(metaDir)
+    val cDocs = Store.read(spark, metaDir)
       .join(broadcast(crossKeys), "qu4")
     // within-bucket 0-based count rank by doc_id, decomposed (the
     // degenerate single-bucket corpus must not single-task sort)
@@ -968,8 +874,7 @@ object EventStreams {
       .select(col("doc_id"), col("source"), col("text"))
     landQualityHistogram(spark, docs, stage, ckpt, histDir, metaDir)
     val W = org.apache.spark.sql.expressions.Window
-    val hist = ledgerSums(spark, histDir, Seq("qu4"),
-        Seq("n_docs", "sum_tokens"))
+    val hist = storeSums(spark, histDir, "qu4")
       .localCheckpoint(false) // prefix window AND the total
     val tot = hist.agg(sum("sum_tokens").cast("long").as("tot_tokens"))
     // exclusive TOKEN prefix over the BOUNDED dial (≤ 10001 rows)
@@ -988,7 +893,7 @@ object EventStreams {
         min("qu4").as("min_qu4"), max("qu4").as("max_qu4"))
     val crossKeys = pref.filter(col("s_first") =!= col("s_last"))
       .select("qu4", "tp") // ≤ nShards + a few boundary-tangent rows
-    val cDocs = spark.read.parquet(metaDir)
+    val cDocs = Store.read(spark, metaDir)
       .join(broadcast(crossKeys), "qu4")
     // within-bucket exclusive token prefix by doc_id, decomposed
     val ranked = graft.ops.Rank.perGroupRunningSum(
@@ -1032,20 +937,15 @@ object EventStreams {
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) { (batch0, bid) =>
         val batch = batch0.localCheckpoint(false) // counts + doc fold
-        ledgerAppend(
-          graft.ops.Select.domainBucketCounts(batch, buckets, seed),
-          cntStore, bid,
-          compact = Some(sumFold(Seq("source", "b"), Seq("c"))))
-        ledgerAppend(
-          batch.groupBy("source").agg(count(lit(1)).as("n_docs")),
-          domStore, bid,
-          compact = Some(sumFold(Seq("source"), Seq("n_docs"))))
+        addSums(graft.ops.Select.domainBucketCounts(batch, buckets, seed),
+          cntStore, bid, "source", "b")
+        addSums(batch.groupBy("source").agg(count(lit(1)).as("n_docs")),
+          domStore, bid, "source")
       }
     }
     graft.ops.Select.doremiFromCounts(
-        ledgerSums(spark, cntStore, Seq("source", "b"), Seq("c")),
-        ledgerSums(spark, domStore, Seq("source"), Seq("n_docs"))
-          .localCheckpoint(false),
+        storeSums(spark, cntStore, "source", "b"),
+        storeSums(spark, domStore, "source").localCheckpoint(false),
         buckets, rounds, deltaDen)
       .orderBy("source")
   }
@@ -1076,23 +976,22 @@ object EventStreams {
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     landGens(spark, docs, genThreshold(docs), stage) { src =>
-      eachBatch(spark, src, ckpt) { (batch0, _) =>
+      eachBatch(spark, src, ckpt) { (batch0, bid) =>
         val batch = batch0.localCheckpoint(false) // postings + doc list
-        graft.ops.Dedup.shingleSets(batch, 8)
+        Store.put(graft.ops.Dedup.shingleSets(batch, 8)
           .select(col("doc_id"), explode(col("sh")).as("g"))
           .select(col("doc_id"),
             call_function("graft_hash64", col("g"), lit(31L)).as("gh"))
-          .coalesce(4).write.mode("append").parquet(postStore)
-        batch.select("doc_id").coalesce(1)
-          .write.mode("append").parquet(docStore)
+          .coalesce(4), postStore, bid)
+        Store.put(batch.select("doc_id").coalesce(1), docStore, bid)
       }
     }
-    val post = spark.read.parquet(postStore).localCheckpoint(false)
+    val post = Store.read(spark, postStore).localCheckpoint(false)
     val dft = post.groupBy("gh").agg(count(lit(1)).as("df"))
     val per = post.join(dft, "gh")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"), sum("df").as("sum_df"))
-    spark.read.parquet(docStore).join(per, Seq("doc_id"), "left")
+    Store.read(spark, docStore).join(per, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("sum_df"), lit(0L)).as("sum_df"),
@@ -1128,10 +1027,8 @@ object EventStreams {
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) {
         // history = everything staged BEFORE this pass, frozen once
-        val snapshot =
-          if (new java.io.File(grams).exists)
-            spark.read.parquet(grams).distinct().localCheckpoint(false)
-          else spark.emptyDataFrame.withColumn("h", lit(0L)).select("h").limit(0)
+        val snapshot = Store.read(spark, grams, StructType.fromDDL("h bigint"))
+          .distinct().localCheckpoint(false)
         (batch, bid) => {
           val g = graft.ops.Suffix.gramHashes(batch, spanLen)
             .filter(col("full"))
@@ -1144,17 +1041,14 @@ object EventStreams {
             .join(hist, Seq("source"), "left")
             .select(col("source"), col("n_grams"),
               coalesce(col("n_hist_dup_starts"), lit(0L)).as("n_hist_dup_starts"))
-          ledgerAppend(local, ctr, bid, compact =
-            Some(sumFold(Seq("source"), Seq("n_grams", "n_hist_dup_starts"))))
+          addSums(local, ctr, bid, "source")
           // O(delta) store growth: only the batch's never-seen hashes
-          g.select("h").distinct()
-            .join(snapshot, Seq("h"), "left_anti")
-            .write.mode("append").parquet(grams)
+          Store.put(g.select("h").distinct()
+            .join(snapshot, Seq("h"), "left_anti"), grams, bid)
         }
       }
     }
-    ledgerSums(spark, ctr, Seq("source"), Seq("n_grams", "n_hist_dup_starts"))
-      .orderBy("source")
+    storeSums(spark, ctr, "source").orderBy("source")
   }
 
   /** The CAPSTONE FUNNEL at landing cadence — pipeline_e2e_v2's twin
@@ -1199,7 +1093,7 @@ object EventStreams {
     // width the passes use (32-wide exchanges across the funnel's ~30
     // small aggregate stages are pure task overhead at this store size)
     def fold(): Unit = withStateParts(spark)(graft.exec.Par.scope { par =>
-      val Seq(meta, sh, gr, fx) = dirs.map(spark.read.parquet(_))
+      val Seq(meta, sh, gr, fx) = dirs.map(Store.read(spark, _))
       // the frozen classifier trains from the feature store + labels
       // ONLY — independent of the dedup/pair/CC chain, so it overlaps
       // it as a concurrent driver job; the trainer is integer-
@@ -1227,7 +1121,7 @@ object EventStreams {
         .write.mode("overwrite").parquet(acctDir)
     })
     landGens(spark, docs, genThreshold(docs), stage) { src =>
-      eachBatch(spark, src, ckpt) { (batch0, _) =>
+      eachBatch(spark, src, ckpt) { (batch0, bid) =>
         // one cached copy of the landing text feeds all four extracts
         val batch = batch0.localCheckpoint(false)
         val st = graft.ops.FunnelStore.extract(batch)
@@ -1240,7 +1134,7 @@ object EventStreams {
         graft.exec.Par.scope { par =>
           Seq(st.meta, st.shingles, st.grams, st.feat).zip(dirs).foreach {
             case (df, dir) =>
-              par.fork(df.coalesce(4).write.mode("append").parquet(dir))
+              par.fork(Store.put(df.coalesce(4), dir, bid))
           }
         }
       }
@@ -1270,19 +1164,14 @@ object EventStreams {
           .as("h"))
     landGens(spark, raw, midThreshold(raw, "doc_id"), stage) { src =>
       eachBatch(spark, src, ckpt) { (batch, bid) =>
-        // hash-min bottom-k is mergeable: each batch ledgers its own
-        // local k rows; the emission re-limit over |batches|·k rows
-        // equals the one-shot bottom-k (idempotent under retry)
-        // merge law: hash-min bottom-k is mergeable, so compaction's
-        // re-limit over (snapshot ∪ folded entries) keeps exactly
-        // the store's k candidate rows
-        ledgerAppend(batch.orderBy(col("h").asc, col("doc_id")).limit(k),
-          store, bid,
-          compact = Some(_.orderBy(col("h").asc, col("doc_id")).limit(k)))
+        // hash-min bottom-k is mergeable: each batch stores its own
+        // local k rows, and the re-limit over (snapshot ∪ entries) —
+        // compaction's and emission's — equals the one-shot bottom-k
+        Store.put(batch.orderBy(col("h").asc, col("doc_id")).limit(k), store, bid)
+        Store.compact(spark, store, _.orderBy(col("h").asc, col("doc_id")).limit(k))
       }
     }
-    spark.read.option("recursiveFileLookup", "true").parquet(store)
-      .orderBy(col("h").asc, col("doc_id")).limit(k)
+    Store.read(spark, store).orderBy(col("h").asc, col("doc_id")).limit(k)
   }
 
   /** Streaming maintenance of the AMS F2 sketch — the linear-sketch
@@ -1316,13 +1205,12 @@ object EventStreams {
             posexplode(array((0 until 8).map(j => col(s"x$j")): _*))
               .as(Seq("est_id", "x")))
           .select(col("est_id").cast("long").as("est_id"), col("x"), col("n"))
-        // the sketch is LINEAR: per-batch states ledger and add at
-        // emission (idempotent under retry)
-        ledgerAppend(local, store, bid, compact =
-          Some(sumFold(Seq("est_id"), Seq("x", "n"))))
+        // the sketch is LINEAR: per-batch states are store entries
+        // that add at emission
+        addSums(local, store, bid, "est_id")
       }
     }
-    ledgerSums(spark, store, Seq("est_id"), Seq("x", "n"))
+    storeSums(spark, store, "est_id")
       .withColumn("x_sq", expr("x*x"))
       .withColumn("est_f2", expr("(2*sum(x_sq) OVER () + 8) div 16"))
       .select(col("est_id"), col("x"), col("x_sq"), col("est_f2"),
@@ -1351,15 +1239,13 @@ object EventStreams {
     landGens(spark, raw, midThreshold(raw, "event_id"), stage,
         key = "event_id", recordsPerFile = 65536L) { src =>
       eachBatch(spark, src, ckpt) { (batch, bid) =>
-        // daily counts are additive state: ledger per batch, sum at
-        // read time (idempotent under retry)
-        ledgerAppend(batch.groupBy("event_type", "dt")
-          .agg(count(lit(1)).as("y")), store, bid,
-          compact = Some(sumFold(Seq("event_type", "dt"), Seq("y"))))
+        // daily counts are additive state: one store entry per batch,
+        // summed at read time
+        addSums(batch.groupBy("event_type", "dt").agg(count(lit(1)).as("y")),
+          store, bid, "event_type", "dt")
       }
     }
-    graft.ops.Cusum.fromDaily(
-      ledgerSums(spark, store, Seq("event_type", "dt"), Seq("y")))
+    graft.ops.Cusum.fromDaily(storeSums(spark, store, "event_type", "dt"))
   }
 
   /** Streaming data-quality gate — dq_expectations' ADDITIVE rules on
@@ -1397,13 +1283,10 @@ object EventStreams {
           sum("v_date").as("v_date"))
         val local = graft.ops.Scalars.withScalar(
           counters, col("n"), fk, col("v_fk"))
-        ledgerAppend(local, store, bid, compact =
-          Some(sumFold(Seq(),
-            Seq("n", "v_null", "v_price", "v_date", "v_fk"))))
+        addSums(local, store, bid)
       }
     }
-    ledgerSums(spark, store, Seq(),
-        Seq("n", "v_null", "v_price", "v_date", "v_fk"))
+    storeSums(spark, store)
       .select(posexplode(array(
         struct(lit("orderkey_not_null").as("rule"), col("v_null").as("v")),
         struct(lit("totalprice_positive").as("rule"), col("v_price").as("v")),
@@ -1446,32 +1329,25 @@ object EventStreams {
       eachBatch(spark, src, ckpt) { (batch, bid) =>
         val ss = batch.sparkSession
         val bk = batch.select(col("user_id")).distinct()
-        // first-seen keys, exactly-once: the presence store is ALSO
-        // batch-keyed (the ledger convention) — the anti-join reads
-        // only STRICTLY-PRIOR batches' entries (a retried batch's own
+        // first-seen keys, exactly-once: the anti-join reads only
+        // STRICTLY-PRIOR batches' entries (a retried batch's own
         // failed-attempt entry is excluded, so it re-decides against
         // the same history and overwrites its own entry), and the
         // decision set is MATERIALIZED before the write
-        val priorDirs = Option(new java.io.File(keys).listFiles())
-          .map(_.collect {
-            case f if f.isDirectory && f.getName != s"b$bid" => f.getPath
-          }).getOrElse(Array.empty[String])
-        val newKeys = (if (priorDirs.nonEmpty)
-            bk.join(ss.read.parquet(priorDirs.toIndexedSeq: _*),
-              Seq("user_id"), "left_anti")
-          else bk).localCheckpoint(false)
-        newKeys.coalesce(1).write.mode("overwrite").parquet(s"$keys/b$bid")
+        val newKeys = bk.join(Store.read(ss, keys,
+            StructType.fromDDL("user_id bigint"), before = bid),
+          Seq("user_id"), "left_anti").localCheckpoint(false)
+        Store.put(newKeys.coalesce(1), keys, bid)
         val local = graft.ops.Scalars.withScalar(
             batch.agg(count(lit(1)).as("n"),
               count_distinct(col("user_id")).as("d")),
             col("n"),
             newKeys.agg(count(lit(1)).as("nu")), col("nu"))
           .select(col("n"), (col("n") - col("d")).as("intra"), col("nu"))
-        ledgerAppend(local, ctr, bid, compact =
-          Some(sumFold(Seq(), Seq("n", "intra", "nu"))))
+        addSums(local, ctr, bid)
       }
     }
-    ledgerSums(spark, ctr, Seq(), Seq("n", "intra", "nu"))
+    storeSums(spark, ctr)
       .select(lit("user_id_unique").as("rule"),
         col("n").as("n_checked"), col("nu").as("n_unique"),
         (col("n") - col("nu")).as("n_violations"),
@@ -1484,7 +1360,7 @@ object EventStreams {
     * the batch tail shared by every refresh cadence. */
   def hllRefreshEstimate(spark: SparkSession, deltaDir: String): DataFrame =
     graft.ops.HllSketch.estimate(
-        spark.read.parquet(deltaDir).groupBy("period", "bucket")
+        Store.read(spark, deltaDir).groupBy("period", "bucket")
           .agg(max("rho").as("rho")),
         Seq("period"))
       .withColumnRenamed("est", "est_users")
@@ -1517,63 +1393,35 @@ object EventStreams {
 
   /** Streaming CDC apply: an SCD2 dimension maintained by a STREAM of
     * update batches. Each micro-batch folds into the dimension with
-    * [[graft.ops.Scd2.merge]] inside foreachBatch, writing a NEW
-    * versioned snapshot (`v<batchId+1>`) — the batchId-named version
-    * makes re-delivered batches idempotent (the snapshot already
-    * exists → skip), which is exactly the Delta/Hudi commit pattern
-    * expressed on plain parquet. Update files are staged in change
-    * order and `maxFilesPerTrigger=1` makes each file one batch, so
-    * per-key update order is preserved across batches.
+    * [[graft.ops.Scd2.merge]] inside foreachBatch, writing the next
+    * version as the dimension store's snapshot `batchId + 1`
+    * ([[Store.snapshot]]): a re-delivered batch finds its version
+    * committed and skips it, and a version whose write died is
+    * rewritten — the Delta/Hudi commit pattern on plain parquet. The
+    * two update waves land in change order, one batch each
+    * ([[orderedWaves]]), so per-key update order is preserved across
+    * batches.
     *
     * The final dimension must equal the batch `scd2_chain` result —
     * StreamingSpec and the SQL oracle both pin that equivalence. */
   def cdcApply(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.sources.Tables
     val base = graft.sources.Scratch.dir("graft_cdc_apply")
     val (stage, ckpt, dims) = (s"$base/stage", s"$base/ckpt", s"$base/dim")
-    val o = Tables.orders(spark, sfDir)
-    val current = o.select(col("o_orderkey"),
+    val o = graft.sources.Tables.orders(spark, sfDir)
+    Store.snapshot(dims, 0)(o.select(col("o_orderkey"),
       round(col("o_totalprice"), 2).as("price"),
       col("o_orderdate").cast("date").as("valid_from"),
-      lit(null).cast("date").as("valid_to"))
-    current.write.parquet(s"$dims/v0")
-    // stage the two update waves IN ORDER (file mod-times drive the
-    // file source's processing order)
-    o.filter(col("o_orderkey") % 10 === 0)
-      .select(col("o_orderkey"), round(col("o_totalprice") + 100.0, 2).as("price"),
-        date_add(col("o_orderdate"), 30).as("valid_from"))
-      .coalesce(1).write.parquet(s"$stage/u1")
-    o.filter(col("o_orderkey") % 20 === 0)
-      .select(col("o_orderkey"), round(col("o_totalprice") + 200.0, 2).as("price"),
-        date_add(col("o_orderdate"), 60).as("valid_from"))
-      .coalesce(1).write.parquet(s"$stage/u2")
-    // the file source orders same-batch files by mtime; two writes can
-    // land in the same clock tick, making u1-before-u2 unspecified. Pin
-    // the intended order with explicit, distinct, recent mtimes (recent
-    // so FileStreamSource's maxFileAge can never age u1 out).
-    val now = System.currentTimeMillis()
-    for ((wave, t) <- Seq("u1" -> (now - 60000L), "u2" -> now);
-         f <- new java.io.File(s"$stage/$wave").listFiles())
-      f.setLastModified(t)
-    val updSchema = StructType(Seq(
-      StructField("o_orderkey", LongType),
-      StructField("price", DoubleType),
-      StructField("valid_from", DateType)))
-    val stream = spark.readStream
-      .schema(updSchema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
+      lit(null).cast("date").as("valid_to")))
+    def wave(every: Int, dPrice: Double, dDays: Int) =
+      o.filter(col("o_orderkey") % every === 0).select(col("o_orderkey"),
+        round(col("o_totalprice") + dPrice, 2).as("price"),
+        date_add(col("o_orderdate"), dDays).as("valid_from"))
+    val stream = orderedWaves(spark, stage, wave(10, 100.0, 30), wave(20, 200.0, 60))
     eachBatch(spark, stream, ckpt) { (batch, id) =>
-      val next = new java.io.File(s"$dims/v${id + 1}")
-      if (!next.exists()) { // idempotent re-delivery
-        graft.ops.Scd2.merge(
-            spark.read.parquet(s"$dims/v$id"), batch, key = "o_orderkey")
-          .write.parquet(next.toString)
-      }
+      Store.snapshot(dims, id + 1)(graft.ops.Scd2.merge(
+        Store.read(spark, dims), batch, key = "o_orderkey"))
     }
-    val latest = new java.io.File(dims).list().map(_.stripPrefix("v").toInt).max
-    spark.read.parquet(s"$dims/v$latest")
+    Store.read(spark, dims)
       .withColumn("valid_to",
         coalesce(col("valid_to"), lit("9999-12-31").cast("date")))
       .orderBy("o_orderkey", "valid_from")
@@ -1770,8 +1618,7 @@ object EventStreams {
     }
 
     // stage the event history in two time halves so AvailableNow runs
-    // a real multi-batch state handoff (the distinctUsersIncremental
-    // staging pattern, mtime-pinned like cdcApply)
+    // a real multi-batch state handoff ([[orderedWaves]])
     val base = graft.sources.Scratch.dir("graft_stream_life_")
     val raw = spark.read.schema(eventsSchema(spark, sfDir))
       .parquet(s"$sfDir/events.parquet")
@@ -1781,22 +1628,10 @@ object EventStreams {
       .localCheckpoint(false)
     val bounds = raw.agg(min("dn").as("lo"), max("dn").as("hi")).head()
     val mid = (bounds.getInt(0) + bounds.getInt(1)) / 2
-    // one file per half → one micro-batch per half: a half split across
-    // files would deliver a user's days out of order across batches,
-    // which the monotone-state classifier would silently drop
-    raw.filter(col("dn") < mid).coalesce(1).write.parquet(s"$base/stage/h1")
-    raw.filter(col("dn") >= mid).coalesce(1).write.parquet(s"$base/stage/h2")
-    val now = System.currentTimeMillis()
-    for ((wave, t) <- Seq("h1" -> (now - 60000L), "h2" -> now);
-         f <- new java.io.File(s"$base/stage/$wave").listFiles())
-      f.setLastModified(t)
-
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("dn", IntegerType))))
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/stage")
+    // one batch per half: a user's days arriving out of order across
+    // batches would be silently dropped by the monotone-state classifier
+    val stream = orderedWaves(spark, s"$base/stage",
+        raw.filter(col("dn") < mid), raw.filter(col("dn") >= mid))
       .as[(Long, Int)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)
@@ -1891,7 +1726,7 @@ object EventStreams {
     }
 
     // stage the event history in two time halves (multi-batch state
-    // handoff; mtime-pinned order, one file per half = one batch each)
+    // handoff, one batch per half — [[orderedWaves]])
     val base = graft.sources.Scratch.dir("graft_stream_mg_")
     val raw = spark.read.schema(eventsSchema(spark, sfDir))
       .parquet(s"$sfDir/events.parquet")
@@ -1900,21 +1735,9 @@ object EventStreams {
         unix_micros(tsUtc(spark, sfDir)).as("ts_us"))
       .localCheckpoint(false)
     val mid = midThreshold(raw, "ts_us")
-    raw.filter(col("ts_us") < mid).select("shard", "user_id")
-      .coalesce(1).write.parquet(s"$base/stage/h1")
-    raw.filter(col("ts_us") >= mid).select("shard", "user_id")
-      .coalesce(1).write.parquet(s"$base/stage/h2")
-    val now = System.currentTimeMillis()
-    for ((wave, t) <- Seq("h1" -> (now - 60000L), "h2" -> now);
-         f <- new java.io.File(s"$base/stage/$wave").listFiles())
-      f.setLastModified(t)
-
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("shard", IntegerType),
-        StructField("user_id", LongType))))
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/stage")
+    val stream = orderedWaves(spark, s"$base/stage",
+        raw.filter(col("ts_us") < mid).select("shard", "user_id"),
+        raw.filter(col("ts_us") >= mid).select("shard", "user_id"))
       .as[(Int, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fn)

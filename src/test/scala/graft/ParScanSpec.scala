@@ -18,9 +18,11 @@ object MainSources {
 
 /** Concurrent driver jobs run only through `graft.exec.Par` (which
   * cancels, waits for and attributes them), every streaming query is
-  * drained by `EventStreams.drain`, and generations land only through
-  * `EventStreams.landGens`. A second copy of any of these is where a
-  * job could leak past its caller again. */
+  * drained by `EventStreams.drain`, generations land only through
+  * `EventStreams.landGens`, and streaming state reaches disk only
+  * through `graft.streaming.Store`. A second copy of any of these is
+  * where a job could leak past its caller, or a store lose its
+  * replay safety, again. */
 class ParScanSpec extends AnyFunSuite {
   import MainSources.lines
 
@@ -65,5 +67,17 @@ class ParScanSpec extends AnyFunSuite {
           file == "EventStreams.scala" && i > start && i < end },
         s"$helper called outside landGens: $calls")
     }
+  }
+
+  test("streaming stores commit only through Store") {
+    // an append is not replay-safe under foreachBatch's at-least-once
+    // delivery, and a hand-rolled rename is a second commit protocol
+    val commit = """mode\("append"\)|renameTo|Files\.move""".r
+    val offenders = for {
+      (f, ls) <- lines
+      if f.getPath.contains("graft/streaming/") && f.getName != "Store.scala"
+      (line, i) <- ls.zipWithIndex if commit.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

@@ -150,10 +150,11 @@ class StreamingSpec extends AnyFunSuite {
     val mid = bounds.getLong(0) / 2 + bounds.getLong(1) / 2
     raw.filter(col("ts_us") < mid).write.parquet(s"$stage/day1")
     es.hllRefreshPass(spark, stage, ckpt, delta)
-    val pass1Files = spark.read.parquet(delta).inputFiles.toSet
+    // the delta dir is a graft.streaming.Store: one entry per batch
+    val pass1Files = graft.streaming.Store.read(spark, delta).inputFiles.toSet
     raw.filter(col("ts_us") >= mid).write.parquet(s"$stage/day2")
     es.hllRefreshPass(spark, stage, ckpt, delta)
-    val pass2 = spark.read.parquet(delta)
+    val pass2 = graft.streaming.Store.read(spark, delta)
       .withColumn("__f", input_file_name())
       .filter(!col("__f").isin(pass1Files.toSeq: _*))
     val midDay = timestamp_micros(lit(mid)).cast("date")
@@ -563,42 +564,43 @@ class StreamingSpec extends AnyFunSuite {
       "folded-store token cut diverged from the one-shot global cumsum")
   }
 
-  test("ledgerAppend releases its batch checkpoint") {
+  test("Store.put leaves no checkpoint blocks behind") {
     import spark.implicits._
     val sc = spark.sparkContext
-    val path = graft.sources.Scratch.dir("graft_ledger_release").toString
+    val path = graft.sources.Scratch.dir("graft_store_release").toString
     val entry = Seq(("web", 3L), ("code", 5L)).toDF("source", "n_docs")
     // compare id sets, not sizes: the context cleaner may drop an
     // unrelated RDD meanwhile
     val before = sc.getPersistentRDDs.keySet
-    graft.streaming.EventStreams.ledgerAppend(entry, path, 0L)
+    graft.streaming.Store.put(entry, path, 0L)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
     assert(spark.read.parquet(s"$path/b0").count() == 2)
   }
 
-  test("ledger compaction: compacted == uncompacted == one-shot, dirs bounded") {
-    // VERDICT r16 item 2 — at landing cadence (thousands of
-    // micro-batches) an uncompacted ledger's emission fold is a
-    // small-files listing problem growing with HISTORY; compaction
-    // must fold old entries into one snapshot without changing any
-    // fold result, while keeping the newest entries raw so a retried
-    // batch stays idempotent (it overwrites its own still-raw dir).
+  test("store compaction: compacted == uncompacted == one-shot, dirs bounded") {
+    // at landing cadence (thousands of micro-batches) an uncompacted
+    // store's emission fold is a small-files listing problem growing
+    // with HISTORY; compaction must fold the entries into one snapshot
+    // without changing any fold result, and a replayed batch — still
+    // an entry, or already folded — must not double-count
     import spark.implicits._
-    import graft.streaming.EventStreams
-    val base = graft.sources.Scratch.dir("graft_ledger_spec")
+    import graft.streaming.{EventStreams, Store}
+    val base = graft.sources.Scratch.dir("graft_store_compaction")
     val (cPath, uPath) = (s"$base/compacted", s"$base/plain")
-    val keep = EventStreams.LedgerKeepRecent
-    val nBatches = 5 * keep // enough appends to trigger >= 1 compaction
+    val nBatches = Store.CompactAbove + 4 // enough entries to compact once
     def entry(bid: Long) = Seq(
       ("web", 10L + bid), ("books", 2L * bid), ("code", 7L))
       .toDF("source", "n_docs")
+    def land(path: String, bid: Long, df: org.apache.spark.sql.DataFrame) = {
+      Store.put(df, path, bid)
+      Store.compact(spark, path, EventStreams.sumFold("source"))
+    }
     for (bid <- 0L until nBatches) {
-      EventStreams.ledgerAppend(entry(bid), cPath, bid,
-        compact = Some(EventStreams.sumFold(Seq("source"), Seq("n_docs"))))
-      EventStreams.ledgerAppend(entry(bid), uPath, bid)
+      land(cPath, bid, entry(bid))
+      Store.put(entry(bid), uPath, bid)
     }
     def sums(path: String) =
-      EventStreams.ledgerSums(spark, path, Seq("source"), Seq("n_docs"))
+      EventStreams.storeSums(spark, path, "source")
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val oneShot = (0L until nBatches).map(entry).reduce(_ unionByName _)
       .groupBy("source").agg(sum("n_docs").as("n_docs"))
@@ -609,16 +611,20 @@ class StreamingSpec extends AnyFunSuite {
     // threshold, and a snapshot exists once the threshold was crossed
     val names = new java.io.File(cPath).listFiles().map(_.getName)
     val raw = names.count(_.matches("b\\d+"))
-    assert(raw <= 4 * keep, s"raw ledger dirs unbounded: $raw")
-    assert(names.contains("snap"), "no snapshot after crossing the threshold")
+    assert(raw <= Store.CompactAbove, s"raw store entries unbounded: $raw")
+    assert(names.exists(_.matches("snap-\\d+")),
+      "no snapshot after crossing the threshold")
     assert(new java.io.File(uPath).listFiles()
       .count(_.getName.matches("b\\d+")) == nBatches)
     // retry idempotency: a recent (still-raw) batch replayed with the
     // same content overwrites its own entry — fold unchanged
     val lastBid = nBatches - 1L
-    EventStreams.ledgerAppend(entry(lastBid), cPath, lastBid,
-      compact = Some(EventStreams.sumFold(Seq("source"), Seq("n_docs"))))
+    land(cPath, lastBid, entry(lastBid))
     assert(sums(cPath) == oneShot, "retried batch double-counted")
+    // a batch replayed after the snapshot folded it sits at or below
+    // the snapshot id: the read ignores it — fold unchanged
+    land(cPath, 0L, entry(0L))
+    assert(sums(cPath) == oneShot, "replay of a folded batch double-counted")
     // a non-sum merge law compacts too: keyed minima (the exact-dedup
     // presence store's law) — snapshot ∪ fresh equals one-shot min
     val mPath = s"$base/minstore"
@@ -626,10 +632,11 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("norm_h", "doc_id")
     val minFold = (df: org.apache.spark.sql.DataFrame) =>
       df.groupBy("norm_h").agg(min("doc_id").as("doc_id"))
-    for (bid <- 0L until nBatches)
-      EventStreams.ledgerAppend(mEntry(bid), mPath, bid, compact = Some(minFold))
-    val gotMin = minFold(spark.read.option("recursiveFileLookup", "true")
-        .parquet(mPath))
+    for (bid <- 0L until nBatches) {
+      Store.put(mEntry(bid), mPath, bid)
+      Store.compact(spark, mPath, minFold)
+    }
+    val gotMin = minFold(Store.read(spark, mPath))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(gotMin == Map("h1" -> (100L - (nBatches - 1)), "h2" -> 50L))
   }
