@@ -8,7 +8,9 @@ package graft
   * being swallowed as fast successes; warm-up and layout-setup failures
   * go to stderr and, when there are any, to a "setup_errors" map in the
   * file sink. Per key, the file sink's "codegen" map holds the classes
-  * compiled and the seconds spent compiling them. */
+  * compiled and the seconds spent compiling them, and its "spark" map
+  * the key's Spark jobs, the most of them that ran at once and the
+  * seconds during which at least one ran (see [[JobCensus]]). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,9 +69,12 @@ object Bench {
     // (key, classes compiled, compile seconds): Janino compiles are a
     // fixed per-key cost the timings alone cannot separate from plans
     var codegen = Vector.empty[(String, Long, Double)]
+    val census = new JobCensus
+    spark.sparkContext.addSparkListener(census)
     benchQueries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      spark.sparkContext.setLocalProperty(JobCensus.Key, name)
       val (b0, h0) = graft.ops.SharedArtifacts.counters
       val f0 = graft.ops.SharedArtifacts.familyCounters
       val (c0, ct0) = compiles()
@@ -81,6 +86,7 @@ object Bench {
         times  :+= name -> -1.0
         errors :+= name -> e.getClass.getSimpleName
       }
+      spark.sparkContext.setLocalProperty(JobCensus.Key, null)
       val (c1, ct1) = compiles()
       codegen :+= ((name, c1 - c0, (ct1 - ct0) / 1e9))
       val (b1, h1) = graft.ops.SharedArtifacts.counters
@@ -147,10 +153,15 @@ object Bench {
     val cgJson = codegen.map { case (k, n, sec) =>
       s"${jstr(k)}:{${jstr("compiles")}:$n,${jstr("compile_s")}:${full(sec)}}"
     }.mkString("{", ",", "}")
+    val sparkJson = census.perKey(spark).toSeq.sortBy(_._1).map {
+      case (k, (n, conc, busy)) =>
+        s"${jstr(k)}:{${jstr("jobs")}:$n,${jstr("max_concurrent_jobs")}:$conc," +
+          s"${jstr("busy_s")}:${full(busy)}}"
+    }.mkString("{", ",", "}")
     val setupJson = if (setupErrors.isEmpty) "" else setupErrors
       .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(""","setup_errors":{""", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(full)},"errors":$es,"artifact":$ms,"families":$famJson,"codegen":$cgJson$setupJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${qjson(full)},"errors":$es,"artifact":$ms,"families":$famJson,"codegen":$cgJson,"spark":$sparkJson$setupJson,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
@@ -159,6 +170,63 @@ object Bench {
       System.err.println(s"[bench] writing $outPath failed: $e")
     }
     spark.stop()
+  }
+
+  /** Per-key Spark job census. Every job started while a key runs
+    * carries the key's name as the local property [[JobCensus.Key]]
+    * (`graft.exec.Par` branches and streaming queries inherit it), so a
+    * job that outlives its key's timed window still counts for the key.
+    * The listener keeps each job's start and end times; [[perKey]]
+    * folds them into (jobs, most jobs running at once, seconds with at
+    * least one job running). */
+  private final class JobCensus extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart}
+    private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]
+    private val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    private val marked = new java.util.concurrent.CountDownLatch(1)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(JobCensus.Key))) match {
+        case Some(JobCensus.Marker) => marked.countDown()
+        case Some(key) => starts.put(e.jobId, (key, e.time))
+        case None => ()
+      }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (starts.containsKey(e.jobId)) ends.put(e.jobId, e.time)
+
+    /** Runs one marker job and waits until the listener has seen it
+      * (the bus delivers events in order, so every earlier key job's
+      * start and end is in), then folds the recorded jobs per key. */
+    def perKey(spark: org.apache.spark.sql.SparkSession): Map[String, (Int, Int, Double)] = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(JobCensus.Key, JobCensus.Marker)
+      try spark.range(1).collect() finally sc.setLocalProperty(JobCensus.Key, null)
+      marked.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      import scala.jdk.CollectionConverters._
+      starts.asScala.toSeq.groupBy(_._2._1).map { case (key, jobs) =>
+        // +1 at each start, -1 at each end; at one instant ends go first,
+        // so back-to-back jobs do not count as concurrent. A job with no
+        // measurable length (or no end yet) adds no event
+        val events = jobs.flatMap { case (id, (_, t0)) =>
+          val t1 = ends.getOrDefault(id, t0)
+          if (t1 > t0) Seq((t0, 1), (t1, -1)) else Nil
+        }.sorted
+        var (running, most, busyMs, since) = (0, 0, 0L, 0L)
+        events.foreach { case (t, d) =>
+          if (running == 0) since = t
+          running += d
+          most = math.max(most, running)
+          if (running == 0) busyMs += t - since
+        }
+        key -> ((jobs.size, most, busyMs / 1e3))
+      }
+    }
+  }
+
+  private object JobCensus {
+    val Key = "graft.bench.key"
+    val Marker = "graft.bench.marker"
   }
 
   /** (classes compiled, nanoseconds spent compiling) by this JVM so far:

@@ -73,11 +73,8 @@ object ArrayPairs {
 
   /** Register `array_pairs(arr)` as a SQL function on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_pairs",
-      { args =>
-        require(args.length == 1, "array_pairs(arr) takes 1 argument")
-        ArrayPairs(args.head)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "array_pairs") { args =>
+      require(args.length == 1, "array_pairs(arr) takes 1 argument")
+      ArrayPairs(args.head)
+    }
 }

@@ -72,11 +72,8 @@ object CharEntropy {
 
   /** Register `char_entropy(str)` as a SQL function on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy",
-      { args =>
-        require(args.length == 1, "char_entropy(str) takes 1 argument")
-        CharEntropy(args.head)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "char_entropy") { args =>
+      require(args.length == 1, "char_entropy(str) takes 1 argument")
+      CharEntropy(args.head)
+    }
 }

@@ -79,11 +79,8 @@ object DotProduct {
 
   /** Register `dot_product(a, b)` as a SQL function on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      { args =>
-        require(args.length == 2, "dot_product(a, b) takes 2 arguments")
-        DotProduct(args(0), args(1))
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "dot_product") { args =>
+      require(args.length == 2, "dot_product(a, b) takes 2 arguments")
+      DotProduct(args(0), args(1))
+    }
 }

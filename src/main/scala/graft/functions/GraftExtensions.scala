@@ -94,6 +94,22 @@ object GraftExtensions {
     CharEntropy(args.head)
   }
 
+  /** Registers `builder` as the SQL function `name` on the session,
+    * once: a session whose registry already holds `name` (an earlier
+    * call, or the build-time extension above) is left as it is. The
+    * check and the registration are one step under the registry's own
+    * lock, so concurrent callers neither replace an entry under a
+    * sibling's analysis nor log Spark's "replaced a previously
+    * registered function". */
+  private[functions] def registerOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
+  }
+
   /** Register all custom functions on an already-built session. */
   def registerAll(spark: SparkSession): Unit = {
     RollingHash.register(spark)

@@ -66,16 +66,13 @@ object GraftHash64 {
 
   /** Register `graft_hash64(str, seedLiteral)` on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash64",
-      { args =>
-        require(args.length == 2, "graft_hash64(str, seed) takes 2 arguments")
-        val seed = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)  => v.toLong
-          case other => throw new IllegalArgumentException(s"seed must be a literal, got $other")
-        }
-        GraftHash64(args.head, seed)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "graft_hash64") { args =>
+      require(args.length == 2, "graft_hash64(str, seed) takes 2 arguments")
+      val seed = args(1) match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)  => v.toLong
+        case other => throw new IllegalArgumentException(s"seed must be a literal, got $other")
+      }
+      GraftHash64(args.head, seed)
+    }
 }

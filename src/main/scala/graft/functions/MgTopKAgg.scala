@@ -153,16 +153,13 @@ object MgTopKAgg {
 
   /** Register `mg_topk_agg(tag, c)` as a SQL aggregate on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk_agg",
-      { args =>
-        require(args.length == 2, "mg_topk_agg(tag, c) takes 2 arguments")
-        val c = args(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"capacity must be an int literal, got $other")
-        }
-        MgTopKAgg(args(0), c)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "mg_topk_agg") { args =>
+      require(args.length == 2, "mg_topk_agg(tag, c) takes 2 arguments")
+      val c = args(1) match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"capacity must be an int literal, got $other")
+      }
+      MgTopKAgg(args(0), c)
+    }
 }

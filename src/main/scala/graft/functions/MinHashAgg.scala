@@ -98,15 +98,12 @@ final case class MinHashAgg(
 object MinHashAgg {
   /** Register `minhash_agg(str, k)` as a SQL aggregate on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_agg",
-      { args =>
-        require(args.length == 2, "minhash_agg(str, k) takes 2 arguments")
-        val k = args(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-        }
-        MinHashAgg(args.head, k)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "minhash_agg") { args =>
+      require(args.length == 2, "minhash_agg(str, k) takes 2 arguments")
+      val k = args(1) match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
+      }
+      MinHashAgg(args.head, k)
+    }
 }

@@ -77,15 +77,12 @@ object RollingHash {
 
   /** Register `rolling_hash(str, k)` as a SQL function on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash",
-      { args =>
-        require(args.length == 2, "rolling_hash(str, k) takes 2 arguments")
-        val k = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-        }
-        RollingHash(args.head, k)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "rolling_hash") { args =>
+      require(args.length == 2, "rolling_hash(str, k) takes 2 arguments")
+      val k = args(1) match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
+      }
+      RollingHash(args.head, k)
+    }
 }

@@ -134,17 +134,14 @@ object Shingles {
     * order — index = token offset) as SQL functions on the session. */
   def register(spark: SparkSession): Unit = {
     def builder(name: String, distinct: Boolean): Unit =
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name,
-        { args =>
-          require(args.length == 2, s"$name(str, n) takes 2 arguments")
-          val n = args(1) match {
-            case Literal(v: Int, _) => v
-            case other => throw new IllegalArgumentException(s"n must be an int literal, got $other")
-          }
-          Shingles(args.head, n, distinct)
-        },
-        "scala_udf")
+      GraftExtensions.registerOnce(spark, name) { args =>
+        require(args.length == 2, s"$name(str, n) takes 2 arguments")
+        val n = args(1) match {
+          case Literal(v: Int, _) => v
+          case other => throw new IllegalArgumentException(s"n must be an int literal, got $other")
+        }
+        Shingles(args.head, n, distinct)
+      }
     builder("word_shingles", distinct = true)
     builder("word_shingles_seq", distinct = false)
   }

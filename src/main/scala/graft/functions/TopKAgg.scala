@@ -116,15 +116,12 @@ final case class TopKAgg(
 object TopKAgg {
   /** Register `topk_agg(v, tag, k)` as a SQL aggregate on the session. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_agg",
-      { args =>
-        require(args.length == 3, "topk_agg(v, tag, k) takes 3 arguments")
-        val k = args(2) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
-        }
-        TopKAgg(args(0), args(1), k)
-      },
-      "scala_udf")
+    GraftExtensions.registerOnce(spark, "topk_agg") { args =>
+      require(args.length == 3, "topk_agg(v, tag, k) takes 3 arguments")
+      val k = args(2) match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(s"k must be an int literal, got $other")
+      }
+      TopKAgg(args(0), args(1), k)
+    }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Duplicate-cluster resolution: connected components over a near-dup
@@ -21,12 +22,13 @@ import org.apache.spark.sql.functions._
   * mismatch). With halving, label chains shorten geometrically, so
   * maxIter = 20 covers any component a pipeline will ever meet
   * (diameter up to ~2²⁰). Each iteration is two equi-joins + one
-  * groupBy — all co-shuffled on the node id — and the iterate is cut
-  * with [[PlanBarrier.cut]] per round: lineage truncation alone is not
-  * enough, because `localCheckpoint` carries the size estimate across
-  * the boundary and the jump self-join squares it per round, blowing
-  * up driver planning geometrically past ~15 rounds (at open scale
-  * the barrier is a write to storage between iterations).
+  * groupBy, all co-shuffled on the node id, then the jump as one
+  * window per label, and the iterate is cut with [[PlanBarrier.cut]]
+  * per round: lineage truncation alone is not enough, because
+  * `localCheckpoint` carries the size estimate across the boundary and
+  * the per-round joins multiply it, blowing up driver planning
+  * geometrically past ~15 rounds (at open scale the barrier is a write
+  * to storage between iterations).
   */
 object Cluster {
 
@@ -106,20 +108,25 @@ object Cluster {
       // carry a per-row changed flag through the iterate so convergence
       // is a filter on the ALREADY-materialized table, not an extra
       // old-vs-new join per round
-      val stepped = PlanBarrier.cut( // both sides of the jump self-join
-        labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
-          .select(labels("id"),
-            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-            coalesce(col("nbr_comp") < col("comp"), lit(false)).as("chg1")))
+      val stepped = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
+        .select(labels("id"),
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
+          coalesce(col("nbr_comp") < col("comp"), lit(false)).as("chg1"))
       // pointer jumping (path halving): follow the label's own label —
-      // comp is always a node id, so the self-join is total; label
-      // chains halve per round, giving O(log diameter) convergence
-      val compOf = stepped.select(col("id").as("jid"), col("comp").as("jcomp"))
+      // comp is always a node id, so every row finds its label's row;
+      // label chains halve per round, giving O(log diameter)
+      // convergence. One pass over `stepped`: each row asks for its
+      // label's label (keyed by comp) and answers for itself (keyed by
+      // id), and a window per key hands the answer to the askers, so
+      // `stepped` needs no checkpoint for two readers (see PlanBarrier)
+      val ask = col("ask")
       val next = PlanBarrier.cut(
-        stepped.join(compOf, stepped("comp") === compOf("jid"))
-          .select(stepped("id"),
-            least(stepped("comp"), col("jcomp")).as("comp"),
-            (stepped("chg1") || col("jcomp") < stepped("comp")).as("chg")))
+        stepped.withColumn("ask", explode(array(lit(true), lit(false))))
+          .withColumn("jcomp", max(when(!ask, col("comp"))).over(
+            Window.partitionBy(when(ask, col("comp")).otherwise(col("id")))))
+          .filter(ask)
+          .select(col("id"), least(col("comp"), col("jcomp")).as("comp"),
+            (col("chg1") || col("jcomp") < col("comp")).as("chg")))
       converged = next.filter(col("chg")).limit(1).count() == 0
       labels = next.select("id", "comp")
       iter += 1
@@ -141,9 +148,15 @@ object Cluster {
     * iterate; everyone else is a singleton family by definition. Each
     * CC round's joins then run over the near-dup MINORITY, not the
     * corpus (r17: the whole-corpus iterate paid ~|corpus| per round
-    * for rows whose labels were fixed from the start). */
+    * for rows whose labels were fixed from the start).
+    *
+    * `pairs` should be materialized (a checkpoint, or a filter or
+    * projection of one), as every pair operator here returns it: the
+    * linked-id set and the iterate's forest both read it, from two
+    * stages of one job, so the edges are a projection of it rather than
+    * a lazy checkpoint of their own (see [[PlanBarrier]]). */
   def dedupClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("id1"), col("id2")).localCheckpoint(false)
+    val edges = pairs.select(col("id1"), col("id2"))
     val linked = edges.select(col("id1").as("id"))
       .unionByName(edges.select(col("id2").as("id")))
       .distinct()

@@ -136,20 +136,19 @@ object FunnelStore {
         col("n_docs"), col("sum_chars"))
 
   /** The rule quality gate's input: per-doc [[TextAnalysis.quality]] of
-    * `d`'s (doc_id, text) with its source joined back. */
+    * `d`'s (doc_id, text) with its source carried along. */
   def textQuality(d: DataFrame): DataFrame =
-    TextAnalysis.quality(d.select("doc_id", "text"))
-      .join(d.select("doc_id", "source"), "doc_id")
+    TextAnalysis.quality(d.select("doc_id", "text", "source"), carry = Seq("source"))
 
   /** The four rule×classifier agreement cells over the gate's input
-    * `gated` (doc_id, quality_score, n_chars) and the frozen
-    * classifier's margins `marg` ([[QualityClf.margins]]) as accounting
-    * rows `first` .. `first + 3` (gate_rule<r>_clf<c>); every cell is
-    * present, empty ones as zeros. */
-  def agreement(gated: DataFrame, marg: DataFrame, first: Long): DataFrame = {
+    * `gated` (quality_score, n_chars, and the frozen classifier's margin
+    * `marg` from [[QualityClf.margins]]) as accounting rows `first` ..
+    * `first + 3` (gate_rule<r>_clf<c>); every cell is present, empty
+    * ones as zeros. */
+  def agreement(gated: DataFrame, first: Long): DataFrame = {
     val spark = gated.sparkSession
     import spark.implicits._
-    val agree = gated.join(marg, "doc_id")
+    val agree = gated
       .select(when(col("quality_score") >= 0.5, 1L).otherwise(0L).as("rk"),
         when(col("marg") > 0, 1L).otherwise(0L).as("ck"), col("n_chars"))
       .groupBy("rk", "ck")
@@ -175,7 +174,9 @@ object FunnelStore {
   /** The per-source budget window: `d`'s docs ranked per source by
     * `by` descending, then doc_id, kept while the source's exclusive
     * running char sum is under 25,000 (the doc that crosses the line
-    * is kept) — (doc_id, source, n_chars, prior), checkpointed. The
+    * is kept) — (doc_id, source, n_chars, prior), checkpointed eagerly
+    * (an action: [[decontam]] reads it from two stages of one job; see
+    * [[PlanBarrier]]). The
     * prior is [[Rank.perGroupRunningSum]]'s (source, blk) two-level
     * cumsum — a plain partitionBy("source") window is one task per
     * source at scale. */
@@ -184,13 +185,15 @@ object FunnelStore {
         "source", "n_chars", Seq(col(by).desc, col("doc_id")))
       .select("doc_id", "source", "n_chars", "prior")
       .filter(col("prior") < 25000L)
-      .localCheckpoint(false)
+      .localCheckpoint(true)
 
   /** Eval decontamination over raw text: the rows of `sel` whose text
     * in `docs` (doc_id, text, ...) has 3-shingle containment below 0.5
     * against every eval stand-in (doc_id < 25, the `contamination`
-    * operator's convention), checkpointed. Shingling runs only on
-    * `sel`'s docs; [[Contamination.check]] broadcasts the bench side. */
+    * operator's convention), checkpointed eagerly. Shingling runs only
+    * on `sel`'s docs; [[Contamination.check]] broadcasts the bench side.
+    * An action: the decontam and split accounting rows read the result
+    * from two stages of one job (see [[PlanBarrier]]). */
   def decontam(sel: DataFrame, docs: DataFrame): DataFrame = {
     val flagged = Contamination.check(
         sel.select("doc_id").join(docs, "doc_id").select("doc_id", "text"),
@@ -198,7 +201,7 @@ object FunnelStore {
         n = 3, threshold = 0.5)
       .filter(col("contaminated") === 1).select("doc_id")
     sel.join(flagged, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint(true)
   }
 
   /** The leakage-safe train split: the rows of `d` whose FAMILY ROOT
@@ -278,7 +281,7 @@ object FunnelStore {
       .filter(col("shared").cast("double") / col("n_sh") >= 0.5)
       .select("doc_id").distinct()
     val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint(true) // the decontam and split rows, as in decontam
     val s7 = splitTrain(s6, families)
     val chars = col("n_chars")
     acct(0, "raw", st.meta, chars)
@@ -289,7 +292,7 @@ object FunnelStore {
       .unionByName(acct(5, "budget", s5, chars))
       .unionByName(acct(6, "decontam", s6, chars))
       .unionByName(acct(7, "split_train", s7, chars))
-      .unionByName(agreement(s3, marg, 8))
+      .unionByName(agreement(s3.join(marg, "doc_id"), 8))
       .orderBy("stage_idx")
   }
 }

@@ -23,6 +23,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * inputs (the edge list, the adjacency table) can keep plain
   * `localCheckpoint(false)`, whose honest stats remain useful to the
   * planner and are computed exactly once.
+  *
+  * A lazy checkpoint is computed by the first stage that reads it. Two
+  * stages that read it and run at once (the two sides of a join or a
+  * union, two query stages AQE materializes together) both compute it,
+  * and the later copy of each block is thrown away ("Block rdd_N_0
+  * already exists on this machine"). A table with two such readers is
+  * checkpointed eagerly (an action, before either reader starts) or
+  * rewritten to have one reader, e.g. an aggregate joined back becomes
+  * a window.
   */
 object PlanBarrier {
 

@@ -139,8 +139,9 @@ object Select {
                                 seed: Long = 37L,
                                 targetFilter: String = "lang = 'en'",
                                 ngram: Int = 1): DataFrame = {
-    val dc = docBucketCounts(docs, buckets, seed, ngram)
-      .localCheckpoint(false) // feeds raw totals, target totals, scoring
+    // feeds raw totals, target totals and scoring, from stages that run
+    // at once: eager (see PlanBarrier)
+    val dc = docBucketCounts(docs, buckets, seed, ngram).localCheckpoint(true)
     val tgtIds = docs.filter(expr(targetFilter)).select("doc_id")
     val lrw = ratioFromCounts(dc, tgtIds, buckets)
     // map-side scoring: the ratio table broadcasts, one doc-keyed re-agg

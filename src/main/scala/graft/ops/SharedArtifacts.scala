@@ -65,12 +65,16 @@ object SharedArtifacts {
   }
 
   // every memo's entries, keyed (application, family, dir@fingerprint):
-  // the artifact and the RDD ids of the frames it shared. Guarded by
-  // the object's lock, which [[memo]] holds for a whole build (lock
-  // order: SharedArtifacts, then Suffix — a build may read the
-  // corpusRanks memo, never the reverse).
+  // one slot per key, holding the artifact and the RDD ids of the
+  // frames it shared. A slot's own monitor is that key's lock, which
+  // [[memo]] holds for the key's whole build, so builds of distinct
+  // keys run at once. Lock order: a build takes the locks of the
+  // artifacts it reads (always in dependency order, e.g. clusters →
+  // substring → base), then `Suffix`'s lock; no build reads its own
+  // dependents, and `Suffix.corpusRanks` never enters a memo.
+  private final class Slot { var entry: Option[(Any, Seq[Int])] = None }
   private val entries =
-    scala.collection.mutable.HashMap.empty[(String, String, String), (Any, Seq[Int])]
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), Slot]
 
   /** The one memo body of the cross-query artifacts: the artifact of
     * `family` for the corpus at `dir` is built at most once per
@@ -79,24 +83,29 @@ object SharedArtifacts {
     * into a sweep-exempt shared checkpoint, counts it eagerly (call it
     * in dependency order) and records its RDD id. A served call counts
     * one hit; an entry with any shared RDD swept or unpersisted is
-    * rebuilt instead of read. */
+    * rebuilt instead of read. Callers of one key serialize on that
+    * key's lock (the second waits for the first's build and counts a
+    * hit); callers of distinct keys do not wait for each other. */
   def memo[T](s: SparkSession, dir: String, family: String)
-             (build: (DataFrame => DataFrame) => T): T = synchronized {
+             (build: (DataFrame => DataFrame) => T): T = {
     val sc = s.sparkContext
-    val key = (sc.applicationId, family, dir + "@" + corpusFingerprint(dir))
-    entries.get(key) match {
-      case Some((v, rdds)) if rdds.forall(sc.getPersistentRDDs.contains) =>
-        noteHit(family); v.asInstanceOf[T]
-      case _ =>
-        val rdds = Seq.newBuilder[Int]
-        val v = build { df =>
-          val (cp, id) = checkpoint(df, family)
-          cp.count()
-          rdds += id
-          cp
-        }
-        entries(key) = (v, rdds.result())
-        v
+    val slot = entries.getOrElseUpdate(
+      (sc.applicationId, family, dir + "@" + corpusFingerprint(dir)), new Slot)
+    slot.synchronized {
+      slot.entry match {
+        case Some((v, rdds)) if rdds.forall(sc.getPersistentRDDs.contains) =>
+          noteHit(family); v.asInstanceOf[T]
+        case _ =>
+          val rdds = Seq.newBuilder[Int]
+          val v = build { df =>
+            val (cp, id) = checkpoint(df, family)
+            cp.count()
+            rdds += id
+            cp
+          }
+          slot.entry = Some((v, rdds.result()))
+          v
+      }
     }
   }
 

@@ -233,17 +233,17 @@ object Suffix {
   /** One doubling round: r_2k(p) = id of (r_k(p), r_k(p+k)).
     * r2(p) = r(p + k): the same table shifted left by k and re-keyed,
     * so the lookup is a co-keyed equi-join; past-the-end pads to -1
-    * (gpos representatives are >= 1, so the pad can never collide). */
+    * (gpos representatives are >= 1, so the pad can never collide).
+    * The new id, the min gpos per (r, r2), is a window over the one
+    * pass of the paired table, which therefore needs no checkpoint
+    * (see [[PlanBarrier]]). */
   private def doubleOnce(ranks: DataFrame, k: Int): DataFrame = {
     val shifted = ranks.select(col("doc_id"),
       (col("pos") - k).as("pos"), col("r").as("r2"))
-    val paired = PlanBarrier.cut(
-      ranks.join(shifted, Seq("doc_id", "pos"), "left")
-        .select(col("doc_id"), col("pos"), col("gpos"), col("r"),
-          coalesce(col("r2"), lit(-1L)).as("r2")))
-    val ids = paired.groupBy("r", "r2").agg(min("gpos").as("nr"))
-    paired.join(ids, Seq("r", "r2"))
-      .select(col("doc_id"), col("pos"), col("gpos"), col("nr").as("r"))
+    ranks.join(shifted, Seq("doc_id", "pos"), "left")
+      .withColumn("r2", coalesce(col("r2"), lit(-1L)))
+      .select(col("doc_id"), col("pos"), col("gpos"),
+        min("gpos").over(Window.partitionBy("r", "r2")).as("r"))
   }
 
   /** CONTINUES the doubling chain from an already-materialized level
@@ -294,14 +294,13 @@ object Suffix {
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
     // qualifying L-gram starts (>= spanLen tokens remain in-doc); their
-    // rank is the exact L-gram identity, so df >= 2 means duplicated
-    val starts = ranks.join(lens, "doc_id")
+    // rank is the exact L-gram identity, so df >= 2 means duplicated.
+    // The rank frequency is a window over the starts, so they have one
+    // reader and need no checkpoint (see PlanBarrier)
+    val flags = ranks.join(lens, "doc_id")
       .filter(col("pos") + spanLen <= col("n_toks"))
-      .select("doc_id", "pos", "r")
-      .localCheckpoint(false) // feeds the rank-frequency count AND the flags
-    val dupRanks = starts.groupBy("r").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("r")
-    val flags = starts.join(dupRanks, Seq("r"), "left_semi")
+      .withColumn("c", count(lit(1)).over(Window.partitionBy("r")))
+      .filter(col("c") >= 2)
       .select(col("doc_id"), col("pos"), lit(1).as("dup"))
     // coverage: position p is covered iff a duplicated start exists in
     // [p-L+1, p] — a per-doc running window max, never a global sort

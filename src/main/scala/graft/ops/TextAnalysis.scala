@@ -98,11 +98,14 @@ object TextAnalysis {
   }
 
   /** Quality scoring: length, punctuation/whitespace ratio, stopword
-    * ratio, duplicate-token ratio, and a blended score in [0,1]. */
-  def quality(docs: DataFrame): DataFrame = {
+    * ratio, duplicate-token ratio, and a blended score in [0,1]; the
+    * `carry` columns of `docs` pass through unchanged, between the
+    * ratios and the score. */
+  def quality(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     val stop = array(markers.head._2.map(lit): _*) // EN stopwords
-    docs.select(col("doc_id"), col("text"), toks.as("toks"))
-      .select(
+    val kept = carry.map(col)
+    docs.select(Seq(col("doc_id"), col("text"), toks.as("toks")) ++ kept: _*)
+      .select(Seq(
         col("doc_id"),
         length(col("text")).as("n_chars"),
         size(col("toks")).as("n_tokens"),
@@ -112,7 +115,7 @@ object TextAnalysis {
         round(size(filter(col("toks"), t => array_contains(stop, t)))
           .cast("double") / size(col("toks")), 4).as("stopword_ratio"),
         round(lit(1.0) - size(array_distinct(col("toks")))
-          .cast("double") / size(col("toks")), 4).as("dup_ratio"))
+          .cast("double") / size(col("toks")), 4).as("dup_ratio")) ++ kept: _*)
       // dup weight is 0.4, not 0.5: a 4dp ratio × 0.4 never produces an
       // exact trailing-5 decimal, so Spark (HALF_UP on the decimal) and
       // DuckDB (round on the binary double) agree at 4dp

@@ -1644,36 +1644,32 @@ object PipelineQueries {
     // accounting schema is v1's (stage_idx, stage, n_docs, sum_chars),
     // stage_idx BIGINT.
     "pipeline_e2e_v2" -> ((s, dir) => {
-      // raw → exact dedup → substring survivors from the shared
-      // capstone prelude (one build serves pipeline_e2e/v2/v4)
-      val (docs, s1, s2) = CapstonePrelude.withSubstring(s, dir)
-      // stage 3: near-dup family collapse over the substring survivors
-      // (shared artifact — v2/v4/v3-fast-path make the identical call)
-      val clusters = CapstonePrelude.clusters(s, dir)
-      val s3 = FunnelStore.familyRoots(s2, clusters)
+      // raw → exact dedup → substring survivors → families, and the
+      // per-doc gate input and classifier margins over s2, from the
+      // shared capstone prelude (one build serves v2/v4/v3-fast-path)
+      val pre = CapstonePrelude.overlapped(s, dir)
+      val (docs, s1, s2) = (pre.docs, pre.s1, pre.s2)
+      // stage 3: near-dup family collapse over the substring survivors,
+      // as their per-doc rows (n_chars is the text length)
+      val s3 = FunnelStore.familyRoots(pre.perDoc, pre.clusters)
       // stage 4: rule gate; the frozen learned gate scores the SAME
       // population for the agreement audit
-      val q = FunnelStore.textQuality(s3)
-        .localCheckpoint(false) // gate filter AND the agreement rollup
-      val s4 = q.filter(col("quality_score") >= 0.5)
+      val s4 = s3.filter(col("quality_score") >= 0.5)
         .localCheckpoint(false)
-      val marg = graft.ops.QualityClf.margins(
-        graft.ops.QualityClf.features(s3.select("doc_id", "text")),
-        CapstonePrelude.clfFull(s, dir)._2)
       // stages 5-7: v1's budget selection, decontamination, family split
       val s5 = FunnelStore.budget(s4, "quality_score")
       val s6 = FunnelStore.decontam(s5, docs)
-      val s7 = FunnelStore.splitTrain(s6, clusters)
+      val s7 = FunnelStore.splitTrain(s6, pre.clusters)
       val text = length(col("text"))
       FunnelStore.acct(0, "raw", docs, text)
         .unionByName(FunnelStore.acct(1, "exact_dedup", s1, text))
         .unionByName(FunnelStore.acct(2, "substring_dedup", s2, text))
-        .unionByName(FunnelStore.acct(3, "near_dedup", s3, text))
+        .unionByName(FunnelStore.acct(3, "near_dedup", s3, col("n_chars")))
         .unionByName(FunnelStore.acct(4, "quality", s4, col("n_chars")))
         .unionByName(FunnelStore.acct(5, "budget", s5, col("n_chars")))
         .unionByName(FunnelStore.acct(6, "decontam", s6, col("n_chars")))
         .unionByName(FunnelStore.acct(7, "split_train", s7, col("n_chars")))
-        .unionByName(FunnelStore.agreement(q, marg, 8))
+        .unionByName(FunnelStore.agreement(s3, 8))
         .orderBy("stage_idx")
     }),
 
@@ -1696,33 +1692,33 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
         .select("doc_id", "text", "source", "lang")
         .localCheckpoint(false)
-      val s0 = docs.filter(
-          regexp_count(col("text"), lit(PiiEmailRe)) +
-            regexp_count(col("text"), lit(PiiIpRe)) +
-            regexp_count(col("text"), lit(PiiPhoneRe)) === 0)
-        .localCheckpoint(false)
-      // quarantine emptiness is one bounded count; when NOTHING drops,
-      // the dedup chain downstream is BY CONSTRUCTION v2's over the
-      // same corpus (ScaleOpsSpec pins v3 stages 2-5 == v2 stages 1-4),
-      // so the shared prelude/cluster artifacts substitute for a
+      val pii = regexp_count(col("text"), lit(PiiEmailRe)) +
+        regexp_count(col("text"), lit(PiiIpRe)) +
+        regexp_count(col("text"), lit(PiiPhoneRe))
+      val s0 = docs.filter(pii === 0).localCheckpoint(false)
+      // quarantine emptiness is one short-circuiting job; when NOTHING
+      // drops, the dedup chain downstream is BY CONSTRUCTION v2's over
+      // the same corpus (ScaleOpsSpec pins v3 stages 2-5 == v2 stages
+      // 1-4), so the shared overlapped prelude substitutes for a
       // private rebuild — adaptive reuse, exact by the emptiness check.
       // Otherwise the same stage functions run over the quarantine
       // survivors (a row subset of the corpus, as substringSurvivors
       // requires)
-      val (s1, s2, clusters) =
-        if (s0.count() == docs.count()) {
-          val (_, ps1, ps2) = CapstonePrelude.withSubstring(s, dir)
-          (ps1, ps2, CapstonePrelude.clusters(s, dir))
-        } else {
+      val pre =
+        if (docs.filter(pii > 0).isEmpty) CapstonePrelude.overlapped(s, dir)
+        else {
           val p1 = CapstonePrelude.exactDedup(s0).localCheckpoint(false)
           val p2 = CapstonePrelude.substringSurvivors(s, dir, p1)
             .localCheckpoint(false)
-          (p1, p2, CapstonePrelude.families(p2).localCheckpoint(false))
+          CapstonePrelude.Prelude(docs, p1, p2,
+            CapstonePrelude.families(p2).localCheckpoint(false),
+            CapstonePrelude.perDoc(p2, CapstonePrelude.clfFull(s, dir)._2))
         }
-      val s3 = FunnelStore.familyRoots(s2, clusters)
-      val q = FunnelStore.textQuality(s3)
-        .localCheckpoint(false) // gate filter AND the agreement rollup
-      val s4 = q.filter(col("quality_score") >= 0.5)
+      val (s1, s2, clusters) = (pre.s1, pre.s2, pre.clusters)
+      // the family roots' per-doc rows: the gate filter AND the
+      // agreement rollup
+      val s3 = FunnelStore.familyRoots(pre.perDoc, clusters)
+      val s4 = s3.filter(col("quality_score") >= 0.5)
         .localCheckpoint(false) // feeds the DSIR train AND the join back
       val ranked = graft.ops.Select.dsirRanked(
         s4.select("doc_id").join(docs, "doc_id")
@@ -1732,9 +1728,6 @@ object PipelineQueries {
         .filter(col("rnk") <= expr("n_s4 div 2")).select("doc_id")
         .join(s4, "doc_id")
         .localCheckpoint(false)
-      val marg = graft.ops.QualityClf.margins(
-        graft.ops.QualityClf.features(s3.select("doc_id", "text")),
-        CapstonePrelude.clfFull(s, dir)._2)
       val s5 = FunnelStore.budget(s45, "quality_score")
       val s6 = FunnelStore.decontam(s5, docs)
       val s7 = FunnelStore.splitTrain(s6, clusters)
@@ -1743,13 +1736,13 @@ object PipelineQueries {
         .unionByName(FunnelStore.acct(1, "pii_scrub", s0, text))
         .unionByName(FunnelStore.acct(2, "exact_dedup", s1, text))
         .unionByName(FunnelStore.acct(3, "substring_dedup", s2, text))
-        .unionByName(FunnelStore.acct(4, "near_dedup", s3, text))
+        .unionByName(FunnelStore.acct(4, "near_dedup", s3, col("n_chars")))
         .unionByName(FunnelStore.acct(5, "quality", s4, col("n_chars")))
         .unionByName(FunnelStore.acct(6, "dsir_select", s45, col("n_chars")))
         .unionByName(FunnelStore.acct(7, "budget", s5, col("n_chars")))
         .unionByName(FunnelStore.acct(8, "decontam", s6, col("n_chars")))
         .unionByName(FunnelStore.acct(9, "split_train", s7, col("n_chars")))
-        .unionByName(FunnelStore.agreement(q, marg, 10))
+        .unionByName(FunnelStore.agreement(s3, 10))
         .orderBy("stage_idx")
     }),
 
@@ -1770,24 +1763,24 @@ object PipelineQueries {
     // the overlap of the two selected sets — the head-to-head readout.
     "pipeline_e2e_v4" -> ((s, dir) => {
       // shared prelude: raw → exact dedup → substring survivors (both
-      // branches consume the survivors)
-      val (docs, s1, s2) = CapstonePrelude.withSubstring(s, dir)
-      // per-doc quality over the SHARED substring survivors — the hard
-      // branch filters it post-collapse, the soft branch directly
-      val q = FunnelStore.textQuality(s2).localCheckpoint(false)
+      // branches consume the survivors) and their families; its
+      // per-doc quality over the substring survivors — the hard branch
+      // filters it post-collapse, the soft branch directly (the
+      // classifier margins in those rows go unread here)
+      val pre = CapstonePrelude.overlapped(s, dir)
+      val (docs, s1, s2, q) = (pre.docs, pre.s1, pre.s2, pre.perDoc)
       // HARD: v2's family collapse (the shared artifact) + rule gate +
       // quality-ordered budget
-      val s3h = FunnelStore.familyRoots(s2, CapstonePrelude.clusters(s, dir))
-      val s4h = q.join(s3h.select("doc_id"), "doc_id")
-        .filter(col("quality_score") >= 0.5)
+      val s3h = FunnelStore.familyRoots(q, pre.clusters)
+      val s4h = s3h.filter(col("quality_score") >= 0.5)
         .localCheckpoint(false)
       val s5h = FunnelStore.budget(s4h, "quality_score")
       // SOFT: the dedup_soft_weights algebra over the same survivors
-      val ex = Dedup.shingleSets(s2.select("doc_id", "text"), 8)
+      // each gram's DF is a window over the one pass of the exploded
+      // grams, so they need no checkpoint for two readers (PlanBarrier)
+      val per = Dedup.shingleSets(s2.select("doc_id", "text"), 8)
         .select(col("doc_id"), explode(col("sh")).as("g"))
-        .localCheckpoint(false)
-      val dft = ex.groupBy("g").agg(count(lit(1)).as("df"))
-      val per = ex.join(dft, "g")
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_grams"), sum("df").as("sum_df"))
       val swt = s2.select("doc_id").join(per, Seq("doc_id"), "left")
@@ -1807,7 +1800,7 @@ object PipelineQueries {
       FunnelStore.acct(0, "raw", docs, text)
         .unionByName(FunnelStore.acct(1, "exact_dedup", s1, text))
         .unionByName(FunnelStore.acct(2, "substring_dedup", s2, text))
-        .unionByName(FunnelStore.acct(3, "hard_near_dedup", s3h, text))
+        .unionByName(FunnelStore.acct(3, "hard_near_dedup", s3h, col("n_chars")))
         .unionByName(FunnelStore.acct(4, "hard_quality", s4h, col("n_chars")))
         .unionByName(FunnelStore.acct(5, "hard_budget", s5h, col("n_chars")))
         .unionByName(FunnelStore.acct(6, "soft_quality", s4s, col("n_chars")))

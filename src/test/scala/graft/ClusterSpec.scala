@@ -9,6 +9,21 @@ class ClusterSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
 
+  test("dedupClusters computes no checkpoint from two stages at once") {
+    // the edges were a lazy checkpoint read by the linked-id set and the
+    // forest, and each round's stepped labels one read by both sides of
+    // the jump self-join; the pairs arrive materialized and the jump is
+    // a window over one pass
+    val docs = Tables.documents(spark, sf)
+    val pairs = Dedup.ngramJaccard(docs)
+    val twice = StageReads.overlapping(spark) {
+      val fam = Cluster.dedupClusters(docs, pairs)
+      assert(fam.filter(col("doc_id") =!= col("cluster_id")).count() > 0,
+        "no near-dup family in the fixture")
+    }
+    assert(twice.isEmpty, s"computed by two stages at once: $twice")
+  }
+
   test("connected components: chain, clique, and singleton resolve to min ids") {
     // components: {1,2,3,4} (a path — needs propagation across hops),
     // {10,11,12} (a triangle), {99} (isolated)

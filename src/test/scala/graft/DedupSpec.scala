@@ -35,6 +35,54 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("the funnel's budget and decontam stages return materialized tables") {
+    // each is read from two stages of one job (decontam reads the budget
+    // twice; the decontam and split rows read decontam's output), and a
+    // lazy checkpoint was computed by both; the eager one is computed
+    // once, before any reader starts
+    import graft.ops.FunnelStore
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val docs = Tables.documents(spark, sf).select("doc_id", "text", "source")
+    val q = FunnelStore.textQuality(docs)
+    var budget: DataFrame = null
+    val twice = StageReads.overlapping(spark) {
+      budget = FunnelStore.budget(q, "quality_score")
+      val s6 = FunnelStore.decontam(budget, docs)
+      for ((name, out) <- Seq("budget" -> budget, "decontam" -> s6)) {
+        val leaf = out.queryExecution.logical match {
+          case r: LogicalRDD => r.rdd
+          case p => fail(s"$name returned an unmaterialized plan:\n$p")
+        }
+        val cached = sc.getRDDStorageInfo.find(_.id == leaf.id)
+        assert(cached.exists(i => i.numCachedPartitions == i.numPartitions),
+          s"$name's result is not materialized: $cached")
+      }
+      assert(s6.count() < budget.count(), "decontam removed nothing")
+    }
+    assert(twice.isEmpty, s"computed by two stages at once: $twice")
+  }
+
+  test("substring coverage computes no checkpoint from two stages at once") {
+    // the rank frequency of the L-gram starts is a window over their one
+    // pass; a checkpoint of the starts was read by a count and a
+    // semi-join at once. The shared-ranks path is the capstones'
+    import graft.ops.Suffix
+    val dir = java.nio.file.Files.createTempDirectory("graft_span_spec")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "documents.parquet"),
+      dir.resolve("documents.parquet"))
+    val docs = Tables.documents(spark, dir.toString).select("doc_id", "text")
+    val twice = StageReads.overlapping(spark) {
+      // a corpus key no memo has seen, so the rank chain is built here
+      val pre = Suffix.corpusRanks(docs, dir.toString)
+      val stats = Suffix.dupSpanStats(docs, spanLen = 16,
+        pre = Some((pre._1, Map(16 -> pre._2(16)))))
+      assert(stats.filter(col("dup_tokens") > 0).count() > 0,
+        "no duplicated span in the fixture")
+    }
+    assert(twice.isEmpty, s"computed by two stages at once: $twice")
+  }
+
   test("containment join equals the quadratic capped-space reference") {
     val docs = Tables.documents(spark, sf)
     val posts = Dedup.shingleSets(docs, 3)
