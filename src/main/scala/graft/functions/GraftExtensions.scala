@@ -101,7 +101,7 @@ object GraftExtensions {
     * lock, so concurrent callers neither replace an entry under a
     * sibling's analysis nor log Spark's "replaced a previously
     * registered function". */
-  private[functions] def registerOnce(spark: SparkSession, name: String)(
+  private[graft] def registerOnce(spark: SparkSession, name: String)(
       builder: Seq[Expression] => Expression): Unit = {
     val registry = spark.sessionState.functionRegistry
     registry.synchronized {

@@ -3,6 +3,7 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.PlanBarrier.Barrier
 
 /** dbt `manifest.json` → DataFrames.
   *
@@ -112,7 +113,7 @@ object Manifest {
           when(col("section") === field && col("well_formed"),
             from_json(col("raw_entity"), schema)).as(field)
         }: _*)
-      .localCheckpoint(eager = false)
+      .once("manifest.entities")
   }
 
   /** The built-in test fixture (same logical content the reference's own

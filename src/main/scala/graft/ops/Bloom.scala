@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Bloom-pruned semi-join: build a bloom filter over the (already
   * filtered) build side's join keys, pre-filter the probe side MAP-SIDE
@@ -27,23 +28,16 @@ object Bloom {
   // BloomFilterAggregate / BloomFilterMightContain are internal-only in
   // this Spark build (not on the SQL search path) — register them as
   // session functions the same way graft's own expressions are.
-  private def registerBloomFns(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      { args =>
-        require(args.length == 3, "graft_bloom_agg(key, nItems, nBits) takes 3 arguments")
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(args(0), args(1), args(2), 0, 0)
-      },
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "might_contain",
-      { args =>
-        require(args.length == 2, "might_contain(bloom, key) takes 2 arguments")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(args(0), args(1))
-      },
-      "scala_udf")
+  private[graft] def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.functions.GraftExtensions.registerOnce(spark, "graft_bloom_agg") { args =>
+      require(args.length == 3, "graft_bloom_agg(key, nItems, nBits) takes 3 arguments")
+      org.apache.spark.sql.catalyst.expressions.aggregate
+        .BloomFilterAggregate(args(0), args(1), args(2), 0, 0)
+    }
+    graft.functions.GraftExtensions.registerOnce(spark, "might_contain") { args =>
+      require(args.length == 2, "might_contain(bloom, key) takes 2 arguments")
+      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(args(0), args(1))
+    }
   }
 
   /** `might_contain(bloomBytes, key)` over a driver-collected filter. */
@@ -54,15 +48,15 @@ object Bloom {
     * set, pre-filtered by bloom then verified by the exact join. The
     * build key is aliased to a reserved name so probeKey == buildKey
     * (the common same-named-key case) never resolves ambiguously.
-    * The projected build keys are localCheckpointed ONCE so the build
+    * The projected build keys are checkpointed `once` so the build
     * side is scanned a single time even though it feeds both the bloom
-    * aggregate and the exact verify join. */
+    * aggregate (an action) and the exact verify join after it. */
   def semiJoin(probe: DataFrame, build: DataFrame,
                probeKey: String, buildKey: String,
                expectedItems: Long = 100000L, numBits: Long = 1L << 20): DataFrame = {
-    registerBloomFns(probe.sparkSession)
+    register(probe.sparkSession)
     val keys = build.select(col(buildKey).as("_bloom_build_key")).distinct()
-      .localCheckpoint(false)
+      .once("bloom.build_keys")
     val bf = keys
       .agg(call_function("graft_bloom_agg", col("_bloom_build_key"),
         lit(expectedItems), lit(numBits)).as("bf"))
@@ -76,7 +70,7 @@ object Bloom {
   def prefilter(probe: DataFrame, build: DataFrame,
                 probeKey: String, buildKey: String,
                 expectedItems: Long = 100000L, numBits: Long = 1L << 20): DataFrame = {
-    registerBloomFns(probe.sparkSession)
+    register(probe.sparkSession)
     val bf = build
       .agg(call_function("graft_bloom_agg", col(buildKey),
         lit(expectedItems), lit(numBits)).as("bf"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Duplicate-cluster resolution: connected components over a near-dup
   * pair graph, so a whole family of mutual near-duplicates collapses to
@@ -97,9 +98,9 @@ object Cluster {
     val forest = localForest(edges)
     val sym = forest
       .unionByName(forest.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
+      .once("connectedComponents.sym")
 
-    var labels = PlanBarrier.cut(nodes.select(col("id"), col("id").as("comp")))
+    var labels = nodes.select(col("id"), col("id").as("comp")).shared("connectedComponents.labels")
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -120,13 +121,13 @@ object Cluster {
       // id), and a window per key hands the answer to the askers, so
       // `stepped` needs no checkpoint for two readers (see PlanBarrier)
       val ask = col("ask")
-      val next = PlanBarrier.cut(
+      val next = (
         stepped.withColumn("ask", explode(array(lit(true), lit(false))))
           .withColumn("jcomp", max(when(!ask, col("comp"))).over(
             Window.partitionBy(when(ask, col("comp")).otherwise(col("id")))))
           .filter(ask)
           .select(col("id"), least(col("comp"), col("jcomp")).as("comp"),
-            (col("chg1") || col("jcomp") < col("comp")).as("chg")))
+            (col("chg1") || col("jcomp") < col("comp")).as("chg"))).cut("connectedComponents.next")
       converged = next.filter(col("chg")).limit(1).count() == 0
       labels = next.select("id", "comp")
       iter += 1
@@ -160,7 +161,7 @@ object Cluster {
     val linked = edges.select(col("id1").as("id"))
       .unionByName(edges.select(col("id2").as("id")))
       .distinct()
-      .localCheckpoint(false) // the iterate AND the isolated anti-join
+      .shared("dedupClusters.linked") // the iterate AND the isolated anti-join
     val families = connectedComponents(linked, edges)
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
     docs.select(col("doc_id").as("doc_id"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup => D}
+import graft.ops.PlanBarrier.Barrier
 
 /** Corpus-level training-data operators over `documents`.
   *
@@ -52,7 +53,7 @@ object Corpus {
     val tf = docs
       .select(col("doc_id"), explode(D.tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .once("tfidfTop.tf")
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n  = docs.agg(count(lit(1)).as("n_docs"))
     // degenerate-key broadcast hash join, not crossJoin: a 1-row build
@@ -79,7 +80,7 @@ object Corpus {
   def boilerplate(docs: DataFrame, n: Int = 3, minDf: Int = 5): DataFrame = {
     val sh = docs
       .select(col("doc_id"), explode(D.shingles(col("text"), n)).as("s"))
-      .localCheckpoint(false)
+      .once("boilerplate.sh")
     val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
     sh.join(df, "s")
       .groupBy("doc_id")
@@ -120,7 +121,7 @@ object Corpus {
     val ct = corpus
       .select(col("doc_id"), explode(D.tokens(col("text"))).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // feeds df, doc lengths, and the posting join
+      .shared("bm25TopK.ct") // feeds df, doc lengths, and the posting join
     val dfT = ct.groupBy("t").agg(count(lit(1)).as("df"))
     val dl = ct.groupBy("doc_id").agg(sum("tf").as("dl"))
     val tot = dl.agg(sum("dl").as("sdl"), count(lit(1)).as("nd"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Deduplication operators over a `documents(doc_id, text, ...)` table.
   *
@@ -156,8 +157,8 @@ object Dedup {
     * action: runs the bucket and pair jobs before it returns. */
   private def withBuckets(buckets: DataFrame)(
       pairsOf: DataFrame => DataFrame): DataFrame = {
-    val b = buckets.localCheckpoint(true)
-    try pairsOf(b).localCheckpoint(true)
+    val b = buckets.shared("dedup.buckets")
+    try pairsOf(b).shared("dedup.bucket_pairs")
     finally PlanBarrier.release(b)
   }
 
@@ -229,7 +230,7 @@ object Dedup {
     // r18 shape (guide §2.3): every shuffle before the verify carries
     // ids and one shingle string, never re-joined posting payloads.
     val sh = shingleSets(docs, n)
-      .localCheckpoint(false)
+      .shared("prefixFilterJaccard.sh")
     val sizes = sh.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
     // df re-attached MAP-SIDE from the posting bucket (df = bucket
     // size), so the old ex⋈df shuffle join disappears; the sizes
@@ -247,7 +248,6 @@ object Dedup {
         col("n") - expr(s"(n * $tNum + ${tDen - 1}) div $tDen") + 1)
       .select(col("doc_id"), col("s"), col("rn").cast("long").as("rn"),
         col("n"))
-      .localCheckpoint(false) // both sides of the candidate self-join
     // candidate generation with the two standard PPJoin prunes applied
     // AT the prefix join, before the pair distinct (measured r18:
     // 118,826 raw prefix-sharing pairs at sf0.1 fed the verify; the
@@ -365,7 +365,7 @@ object Dedup {
     val banded = sig.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(b, array_join(slice(col("sig"), b * rows + 1, lit(rows)), ",")))).as(Seq("band", "bh")))
-      .localCheckpoint(false)
+      .once("minhashLshIncremental.b")
     val sizes = banded.groupBy("band", "bh").agg(count(lit(1)).as("bsz"))
     val ok = banded.join(sizes, Seq("band", "bh")).filter(col("bsz") <= bucketCap)
     val newSide = ok.filter(isNew(col("doc_id")))
@@ -405,7 +405,7 @@ object Dedup {
     val banded = sig.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(b, array_join(slice(col("sig"), b * rows + 1, lit(rows)), ",")))).as(Seq("band", "bh")))
-      .localCheckpoint(false)
+      .once("signatureCandidates.b")
     val sizes = banded.groupBy("band", "bh").agg(count(lit(1)).as("bsz"))
     val ok = banded.join(sizes, Seq("band", "bh")).filter(col("bsz") <= bucketCap)
     val newSide = ok.filter(isNew(col("doc_id")))
@@ -622,7 +622,7 @@ object Dedup {
     val tf = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // feeds df and the weighted postings
+      .shared("tfidfCosine.tf") // feeds df and the weighted postings
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val dfT = Scalars.withScalar(
         tf.groupBy("term").agg(count(lit(1)).as("df")), col("term"),
@@ -635,7 +635,7 @@ object Dedup {
         round(log(col("n_docs").cast("double") / col("df")) * 1000, 0)
           .cast("long"))
       .select(col("term"), col("doc_id"), (col("tf") * col("idf_u3")).as("w"))
-      .localCheckpoint(false) // both join sides + the norm table
+      .shared("tfidfCosine.weighted") // both join sides + the norm table
     val norms = weighted.groupBy("doc_id")
       .agg(sum(col("w") * col("w")).as("nsq"))
     val pairs = weighted.select(col("term"), col("doc_id").as("id1"), col("w").as("w1"))

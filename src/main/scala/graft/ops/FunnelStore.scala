@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** The ingest funnel re-based on COMPACT PER-DOC STORES — the engine of
   * the landing-cadence capstone (`stream_pipeline_e2e`).
@@ -123,7 +124,7 @@ object FunnelStore {
       .withColumn("keep",
         coalesce(col("dup_tokens"), lit(0L)) * 5 <= col("n_tokens"))
       .drop("dup_tokens")
-      .localCheckpoint(false)
+      .once("funnel.exact")
   }
 
   /** One stage-accounting row (stage_idx BIGINT, stage, n_docs,
@@ -169,7 +170,7 @@ object FunnelStore {
   def familyRoots(d: DataFrame, families: DataFrame): DataFrame =
     d.join(families.filter(col("doc_id") === col("cluster_id"))
         .select("doc_id"), "doc_id")
-      .localCheckpoint(false)
+      .once("funnel.family_roots")
 
   /** The per-source budget window: `d`'s docs ranked per source by
     * `by` descending, then doc_id, kept while the source's exclusive
@@ -185,7 +186,7 @@ object FunnelStore {
         "source", "n_chars", Seq(col(by).desc, col("doc_id")))
       .select("doc_id", "source", "n_chars", "prior")
       .filter(col("prior") < 25000L)
-      .localCheckpoint(true)
+      .shared("funnel.budget")
 
   /** Eval decontamination over raw text: the rows of `sel` whose text
     * in `docs` (doc_id, text, ...) has 3-shingle containment below 0.5
@@ -201,7 +202,7 @@ object FunnelStore {
         n = 3, threshold = 0.5)
       .filter(col("contaminated") === 1).select("doc_id")
     sel.join(flagged, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+      .shared("funnel.decontam")
   }
 
   /** The leakage-safe train split: the rows of `d` whose FAMILY ROOT
@@ -256,7 +257,6 @@ object FunnelStore {
     // train.
     val marg = QualityClf.margins(
         st.feat.join(s2.select("doc_id"), "doc_id"), trained())
-      .localCheckpoint(false)
     // near-dup collapse over the substring survivors — forced HERE,
     // after the emission head has materialized under the caller's
     // pair+CC jobs; arrives checkpointed
@@ -273,7 +273,7 @@ object FunnelStore {
       .join(st.meta.filter(col("doc_id") < 25).select("doc_id"), "doc_id")
       .select(col("doc_id").as("bench_id"), col("s"))
     val cs = st.shingles.join(s5.select("doc_id"), "doc_id")
-      .localCheckpoint(false) // sizes AND the shared-shingle join
+      .once("funnel.shingle_sizes") // sizes AND the shared-shingle join
     val nsh = cs.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val flagged = cs.join(broadcast(bench), "s")
       .groupBy("doc_id", "bench_id").agg(count(lit(1)).as("shared"))
@@ -281,7 +281,7 @@ object FunnelStore {
       .filter(col("shared").cast("double") / col("n_sh") >= 0.5)
       .select("doc_id").distinct()
     val s6 = s5.join(flagged, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // the decontam and split rows, as in decontam
+      .shared("funnel.split_rows") // the decontam and split rows, as in decontam
     val s7 = splitTrain(s6, families)
     val chars = col("n_chars")
     acct(0, "raw", st.meta, chars)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** PageRank over an undirected pair graph (e.g. the verified near-dup
   * pairs from [[Dedup.ngramJaccard]]) — "which documents sit at the
@@ -31,21 +32,21 @@ object Graph {
     // the pair table is usually EXPENSIVE (a near-dup join); it is
     // referenced once per union side and again through deg, so
     // materialize it before fanning out
-    val p = pairs.localCheckpoint(false)
+    val p = pairs.shared("pagerank.p")
     val sym = p.select(col("id1").as("src"), col("id2").as("dst"))
       .unionByName(p.select(col("id2").as("src"), col("id1").as("dst")))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val adj = sym.join(deg, "src").localCheckpoint(false)
+    val adj = sym.join(deg, "src").once("pagerank.adj")
     // bounded driver scalar: one long (the node count), same contract as
     // the IVF centroid collect — NOT a data collect
     val n = deg.count().toDouble
-    var ranks = PlanBarrier.cut(deg.select(col("src").as("id"))
-      .withColumn("r", lit(1.0 / n)))
+    var ranks = deg.select(col("src").as("id"))
+      .withColumn("r", lit(1.0 / n)).cut("pagerank.ranks")
     for (_ <- 1 to iters) {
-      ranks = PlanBarrier.cut(adj.join(ranks, adj("src") === ranks("id"))
+      ranks = (adj.join(ranks, adj("src") === ranks("id"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("r") / col("deg")).as("m"))
-        .select(col("id"), (lit((1.0 - damping) / n) + lit(damping) * col("m")).as("r")))
+        .select(col("id"), (lit((1.0 - damping) / n) + lit(damping) * col("m")).as("r"))).cut("pagerank.ranks2")
     }
     ranks
   }
@@ -65,7 +66,7 @@ object Graph {
     * Σ d·(d−1)/2), n_triangles, clustering = 3·triangles / wedges. */
   def triangleStats(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-      .localCheckpoint(false) // feeds degrees, orientation, closing edges
+      .shared("triangleStats.e") // feeds degrees, orientation, closing edges
     val deg = e.select(col("a").as("v"))
       .unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -76,7 +77,6 @@ object Graph {
       .join(deg.select(col("v").as("b"), col("deg").as("degb")), "b")
       .select(when(fwd, col("a")).otherwise(col("b")).as("u"),
         when(fwd, col("b")).otherwise(col("a")).as("w"))
-      .localCheckpoint(false)
     val wedges = o.select(col("u"), col("w").as("v1"))
       .join(o.select(col("u"), col("w").as("v2")), "u")
       .filter(col("v1") < col("v2"))
@@ -117,17 +117,17 @@ object Graph {
     * n_edges, stable) for rounds 0..rounds, all BIGINT. */
   def kCorePeel(edges: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds must be in [1,16]: $rounds")
-    var cur = edges.select(col("a"), col("b")).localCheckpoint(false)
+    var cur = edges.select(col("a"), col("b")).shared("kCorePeel.cur")
     val states = scala.collection.mutable.ArrayBuffer(cur)
     for (_ <- 1 to rounds) {
       val keep = cur.select(col("a").as("v"))
         .unionByName(cur.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("v")
-      cur = PlanBarrier.cut(cur
+      cur = cur
         .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
+        .select(col("a"), col("b")).shared("kCorePeel.cur2")
       states += cur
     }
     val stats = states.zipWithIndex.map { case (st, r) =>
@@ -170,19 +170,19 @@ object Graph {
     * key, state exactly one row per node, lineage cut per round.
     * Output: (v, lbl) final labels. */
   def labelProp(edges: DataFrame, iters: Int = 4): DataFrame = {
-    val e = edges.select(col("a"), col("b")).localCheckpoint(false)
+    val e = edges.select(col("a"), col("b")).once("labelProp.e")
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(false) // reused every round
-    var lab = PlanBarrier.cut(sym.select(col("dst").as("v")).distinct()
-      .withColumn("lbl", col("v")))
+      .once("labelProp.sym") // reused every round
+    var lab = sym.select(col("dst").as("v")).distinct()
+      .withColumn("lbl", col("v")).cut("labelProp.lab")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("src").orderBy(col("cnt").desc, col("lbl"))
     for (_ <- 1 to iters) {
-      lab = PlanBarrier.cut(sym.join(lab, sym("dst") === lab("v"))
+      lab = sym.join(lab, sym("dst") === lab("v"))
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
         .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-        .select(col("src").as("v"), col("lbl")))
+        .select(col("src").as("v"), col("lbl")).cut("labelProp.lab2")
     }
     lab
   }
@@ -209,10 +209,10 @@ object Graph {
     * Output 1 row: (n_nodes, n_edges, assort_r 6dp). */
   def degreeAssortativity(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-      .localCheckpoint(false) // feeds degrees and both symmetrized ends
+      .once("degreeAssortativity.e") // feeds degrees and both symmetrized ends
     val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
+      .shared("degreeAssortativity.deg")
     val sym = e.select(col("a").as("s"), col("b").as("t"))
       .unionAll(e.select(col("b").as("s"), col("a").as("t")))
     val p = sym
@@ -279,7 +279,7 @@ object Graph {
     * on the (aa_u6 desc, u, v) total order. */
   def adamicAdar(edges: DataFrame, k: Int = 20): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-      .localCheckpoint(false) // feeds adjacency, degrees, the anti-join
+      .shared("adamicAdar.e") // feeds adjacency, degrees, the anti-join
     val sym = e.select(col("a").as("z"), col("b").as("n"))
       .unionAll(e.select(col("b").as("z"), col("a").as("n")))
     val deg = sym.groupBy("z").agg(count(lit(1)).as("deg"))
@@ -307,16 +307,16 @@ object Graph {
     require(seeds.columns.sameElements(Array("v")), "seeds must be a single column v")
     val sym = edges.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(false) // reused every round
-    var visited = PlanBarrier.cut(seeds.distinct()
-      .withColumn("hop", lit(0L)))
+      .once("bfsLayers.sym") // reused every round
+    var visited = seeds.distinct()
+      .withColumn("hop", lit(0L)).shared("bfsLayers.visited")
     var frontier = visited.select("v")
     for (h <- 1 to maxHops) {
-      frontier = PlanBarrier.cut(sym.join(frontier.withColumnRenamed("v", "src"), "src")
+      frontier = sym.join(frontier.withColumnRenamed("v", "src"), "src")
         .select(col("dst").as("v")).distinct()
-        .join(visited, Seq("v"), "left_anti"))
-      visited = PlanBarrier.cut(visited
-        .unionByName(frontier.withColumn("hop", lit(h.toLong))))
+        .join(visited, Seq("v"), "left_anti").shared("bfsLayers.frontier")
+      visited = visited
+        .unionByName(frontier.withColumn("hop", lit(h.toLong))).cut("bfsLayers.visited2")
     }
     visited
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** HNSW-style layered ANN, re-expressed deterministically for a
   * distributed engine.
@@ -48,16 +49,10 @@ object Hnsw {
   final case class Index(e: DataFrame, adj2: DataFrame, adj1: DataFrame,
                          adj0: DataFrame, entry: Long)
 
-  def topK(emb: DataFrame, probeFilter: Column, k: Int = 5,
-           m: Int = 6, beam: Int = 8): DataFrame =
-    search(build(emb, m), probeFilter, k, beam)
-
-  /** Builds the layer ladder + per-layer digraphs. With
-    * `materializeUppers` the single-use upper layers are also
-    * checkpointed — pay that only when the index is searched more than
-    * once (ann_hnsw_beam_sweep); a one-shot search leaves them lazy. */
-  def build(emb: DataFrame, m: Int = 6,
-            materializeUppers: Boolean = false): Index = {
+  /** Builds the layer ladder + per-layer digraphs. Every layer is
+    * checkpointed: the index is the persisted artifact that every
+    * search (and every beam width of a sweep) reads. */
+  def build(emb: DataFrame, m: Int = 6): Index = {
     val spark = emb.sparkSession
     graft.functions.DotProduct.register(spark)
     graft.functions.GraftHash64.register(spark)
@@ -72,7 +67,7 @@ object Hnsw {
       .withColumn("level",
         when(pmod(h, lit(16L)) === 0, 2).when(pmod(h, lit(4L)) === 0, 1)
           .otherwise(0))
-      .localCheckpoint(false) // feeds 3 adjacency builds + the search
+      .shared("hnsw.nodes") // feeds 3 adjacency builds + the search
 
     // per-layer bounded-degree digraph: src → its m best candidates,
     // candidates = bucket-mates under ANY of the three bucketings
@@ -116,13 +111,9 @@ object Hnsw {
         .withColumn("r", row_number().over(w)).filter(col("r") <= m)
         .select("src", "dst")
     }
-    // only the base layer is consumed twice (two L0 hops) — it alone
-    // always pays a materialization (the persisted index of a real
-    // deployment); the single-use upper layers stay lazy unless the
-    // caller will search more than once
-    def mat(df: DataFrame) = if (materializeUppers) df.localCheckpoint(false) else df
-    val (adj2, adj1) = (mat(adj(2)), mat(adj(1)))
-    val adj0 = adj(0).localCheckpoint(false)
+    val adj2 = adj(2).once("hnsw.adj2")
+    val adj1 = adj(1).once("hnsw.adj1")
+    val adj0 = adj(0).once("hnsw.adj0")
 
     // global entry: smallest vec_id on the highest populated layer —
     // a 1-row scalar, the only value that ever reaches the driver
@@ -181,7 +172,7 @@ object Hnsw {
     // join condition into a right-side-only predicate and degrade the
     // equi-join to a nested-loop product (the withScalar r8 class)
     val seed = probes.select(col("probe_id"), lit(entry).as("node"))
-      .localCheckpoint(false)
+      .once("hop.seed")
     val b2 = hop(seed, adj2, math.max(2, beam / 2))
     val b1 = hop(b2, adj1, beam)
     val b0 = hop(hop(b1, adj0, beam), adj0, beam)
@@ -208,16 +199,16 @@ object Hnsw {
     * shard). */
   def append(emb: DataFrame, shardFilter: Column, m: Int = 6,
              beam: Int = 8): Index = {
-    val ix = build(emb.filter(!shardFilter), m, materializeUppers = true)
+    val ix = build(emb.filter(!shardFilter), m)
     val eFull = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Dedup.dot(col("v"), col("v"))))
-      .localCheckpoint(false) // node table for the augmented searches
+      .shared("append.eFull") // node table for the augmented searches
     val shard = eFull.filter(shardFilter)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
         col("nrm").as("pn"))
     val attach = searchProbes(ix, shard, k = m, beam = beam)
-      .localCheckpoint(false) // feeds both edge directions
+      .once("append.attach") // feeds both edge directions
     val outE = attach
       .select(col("probe_id").as("src"), col("neighbor_id").as("dst"))
     val wIn = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
@@ -227,7 +218,7 @@ object Hnsw {
       .withColumn("r", row_number().over(wIn)).filter(col("r") <= m)
       .select("src", "dst")
     Index(eFull, ix.adj2, ix.adj1,
-      ix.adj0.unionByName(outE).unionByName(inE).localCheckpoint(false),
+      ix.adj0.unionByName(outE).unionByName(inE),
       ix.entry)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Top principal directions of an embedding set by COVARIANCE-FREE
   * power iteration — the distributed PCA primitive.
@@ -30,16 +31,16 @@ object Pca {
     * the estimated top eigenvector after `iters` rounds, as (pos, v). */
   private def iterate(x: DataFrame, iters: Int): DataFrame = {
     val d = x.agg(max("pos")).head().getInt(0) + 1 // bounded driver scalar
-    var v = PlanBarrier.cut(x.select(col("pos")).distinct()
-      .withColumn("v", lit(1.0 / math.sqrt(d.toDouble))))
+    var v = (x.select(col("pos")).distinct()
+      .withColumn("v", lit(1.0 / math.sqrt(d.toDouble)))).cut("iterate.v")
     for (_ <- 1 to iters) {
       val dots = x.join(broadcast(v), "pos")
         .groupBy("vec_id").agg(sum(col("x") * col("v")).as("dot"))
-      val w = PlanBarrier.cut(x.join(dots, "vec_id")
-        .groupBy("pos").agg(sum(col("x") * col("dot")).as("w")))
+      val w = (x.join(dots, "vec_id")
+        .groupBy("pos").agg(sum(col("x") * col("dot")).as("w"))).cut("iterate.w")
       val norm = w.agg(sqrt(sum(col("w") * col("w"))).as("norm"))
-      v = PlanBarrier.cut(Scalars.withScalar(w, col("pos"), norm, col("norm"))
-        .select(col("pos"), (col("w") / col("norm")).as("v")))
+      v = (Scalars.withScalar(w, col("pos"), norm, col("norm"))
+        .select(col("pos"), (col("w") / col("norm")).as("v"))).cut("iterate.v2")
     }
     v
   }
@@ -48,7 +49,7 @@ object Pca {
     emb.select(col("vec_id"),
         posexplode(col("embedding")).as(Seq("pos", "x")))
       .withColumn("x", col("x").cast("double"))
-      .localCheckpoint(false) // reused twice per iteration
+      .once("pca.exploded") // reused twice per iteration
 
   /** (pos, v): the estimated top eigenvector after `iters` rounds. */
   def topDirection(emb: DataFrame, iters: Int = 3): DataFrame =
@@ -70,7 +71,7 @@ object Pca {
       .join(broadcast(v1), "pos")
       .select(col("vec_id"), col("pos"),
         (col("x") - col("dot") * col("v")).as("x"))
-      .localCheckpoint(false) // the deflated table feeds iteration 2
+      .once("topTwoDirections.xd") // the deflated table feeds iteration 2
     val v2 = iterate(xd, iters)
     v1.select(col("pos"), col("v").as("c1"))
       .join(v2.select(col("pos"), col("v").as("c2")), "pos")

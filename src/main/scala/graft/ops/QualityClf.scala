@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** LEARNED quality classifier — the model-based corpus filter stage of
   * a modern LM data pipeline (the DCLM / CCNet-fastText pattern): a
@@ -104,8 +105,8 @@ object QualityClf {
                       validate: Boolean = true): (DataFrame, DataFrame) = {
     val spark = fx0.sparkSession
     import spark.implicits._
-    val fx = fx0.localCheckpoint(false)
-    val lb = lb0.localCheckpoint(false)
+    val fx = fx0.once("trainOnFeatures.fx")
+    val lb = lb0.once("trainOnFeatures.lb")
     // CONTRACT (ADVICE r15, tightened per ADVICE r16): n_misclassified
     // is derived from the b = −1 bias rows inside the per-round delta
     // reduction, so a LABELED doc missing its bias row (or carrying

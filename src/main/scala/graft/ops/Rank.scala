@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Global total-order rank WITHOUT the single-partition window — the
   * same two-level decomposition as [[Pack.sequencePack]], applied to a
@@ -84,7 +85,7 @@ object Rank {
     val parted = df
       .repartitionByRange(numBlocks, col(valueCol).desc, col(tieCol).asc)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint() // eager: pin ONE partition numbering for both consumers
+      .shared("globalRankByRange.parted") // eager: pin ONE partition numbering for both consumers
     val wIn = Window.partitionBy("__pid")
       .orderBy(col(valueCol).desc, col(tieCol).asc)
     val wBlk = Window.orderBy(col("__pid").asc)
@@ -139,7 +140,7 @@ object Rank {
     val parted = df
       .repartitionByRange(numBlocks, (col(groupCol).asc +: orderCols): _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint() // eager: pin ONE partition numbering for both consumers
+      .shared("perGroupRunningSum.parted") // eager: pin ONE partition numbering for both consumers
     val wIn = Window.partitionBy(col(groupCol), col("__pid"))
       .orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Survey-sampling allocation planners over grouped data.
   *
@@ -53,7 +54,7 @@ object Sampling {
       .withColumn("w",
         floor(sqrt((col("n_rows").cast("decimal(38,0)") * col("u"))
           .cast("double"))).cast("long"))
-      .localCheckpoint(false) // |strata| rows feed both allocation passes
+      .shared("neymanAlloc.st") // |strata| rows feed both allocation passes
 
     // largest-remainder apportionment of `budget` by integer weight;
     // all-zero weights degrade to uniform (weight 1, total |strata|)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Corpus-level DATA SELECTION operators — the step after cleaning and
   * dedup where a 100 TB raw crawl is weighted / subsampled toward a
@@ -76,7 +77,7 @@ object Select {
     val tgt = dc.join(tgtIds, "doc_id").groupBy("b").agg(sum("c").as("ct"))
     val lr = raw.join(tgt, Seq("b"), "left")
       .withColumn("ct", coalesce(col("ct"), lit(0L)))
-      .localCheckpoint(false) // tiny; pins the totals for the two scalars
+      .once("ratioFromCounts.lr") // tiny; pins the totals for the two scalars
     val totals = lr.agg(sum("ct").as("nt"), sum("cr").as("nr"))
     Scalars.withScalar(lr, col("b"), totals, col("nt"))
       .withColumn("lr",
@@ -141,7 +142,7 @@ object Select {
                                 ngram: Int = 1): DataFrame = {
     // feeds raw totals, target totals and scoring, from stages that run
     // at once: eager (see PlanBarrier)
-    val dc = docBucketCounts(docs, buckets, seed, ngram).localCheckpoint(true)
+    val dc = docBucketCounts(docs, buckets, seed, ngram).shared("dsirRanked.dc")
     val tgtIds = docs.filter(expr(targetFilter)).select("doc_id")
     val lrw = ratioFromCounts(dc, tgtIds, buckets)
     // map-side scoring: the ratio table broadcasts, one doc-keyed re-agg
@@ -174,7 +175,7 @@ object Select {
     val counts = domainBucketCounts(docs, buckets, seed)
     val perDom = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
-      .localCheckpoint(false) // the domain list anchors the dense grid
+      .once("doremi.perDom") // the domain list anchors the dense grid
     doremiFromCounts(counts, perDom, buckets, rounds, deltaDen)
   }
 
@@ -210,7 +211,7 @@ object Select {
       .join(nd, "source")
       .withColumn("p", (col("c") + 1).cast("double") / (col("n_toks") + buckets))
       .select("source", "b", "p", "n_toks")
-      .localCheckpoint(false) // grid-sized; referenced every round
+      .shared("doremiFromCounts.p") // grid-sized; referenced every round
     val nDom = perDom.count() // bounded driver pull: |domains| is tiny
     var w = perDom.select(col("source"),
       (lit(1.0) / nDom.toDouble).as("w"), lit(0.0).as("eps"))
@@ -235,12 +236,12 @@ object Select {
         .withColumn("u", col("w") * exp(col("eps")))
       val z = u.agg((sum(expr("CAST(round(u * 1e12) AS BIGINT)")) / lit(1e12))
         .as("z"))
-      w = PlanBarrier.cut(
+      w = (
         Scalars.withScalar(u, col("source"), z, col("z"))
           .withColumn("w",
             (col("u") / col("z")) * (1.0 - 1.0 / deltaDen.toDouble) +
               lit(1.0 / (deltaDen.toDouble * nDom.toDouble)))
-          .select("source", "w", "eps"))
+          .select("source", "w", "eps")).shared("doremiFromCounts.w")
     }
     perDom.join(nd, "source").join(w, "source")
       .select(col("source"), col("n_docs"), col("n_toks"),

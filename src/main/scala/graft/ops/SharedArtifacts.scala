@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftBarrier, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry of long-lived shared materializations: the cross-query
   * memos ([[memo]], the one memo body every corpus artifact uses, and
@@ -53,15 +54,19 @@ object SharedArtifacts {
     (famBuilds.keySet ++ famHits.keySet).map(k =>
       k -> (famBuilds.getOrElse(k, 0L), famHits.getOrElse(k, 0L))).toMap
 
-  /** Lazy local checkpoint (stats reset, as [[PlanBarrier.cut]]) whose
-    * persisted RDD id is registered as sweep-exempt. Returns the
-    * checkpointed frame and the id for liveness checks. */
-  def checkpoint(df: DataFrame, family: String = "shared"): (DataFrame, Int) = {
-    val (cp, id) = GraftBarrier.localCheckpointTracked(df)
+  /** Registers `cp`, a [[PlanBarrier]] `shared` checkpoint, as a
+    * sweep-exempt artifact of `family`, and returns its RDD id (read
+    * off the frame's `LogicalRDD` leaf) for liveness checks. */
+  def register(cp: DataFrame, family: String = "shared"): Int = {
+    val id = cp.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.id
+      case p => throw new IllegalArgumentException(
+        s"not a materialized shared checkpoint: ${p.nodeName}")
+    }
     ids.put(id, ())
     builds.incrementAndGet()
     bump(famBuilds, family)
-    (cp, id)
+    id
   }
 
   // every memo's entries, keyed (application, family, dir@fingerprint):
@@ -79,9 +84,9 @@ object SharedArtifacts {
   /** The one memo body of the cross-query artifacts: the artifact of
     * `family` for the corpus at `dir` is built at most once per
     * (application, corpus content) and served to every later call. On
-    * a miss `build` runs with a `share` function that turns one frame
-    * into a sweep-exempt shared checkpoint, counts it eagerly (call it
-    * in dependency order) and records its RDD id. A served call counts
+    * a miss `build` runs with a `share` function that [[register]]s
+    * one `shared` checkpoint and records its RDD id (the checkpoint is
+    * eager: build them in dependency order). A served call counts
     * one hit; an entry with any shared RDD swept or unpersisted is
     * rebuilt instead of read. Callers of one key serialize on that
     * key's lock (the second waits for the first's build and counts a
@@ -97,12 +102,7 @@ object SharedArtifacts {
           noteHit(family); v.asInstanceOf[T]
         case _ =>
           val rdds = Seq.newBuilder[Int]
-          val v = build { df =>
-            val (cp, id) = checkpoint(df, family)
-            cp.count()
-            rdds += id
-            cp
-          }
+          val v = build { cp => rdds += register(cp, family); cp }
           slot.entry = Some((v, rdds.result()))
           v
       }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Approximate-nearest-neighbor search over
   * `embeddings(vec_id, embedding: array<float>, label)`.
@@ -151,7 +152,7 @@ object Similarity {
     graft.functions.DotProduct.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(Dedup.dot(col("v"), col("v"))))
-      .localCheckpoint(false) // feeds every training + assignment pass
+      .once("lloydCurve.e") // feeds every training + assignment pass
     val states = ivfCentroidSteps(e, cells, iters, lit(true))
     val assigned = states.zipWithIndex.map { case (cents, t) =>
       val best = array_max(centroidSims(col("v"), col("nrm"), cents))
@@ -160,7 +161,7 @@ object Similarity {
           .cast("long").as(s"d_$t"))
     }
     val joined = assigned.reduce((a, b) => a.join(b, "vec_id"))
-      .localCheckpoint(false) // re-aggregated once per iteration row
+      .shared("lloydCurve.joined") // re-aggregated once per iteration row
     (0 to iters).map { t =>
       val moved =
         if (t == 0) sum(lit(0L))
@@ -330,7 +331,7 @@ object Similarity {
       .withColumn("v", transform(col("v0"), x => x / col("nrm")))
       .withColumn("bucket", bucketOf(col("v0"), planes))
       .drop("v0", "nrm")
-      .localCheckpoint(false) // feeds seed sample, Lloyd step, encode, search
+      .once("pqTopK.e") // feeds seed sample, Lloyd step, encode, search
 
     def subCol(v: Column, j: Int) = slice(v, j * sub + 1, sub)
     // nearest sub-centroid of subspace j (min L2², tie → lower code)
@@ -367,7 +368,6 @@ object Similarity {
     // a real deployment persists anyway.
     val codes0 = array((0 until m).map(j => assignCode(col("v"), j, cb0(j))): _*)
     val means = e.select(col("v"), codes0.as("codes"))
-      .localCheckpoint(false)
       .select(col("v"), posexplode(col("codes")).as(Seq("j", "code")))
       .select(col("j"), col("code"),
         posexplode(slice(col("v"), col("j") * sub + 1, lit(sub))).as(Seq("d", "x")))
@@ -383,7 +383,6 @@ object Similarity {
     // reads (vec_id, bucket, 8 codes) — the compressed index itself
     val corpus = e.select(col("vec_id"), col("bucket"),
       array((0 until m).map(j => assignCode(col("v"), j, cb1(j))): _*).as("codes"))
-      .localCheckpoint(false)
     val probes = e.filter(probeFilter)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("bucket"))
     val adc = (0 until m).map { j =>
@@ -434,7 +433,7 @@ object Similarity {
       .withColumn("nrm", sqrt(Dedup.dot(col("v0"), col("v0"))))
       .withColumn("v", transform(col("v0"), x => x / col("nrm")))
       .drop("v0", "nrm")
-      .localCheckpoint(false) // feeds seed sample, Lloyd, assign, search
+      .once("ivfPqTopK.e") // feeds seed sample, Lloyd, assign, search
 
     // argmin over centroids of cn² − 2·v·c (the v² term is constant
     // per row, so it cannot change the argmin; dropping it keeps the
@@ -470,7 +469,7 @@ object Similarity {
     val assigned = e.withColumn("cell", nearestIdx(col("v"), coarse))
       .withColumn("r", zip_with(col("v"),
         element_at(coarseLit, col("cell") + 1), (a, b) => a - b))
-      .localCheckpoint(false) // feeds residual seeds, Lloyd, encode, search
+      .once("nearestIdxs.assigned") // feeds residual seeds, Lloyd, encode, search
 
     // PQ codebooks trained on the residuals (same seed-sample + one
     // 6dp-quantized Lloyd step as pqTopK, seed fallback for empty codes)
@@ -495,7 +494,6 @@ object Similarity {
     // (see pqTopK's Lloyd-step note)
     val codes0 = array((0 until m).map(j => assignCode(col("r"), j, cb0(j))): _*)
     val rmeans = assigned.select(col("r"), codes0.as("codes"))
-      .localCheckpoint(false)
       .select(col("r"), posexplode(col("codes")).as(Seq("j", "code")))
       .select(col("j"), col("code"),
         posexplode(slice(col("r"), col("j") * sub + 1, lit(sub))).as(Seq("d", "x")))
@@ -509,7 +507,6 @@ object Similarity {
     // deployment persists; the search join reads only this
     val corpus = assigned.select(col("vec_id"), col("cell"),
       array((0 until m).map(j => assignCode(col("r"), j, cb1(j))): _*).as("codes"))
-      .localCheckpoint(false)
     val probes = assigned.filter(probeFilter)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
         explode(nearestIdxs(col("v"), coarse, nprobe)).as("cell"))

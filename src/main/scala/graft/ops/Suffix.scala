@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.PlanBarrier.Barrier
 
 /** Exact substring-level duplicate detection via DISTRIBUTED SUFFIX
   * RANKS — the true substring dedup (Lee et al. 2022, "Deduplicating
@@ -87,7 +88,7 @@ object Suffix {
     * query inside ONE session over the same parquet dir, so without
     * sharing, the family rebuilds an identical rank table per key. The
     * memo holds (positions, one rank snapshot per REQUESTED level) as
-    * SHARED localCheckpoints ([[SharedArtifacts.checkpoint]] — exempt
+    * `shared` checkpoints ([[SharedArtifacts.register]]ed — exempt
     * from Bench's per-query block sweep) built at most once per
     * (session, corpusKey); every consumer reads the SAME materialized
     * tables, so results are byte-identical to a private rebuild (rank
@@ -122,9 +123,9 @@ object Suffix {
           SharedArtifacts.noteHit("suffix_ranks"); e
         case maybe =>
           var e = maybe.getOrElse {
-            val (pos, posId) = SharedArtifacts.checkpoint(positions(docs), "suffix_ranks")
-            pos.count() // eager, in dependency order
-            RankEntry(pos, posId, Map.empty)
+            // eager, in dependency order
+            val pos = positions(docs).shared("suffix_ranks.positions")
+            RankEntry(pos, SharedArtifacts.register(pos, "suffix_ranks"), Map.empty)
           }
           val want = levels.sorted.distinct.filterNot(e.levels.contains)
           // levels BELOW every built one cannot derive from a built
@@ -142,19 +143,20 @@ object Suffix {
                 !e.levels.contains(s))).distinct.sorted
             val built = suffixRankLevels(e.pos, chainLevels, memoSeedLen)
             chainLevels.foreach { l =>
-              val (cp, id) = SharedArtifacts.checkpoint(built(l), "suffix_ranks")
-              cp.count() // eager, ascending, while chain barriers live
-              e = e.copy(levels = e.levels + (l -> (cp, id)))
+              // eager, ascending, while chain barriers live
+              val cp = built(l).shared("suffix_ranks.chain")
+              e = e.copy(levels = e.levels +
+                (l -> (cp, SharedArtifacts.register(cp, "suffix_ranks"))))
             }
           }
           // levels ABOVE a built one extend the highest built level
           // below them by log2(l/from) rounds, in ascending order
           want.filterNot(e.levels.contains).foreach { l =>
             val from = e.levels.keys.filter(_ < l).max
-            val (cp, id) = SharedArtifacts.checkpoint(
-              extendRanks(e.pos, e.levels(from)._1, from, l), "suffix_ranks")
-            cp.count()
-            e = e.copy(levels = e.levels + (l -> (cp, id)))
+            val cp = extendRanks(e.pos, e.levels(from)._1, from, l)
+              .shared("suffix_ranks.extend")
+            e = e.copy(levels = e.levels +
+              (l -> (cp, SharedArtifacts.register(cp, "suffix_ranks"))))
           }
           memo(key) = e
           e
@@ -209,9 +211,9 @@ object Suffix {
         col("doc_id") * (col("mx") + lit(2L)) + col("pos") + lit(1L))
       .select(col("doc_id"), col("pos"), col("gpos"), gram.as("g"))
     val seedIds = seeded.groupBy("g").agg(min("gpos").as("nr"))
-    var ranks = PlanBarrier.cut(
+    var ranks = 
       seeded.join(seedIds, "g")
-        .select(col("doc_id"), col("pos"), col("gpos"), col("nr").as("r")))
+        .select(col("doc_id"), col("pos"), col("gpos"), col("nr").as("r")).cut("suffixRankLevels.ranks")
     var out = Map.empty[Int, DataFrame]
     def snap(level: Int): Unit =
       if (levels.contains(level))
@@ -224,7 +226,7 @@ object Suffix {
       // level is therefore cut — snapshots included); the final level
       // is consumed only by the caller and needs no barrier
       k *= 2
-      ranks = if (k < prefixLen) PlanBarrier.cut(next) else next
+      ranks = if (k < prefixLen) next.cut("snap.ranks") else next
       snap(k)
     }
     out
@@ -258,16 +260,16 @@ object Suffix {
         prefixLen % fromLen == 0,
       s"cannot extend level $fromLen to $prefixLen")
     val maxPos = positions.agg(max("pos").as("mx"))
-    var ranks = PlanBarrier.cut(
+    var ranks = (
       Scalars.withScalar(from, col("doc_id"), maxPos, col("mx"))
         .withColumn("gpos",
           col("doc_id") * (col("mx") + lit(2L)) + col("pos") + lit(1L))
-        .select(col("doc_id"), col("pos"), col("gpos"), col("r")))
+        .select(col("doc_id"), col("pos"), col("gpos"), col("r"))).shared("extendRanks.ranks")
     var k = fromLen
     while (k < prefixLen) {
       val next = doubleOnce(ranks, k)
       k *= 2
-      ranks = if (k < prefixLen) PlanBarrier.cut(next) else next
+      ranks = if (k < prefixLen) next.cut("extendRanks.ranks2") else next
     }
     ranks.select("doc_id", "pos", "r")
   }
@@ -289,7 +291,7 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).localCheckpoint(false)
+        val p = positions(docs).once("dupSpanStats.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -352,14 +354,14 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).localCheckpoint(false)
+        val p = positions(docs).once("dupSpans.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
     val starts = ranks.join(lens, "doc_id")
       .filter(col("pos") + spanLen <= col("n_tokens"))
       .select("doc_id", "pos", "r")
-      .localCheckpoint(false) // rank-frequency count AND the dup flags
+      .shared("dupSpans.starts") // rank-frequency count AND the dup flags
     val dupRanks = starts.groupBy("r").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("r")
     val wd = Window.partitionBy("doc_id").orderBy("pos")
@@ -377,7 +379,7 @@ object Suffix {
     val idx = spans
       .withColumn("span_idx", row_number().over(wIdx).cast("long"))
       .withColumn("span_tokens", col("end_tok") - col("start_tok"))
-      .localCheckpoint(false) // emitted rows AND the per-doc cut rollup
+      .shared("dupSpans.idx") // emitted rows AND the per-doc cut rollup
     val cut = idx.groupBy("doc_id").agg(sum("span_tokens").as("cut_tokens"))
     idx.join(lens, "doc_id").join(cut, "doc_id")
       .select(col("doc_id"), col("span_idx"), col("start_tok"),
@@ -408,14 +410,14 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).localCheckpoint(false)
+        val p = positions(docs).once("applySpanRemoval.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
     val starts = ranks.join(lens, "doc_id")
       .filter(col("pos") + spanLen <= col("n_tokens"))
       .select("doc_id", "pos", "r")
-      .localCheckpoint(false) // rank-frequency count AND the dup flags
+      .once("applySpanRemoval.starts") // rank-frequency count AND the dup flags
     val dupRanks = starts.groupBy("r").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("r")
     val flags = starts.join(dupRanks, Seq("r"), "left_semi")
@@ -456,16 +458,16 @@ object Suffix {
     val (pos, byLevel) = pre match {
       case Some((p, lv)) if levels.forall(lv.contains) => (p, lv)
       case _ =>
-        val p = positions(docs).localCheckpoint(false)
+        val p = positions(docs).once("dupSpanSweep.p")
         (p, suffixRankLevels(p, levels))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
-      .localCheckpoint(false) // read by every level's start filter
+      .once("dupSpanSweep.lens") // read by every level's start filter
     val perLevel = levels.sorted.map { l =>
       val starts = byLevel(l).join(lens, "doc_id")
         .filter(col("pos") + l <= col("n_toks"))
         .select("doc_id", "pos", "r")
-        .localCheckpoint(false) // rank-frequency count AND the flags
+        .once("dupSpanSweep.starts") // rank-frequency count AND the flags
       val dupRanks = starts.groupBy("r").agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2).select("r")
       val st = starts
@@ -528,7 +530,7 @@ object Suffix {
     val spark = docs.sparkSession
     val thr = docs.agg(expr("3*(max(doc_id)+1) div 4")).head().getLong(0)
     val g = gramHashes(docs, spanLen, seed)
-      .localCheckpoint(false) // feeds the store build AND the shard scan
+      .once("substringIncremental.g") // feeds the store build AND the shard scan
     val storeDir = graft.sources.Scratch.dir("graft_substr_store_")
     g.filter(col("doc_id") < thr && col("full"))
       .select("h").distinct()
@@ -578,7 +580,7 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).localCheckpoint(false)
+        val p = positions(docs).once("dupSpanSources.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -589,7 +591,7 @@ object Suffix {
     // one row per (gram identity, source): occurrence count within it
     val srcOcc = starts.groupBy("r", "source")
       .agg(count(lit(1)).as("cs"))
-      .localCheckpoint(false) // both sides of the bounded pair join
+      .shared("dupSpanSources.srcOcc") // both sides of the bounded pair join
     val a = srcOcc.select(col("r"), col("source").as("src_a"), col("cs"))
     val b = srcOcc.select(col("r"), col("source").as("src_b"))
     a.join(b, "r")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.ops.PlanBarrier.Barrier
 
 /** Kaplan–Meier time-to-conversion over an event log.
   *
@@ -34,7 +35,7 @@ object Survival {
       date_trunc("day", col("ts")).cast("date").as("d"))
     val v = e.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("d").as("f"))
-      .localCheckpoint(false) // cohort entry: feeds the probe and the base
+      .shared("kmCurve.v") // cohort entry: feeds the probe and the base
     // conversion = first purchase ON/AFTER cohort entry (an earlier
     // purchase is outside this funnel, same rule as conversion_lag)
     val p = e.filter(col("event_type") === "purchase").join(v, "user_id")
@@ -47,7 +48,7 @@ object Survival {
         when(col("pd").isNotNull, datediff(col("pd"), col("f")))
           .otherwise(datediff(col("md"), col("f"))).cast("long").as("tu"),
         when(col("pd").isNotNull, 1L).otherwise(0L).as("conv"))
-      .localCheckpoint(false) // feeds the day table and the N scalar
+      .shared("kmCurve.ut") // feeds the day table and the N scalar
     val byTu = ut.groupBy("tu").agg(count(lit(1)).as("c"), sum("conv").as("d"))
     val n = ut.agg(count(lit(1)).as("n_users"))
     val wPrev = Window.orderBy("tu").rowsBetween(Window.unboundedPreceding, -1)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.RollingHash
+import graft.ops.PlanBarrier.Barrier
 
 /** Text-analysis operators over `documents(doc_id, text, lang, ...)`.
   *
@@ -29,10 +30,9 @@ object TextAnalysis {
     * Output: w1, w2, c12, c1, c2, pmi — (pmi desc, w1, w2) top-k. */
   def pmi(docs: DataFrame, minCount: Int = 5, k: Int = 20): DataFrame = {
     val tok = docs.select(Dedup.tokens(col("text")).as("t"))
-      .localCheckpoint(false) // one tokenize feeds unigrams + bigrams + scalars
+      .shared("pmi.tok") // one tokenize feeds unigrams + bigrams + scalars
     val uni = tok.select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // joined twice (w1 side, w2 side)
     val c12 = tok.filter(size(col("t")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(t)-1), i -> named_struct('w1', t[i-1], 'w2', t[i]))")).as("b"))
@@ -173,7 +173,7 @@ object TextAnalysis {
     * ONE doc-keyed shuffle. */
   def unigramNll(docs: DataFrame): DataFrame = {
     val tk = docs.select(col("doc_id"), explode(toks).as("t"))
-    val f = tk.groupBy("t").agg(count(lit(1)).as("c")).localCheckpoint(false)
+    val f = tk.groupBy("t").agg(count(lit(1)).as("c")).once("unigramNll.f")
     val tot = f.agg(sum("c").as("tot_toks")) // NOT "T": resolver is case-insensitive vs "t"
     val nll = Scalars.withScalar(f, col("t"), tot, col("tot_toks"))
       .withColumn("nll", -log(col("c").cast("double") / col("tot_toks")))
@@ -209,11 +209,11 @@ object TextAnalysis {
     val bg = Scalars.withScalar(
         tk.withColumn("prev", lag("t", 1).over(w)).filter(col("prev").isNotNull),
         col("doc_id"), mid, col("m"))
-      .localCheckpoint(false) // feeds train counts and the scoring join
+      .once("bigramNll.bg") // feeds train counts and the scoring join
     val trainTk = Scalars.withScalar(tk, col("doc_id"), mid, col("m"))
       .filter(col("doc_id") < col("m"))
     val c1 = trainTk.groupBy("t").agg(count(lit(1)).as("c1"))
-      .localCheckpoint(false) // prev-denominator AND backoff numerator
+      .shared("bigramNll.c1") // prev-denominator AND backoff numerator
     val tot = c1.agg(sum("c1").as("tot_toks"))
     val c2 = bg.filter(col("doc_id") < col("m"))
       .groupBy("prev", "t").agg(count(lit(1)).as("c2"))

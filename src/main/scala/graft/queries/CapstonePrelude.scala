@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.exec.Par
 import graft.ops.{Cluster, Dedup, FunnelStore, QualityClf, SharedArtifacts, Suffix}
 import graft.sources.Tables
+import graft.ops.PlanBarrier.Barrier
 
 /** The batch capstones' shared prelude (VERDICT r15 item 4): raw docs →
   * exact dedup (min doc_id per normalized text) → substring-survivor
@@ -62,8 +63,9 @@ private[graft] object CapstonePrelude {
     * stays lazy in [[withSubstring]]. */
   def base(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     SharedArtifacts.memo(s, dir, "capstone_base") { share =>
-      val docs = share(Tables.documents(s, dir).select("doc_id", "text", "source"))
-      (docs, share(exactDedup(docs)))
+      val docs = share(Tables.documents(s, dir).select("doc_id", "text", "source")
+        .shared("capstone.docs"))
+      (docs, share(exactDedup(docs).shared("capstone.exact")))
     }
 
   /** [[base]] plus the substring survivors (built at most once per
@@ -73,13 +75,13 @@ private[graft] object CapstonePrelude {
                     dir: String): (DataFrame, DataFrame, DataFrame) = {
     val (docs, s1) = base(s, dir)
     (docs, s1, SharedArtifacts.memo(s, dir, "capstone_substring")(
-      _(substringSurvivors(s, dir, s1))))
+      _(substringSurvivors(s, dir, s1).shared("capstone.substring"))))
   }
 
   /** [[families]] over [[withSubstring]]'s survivors. */
   def clusters(s: SparkSession, dir: String): DataFrame =
     SharedArtifacts.memo(s, dir, "capstone_clusters")(
-      _(families(withSubstring(s, dir)._3)))
+      _(families(withSubstring(s, dir)._3).shared("capstone.families")))
 
   /** The frozen FULL-CORPUS quality classifier (train audit, weight
     * table) — quality_clf_train, quality_clf_score, pipeline_e2e_v2
@@ -92,7 +94,8 @@ private[graft] object CapstonePrelude {
     SharedArtifacts.memo(s, dir, "quality_clf") { share =>
       val (audit, w) = QualityClf.train(
         Tables.documents(s, dir).select("doc_id", "text"))
-      (share(audit), share(w))
+      (share(audit.shared("quality_clf.audit")),
+        share(w.shared("quality_clf.weights")))
     }
 
   /** The funnel tail's per-doc stages over the substring survivors
@@ -107,7 +110,7 @@ private[graft] object CapstonePrelude {
     FunnelStore.textQuality(s2)
       .join(QualityClf.margins(
         QualityClf.features(s2.select("doc_id", "text")), weights), "doc_id")
-      .localCheckpoint(true)
+      .shared("capstone.per_doc")
 
   /** What `pipeline_e2e_v2`, `_v4` and `_v3`'s empty-quarantine path
     * read before their tails: raw docs, the exact-dedup and substring

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.ops.{Cluster, Dedup, SharedArtifacts}
+import graft.ops.PlanBarrier.Barrier
 import graft.sources.Tables
 
 /** Process-wide memo of the FULL-CORPUS near-dup family artifacts —
@@ -32,10 +33,11 @@ private[queries] object CorpusArtifacts {
     * graph + shard attachment is the operator's own story. */
   def hnswIndex(s: SparkSession, dir: String): graft.ops.Hnsw.Index =
     memo(s, dir, "hnsw_index") { share =>
-      val ix = graft.ops.Hnsw.build(Tables.embeddings(s, dir), m = 6,
-        materializeUppers = true)
-      graft.ops.Hnsw.Index(share(ix.e), share(ix.adj2), share(ix.adj1),
-        share(ix.adj0), ix.entry)
+      val ix = graft.ops.Hnsw.build(Tables.embeddings(s, dir), m = 6)
+      graft.ops.Hnsw.Index(share(ix.e.shared("hnsw_index.nodes")),
+        share(ix.adj2.shared("hnsw_index.adj2")),
+        share(ix.adj1.shared("hnsw_index.adj1")),
+        share(ix.adj0.shared("hnsw_index.adj0")), ix.entry)
     }
 
   /** Verified near-dup pairs over the full documents table —
@@ -43,13 +45,14 @@ private[queries] object CorpusArtifacts {
     * full output columns. */
   def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "neardup_pairs")(_(Dedup.ngramJaccard(
-      Tables.documents(s, dir), n = 3, threshold = 0.8, maxDF = 50)))
+      Tables.documents(s, dir), n = 3, threshold = 0.8, maxDF = 50)
+      .shared("neardup_pairs")))
 
   /** Converged CC family labels (doc_id, cluster_id) over
     * [[nearDupPairs]] for the full documents table. */
   def nearDupClusters(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "neardup_clusters")(_(Cluster.dedupClusters(
-      Tables.documents(s, dir), nearDupPairs(s, dir))))
+      Tables.documents(s, dir), nearDupPairs(s, dir)).shared("neardup_clusters")))
 
   /** The full-corpus perceptual-hash signature table —
     * `Multimodal.phashBatch(documents)` with every output column. Four
@@ -60,7 +63,8 @@ private[queries] object CorpusArtifacts {
     * (r17 — the decode is the family's dominant per-key cost). */
   def phashSigs(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "phash_sigs")(_(
-      graft.ops.Multimodal.phashBatch(Tables.documents(s, dir)).toDF()))
+      graft.ops.Multimodal.phashBatch(Tables.documents(s, dir)).toDF()
+        .shared("phash_sigs")))
 
   /** Verified radius-3 pigeonhole pairs over [[phashSigs]] — shared by
     * mm_phash_dedup (emits them) and mm_phash_families (CC over them):
@@ -68,7 +72,8 @@ private[queries] object CorpusArtifacts {
   def phashNearDupPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "phash_pairs")(_(
       graft.ops.Multimodal.phashPairsFromSigs(
-        phashSigs(s, dir).select("doc_id", "c0", "c1", "c2", "c3"))))
+        phashSigs(s, dir).select("doc_id", "c0", "c1", "c2", "c3"))
+        .shared("phash_pairs")))
 
   /** The semantic-dedup coarse assignment — `Similarity.ivfAssignWithSim`
     * on the √n-cell dial (vec_id, v, nrm, cell, cos_u4). `cell` equals
@@ -81,7 +86,8 @@ private[queries] object CorpusArtifacts {
     memo(s, dir, "sem_assigned") { share =>
       val emb = Tables.embeddings(s, dir)
       share(graft.ops.Similarity.ivfAssignWithSim(emb,
-        cells = graft.ops.Similarity.semCells(emb), lloydIters = 1))
+        cells = graft.ops.Similarity.semCells(emb), lloydIters = 1)
+        .shared("sem_assigned"))
     }
 
   /** In-cell near-dup candidate pairs over [[semAssigned]] at the
@@ -101,7 +107,8 @@ private[queries] object CorpusArtifacts {
         .withColumn("cos",
           Dedup.dot(col("v1"), col("v2")) / (col("nrm1") * col("nrm2")))
         .filter(col("cos") >= 0.30)
-        .select(col("cell"), col("id1"), col("id2"), col("cos")))
+        .select(col("cell"), col("id1"), col("id2"), col("cos"))
+        .shared("sem_pairs"))
     }
 
   /** Converged CC roots at the family's canonical 0.35 threshold —
@@ -111,5 +118,6 @@ private[queries] object CorpusArtifacts {
   def semRoots35(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "sem_roots")(_(Cluster.dedupClusters(
       semAssigned(s, dir).select(col("vec_id").as("doc_id")),
-      semPairs30(s, dir).filter(col("cos") >= 0.35).select("id1", "id2"))))
+      semPairs30(s, dir).filter(col("cos") >= 0.35).select("id1", "id2"))
+      .shared("sem_roots")))
 }

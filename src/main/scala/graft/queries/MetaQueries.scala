@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Manifest
 import graft.meta.{Glossary, Lineage, Summary}
+import graft.ops.PlanBarrier.Barrier
 
 /** §2 items 13-15: the reference's own manifest → glossary → lineage
   * pipeline, as DataFrame transforms over the built-in fixture manifest
@@ -116,7 +117,6 @@ object MetaQueries {
         .select(col("unique_id").as("dst"), explode(col("depends_on.nodes")).as("src"))
         .unionByName(Manifest.metrics(p)
           .select(col("unique_id").as("dst"), explode(col("depends_on.nodes")).as("src")))
-        .localCheckpoint(false)
       val seeds = Manifest.sources(p).select(col("unique_id").as("seed"))
         .unionByName(Manifest.nodes(p).select(col("unique_id").as("seed")))
       val h0 = seeds.select(col("seed"), col("seed").as("affected_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.metrics.{MetricCompiler => MC, MetricDef, MetricFilter}
 import graft.sources.Tables
+import graft.ops.PlanBarrier.Barrier
 
 /** §2 items 1-12: the reference's metric semantics, executed.
   *
@@ -189,7 +190,7 @@ object MetricQueries {
         .groupBy(col("cohort"),
           months_between(col("m"), col("cohort")).cast("bigint").as("months_since"))
         .agg(countDistinct("o_custkey").as("n_customers"))
-        .localCheckpoint(false)
+        .once("m_retention.r")
       // cohort size = the months_since=0 row (every member's first order
       // is in the cohort month by construction); aliased join columns —
       // a raw self-join of the same aggregate resolves trivially true
@@ -219,7 +220,7 @@ object MetricQueries {
           months_between(col("m"), col("cohort")).cast("bigint").as("months_since"))
         .agg(round(sum("o_totalprice"), 2).as("revenue"),
           countDistinct("o_custkey").as("n_active"))
-        .localCheckpoint(false) // feeds both the cells and the sizes self-join
+        .once("m_cohort_ltv.r") // feeds both the cells and the sizes self-join
       val sizes = r.filter(col("months_since") === 0)
         .select(col("cohort").as("size_cohort"), col("n_active").as("cohort_size"))
       val wc = org.apache.spark.sql.expressions.Window
@@ -244,7 +245,7 @@ object MetricQueries {
       val daily = Tables.events(s, dir)
         .select(to_date(col("ts")).as("d"), b, r)
         .groupBy("d", "bucket").agg(max("rho").as("rho"))
-        .localCheckpoint(false)
+        .once("m_sliding_distinct.daily")
       val days = daily.select(col("d").as("win_end")).distinct()
       val win = daily
         .select(explode(sequence(col("d"), date_add(col("d"), 6))).as("win_end"),
@@ -300,7 +301,7 @@ object MetricQueries {
     "m_stickiness" -> ((s, dir) => {
       val ud = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-        .localCheckpoint(false) // feeds DAU, the day dim, and WAU
+        .shared("m_stickiness.ud") // feeds DAU, the day dim, and WAU
       val dau = ud.groupBy("day").agg(count_distinct(col("user_id")).as("dau"))
       val days = ud.select(col("day").as("wday")).distinct()
       val wau = ud.select(col("user_id"),
@@ -342,7 +343,7 @@ object MetricQueries {
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_type").as("side"), b, r)
         .groupBy("side", "bucket").agg(max("rho").as("rho"))
-        .localCheckpoint(false) // feeds both per-side and union state
+        .once("m_sketch_overlap.e") // feeds both per-side and union state
       val union = e.groupBy("bucket").agg(max("rho").as("rho"))
         .withColumn("side", lit("union"))
       val est = graft.ops.HllSketch.estimate(
@@ -378,7 +379,7 @@ object MetricQueries {
       val sides = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
         .select(col("event_type").as("side"), col("user_id")).distinct()
-        .localCheckpoint(false) // feeds the sketches AND the exact audit
+        .once("m_sketch_kmv_intersect.sides") // feeds the sketches AND the exact audit
       val hs = sides
         .select(col("side"), pmod(call_function("graft_hash64",
           col("user_id").cast("string"), lit(0L)), lit(W)).as("h"))
@@ -387,7 +388,7 @@ object MetricQueries {
         .partitionBy("side").orderBy("h")
       val sk = hs.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k).drop("rn")
-        .localCheckpoint(false) // the two k-row sketches — all downstream state
+        .shared("m_sketch_kmv_intersect.sk") // the two k-row sketches — all downstream state
       val theta = sk.groupBy("side")
         .agg(count(lit(1)).as("kk"), max("h").as("mx"))
         .select(when(col("kk") < k, W).otherwise(col("mx")).as("ts"))
@@ -429,7 +430,7 @@ object MetricQueries {
       import s.implicits._
       val o = Tables.orders(s, dir).select(col("o_orderkey").as("rid"),
         Exact.cents(col("o_totalprice")).as("c"))
-        .localCheckpoint(false) // feeds the rank side AND the histogram
+        .once("sketch_quantile_vs_exact.o") // feeds the rank side AND the histogram
       val ranked = graft.ops.Rank.globalRankByRange(
         o.withColumn("vneg", -col("c")), "vneg", "rid", 64)
       val n = ranked.agg(count(lit(1)).as("n"))
@@ -547,12 +548,11 @@ object MetricQueries {
       val c = Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
       val thr = o.agg(expr("3*(max(o_orderkey)+1) div 4").as("t"))
       val ow = graft.ops.Scalars.withScalar(o, col("o_orderkey"), thr, col("t"))
-        .localCheckpoint(false)
+        .shared("m_join_incremental.ow")
       def agg(df: DataFrame) = df.join(c, df("o_custkey") === c("c_custkey"))
         .groupBy("c_nationkey")
         .agg(sum("cents").as("rev"), count(lit(1)).as("n"))
       val statePre = agg(ow.filter(col("o_orderkey") < col("t")))
-        .localCheckpoint(false) // the persisted view state a real system stores
       val deltaAgg = agg(ow.filter(col("o_orderkey") >= col("t")))
       statePre.unionByName(deltaAgg).groupBy("c_nationkey")
         .agg(sum("rev").as("revenue_c"), sum("n").as("n_orders"))
@@ -581,8 +581,8 @@ object MetricQueries {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority"))
       val thr = o.agg(expr("3*(max(o_orderkey)+1) div 4").as("t"))
       val ow = graft.ops.Scalars.withScalar(o, col("o_orderkey"), thr, col("t"))
-        .localCheckpoint(false) // the stored orders table, scanned per term
-      val lw = l.localCheckpoint(false) // the stored lineitem table
+        .shared("m_join_incremental_2s.ow") // the stored orders table, scanned per term
+      val lw = l.shared("m_join_incremental_2s.lw") // the stored lineitem table
       val rOld = ow.filter(col("o_orderkey") < col("t")).drop("t")
       val rNew = ow.filter(col("o_orderkey") >= col("t")).drop("t")
       val lOld = lw.filter(col("l_linenumber") <= 3)
@@ -592,7 +592,6 @@ object MetricQueries {
           .groupBy("o_orderpriority")
           .agg(sum("cents").as("rev"), count(lit(1)).as("n"))
       val statePre = agg(lOld, rOld)
-        .localCheckpoint(false) // the persisted view state
       statePre
         .unionByName(agg(lNew, rOld)) // ΔL ⋈ R_old
         .unionByName(agg(lOld, rNew)) // L_old ⋈ ΔR
@@ -681,7 +680,7 @@ object MetricQueries {
       val c = Tables.orders(s, dir)
         .groupBy("o_custkey")
         .agg(round(sum("o_totalprice"), 2).as("x"))
-        .localCheckpoint(false) // globalRank references its input twice
+        .once("m_gini.c") // globalRank references its input twice
       graft.ops.Rank.globalRank(c, "x", "o_custkey", blockWidth = 10000.0)
         .agg(sum("x").as("sx"), sum(col("rnk") * col("x")).as("srx"),
           count(lit(1)).as("n"))
@@ -700,33 +699,37 @@ object MetricQueries {
     // quotient per lag off exact DECIMAL(38,0) moments (m_gini rule).
     // The observation index t comes from a row_number over the BOUNDED
     // day table (gaps close up by documented choice — ACF over
-    // observations, not calendar cells); the corpus is touched once.
+    // observations, not calendar cells); the corpus is touched once,
+    // and the day table once: lag(z, k) over t pairs z_t with z_{t−k},
+    // so one aggregate carries the denominator and all 7 lag sums.
     "m_autocorr" -> ((s, dir) => {
       val d = Tables.orders(s, dir)
         .groupBy(datediff(to_date(col("o_orderdate")),
           lit("1970-01-01").cast("date")).as("dn"))
         .agg(sum(Exact.cents(col("o_totalprice"))).as("y"))
       // bounded day table: the unpartitioned windows are safe
+      val byT = org.apache.spark.sql.expressions.Window.orderBy("t")
       val z = d
         .withColumn("t", row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy("dn")).cast("long"))
         .withColumn("z", expr(
           "CAST(count(*) OVER () AS DECIMAL(38,0)) * y" +
             " - sum(CAST(y AS DECIMAL(38,0))) OVER ()"))
-        .select("t", "z")
-        .localCheckpoint(false) // feeds the denominator and 7 lag joins
-      val den = z.agg(sum(expr("z * z")).as("dz"))
-      (1 to 7).map { k =>
-        val num = z.join(
-            z.select(col("t").as("t2"), col("z").as("z2")),
-            col("t") === col("t2") + k)
-          .agg(sum(expr("z * z2")).as("num"), count(lit(1)).as("n_pairs"))
-        graft.ops.Scalars.withScalar(num, col("n_pairs"), den, col("dz"))
-          .select(lit(k.toLong).as("lag"), col("n_pairs"),
-            when(col("dz") === 0, lit(0.0d))
-              .otherwise(round(col("num").cast("double") / col("dz").cast("double"), 6))
-              .as("ac_r"))
-      }.reduce(_.unionByName(_)).orderBy("lag")
+      val lags = (1 to 7).foldLeft(z.select("t", "z")) { (t, k) =>
+        t.withColumn(s"z$k", lag(col("z"), k).over(byT))
+      }
+      lags
+        .agg(sum(expr("z * z")).as("dz"), (1 to 7).map { k =>
+          struct(lit(k.toLong).as("lag"),
+            count(when(col("t") > k, lit(1))).as("n_pairs"),
+            sum(expr(s"z * z$k")).as("num")).as(s"l$k")
+        }: _*)
+        .select(col("dz"), explode(array((1 to 7).map(k => col(s"l$k")): _*)).as("a"))
+        .select(col("a.lag").as("lag"), col("a.n_pairs").as("n_pairs"),
+          when(col("dz") === 0, lit(0.0d))
+            .otherwise(round(col("a.num").cast("double") / col("dz").cast("double"), 6))
+            .as("ac_r"))
+        .orderBy("lag")
     }),
 
     // WEEKDAY UNIFORMITY chi² (goodness-of-fit) over order counts —
@@ -790,7 +793,7 @@ object MetricQueries {
             lit("1970-01-01").cast("date")).as("last_dn"),
           count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
-        .localCheckpoint(false)
+        .once("m_rfm.c")
       val n = c.agg(count(lit(1)).as("n_cust"))
       // block width ~ value spread/32 so each dimension actually blocks
       // each ranked intermediate is checkpointed: globalRank references
@@ -799,7 +802,7 @@ object MetricQueries {
       def q(df: org.apache.spark.sql.DataFrame, v: String, w: Double, as: String) =
         graft.ops.Rank.globalRank(df, v, "o_custkey", blockWidth = w)
           .withColumn(as, expr("((rnk - 1) * 5) div n_cust + 1"))
-          .drop("rnk").localCheckpoint(false)
+          .drop("rnk").shared("m_rfm.n")
       val ranked = q(q(q(graft.ops.Scalars.withScalar(
           c, col("o_custkey"), n, col("n_cust")),
         "last_dn", 64.0, "r_q"), "n_orders", 2.0, "f_q"), "revenue", 10000.0, "m_q")
@@ -903,7 +906,7 @@ object MetricQueries {
       val ud = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("day"))
         .distinct()
-        .localCheckpoint(false) // feeds both the explode and the day dim
+        .once("m_active_users_7d.ud") // feeds both the explode and the day dim
       val days = ud.select(col("day").as("wday")).distinct()
       ud.select(col("user_id"),
           explode(sequence(col("day"), date_add(col("day"), 6))).as("wday"))

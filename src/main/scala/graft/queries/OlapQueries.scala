@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.ops.Scalars
+import graft.ops.PlanBarrier.Barrier
 
 /** §2 items 16-21: OLAP bench headliners.
   *
@@ -371,7 +372,6 @@ object OlapQueries {
         .select(col("user_id"), col("event_type"), expr("ts_ns div 1000").as("ts_us"))
       val s1 = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts_us").as("t1"))
-        .localCheckpoint(false) // feeds the purchase probe and the base count
       val lag = e.filter(col("event_type") === "purchase").join(s1, "user_id")
         .filter(col("ts_us") > col("t1"))
         .groupBy("user_id").agg(min(col("ts_us") - col("t1")).as("lag_us"))
@@ -415,7 +415,7 @@ object OlapQueries {
     "q_basket_lift" -> ((s, dir) => {
       val it = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-        .localCheckpoint(false) // feeds singles, pairs, and the order count
+        .shared("q_basket_lift.it") // feeds singles, pairs, and the order count
       val nOrders = it.agg(countDistinct(col("o")).as("n_orders"))
       val singles = it.groupBy("p").agg(count(lit(1)).as("cnt"))
       val pairs = it.select(col("o"), col("p").as("pa"))
@@ -481,7 +481,7 @@ object OlapQueries {
     "events_user_entropy" -> ((s, dir) => {
       val c = Tables.events(s, dir)
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // feeds totals and the entropy re-agg
+        .once("events_user_entropy.c") // feeds totals and the entropy re-agg
       val t = c.groupBy("user_id")
         .agg(sum("n").as("tot"), count(lit(1)).as("n_types"))
       c.join(t, "user_id")
@@ -511,7 +511,7 @@ object OlapQueries {
         .withColumn("qidx", (year(col("qtr")) * 4 + quarter(col("qtr"))).cast("bigint"))
         .withColumn("tier", ntile(4).over(w).cast("bigint"))
         .select("o_custkey", "qidx", "tier")
-        .localCheckpoint(false) // both sides of the transition self-join
+        .once("q_customer_migration.tiered") // both sides of the transition self-join
       tiered
         .join(tiered.select(col("o_custkey").as("nk"), col("qidx").as("nq"),
             col("tier").as("next_tier")),
@@ -667,15 +667,14 @@ object OlapQueries {
       // every upstream events scan re-executes per consumer
       val s1 = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts_us").as("t1"))
-        .localCheckpoint(false)
+        .once("events_funnel.s1")
       val s2 = e.filter(col("event_type") === "click").join(s1, "user_id")
         .filter(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + winUs)
         .groupBy("user_id").agg(min("ts_us").as("t2"))
-        .localCheckpoint(false)
+        .once("events_funnel.s2")
       val s3 = e.filter(col("event_type") === "purchase").join(s2, "user_id")
         .filter(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + winUs)
         .groupBy("user_id").agg(min("ts_us").as("t3"))
-        .localCheckpoint(false)
       // the three 1-row step counts combine via Scalars.withScalar
       // (broadcast hash join on a degenerate key, 1-row contract
       // enforced) — no product-join operator anywhere in the plan
@@ -706,17 +705,17 @@ object OlapQueries {
     "events_funnel_window_sweep" -> ((s, dir) => {
       val e = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), expr("ts_ns div 1000").as("ts_us"))
-        .localCheckpoint(false)
+        .shared("events_funnel_window_sweep.e")
       val s1 = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts_us").as("t1"))
-        .localCheckpoint(false)
-      val n1df = s1.agg(count(lit(1)).as("n1")).localCheckpoint(false)
+        .shared("events_funnel_window_sweep.s1")
+      val n1df = s1.agg(count(lit(1)).as("n1"))
       Seq(1L, 6L, 24L).map { hrs =>
         val winUs = hrs * 3600L * 1000000L
         val s2 = e.filter(col("event_type") === "click").join(s1, "user_id")
           .filter(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + winUs)
           .groupBy("user_id").agg(min("ts_us").as("t2"))
-          .localCheckpoint(false)
+          .shared("events_funnel_window_sweep.s2")
         val s3 = e.filter(col("event_type") === "purchase").join(s2, "user_id")
           .filter(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + winUs)
           .groupBy("user_id").agg(min("ts_us").as("t3"))
@@ -766,7 +765,7 @@ object OlapQueries {
         .filter(col("o_orderdate") >= lit("1995-03-01").cast("timestamp") &&
                 col("o_orderdate") < lit("1995-04-01").cast("timestamp"))
         .select(col("o_custkey").as("k")).distinct()
-        .localCheckpoint(false) // feeds the bit sets AND the membership join
+        .once("bloom_fpr_audit.build") // feeds the bit sets AND the membership join
       // (m, r, pos) probe positions of a key — 3 widths × 3 seeds in
       // one generator, a single pass over whichever side explodes
       def positions(kc: org.apache.spark.sql.Column) =
@@ -776,7 +775,7 @@ object OlapQueries {
               lit(201L + r)), lit(m)).as("pos"))): _*))
       val bits = build.select(positions(col("k")).as("e"))
         .select(col("e.m").as("m"), col("e.pos").as("pos")).distinct()
-        .localCheckpoint(false) // tiny: ≤ 3·|B| rows per width
+        .shared("bloom_fpr_audit.bits") // tiny: ≤ 3·|B| rows per width
       val bitCounts = bits.groupBy("m").agg(count(lit(1)).as("n_bits_set"))
       val probed = Tables.customer(s, dir)
         .select(col("c_custkey").as("k"))
@@ -995,7 +994,7 @@ object OlapQueries {
       val p = e.filter(col("event_type") === "purchase")
         .select(col("event_id").as("pid"), col("user_id"),
           col("ts_us").as("pts"), col("value"))
-        .localCheckpoint(false)
+        .once("events_attribution_linear.p")
       val t = e.filter(col("event_type") =!= "purchase")
         .select(col("user_id"), col("event_type").as("touch_type"),
           col("ts_us").as("tts"))
@@ -1005,7 +1004,7 @@ object OlapQueries {
       val matched = pb.join(tb, Seq("user_id", "b"))
         .filter(col("tts") <= col("pts") && col("tts") > col("pts") - winUs)
         .select("pid", "value", "touch_type")
-        .localCheckpoint(false)
+        .shared("events_attribution_linear.matched")
       val counts = matched.groupBy("pid").agg(count(lit(1)).as("nt"))
       // §5: value/nt is a rational of integers (cents over touch
       // count), so float accumulation of the shares sits on round(·,2)
@@ -1087,7 +1086,7 @@ object OlapQueries {
         .select("p_partkey")
       val l = Tables.lineitem(s, dir).select("l_partkey", "l_quantity", "l_extendedprice")
       val lp = l.join(promo, col("l_partkey") === col("p_partkey"))
-        .localCheckpoint(false)
+        .shared("q17_small_qty.lp")
       val avgq = lp.groupBy(col("l_partkey").as("a_partkey"))
         .agg(sum(col("l_quantity").cast("long")).as("sumq"),
           count(lit(1)).as("nq"))
@@ -1175,12 +1174,12 @@ object OlapQueries {
         .filter(col("prev").isNotNull)
         .groupBy(col("prev").as("src"), col("event_type").as("dst"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .once("events_markov_stationary.tc")
       val rs = tc.groupBy("src").agg(sum("c").as("tot"))
       val p = tc.join(broadcast(rs), "src")
         .withColumn("p_u6", expr("(2*c*1000000 + tot) div (2*tot)"))
         .select("src", "dst", "p_u6")
-        .localCheckpoint(false)
+        .once("events_markov_stationary.p")
       val states = Tables.events(s, dir).select(col("event_type").as("st")).distinct()
       val nSt = states.agg(count(lit(1)).as("s"))
       val pi0 = graft.ops.Scalars.withScalar(states, col("st"), nSt, col("s"))
@@ -1375,7 +1374,7 @@ object OlapQueries {
         .groupBy(col("l_suppkey"))
         .agg(Exact.u4Dollars(sum(Exact.rev4(col("l_extendedprice"), col("l_discount"))))
           .as("total_revenue"))
-        .localCheckpoint(false)
+        .once("q15_top_supplier.rev")
       val mx = rev.agg(max("total_revenue").as("max_revenue"))
       Scalars.withScalar(rev, col("l_suppkey"), mx, col("max_revenue"))
         .filter(col("total_revenue") === col("max_revenue"))
@@ -1435,7 +1434,7 @@ object OlapQueries {
         .groupBy("l_partkey")
         .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("value"))
         .withColumn("vc", round(col("value") * 10000, 0).cast("decimal(28,0)"))
-        .localCheckpoint(false)
+        .once("q11_concentration.pr")
       val tot = pr.agg(sum("value").as("total"), sum("vc").as("total_c"),
         count(lit(1)).as("nparts"))
       Scalars.withScalar(pr, col("l_partkey"), tot, col("total"))
@@ -1475,11 +1474,11 @@ object OlapQueries {
     "events_lifecycle" -> ((s, dir) => {
       val ud = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-        .localCheckpoint(false) // feeds classify, churn, and the max-day scalar
+        .once("events_lifecycle.ud") // feeds classify, churn, and the max-day scalar
       val w = Window.partitionBy("user_id").orderBy("d")
       val c = ud.withColumn("prev", lag("d", 1).over(w))
         .withColumn("nxt", lead("d", 1).over(w))
-        .localCheckpoint(false) // classify + churn both read it
+        .once("events_lifecycle.c") // classify + churn both read it
       val act = c.groupBy("d").agg(
         sum(when(col("prev").isNull, 1L).otherwise(0L)).as("n_new"),
         sum(when(col("prev") === date_sub(col("d"), 1), 1L).otherwise(0L))
@@ -1627,9 +1626,9 @@ object OlapQueries {
         .groupBy("o_custkey")
         .agg(round(sum("o_totalprice"), 2).as("x"))
         .withColumn("xc", round(col("x") * 100, 0).cast("decimal(28,0)"))
-        .localCheckpoint(false)
+        .shared("m_pareto.c")
       val ranked = graft.ops.Rank.globalRank(c, "x", "o_custkey", blockWidth = 10000.0)
-        .localCheckpoint(false)
+        .shared("m_pareto.ranked")
       val wIn = Window.partitionBy("blk").orderBy("rnk")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wBlk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
@@ -1731,7 +1730,7 @@ object OlapQueries {
       val cnt = graft.ops.Scalars.withScalar(e, col("dn"), b, col("mid"))
         .withColumn("g", when(col("dn") <= col("mid"), 1L).otherwise(2L))
         .groupBy("g", "user_id").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // feeds both top-k lists and the backfills
+        .shared("events_topk_churn.cnt") // feeds both top-k lists and the backfills
       val top = graft.ops.TopK.perGroup(cnt, Seq(col("g")),
         Seq(col("n").desc, col("user_id")), k, "rk")
       val g1 = top.filter(col("g") === 1)
@@ -1781,7 +1780,7 @@ object OlapQueries {
         .groupBy(col("event_type"),
           datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).as("dn"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint(false) // bounded; feeds itself twice shifted
+        .shared("events_naive_backtest.d") // bounded; feeds itself twice shifted
       val j = d
         .join(d.select(col("event_type"), (col("dn") + 1).as("dn"),
           col("y").as("y1")), Seq("event_type", "dn"))
@@ -1866,7 +1865,7 @@ object OlapQueries {
         .agg(sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("x"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
         .withColumn("one", lit(1))
-        .localCheckpoint(false) // bounded day table feeds both pair sides
+        .once("events_kendall_tau.d") // bounded day table feeds both pair sides
       d.select(col("one"), col("dn").as("t"), col("x").as("x1"),
           col("y").as("y1"))
         .join(d.select(col("one"), col("dn").as("u"), col("x").as("x2"),
@@ -1959,7 +1958,7 @@ object OlapQueries {
         .withColumn("zy", expr("CAST(count(*) OVER () AS DECIMAL(38,0)) * y" +
           " - sum(CAST(y AS DECIMAL(38,0))) OVER ()"))
         .select("dn", "zx", "zy")
-        .localCheckpoint(false) // feeds the denominators and 15 lag joins
+        .shared("events_crosscorr.z") // feeds the denominators and 15 lag joins
       val den = z.agg(sum(expr("zx * zx")).as("dx"), sum(expr("zy * zy")).as("dy"))
       (-7 to 7).map { k =>
         val num = z.select(col("dn"), col("zx"))
@@ -1992,7 +1991,7 @@ object OlapQueries {
         .groupBy(col("event_type"),
           datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).as("dn"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint(false) // bounded day table feeds 3 consumers
+        .shared("events_theil_sen.d") // bounded day table feeds 3 consumers
       val p = d.select(col("event_type"), col("dn").as("d1"), col("y").as("y1"))
         .join(d.select(col("event_type"), col("dn").as("d2"), col("y").as("y2")),
           Seq("event_type"))
@@ -2165,7 +2164,7 @@ object OlapQueries {
       val ud = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
         .distinct()
-        .localCheckpoint(false) // both self-join sides read this once
+        .once("events_cooccurrence.ud") // both self-join sides read this once
       val a = ud.select(col("user_id"), col("day"), col("event_type").as("t1"))
       val b = ud.select(col("user_id"), col("day"), col("event_type").as("t2"))
       a.join(b, Seq("user_id", "day")).filter(col("t1") < col("t2"))
@@ -2207,7 +2206,7 @@ object OlapQueries {
       val ps = Tables.lineitem(s, dir)
         .groupBy("l_partkey", "l_suppkey")
         .agg(sum("l_quantity").as("qty"))
-        .localCheckpoint(false)
+        .once("q20_excess.ps")
       val pt = ps.groupBy("l_partkey")
         .agg(sum("qty").as("total_qty"), count(lit(1)).as("n_supp"))
       ps.join(pt, "l_partkey")
@@ -2348,7 +2347,7 @@ object OlapQueries {
         .select(col("price_c"), col("m.size").as("size"), col("m.n_parts").as("n_parts"))
         // runningMax consumes its input twice (rows + block offsets);
         // materialize the tiny per-price table so part scans once
-        .localCheckpoint(false)
+        .shared("q_skyline.perPrice")
       graft.ops.Rank.runningMax(perPrice, "price_c", "size")
         .filter(col("size") === col("run_max"))
         .groupBy("size")
@@ -2566,7 +2565,7 @@ object OlapQueries {
           when(pmod(call_function("graft_hash64",
             col("user_id").cast("string"), lit(17L)), lit(2L)) === 0, "A")
             .otherwise("B"))
-        .localCheckpoint(false)
+        .shared("events_ab_cuped.u")
       val g = u.agg(count(lit(1)).as("n"),
         sum("x").as("sx"), sum("y").as("sy"),
         sum(expr("x*y")).as("sxy"), sum(expr("x*x")).as("sxx"),
@@ -2649,7 +2648,7 @@ object OlapQueries {
           (epochDay - lit(lo)).as("x"),
           Exact.cents(col("value")).as("c"))
         .withColumn("period", when(col("x") < cutRel, "pre").otherwise("post"))
-        .localCheckpoint(false) // feeds the cell aggregate AND the trend series
+        .shared("events_did.base") // feeds the cell aggregate AND the trend series
       val perArm = base.groupBy("arm").agg(
           coalesce(sum(when(col("period") === "pre", 1L)), lit(0L)).as("n_pre"),
           coalesce(sum(when(col("period") === "post", 1L)), lit(0L)).as("n_post"),
@@ -2675,7 +2674,7 @@ object OlapQueries {
             | ELSE ((2*num*10000 + den) div (2*den)) END AS BIGINT)""".stripMargin))
       val joined = perArm
         .join(trend.select(col("arm"), col("slope_pre_u4")), Seq("arm"), "left")
-        .localCheckpoint(false) // feeds the summary aggregate AND the emission
+        .once("events_did.joined") // feeds the summary aggregate AND the emission
       val st = joined.agg(
         sum(when(col("arm") === "T", col("delta_c"))).as("d_t"),
         sum(when(col("arm") === "C", col("delta_c"))).as("d_c"),
@@ -2727,7 +2726,7 @@ object OlapQueries {
         .withColumn("conv_u4", expr("(2*n_conv*10000 + n_users) div (2*n_users)"))
         // the 2-row arm table feeds both the summary aggregate and the
         // emission join — materialize so events scans once
-        .localCheckpoint(false)
+        .once("events_ab_readout.ag")
       val st = ag.agg(
         sum(when(col("arm") === "A", col("n_users"))).as("na"),
         sum(when(col("arm") === "B", col("n_users"))).as("nb"),
@@ -3020,15 +3019,15 @@ object OlapQueries {
         .withColumn("t",
           expr("total div p + CASE WHEN idx <= total % p THEN 1 ELSE 0 END"))
         .withColumn("delta", col("n") - col("t"))
-        .localCheckpoint(false) // feeds donors, receivers, and the S scalar
+        .once("layout_rebalance_plan.parts") // feeds donors, receivers, and the S scalar
       val donors = parts.filter(col("delta") > 0)
         .withColumn("pos", coalesce(sum("delta").over(pre), lit(0L)))
         .select(lit(0L).as("k"), col("pos"), col("part").as("from_part"))
-        .localCheckpoint(false) // boundary union + as-of right side
+        .once("layout_rebalance_plan.donors") // boundary union + as-of right side
       val recvs = parts.filter(col("delta") < 0)
         .withColumn("pos", coalesce(sum(-col("delta")).over(pre), lit(0L)))
         .select(lit(0L).as("k"), col("pos"), col("part").as("to_part"))
-        .localCheckpoint(false)
+        .once("layout_rebalance_plan.recvs")
       val stot = parts.agg(
         sum(when(col("delta") > 0, col("delta")).otherwise(0L)).as("s"))
       val segs = graft.ops.Scalars.withScalar(
@@ -3069,7 +3068,7 @@ object OlapQueries {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), expr("ts_ns div 1000").as("ts_us"),
           col("user_id"))
-        .localCheckpoint(false) // ranked twice, once per layout
+        .once("layout_skipping_audit.ev") // ranked twice, once per layout
       val tot = ev.agg(count(lit(1)).as("n_total"))
       def manifest(orderCol: String, layout: String) =
         graft.ops.Scalars.withScalar(
@@ -3082,7 +3081,7 @@ object OlapQueries {
           .withColumn("layout", lit(layout))
       val man = manifest("ts_us", "linear")
         .unionByName(manifest("user_id", "clustered"))
-        .localCheckpoint(false) // metadata-sized: feeds sizes + the probe replay
+        .shared("layout_skipping_audit.man") // metadata-sized: feeds sizes + the probe replay
       val hits = man
         .withColumn("probe_uid", explode(expr("sequence(1L, 20L)")))
         .filter(col("probe_uid") >= col("u_min") &&
@@ -3190,7 +3189,7 @@ object OlapQueries {
         t = t.select(col("o_orderkey"), col("ck"), col("dayidx"), col("z"),
           expr(dE).as("d"), expr(xE).as("x"), expr(yE).as("y"))
       val base = t.select("o_orderkey", "ck", "dayidx", "z", "d")
-        .localCheckpoint(false) // 16 derived steps feed TWO rank passes
+        .shared("layout_hilbert_audit.base") // 16 derived steps feed TWO rank passes
       val n = base.agg(count(lit(1)).as("n_tot"))
       def files(vcol: String, name: String): DataFrame =
         Scalars.withScalar(

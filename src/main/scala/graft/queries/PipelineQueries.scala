@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.{Cluster, Dedup, FunnelStore, Multimodal, Rank, Scalars, Similarity, TextAnalysis, TopK}
 import graft.sources.Tables
+import graft.ops.PlanBarrier.Barrier
 
 /** §2 items 22-34: the LLM-training-data-pipeline operator families
   * (dedup, similarity search, text analysis, multimodal plumbing) over
@@ -76,7 +77,7 @@ object PipelineQueries {
     "dedup_threshold_sweep" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val sig = Dedup.minhashSignatures(docs, n = 3, k = 128)
-        .localCheckpoint(false)
+        .once("dedup_threshold_sweep.sig")
       val cands = Dedup.lshCandidates(docs, n = 3, k = 128, bands = 16,
         rawBandKey = true)
       val matches = expr(
@@ -85,7 +86,6 @@ object PipelineQueries {
         .join(sig.select(col("doc_id").as("id1"), col("sig").as("sig1")), "id1")
         .join(sig.select(col("doc_id").as("id2"), col("sig").as("sig2")), "id2")
         .select(col("id1"), col("id2"), matches.as("m"))
-        .localCheckpoint(false) // one score pass feeds all three thresholds
       val nDocs = docs.agg(countDistinct("doc_id").as("n_docs"))
       val swept = scored
         .select(col("id1"), col("id2"), col("m"),
@@ -153,7 +153,7 @@ object PipelineQueries {
     "dedup_lsh_scurve" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val sig = Dedup.minhashSignatures(docs, n = 3, k = 128)
-        .localCheckpoint(false)
+        .once("dedup_lsh_scurve.sig")
       val cands = Dedup.lshCandidates(docs, n = 3, k = 128, bands = 32,
         rawBandKey = true)
       def fired(b: Int): Column = { val r = 128 / b
@@ -181,13 +181,12 @@ object PipelineQueries {
 
     "dedup_minhash_calib" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val sig = Dedup.minhashSignatures(docs, n = 3, k = 128).localCheckpoint(false)
+      val sig = Dedup.minhashSignatures(docs, n = 3, k = 128).once("dedup_minhash_calib.sig")
       // rawBandKey: the calibration output IS the candidate set, so
       // bucket on raw band strings (matching the oracle) — a band-hash
       // collision would surface as a row mismatch here, with no
       // downstream jaccard filter to absorb it
       val cands = Dedup.lshCandidates(docs, n = 3, k = 128, bands = 16, rawBandKey = true)
-        .localCheckpoint(false)
       val sets = Dedup.shingleSets(docs, 3)
       val est = expr(
         "aggregate(zip_with(sig1, sig2, (a, b) -> if(a = b, 1, 0)), 0, (acc, x) -> acc + x)")
@@ -340,7 +339,7 @@ object PipelineQueries {
       val cont = CorpusArtifacts.nearDupClusters(s, dir)
         .join(docs.select(col("doc_id"), col("source")), "doc_id")
         .groupBy("cluster_id", "source").agg(count(lit(1)).as("n_fl"))
-        .localCheckpoint(false) // contingency feeds all three rollups
+        .shared("dedup_cluster_purity.cont") // contingency feeds all three rollups
       val perF = cont.groupBy("cluster_id")
         .agg(sum("n_fl").as("n_f"), max("n_fl").as("max_fl"))
       val aggF = perF.agg(count(lit(1)).as("n_families"),
@@ -591,7 +590,7 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, dir)
       val truth = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 10)
         .select(col("probe_id"), col("neighbor_id"), col("rank").as("rt"))
-        .localCheckpoint(false)
+        .shared("emb_recall_vs_k.truth")
       val cand = Similarity.ivfTopK(emb, col("vec_id") < 10, k = 10)
         .select(col("probe_id"), col("neighbor_id"), col("rank").as("rc"))
       val np = truth.agg(countDistinct("probe_id").as("n_probes"))
@@ -685,7 +684,7 @@ object PipelineQueries {
       val cand = Similarity.lshTopK(emb, col("vec_id") < 10, k = 5)
         .select(col("probe_id"), col("neighbor_id").as("cid"),
           expr("CAST(round(cos * 10000, 0) AS BIGINT)").as("rel_u4"))
-        .localCheckpoint(false) // feeds three picks AND the pairwise sims
+        .shared("emb_mmr_diversify.cand") // feeds three picks AND the pairwise sims
       val nv = emb
         .select(col("vec_id").as("cid"),
           col("embedding").cast("array<double>").as("v"))
@@ -701,7 +700,6 @@ object PipelineQueries {
         .select(col("probe_id"), col("i"), col("j"),
           expr("CAST(round(dot_product(vi, vj) / (ni * nj) * 10000, 0)" +
             " AS BIGINT)").as("s_u4"))
-        .localCheckpoint(false) // reused by picks 2 and 3
       def top1(df: DataFrame, score: Column): DataFrame = df
         .withColumn("__rk", row_number().over(Window.partitionBy("probe_id")
           .orderBy(score.desc, col("cid"))))
@@ -783,7 +781,7 @@ object PipelineQueries {
       val assigned = Similarity.ivfAssign(emb, cells = 8,
           buildFilter = col("vec_id") < thr)
         .select("vec_id", "cell")
-        .localCheckpoint(false) // feeds both gen counts AND the drift rollup
+        .shared("ann_lifecycle_e2e.buildFilter") // feeds both gen counts AND the drift rollup
       def stage(idx: Int, name: String, value: DataFrame): DataFrame =
         value.select(lit(idx.toLong).as("stage_idx"), lit(name).as("stage"),
           col("value").cast("bigint").as("value"))
@@ -804,7 +802,7 @@ object PipelineQueries {
             |  div (2*CAST(t1 AS DECIMAL(38,0))*t2*(n_gen1 + n_gen2))
             |  AS BIGINT)""".stripMargin))
         .agg(sum("chi2_cell_u4").cast("bigint").as("value"))
-        .localCheckpoint(false) // feeds the drift row AND the decision row
+        .shared("ann_lifecycle_e2e.chiTot") // feeds the drift row AND the decision row
       val s2 = stage(2, "drift_check", chiTot)
       val s3 = stage(3, "retrain_decision", chiTot.select(
         when(col("value") > 243200L, 1L).otherwise(0L).as("value")))
@@ -863,7 +861,7 @@ object PipelineQueries {
     "emb_matryoshka_recall" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .localCheckpoint(false)
+        .shared("emb_matryoshka_recall.e")
       def topk(d: Int): DataFrame = {
         val vd = if (d == 64) col("v") else slice(col("v"), 1, d)
         val ed = e.select(col("vec_id"), vd.as("vd"))
@@ -878,7 +876,7 @@ object PipelineQueries {
           .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
           .select(col("probe_id"), col("vec_id"))
       }
-      val full = topk(64).localCheckpoint(false)
+      val full = topk(64)
       Seq(64, 32, 16).map { d =>
         full.join(topk(d), Seq("probe_id", "vec_id"))
           .agg(count(lit(1)).as("n_hits"))
@@ -988,7 +986,6 @@ object PipelineQueries {
       val e = Tables.events(s, dir).select(col("user_id").cast("string").as("k"))
       val state = e.select(posexplode(buckets).as(Seq("r", "bucket")))
         .groupBy("r", "bucket").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false)
       val top = Tables.events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("exact_n"))
         .orderBy(col("exact_n").desc, col("user_id")).limit(10)
@@ -1150,7 +1147,7 @@ object PipelineQueries {
       val ex = Tables.embeddings(s, dir).select(col("vec_id"), col("label"),
           posexplode(col("embedding")).as(Seq("pos", "v")))
         .withColumn("v", col("v").cast("double"))
-        .localCheckpoint(false) // feeds the centroids and the scoring join
+        .once("emb_label_confusion.ex") // feeds the centroids and the scoring join
       val cent = ex.groupBy(col("label").as("clabel"), col("pos"))
         .agg(avg("v").as("c"))
       val scored = ex.join(broadcast(cent), Seq("pos"))
@@ -1255,7 +1252,6 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, dir)
       val brute = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
         .select(col("probe_id"), col("neighbor_id"))
-        .localCheckpoint(false) // shared ground truth across the sweep
       Seq(4, 6, 8).map { p =>
         val lsh = Similarity.lshTopK(emb, col("vec_id") < 10, k = 5,
             numPlanes = p)
@@ -1282,7 +1278,6 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, dir)
       val brute = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
         .select(col("probe_id"), col("neighbor_id"))
-        .localCheckpoint(false) // shared ground truth across the sweep
       Seq(4, 8, 16).map { cells =>
         val ivf = Similarity.ivfTopK(emb, col("vec_id") < 10, k = 5,
             cells = cells, nprobe = math.max(1, cells / 4))
@@ -1349,7 +1344,6 @@ object PipelineQueries {
       val ix = CorpusArtifacts.hnswIndex(s, dir)
       val brute = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
         .select(col("probe_id"), col("neighbor_id"))
-        .localCheckpoint(false) // shared ground truth across the sweep
       Seq(4, 8, 16).map { beam =>
         val hw = graft.ops.Hnsw.search(ix, col("vec_id") < 10, k = 5, beam = beam)
           .select(col("probe_id").as("hp"), col("neighbor_id").as("hn"))
@@ -1601,11 +1595,11 @@ object PipelineQueries {
       val (docs, s1) = CapstonePrelude.base(s, dir)
       // the family table is reused by BOTH stage 2 (root filter) and
       // stage 6 (family-root split hash) — checkpoint once
-      val clusters = CapstonePrelude.families(s1).localCheckpoint(false)
+      val clusters = CapstonePrelude.families(s1).once("pipeline_e2e.clusters")
       val s2 = FunnelStore.familyRoots(s1, clusters)
       val s3 = FunnelStore.textQuality(s2)
         .filter(col("quality_score") >= 0.5)
-        .localCheckpoint(false)
+        .once("pipeline_e2e.s3")
       val s4 = FunnelStore.budget(s3, "quality_score")
       // stage 5: eval decontamination — the selected docs are shingle-
       // checked against the eval stand-ins; containment ≥ 0.5 is cut
@@ -1655,7 +1649,7 @@ object PipelineQueries {
       // stage 4: rule gate; the frozen learned gate scores the SAME
       // population for the agreement audit
       val s4 = s3.filter(col("quality_score") >= 0.5)
-        .localCheckpoint(false)
+        .once("pipeline_e2e_v2.s4")
       // stages 5-7: v1's budget selection, decontamination, family split
       val s5 = FunnelStore.budget(s4, "quality_score")
       val s6 = FunnelStore.decontam(s5, docs)
@@ -1691,11 +1685,11 @@ object PipelineQueries {
       import graft.ops.TextAnalysis.{PiiEmailRe, PiiIpRe, PiiPhoneRe}
       val docs = Tables.documents(s, dir)
         .select("doc_id", "text", "source", "lang")
-        .localCheckpoint(false)
+        .once("pipeline_e2e_v3.docs")
       val pii = regexp_count(col("text"), lit(PiiEmailRe)) +
         regexp_count(col("text"), lit(PiiIpRe)) +
         regexp_count(col("text"), lit(PiiPhoneRe))
-      val s0 = docs.filter(pii === 0).localCheckpoint(false)
+      val s0 = docs.filter(pii === 0)
       // quarantine emptiness is one short-circuiting job; when NOTHING
       // drops, the dedup chain downstream is BY CONSTRUCTION v2's over
       // the same corpus (ScaleOpsSpec pins v3 stages 2-5 == v2 stages
@@ -1707,11 +1701,11 @@ object PipelineQueries {
       val pre =
         if (docs.filter(pii > 0).isEmpty) CapstonePrelude.overlapped(s, dir)
         else {
-          val p1 = CapstonePrelude.exactDedup(s0).localCheckpoint(false)
+          val p1 = CapstonePrelude.exactDedup(s0).once("pipeline_e2e_v3.p1")
           val p2 = CapstonePrelude.substringSurvivors(s, dir, p1)
-            .localCheckpoint(false)
+            .once("pipeline_e2e_v3.p2")
           CapstonePrelude.Prelude(docs, p1, p2,
-            CapstonePrelude.families(p2).localCheckpoint(false),
+            CapstonePrelude.families(p2).once("pipeline_e2e_v3.p22"),
             CapstonePrelude.perDoc(p2, CapstonePrelude.clfFull(s, dir)._2))
         }
       val (s1, s2, clusters) = (pre.s1, pre.s2, pre.clusters)
@@ -1719,7 +1713,7 @@ object PipelineQueries {
       // agreement rollup
       val s3 = FunnelStore.familyRoots(pre.perDoc, clusters)
       val s4 = s3.filter(col("quality_score") >= 0.5)
-        .localCheckpoint(false) // feeds the DSIR train AND the join back
+        .once("pipeline_e2e_v3.s4") // feeds the DSIR train AND the join back
       val ranked = graft.ops.Select.dsirRanked(
         s4.select("doc_id").join(docs, "doc_id")
           .select("doc_id", "lang", "text"))
@@ -1727,7 +1721,7 @@ object PipelineQueries {
       val s45 = Scalars.withScalar(ranked, col("doc_id"), nS4, col("n_s4"))
         .filter(col("rnk") <= expr("n_s4 div 2")).select("doc_id")
         .join(s4, "doc_id")
-        .localCheckpoint(false)
+        .once("pipeline_e2e_v3.s45")
       val s5 = FunnelStore.budget(s45, "quality_score")
       val s6 = FunnelStore.decontam(s5, docs)
       val s7 = FunnelStore.splitTrain(s6, clusters)
@@ -1773,7 +1767,7 @@ object PipelineQueries {
       // quality-ordered budget
       val s3h = FunnelStore.familyRoots(q, pre.clusters)
       val s4h = s3h.filter(col("quality_score") >= 0.5)
-        .localCheckpoint(false)
+        .once("pipeline_e2e_v4.s4h")
       val s5h = FunnelStore.budget(s4h, "quality_score")
       // SOFT: the dedup_soft_weights algebra over the same survivors
       // each gram's DF is a window over the one pass of the exploded
@@ -1793,7 +1787,7 @@ object PipelineQueries {
           round(col("quality_score") * 10000).cast("bigint"))
         .join(swt, "doc_id")
         .withColumn("prio", col("qu4") * col("weight_u4"))
-        .localCheckpoint(false)
+        .once("pipeline_e2e_v4.s4s")
       val s5s = FunnelStore.budget(s4s, "prio")
       val overlap = s5s.join(s5h.select("doc_id"), "doc_id")
       val text = length(col("text"))
@@ -1917,7 +1911,7 @@ object PipelineQueries {
     "text_langid_confusion" -> ((s, dir) => {
       val cell = TextAnalysis.langId(Tables.documents(s, dir))
         .groupBy("lang", "predicted").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // feeds the totals AND the cells
+        .once("text_langid_confusion.cell") // feeds the totals AND the cells
       val tot = cell.groupBy("lang").agg(sum("n").as("n_lang"))
       cell.join(broadcast(tot), "lang")
         .withColumn("share_u4", expr("(2*10000L*n + n_lang) div (2*n_lang)"))
@@ -2053,7 +2047,7 @@ object PipelineQueries {
         .select(explode(Dedup.tokens(col("text"))).as("term"),
           col("doc_id"), col("lang"))
         .distinct()
-        .localCheckpoint(false) // feeds per-(term,lang) cells AND per-term dfs
+        .shared("text_chi2_terms.post") // feeds per-(term,lang) cells AND per-term dfs
       val cell = post.groupBy("term", "lang").agg(count(lit(1)).as("a"))
       val df = post.groupBy("term").agg(count(lit(1)).as("df"))
         .where(col("df") >= 5)
@@ -2091,7 +2085,6 @@ object PipelineQueries {
     "seq_pack_sweep" -> ((s, dir) => {
       val p = graft.ops.Pack.sequencePack(Tables.documents(s, dir))
         .select("doc_id", "n_tokens", "cum_before")
-        .localCheckpoint(false) // one prefix-sum pass feeds all budgets
       p.select(col("n_tokens"), col("cum_before"),
           explode(array(lit(512L), lit(1024L), lit(2048L))).as("max_tokens"))
         .groupBy("max_tokens")
@@ -2158,7 +2151,7 @@ object PipelineQueries {
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(w)-1), i -> named_struct('w1', w[i-1], 'w2', w[i]))")).as("b"))
         .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-        .localCheckpoint(false) // feeds the counts AND the scoring join
+        .shared("text_perplexity.bg") // feeds the counts AND the scoring join
       val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("n12"))
       val c1  = bg.groupBy("w1").agg(count(lit(1)).as("n1"))
       val v   = toks.select(explode(col("w")).as("u"))
@@ -2484,7 +2477,7 @@ object PipelineQueries {
     "skew_report" -> ((s, dir) => {
       val kc = Tables.events(s, dir)
         .groupBy("user_id").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false)
+        .once("skew_report.kc")
       val tot = kc.agg(sum("cnt").as("total"), count(lit(1)).as("n_keys"))
       graft.ops.Scalars.withScalar(kc, col("user_id"), tot, col("total"))
         .withColumn("skew_factor",
@@ -2809,11 +2802,11 @@ object PipelineQueries {
       val tf = Tables.documents(s, dir)
         .select(col("source"), explode(Dedup.tokens(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("c"))
-        .localCheckpoint(false) // feeds shard tops, global top, shard count
+        .once("vocab_shard_topk_audit.tf") // feeds shard tops, global top, shard count
       val shardTop = TopK.perGroup(tf, Seq(col("source")),
           Seq(col("c").desc, col("w")), k = 20, rankName = "rk")
         .select("w").distinct()
-        .localCheckpoint(false) // feeds the union size AND the semi-join
+        .shared("vocab_shard_topk_audit.shardTop") // feeds the union size AND the semi-join
       val globalTop = tf.groupBy("w").agg(sum("c").as("c"))
         .orderBy(col("c").desc, col("w")).limit(20)
       val nShards = tf.select("source").distinct()
@@ -2846,7 +2839,7 @@ object PipelineQueries {
         .withColumn("rnk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("freq").desc, col("token").asc)).cast("bigint"))
-        .localCheckpoint(false)
+        .shared("vocab_coverage_curve.counts")
       val tot = counts.agg(sum("freq").as("total_tokens"),
         count(lit(1)).as("n_types"))
       val swept = counts
@@ -2880,11 +2873,11 @@ object PipelineQueries {
     // space-delimited, so patterns are unambiguous by construction.
     "vocab_bpe_learn" -> ((s, dir) => {
       import s.implicits._
-      var words = bpeVocab(s, dir).select("cnt", "s").localCheckpoint(false)
+      var words = bpeVocab(s, dir).select("cnt", "s").once("vocab_bpe_learn.words")
       val merges = (1 to 5).map { it =>
         val (bx, by, bpc) = bpeBestPair(words)
         words = words.withColumn("s", bpeMergeExpr(bx, by))
-          .localCheckpoint(false) // cut lineage between rounds
+          .once("vocab_bpe_learn.words2") // cut lineage between rounds
         // the compression curve: weighted symbol count after this merge
         // (a 1-row agg over the already-checkpointed vocab)
         val symsAfter = words
@@ -2909,11 +2902,11 @@ object PipelineQueries {
     // half-up integer units — the per-source fertility a tokenizer
     // budget planner actually consumes.
     "vocab_bpe_apply" -> ((s, dir) => {
-      var words = bpeVocab(s, dir).localCheckpoint(false)
+      var words = bpeVocab(s, dir).once("vocab_bpe_apply.words")
       (1 to 5).foreach { _ =>
         val (bx, by, _) = bpeBestPair(words)
         words = words.withColumn("s", bpeMergeExpr(bx, by))
-          .localCheckpoint(false)
+          .once("vocab_bpe_apply.words2")
       }
       val seg = words.select(col("tok"),
         size(split(trim(col("s")), " ")).cast("bigint").as("n_syms"))
@@ -2940,11 +2933,11 @@ object PipelineQueries {
     // vocab join keep mass 0 via the left join (none on this corpus —
     // the vocab is built FROM the corpus — but the shape is total).
     "seq_pack_bpe" -> ((s, dir) => {
-      var words = bpeVocab(s, dir).localCheckpoint(false)
+      var words = bpeVocab(s, dir).once("seq_pack_bpe.words")
       (1 to 5).foreach { _ =>
         val (bx, by, _) = bpeBestPair(words)
         words = words.withColumn("s", bpeMergeExpr(bx, by))
-          .localCheckpoint(false)
+          .once("seq_pack_bpe.words2")
       }
       val seg = words.select(col("tok"),
         size(split(trim(col("s")), " ")).cast("bigint").as("n_syms"))
@@ -3030,7 +3023,7 @@ object PipelineQueries {
     "corpus_lang_source_mix" -> ((s, dir) => {
       val cell = Tables.documents(s, dir)
         .groupBy("lang", "source").agg(count(lit(1)).as("n"))
-        .localCheckpoint(false) // feeds both margins and the result
+        .shared("corpus_lang_source_mix.cell") // feeds both margins and the result
       val byLang = cell.groupBy("lang").agg(sum("n").as("lang_tot"))
       val bySrc  = cell.groupBy("source").agg(sum("n").as("src_tot"))
       val total  = cell.agg(sum("n").as("n_total"))
@@ -3178,7 +3171,6 @@ object PipelineQueries {
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_bad")
         .csv(out.toString)
-        .localCheckpoint(false)
       parsed.agg(
           count(lit(1)).as("n_rows"),
           sum(when(col("_bad").isNotNull, 1L).otherwise(0L)).as("n_bad"),
@@ -3239,7 +3231,7 @@ object PipelineQueries {
     "text_novelty" -> ((s, dir) => {
       val ex = Dedup.shingleSets(Tables.documents(s, dir), 3)
         .select(col("doc_id"), explode(col("sh")).as("sp"))
-        .localCheckpoint(false)
+        .once("text_novelty.ex")
       val firsts = ex.groupBy("sp").agg(min("doc_id").as("first_doc"))
       ex.join(firsts, "sp")
         .groupBy("doc_id")
@@ -3260,7 +3252,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
       val ex = Dedup.shingleSets(docs, 8)
         .select(col("doc_id"), explode(col("sh")).as("sp"))
-        .localCheckpoint(false) // feeds both the df count and the join back
+        .once("text_span_dedup.ex") // feeds both the df count and the join back
       val df = ex.groupBy("sp").agg(count(lit(1)).as("df"))
       val per = ex.join(df, "sp")
         .groupBy("doc_id")
@@ -3586,7 +3578,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
           md5(col("text").cast("binary")).as("k"))
-        .localCheckpoint(false) // one text scan feeds bounds + both gens
+        .once("hll_source_snapshots.docs") // one text scan feeds bounds + both gens
       val (b, r) = graft.ops.HllSketch.bucketRho(s, col("k"))
       def state(df: DataFrame) = df.select(col("source"), b, r)
         .groupBy("source", "bucket").agg(max("rho").as("rho"))
@@ -3623,7 +3615,7 @@ object PipelineQueries {
             expr(s"CAST(floor(sqrt(CAST($isqrt AS DOUBLE))) AS BIGINT)").as("w"))
         )).as("t"))
         .select(col("source"), col("t.alpha_u4"), col("t.w"))
-        .localCheckpoint(false) // feeds the per-α totals AND the quotas
+        .once("corpus_mix_alpha_sweep.v") // feeds the per-α totals AND the quotas
       val tot = v.groupBy("alpha_u4").agg(sum("w").as("w_tot"))
       v.join(broadcast(tot), "alpha_u4")
         .withColumn("quota_chars",
@@ -3648,7 +3640,7 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
         .withColumn("w_sqrt",
           expr("CAST(floor(sqrt(CAST(n_chars AS DOUBLE))) AS BIGINT)"))
-        .localCheckpoint(false) // feeds the scalar AND the quota rows
+        .once("corpus_temperature_mix.per") // feeds the scalar AND the quota rows
       val tot = per.agg(sum("w_sqrt").as("w_tot"))
       graft.ops.Scalars.withScalar(per, col("source"), tot, col("w_tot"))
         .withColumn("quota_chars",
@@ -3672,7 +3664,7 @@ object PipelineQueries {
         .groupBy("source").agg(sum("n_chars").as("n_chars"))
         .withColumn("w_sqrt",
           expr("CAST(floor(sqrt(CAST(n_chars AS DOUBLE))) AS BIGINT)"))
-        .localCheckpoint(false) // feeds the scalar AND the plan rows
+        .once("corpus_epoch_plan.per") // feeds the scalar AND the plan rows
       val tot = per.agg(sum("w_sqrt").as("w_tot"))
       graft.ops.Scalars.withScalar(per, col("source"), tot, col("w_tot"))
         .withColumn("quota_chars",
@@ -3710,7 +3702,7 @@ object PipelineQueries {
         .agg(first("mult").as("mult"), count(lit(1)).as("n_docs"),
           sum("n_chars").as("chars"))
         .withColumn("w", col("mult") * col("chars"))
-        .localCheckpoint(false) // feeds the scalar AND the quota rows
+        .once("corpus_quality_mix.per") // feeds the scalar AND the quota rows
       val tot = per.agg(sum("w").as("w_tot"))
       graft.ops.Scalars.withScalar(per, col("source"), tot, col("w_tot"))
         .withColumn("quota_chars",
@@ -3807,7 +3799,7 @@ object PipelineQueries {
         .select("doc_id", "source", "lang", "text")
       val ranked = graft.ops.Select.dsirRanked(d)
         .join(d.select("doc_id", "lang"), "doc_id")
-        .localCheckpoint(false) // one scoring pass serves all budgets
+        .once("corpus_dsir_sweep.ranked") // one scoring pass serves all budgets
       val tot = ranked.agg(count(lit(1)).as("n_total"),
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"))
       val wt = Scalars.withScalar(ranked, col("doc_id"), tot, col("n_total"))
@@ -3879,7 +3871,7 @@ object PipelineQueries {
       val ranked = graft.ops.Rank.globalRankByRange(q, "qu4", "doc_id",
           numBlocks = 8)
         .withColumn("blk", expr("(rnk - 1) div 1024L"))
-        .localCheckpoint(false) // within-block cumsum AND block offsets
+        .shared("corpus_curriculum_tokens.numBlocks") // within-block cumsum AND block offsets
       val wIn = Window.partitionBy("blk").orderBy("rnk")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wBlk = Window.orderBy("blk")
@@ -3920,7 +3912,7 @@ object PipelineQueries {
       val ranked = graft.ops.Rank.globalRankByRange(q, "qu4", "doc_id",
           numBlocks = 8)
         .withColumn("blk", expr("(rnk - 1) div 1024L"))
-        .localCheckpoint(false) // within-block cumsum AND block offsets
+        .shared("corpus_pack_e2e.numBlocks") // within-block cumsum AND block offsets
       val wIn = Window.partitionBy("blk").orderBy("rnk")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wBlk = Window.orderBy("blk")
@@ -3936,7 +3928,7 @@ object PipelineQueries {
       val sharded = graft.ops.Scalars
         .withScalar(cum, col("doc_id"), tot, col("tot_tokens"))
         .withColumn("shard", expr("(cum_before * 8) div tot_tokens"))
-        .localCheckpoint(false) // shard starts AND the bin assignment
+        .once("corpus_pack_e2e.sharded") // shard starts AND the bin assignment
       val starts = sharded.groupBy("shard")
         .agg(min("cum_before").as("shard_off"))
       sharded.join(broadcast(starts), "shard")
@@ -3969,7 +3961,7 @@ object PipelineQueries {
       val docs = Tables.documents(s, dir)
       val ex = Dedup.shingleSets(docs, 8)
         .select(col("doc_id"), explode(col("sh")).as("g"))
-        .localCheckpoint(false) // feeds the df count and the join back
+        .once("dedup_soft_weights.ex") // feeds the df count and the join back
       val dft = ex.groupBy("g").agg(count(lit(1)).as("df"))
       val per = ex.join(dft, "g")
         .groupBy("doc_id")
@@ -4004,7 +3996,7 @@ object PipelineQueries {
       val surv = assigned.join(roots, "vec_id")
         .withColumn("is_root",
           (col("vec_id") === col("cluster_id")).cast("int"))
-        .localCheckpoint(false) // feeds the rollup AND the survivor rank
+        .shared("emb_d4_prune.surv") // feeds the rollup AND the survivor rank
       val ns = surv.filter(col("is_root") === 1)
         .groupBy("cell").agg(count(lit(1)).as("n_surv"))
       val w = Window.partitionBy("cell")

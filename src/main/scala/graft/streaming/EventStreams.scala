@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.ops.PlanBarrier.Barrier
 
 /** Structured Streaming over the `events` table.
   *
@@ -443,9 +444,8 @@ object EventStreams {
         val snapshot = Store.read(spark, store,
             StructType.fromDDL("cell int, v array<double>, nrm double"))
           .select(col("cell"), col("v").as("hv"), col("nrm").as("hn"))
-          .localCheckpoint(false)
         (batch0, bid) => {
-          val batch = batch0.localCheckpoint(false) // counters AND store
+          val batch = batch0.shared("semanticIngest.batch") // counters AND store
           val hits = batch.join(snapshot, Seq("cell"))
             .filter(graft.ops.Dedup.dot(col("v"), col("hv"))
               / (col("nrm") * col("hn")) >= threshold)
@@ -496,12 +496,11 @@ object EventStreams {
             "doc_id bigint, c0 bigint, c1 bigint, c2 bigint, c3 bigint")))
           .select(col("ci"), col("cv"), col("c0").as("h0"),
             col("c1").as("h1"), col("c2").as("h2"), col("c3").as("h3"))
-          .localCheckpoint(false)
         (batch0, bid) => {
           val sigs = graft.ops.Multimodal.phashBatch(batch0).toDF()
             .select("doc_id", "c0", "c1", "c2", "c3")
             .join(batch0.select("doc_id", "source"), "doc_id")
-            .localCheckpoint(false) // counters AND the store append
+            .shared("chunks.sigs") // counters AND the store append
           val ham = (0 to 3).map(j =>
             bit_count(col(s"c$j").bitwiseXOR(col(s"h$j"))).cast("int"))
             .reduce(_ + _)
@@ -549,7 +548,7 @@ object EventStreams {
       // writes as a concurrent driver job (§2.6); the trainer is
       // integer-deterministic, results unchanged
       val w = graft.ops.QualityClf.train(docs.filter(col("doc_id") < thr))._2
-        .localCheckpoint(false) // frozen gen1 model, reused by every batch
+        .once("qualityScoreIngest.w") // frozen gen1 model, reused by every batch
       src => eachBatch(spark, src, ckpt) { (batch, bid) =>
         val marg = graft.ops.QualityClf.margins(
           graft.ops.QualityClf.features(batch), w)
@@ -599,9 +598,9 @@ object EventStreams {
       val lr = graft.ops.Select.ratioFromCounts(
           graft.ops.Select.docBucketCounts(gen1, buckets, seed),
           gen1.filter(expr("lang = 'en'")).select("doc_id"), buckets)
-        .localCheckpoint(false)
+        .once("dsirIngest.lr")
       src => eachBatch(spark, src, ckpt) { (batch0, bid) =>
-        val batch = batch0.localCheckpoint(false) // scored + joined back
+        val batch = batch0.shared("dsirIngest.batch") // scored + joined back
         val u4 = graft.ops.Select.docBucketCounts(batch, buckets, seed)
           .join(broadcast(lr), "b")
           .groupBy("doc_id")
@@ -702,7 +701,7 @@ object EventStreams {
           .select(col("doc_id"), col("source"),
             round(col("quality_score") * 10000).cast("long").as("qs_u4"),
             col("n_chars").cast("long").as("n_chars"))
-          .localCheckpoint(false) // histogram fold AND metadata append
+          .once("budgetSelectIngest.scored") // histogram fold AND metadata append
         addSums(scored.groupBy("source", "qs_u4")
             .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars")),
           histDir, bid, "source", "qs_u4")
@@ -711,14 +710,14 @@ object EventStreams {
     }
     val W = org.apache.spark.sql.expressions.Window
     val hist = storeSums(spark, histDir, "source", "qs_u4")
-      .localCheckpoint(false) // prefix window, boundary pick, rollup
+      .once("budgetSelectIngest.hist") // prefix window, boundary pick, rollup
     // per-source exclusive prefix over the BOUNDED histogram (≤
     // |sources|·10001 rows — the dial-bounded-window doctrine)
     val pref = hist.withColumn("p", coalesce(
         sum("sum_chars").over(W.partitionBy("source")
           .orderBy(col("qs_u4").desc)
           .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-      .localCheckpoint(false) // full-bucket rollup AND boundary key
+      .once("budgetSelectIngest.pref") // full-bucket rollup AND boundary key
     // prefix+sum ≤ budget ⇒ even the bucket's LAST doc has prior <
     // budget ⇒ fully selected, by algebra alone
     val fullAgg = pref.filter(col("p") + col("sum_chars") <= budget)
@@ -763,7 +762,7 @@ object EventStreams {
           .select(col("doc_id"),
             col("n_tokens").cast("long").as("n_tokens"),
             round(col("quality_score") * 10000).cast("long").as("qu4"))
-          .localCheckpoint(false) // histogram fold AND metadata append
+          .once("landQualityHistogram.scored") // histogram fold AND metadata append
         addSums(scored.groupBy("qu4")
             .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("sum_tokens")),
           histDir, bid, "qu4")
@@ -808,7 +807,7 @@ object EventStreams {
     landQualityHistogram(spark, docs, stage, ckpt, histDir, metaDir)
     val W = org.apache.spark.sql.expressions.Window
     val hist = storeSums(spark, histDir, "qu4")
-      .localCheckpoint(false) // prefix window AND the total
+      .shared("curriculumIngest.hist") // prefix window AND the total
     val tot = hist.agg(sum("n_docs").cast("long").as("n_total"))
     // exclusive doc-count prefix over the BOUNDED dial (≤ 10001 rows —
     // the dial-bounded-window doctrine)
@@ -820,7 +819,7 @@ object EventStreams {
       .withColumn("s_first", expr(s"(p * $nShards) div n_total"))
       .withColumn("s_last",
         expr(s"((p + n_docs - 1) * $nShards) div n_total"))
-      .localCheckpoint(false) // whole-bucket algebra AND crossing keys
+      .once("curriculumIngest.pref") // whole-bucket algebra AND crossing keys
     val whole = pref.filter(col("s_first") === col("s_last"))
       .groupBy(col("s_first").as("shard"))
       .agg(sum("n_docs").as("n_docs"), sum("sum_tokens").as("sum_tokens"),
@@ -875,7 +874,7 @@ object EventStreams {
     landQualityHistogram(spark, docs, stage, ckpt, histDir, metaDir)
     val W = org.apache.spark.sql.expressions.Window
     val hist = storeSums(spark, histDir, "qu4")
-      .localCheckpoint(false) // prefix window AND the total
+      .shared("curriculumTokensIngest.hist") // prefix window AND the total
     val tot = hist.agg(sum("sum_tokens").cast("long").as("tot_tokens"))
     // exclusive TOKEN prefix over the BOUNDED dial (≤ 10001 rows)
     val pref = graft.ops.Scalars.withScalar(
@@ -886,7 +885,7 @@ object EventStreams {
       .withColumn("s_first", expr(s"(tp * $nShards) div tot_tokens"))
       .withColumn("s_last",
         expr(s"((tp + sum_tokens) * $nShards) div tot_tokens"))
-      .localCheckpoint(false) // whole-bucket algebra AND crossing keys
+      .once("curriculumTokensIngest.pref") // whole-bucket algebra AND crossing keys
     val whole = pref.filter(col("s_first") === col("s_last"))
       .groupBy(col("s_first").as("shard"))
       .agg(sum("n_docs").as("n_docs"), sum("sum_tokens").as("sum_tokens"),
@@ -936,7 +935,7 @@ object EventStreams {
       .select(col("doc_id"), col("source"), col("text"))
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) { (batch0, bid) =>
-        val batch = batch0.localCheckpoint(false) // counts + doc fold
+        val batch = batch0.once("doremiIngest.batch") // counts + doc fold
         addSums(graft.ops.Select.domainBucketCounts(batch, buckets, seed),
           cntStore, bid, "source", "b")
         addSums(batch.groupBy("source").agg(count(lit(1)).as("n_docs")),
@@ -945,7 +944,7 @@ object EventStreams {
     }
     graft.ops.Select.doremiFromCounts(
         storeSums(spark, cntStore, "source", "b"),
-        storeSums(spark, domStore, "source").localCheckpoint(false),
+        storeSums(spark, domStore, "source").once("doremiIngest.batch2"),
         buckets, rounds, deltaDen)
       .orderBy("source")
   }
@@ -977,7 +976,7 @@ object EventStreams {
       .select(col("doc_id"), col("text"))
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) { (batch0, bid) =>
-        val batch = batch0.localCheckpoint(false) // postings + doc list
+        val batch = batch0.once("softWeightsIngest.batch") // postings + doc list
         Store.put(graft.ops.Dedup.shingleSets(batch, 8)
           .select(col("doc_id"), explode(col("sh")).as("g"))
           .select(col("doc_id"),
@@ -986,7 +985,7 @@ object EventStreams {
         Store.put(batch.select("doc_id").coalesce(1), docStore, bid)
       }
     }
-    val post = Store.read(spark, postStore).localCheckpoint(false)
+    val post = Store.read(spark, postStore).once("softWeightsIngest.post")
     val dft = post.groupBy("gh").agg(count(lit(1)).as("df"))
     val per = post.join(dft, "gh")
       .groupBy("doc_id")
@@ -1028,13 +1027,13 @@ object EventStreams {
       eachBatch(spark, src, ckpt) {
         // history = everything staged BEFORE this pass, frozen once
         val snapshot = Store.read(spark, grams, StructType.fromDDL("h bigint"))
-          .distinct().localCheckpoint(false)
+          .distinct().once("substringIngest.snapshot")
         (batch, bid) => {
           val g = graft.ops.Suffix.gramHashes(batch, spanLen)
             .filter(col("full"))
             .join(batch.select("doc_id", "source"), "doc_id")
             .select("doc_id", "source", "h")
-            .localCheckpoint(false) // counters AND the store append
+            .once("substringIngest.g") // counters AND the store append
           val hist = g.join(snapshot, Seq("h"), "left_semi")
             .groupBy("source").agg(count(lit(1)).as("n_hist_dup_starts"))
           val local = g.groupBy("source").agg(count(lit(1)).as("n_grams"))
@@ -1113,7 +1112,7 @@ object EventStreams {
         val pairs = graft.ops.Dedup.jaccardPairsFromPostings(
           sh.join(s2, "doc_id")).select("id1", "id2")
         graft.ops.Cluster.dedupClusters(s2, pairs)
-          .localCheckpoint(false) // family-root filter AND the split join
+          .once("fold.pairs") // family-root filter AND the split join
       }
       graft.ops.FunnelStore
         .funnel(graft.ops.FunnelStore.Stores(meta, sh, gr, fx), dd,
@@ -1123,7 +1122,7 @@ object EventStreams {
     landGens(spark, docs, genThreshold(docs), stage) { src =>
       eachBatch(spark, src, ckpt) { (batch0, bid) =>
         // one cached copy of the landing text feeds all four extracts
-        val batch = batch0.localCheckpoint(false)
+        val batch = batch0.shared("fold.batch")
         val st = graft.ops.FunnelStore.extract(batch)
         // compact appends: a landing shard writes a few well-sized
         // files per store, not one file per shuffle partition — the
@@ -1264,7 +1263,7 @@ object EventStreams {
     val base = graft.sources.Scratch.dir("graft_dq_stream")
     val (stage, ckpt, store) = (s"$base/stage", s"$base/ckpt", s"$base/store")
     val custkeys = graft.sources.Tables.customer(spark, sfDir)
-      .select(col("c_custkey")).localCheckpoint(false)
+      .select(col("c_custkey")).once("dqIncremental.custkeys")
     val raw = graft.sources.Tables.orders(spark, sfDir).select(
       col("o_orderkey"), col("o_custkey"),
       when(col("o_orderkey").isNull, 1L).otherwise(0L).as("v_null"),
@@ -1336,7 +1335,7 @@ object EventStreams {
         // decision set is MATERIALIZED before the write
         val newKeys = bk.join(Store.read(ss, keys,
             StructType.fromDDL("user_id bigint"), before = bid),
-          Seq("user_id"), "left_anti").localCheckpoint(false)
+          Seq("user_id"), "left_anti").once("dqUniqueIncremental.newKeys")
         Store.put(newKeys.coalesce(1), keys, bid)
         val local = graft.ops.Scalars.withScalar(
             batch.agg(count(lit(1)).as("n"),
@@ -1382,7 +1381,7 @@ object EventStreams {
       .parquet(s"$sfDir/events.parquet")
       // all the sketch needs — stage stays narrow; ts staged as micros
       .select(unix_micros(tsUtc(spark, sfDir)).as("ts_us"), col("user_id"))
-      .localCheckpoint(false)  // one source scan feeds bounds + both stages
+      .once("distinctUsersIncremental.raw")  // one source scan feeds bounds + both stages
     val mid = midThreshold(raw, "ts_us")
     raw.filter(col("ts_us") < mid).write.parquet(s"$stage/day1")
     hllRefreshPass(spark, stage, ckpt, delta)
@@ -1625,7 +1624,7 @@ object EventStreams {
       .select(col("user_id"),
         datediff(to_date(tsUtc(spark, sfDir)),
           lit("1970-01-01").cast("date")).as("dn"))
-      .localCheckpoint(false)
+      .once("lifecycle.raw")
     val bounds = raw.agg(min("dn").as("lo"), max("dn").as("hi")).head()
     val mid = (bounds.getInt(0) + bounds.getInt(1)) / 2
     // one batch per half: a user's days arriving out of order across
@@ -1638,7 +1637,7 @@ object EventStreams {
 
     // batch tail over the emitted day records: activity counts per
     // day, churn from observed gaps + each user's open last day
-    val rec = runToFileSink(spark, stream, base).localCheckpoint(false)
+    val rec = runToFileSink(spark, stream, base).shared("lifecycle.rec")
     val act = rec.groupBy("dn").agg(
       sum(when(col("cls") === "new", 1L).otherwise(0L)).as("n_new"),
       sum(when(col("cls") === "retained", 1L).otherwise(0L)).as("n_retained"),
@@ -1733,7 +1732,7 @@ object EventStreams {
       .select(pmod(col("user_id"), lit(shards)).cast("int").as("shard"),
         col("user_id"),
         unix_micros(tsUtc(spark, sfDir)).as("ts_us"))
-      .localCheckpoint(false)
+      .once("mgHeavyHitters.raw")
     val mid = midThreshold(raw, "ts_us")
     val stream = orderedWaves(spark, s"$base/stage",
         raw.filter(col("ts_us") < mid).select("shard", "user_id"),

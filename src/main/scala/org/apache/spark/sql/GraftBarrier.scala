@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
-/** Package-private Spark API bridge for [[graft.ops.PlanBarrier]].
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** Package-private Spark API bridge for [[graft.ops.PlanBarrier]], the
+  * one way graft materializes an intermediate.
   *
   * `Dataset.localCheckpoint` builds its result as
   * `LogicalRDD.fromDataset(...)`, which PRESERVES the source plan's
@@ -22,36 +25,32 @@ package org.apache.spark.sql
   * checkpointed InternalRow RDD, dropping the compounded
   * stats/constraints. That needs `internalCreateDataFrame`, which is
   * `private[sql]` — hence this one shim object inside the sql package.
-  * Everything here is the public-bytecode surface of stock Apache
-  * Spark; no behavior is patched.
+  * Naming the RDD before its first computation also needs the RDD
+  * itself, which `Dataset.localCheckpoint` does not expose. Everything
+  * here is the public-bytecode surface of stock Apache Spark; no
+  * behavior is patched.
   */
 object GraftBarrier {
 
-  /** Lazy local checkpoint of `df` whose resulting plan leaf carries
-    * DEFAULT statistics (`spark.sql.defaultSizeInBytes`) instead of the
-    * source plan's compounded estimate. Semantics otherwise identical
-    * to `df.localCheckpoint(eager = false)`: the InternalRow RDD is
-    * row-copied (UnsafeRow buffers are reused by the scan — caching
-    * without copy corrupts), marked for local checkpoint, and cached at
-    * first action. The huge default size also means the result never
+  /** Local checkpoint of `df` over an RDD named `site`. The InternalRow
+    * RDD is row-copied (UnsafeRow buffers are reused by the scan —
+    * caching without copy corrupts) and marked for local checkpoint;
+    * `eager` computes it now (one job), otherwise the first stage that
+    * reads it does. With `keepStats` the leaf carries the source plan's
+    * statistics, constraints and output partitioning, as
+    * `Dataset.localCheckpoint` does; without, it carries DEFAULT
+    * statistics (`spark.sql.defaultSizeInBytes`), so it never
     * auto-broadcasts statically — correct for loop iterates, and AQE
-    * still converts small shuffle sides to broadcast at runtime.
-    */
-  def localCheckpointStatsReset(df: Dataset[Row]): DataFrame = {
+    * still converts small shuffle sides to broadcast at runtime. */
+  def checkpoint(df: Dataset[Row], site: String, eager: Boolean,
+                 keepStats: Boolean): DataFrame = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
+    val rdd = cds.queryExecution.toRdd.map(_.copy()).setName(site)
     rdd.localCheckpoint()
-    cds.sparkSession.internalCreateDataFrame(rdd, cds.schema)
-  }
-
-  /** [[localCheckpointStatsReset]] that also reports the persisted
-    * RDD's id — for long-lived SHARED artifacts (e.g. the suffix-rank
-    * memo) that a block-manager sweep must be able to exempt and a
-    * cache can liveness-check against `sc.getPersistentRDDs`. */
-  def localCheckpointTracked(df: Dataset[Row]): (DataFrame, Int) = {
-    val cds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = cds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    (cds.sparkSession.internalCreateDataFrame(rdd, cds.schema), rdd.id)
+    if (eager) rdd.count()
+    if (keepStats)
+      classic.Dataset.ofRows(cds.sparkSession,
+        LogicalRDD.fromDataset(rdd, cds, cds.isStreaming))
+    else cds.sparkSession.internalCreateDataFrame(rdd, cds.schema)
   }
 }

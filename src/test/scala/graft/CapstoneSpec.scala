@@ -4,6 +4,7 @@ import java.util.concurrent.{CompletableFuture, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{SharedArtifacts, Suffix}
+import graft.ops.PlanBarrier.Barrier
 import graft.queries.CapstonePrelude
 import graft.sources.Tables
 
@@ -51,8 +52,8 @@ class CapstoneSpec extends AnyFunSuite {
     var builds = 0
     def call() = SharedArtifacts.memo(spark, dir, "memo_spec") { share =>
       builds += 1
-      val a = share(spark.range(10).toDF("id"))
-      (a, share(a.filter("id % 2 = 0")))
+      val a = share(spark.range(10).toDF("id").shared("memo_spec.a"))
+      (a, share(a.filter("id % 2 = 0").shared("memo_spec.even")))
     }
     def moved[T](f: => T): (T, (Long, Long), (Long, Long)) = {
       val (g0, f0) = (SharedArtifacts.counters,
@@ -83,13 +84,13 @@ class CapstoneSpec extends AnyFunSuite {
     val a = async(SharedArtifacts.memo(spark, dir, "memo_spec_a") { share =>
       entered.countDown()
       release.await()
-      share(spark.range(3).toDF("id"))
+      share(spark.range(3).toDF("id").shared("memo_spec_a.ids"))
     })
     try {
       assert(entered.await(60, TimeUnit.SECONDS), "family A's build never started")
       // under one lock for every key, B would wait for A's release
       val b = async(SharedArtifacts.memo(spark, dir, "memo_spec_b")(
-        _(spark.range(4).toDF("id"))))
+        _(spark.range(4).toDF("id").shared("memo_spec_b.ids"))))
       assert(b.get(60, TimeUnit.SECONDS).count() == 4)
       assert(!a.isDone, "family A finished before its latch opened")
     } finally release.countDown()
@@ -104,7 +105,7 @@ class CapstoneSpec extends AnyFunSuite {
       builds.incrementAndGet()
       entered.countDown()
       go.await()
-      share(spark.range(5).toDF("id"))
+      share(spark.range(5).toDF("id").shared("memo_spec_same.ids"))
     }
     val (g0, f0) = (SharedArtifacts.counters,
       SharedArtifacts.familyCounters.getOrElse("memo_spec_same", (0L, 0L)))
@@ -195,15 +196,18 @@ class CapstoneSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val registry = spark.sessionState.functionRegistry
     def builders = Seq("graft_hash64", "word_shingles", "word_shingles_seq",
-      "array_pairs").map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
-    graft.functions.GraftHash64.register(spark)
-    graft.functions.Shingles.register(spark)
-    graft.functions.ArrayPairs.register(spark)
+      "array_pairs", "graft_bloom_agg", "might_contain")
+      .map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    def register(): Unit = {
+      graft.functions.GraftHash64.register(spark)
+      graft.functions.Shingles.register(spark)
+      graft.functions.ArrayPairs.register(spark)
+      graft.ops.Bloom.register(spark)
+    }
+    register()
     val first = builders
     assert(first.forall(_.isDefined))
-    graft.functions.GraftHash64.register(spark)
-    graft.functions.Shingles.register(spark)
-    graft.functions.ArrayPairs.register(spark)
+    register()
     assert(builders.zip(first).forall { case (a, b) => a.get eq b.get },
       "a second register replaced a builder")
   }

@@ -19,10 +19,11 @@ object MainSources {
 /** Concurrent driver jobs run only through `graft.exec.Par` (which
   * cancels, waits for and attributes them), every streaming query is
   * drained by `EventStreams.drain`, generations land only through
-  * `EventStreams.landGens`, and streaming state reaches disk only
-  * through `graft.streaming.Store`. A second copy of any of these is
-  * where a job could leak past its caller, or a store lose its
-  * replay safety, again. */
+  * `EventStreams.landGens`, streaming state reaches disk only
+  * through `graft.streaming.Store`, and intermediates materialize only
+  * through `graft.ops.PlanBarrier`. A second copy of any of these is
+  * where a job could leak past its caller, a store lose its replay
+  * safety, or a checkpoint be computed twice without a name, again. */
 class ParScanSpec extends AnyFunSuite {
   import MainSources.lines
 
@@ -79,5 +80,32 @@ class ParScanSpec extends AnyFunSuite {
       (line, i) <- ls.zipWithIndex if commit.findFirstIn(line).nonEmpty
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("src/main materializes only through named PlanBarrier sites") {
+    val barrier = Set("PlanBarrier.scala", "GraftBarrier.scala")
+    val raw = """\.localCheckpoint\(|GraftBarrier\.""".r
+    val offenders = for {
+      (f, ls) <- lines if !barrier(f.getName)
+      (line, i) <- ls.zipWithIndex if raw.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    // every cut/once/shared call names its site with a string literal,
+    // and no two call sites share a name
+    val call = """\.(cut|once|shared)\(""".r
+    val named = """\.(?:cut|once|shared)\("([A-Za-z0-9_.]+)"\)""".r
+    val calls = for {
+      (f, ls) <- lines if !barrier(f.getName)
+      (line, i) <- ls.zipWithIndex
+      code = line.trim if !code.startsWith("*") && !code.startsWith("//")
+      m <- call.findAllMatchIn(line)
+    } yield (s"${f.getName}:${i + 1}",
+      named.findPrefixMatchOf(line.substring(m.start)).map(_.group(1)))
+    val unnamed = calls.collect { case (site, None) => site }
+    assert(unnamed.isEmpty, s"barrier calls without a literal site name: $unnamed")
+    val shared = calls.collect { case (site, Some(n)) => n -> site }
+      .groupBy(_._1).filter(_._2.size > 1)
+    assert(shared.isEmpty, s"site names used at two call sites: $shared")
+    assert(calls.size > 100, s"only ${calls.size} barrier calls found")
   }
 }

@@ -498,13 +498,13 @@ class PlanSpec extends AnyFunSuite {
     // loop any operator here runs (CC round budget).
     import org.apache.spark.sql.functions._
     val default = BigInt(spark.sessionState.conf.defaultSizeInBytes)
-    var t = graft.ops.PlanBarrier.cut(
-      spark.range(0, 64).toDF("id").withColumn("v", col("id") * 7L))
+    import graft.ops.PlanBarrier.Barrier
+    var t = spark.range(0, 64).toDF("id").withColumn("v", col("id") * 7L)
+      .cut("plan_spec.seed")
     for (round <- 1 to 25) {
       val other = t.select(col("id"), col("v").as("v2"))
-      t = graft.ops.PlanBarrier.cut(
-        t.join(other, "id").select(col("id"),
-          greatest(col("v"), col("v2")).as("v")))
+      t = t.join(other, "id").select(col("id"),
+          greatest(col("v"), col("v2")).as("v")).cut("plan_spec.round")
       val stats = t.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(stats == default,
         s"round $round carried stats $stats != default $default — " +
@@ -515,8 +515,9 @@ class PlanSpec extends AnyFunSuite {
     // contrast pin: WITHOUT the barrier, one self-join already
     // compounds the estimate past the default — proving the assertion
     // above actually discriminates (guards against a future Spark
-    // version silently changing what localCheckpoint preserves)
-    val plain = spark.range(0, 64).toDF("id").localCheckpoint(false)
+    // version silently changing what localCheckpoint preserves); `once`
+    // keeps the plan's statistics as localCheckpoint does
+    val plain = spark.range(0, 64).toDF("id").once("plan_spec.plain")
     val joined = plain.join(plain.select(col("id")), "id")
     assert(joined.queryExecution.optimizedPlan.stats.sizeInBytes != default,
       "self-join stats unexpectedly equal the default; the contrast pin " +

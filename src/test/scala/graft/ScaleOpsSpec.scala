@@ -361,7 +361,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("hnsw layered search is deterministic, well-formed, and beats its single-bucketing failure mode") {
     import graft.ops.Hnsw
-    def run() = Hnsw.topK(Tables.embeddings(spark, sf), col("vec_id") < 10, k = 5)
+    def run() = Hnsw.search(Hnsw.build(Tables.embeddings(spark, sf)), col("vec_id") < 10, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val a = run()
     // k slots filled per probe, ranks dense from 1

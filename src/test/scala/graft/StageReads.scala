@@ -4,8 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
-/** Persisted RDDs (lazy checkpoints, caches) that two stages computed
-  * at once while `f` ran.
+/** Persisted RDDs (checkpoints, caches) and the stages that read them
+  * while `f` ran.
   *
   * The first stage whose lineage holds a persisted RDD computes its
   * partitions and stores them; a stage submitted after it completes
@@ -13,25 +13,38 @@ import org.apache.spark.sql.SparkSession
   * still runs computes the same partitions again, and the later copy is
   * thrown away ("Block rdd_N_0 already exists on this machine"). That
   * log line needs two tasks to race on one block; the overlap of the
-  * two stages, checked here, does not. */
+  * two stages, checked here, does not.
+  *
+  * An RDD is named by its RDD name (a `PlanBarrier` site name), or by
+  * its call site if it has none. */
 object StageReads {
 
-  /** The call sites of the RDDs two stages computed at once during `f`. */
-  def overlapping(spark: SparkSession)(f: => Unit): Seq[String] = {
+  /** One persisted RDD: its name, the stages that computed or read it,
+    * and whether two of them computed it at once. */
+  final case class Reads(name: String, stages: Int, twice: Boolean)
+
+  /** Every persisted RDD a stage touched during `f`, in first-use order. */
+  def census(spark: SparkSession)(f: => Unit): Seq[Reads] = {
     val sc = spark.sparkContext
     val marker = "graft.spec.stage-reads"
     val drained = new java.util.concurrent.CountDownLatch(1)
     val computing = scala.collection.mutable.Map.empty[Int, Int] // rdd -> stage
-    val done = scala.collection.mutable.Set.empty[Int]
-    val twice = scala.collection.mutable.LinkedHashMap.empty[Int, String]
+    // checkpoints materialized before `f` are read, not computed
+    val done = scala.collection.mutable.Set.empty[Int] ++
+      sc.getPersistentRDDs.collect { case (id, r) if r.isCheckpointed => id }
+    val seen = scala.collection.mutable.LinkedHashMap.empty[Int, Reads]
+    val unnamed = "[A-Z][A-Za-z]*RDD".r
     // the bus delivers events one at a time, in order
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        e.stageInfo.rddInfos.filter(r => r.storageLevel.isValid && !done(r.id))
-          .foreach { r =>
-            if (computing.contains(r.id)) twice(r.id) = r.callSite
-            else computing(r.id) = e.stageInfo.stageId
-          }
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach { r =>
+          val name = if (unnamed.matches(r.name)) r.callSite else r.name
+          val prev = seen.getOrElse(r.id, Reads(name, 0, twice = false))
+          val twice = !done(r.id) && computing.contains(r.id)
+          if (!done(r.id) && !twice) computing(r.id) = e.stageInfo.stageId
+          seen(r.id) = prev.copy(stages = prev.stages + 1,
+            twice = prev.twice || twice)
+        }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         computing.filter(_._2 == e.stageInfo.stageId).keys.foreach { id =>
           computing -= id
@@ -52,6 +65,10 @@ object StageReads {
       sc.setLocalProperty(marker, null)
       sc.removeSparkListener(listener)
     }
-    twice.values.toSeq
+    seen.values.toSeq
   }
+
+  /** The names of the RDDs two stages computed at once during `f`. */
+  def overlapping(spark: SparkSession)(f: => Unit): Seq[String] =
+    census(spark)(f).filter(_.twice).map(_.name)
 }
