@@ -105,7 +105,7 @@ object QualityClf {
                       validate: Boolean = true): (DataFrame, DataFrame) = {
     val spark = fx0.sparkSession
     import spark.implicits._
-    val fx = fx0.once("trainOnFeatures.fx")
+    val fx = fx0.shared("trainOnFeatures.fx") // read by concurrent stages
     val lb = lb0.once("trainOnFeatures.lb")
     // CONTRACT (ADVICE r15, tightened per ADVICE r16): n_misclassified
     // is derived from the b = −1 bias rows inside the per-round delta
