@@ -667,11 +667,11 @@ object OlapQueries {
       // every upstream events scan re-executes per consumer
       val s1 = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts_us").as("t1"))
-        .once("events_funnel.s1")
+        .shared("events_funnel.s1")
       val s2 = e.filter(col("event_type") === "click").join(s1, "user_id")
         .filter(col("ts_us") > col("t1") && col("ts_us") <= col("t1") + winUs)
         .groupBy("user_id").agg(min("ts_us").as("t2"))
-        .once("events_funnel.s2")
+        .shared("events_funnel.s2")
       val s3 = e.filter(col("event_type") === "purchase").join(s2, "user_id")
         .filter(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + winUs)
         .groupBy("user_id").agg(min("ts_us").as("t3"))
