@@ -100,7 +100,10 @@ object Cluster {
       .unionByName(forest.select(col("dst").as("src"), col("src").as("dst")))
       .once("connectedComponents.sym")
 
-    var labels = nodes.select(col("id"), col("id").as("comp")).shared("connectedComponents.labels")
+    // round 1 reads the start labels from both join sides at once; they
+    // are a projection of `nodes`, which dedupClusters passes
+    // materialized, so they need no barrier of their own
+    var labels = nodes.select(col("id"), col("id").as("comp"))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {

@@ -170,9 +170,12 @@ object Graph {
     * key, state exactly one row per node, lineage cut per round.
     * Output: (v, lbl) final labels. */
   def labelProp(edges: DataFrame, iters: Int = 4): DataFrame = {
-    val e = edges.select(col("a"), col("b")).once("labelProp.e")
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
+    // both directions from one projection: a union of two would have
+    // two tasks compute each edge partition
+    val sym = edges.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("d"))
+      .select("d.*")
       .once("labelProp.sym") // reused every round
     var lab = sym.select(col("dst").as("v")).distinct()
       .withColumn("lbl", col("v")).cut("labelProp.lab")
@@ -208,13 +211,16 @@ object Graph {
     *
     * Output 1 row: (n_nodes, n_edges, assort_r 6dp). */
   def degreeAssortativity(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("a"), col("b"))
-      .once("degreeAssortativity.e") // feeds degrees and both symmetrized ends
-    val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
+    // both edge ends from one projection (a union of two would have
+    // two tasks compute each edge partition); the degree job computes
+    // it, the moment joins read it afterwards
+    val sym = edges.select(explode(array(
+        struct(col("a").as("s"), col("b").as("t")),
+        struct(col("b").as("s"), col("a").as("t")))).as("d"))
+      .select("d.*")
+      .once("degreeAssortativity.sym")
+    val deg = sym.groupBy(col("s").as("v")).agg(count(lit(1)).as("deg"))
       .shared("degreeAssortativity.deg")
-    val sym = e.select(col("a").as("s"), col("b").as("t"))
-      .unionAll(e.select(col("b").as("s"), col("a").as("t")))
     val p = sym
       .join(deg.select(col("v").as("s"), col("deg").as("dx")), "s")
       .join(deg.select(col("v").as("t"), col("deg").as("dy")), "t")

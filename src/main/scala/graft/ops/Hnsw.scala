@@ -170,9 +170,10 @@ object Hnsw {
     // checkpointed so `node` is a real attribute, not a foldable
     // literal — Catalyst would otherwise constant-fold the first hop's
     // join condition into a right-side-only predicate and degrade the
-    // equi-join to a nested-loop product (the withScalar r8 class)
+    // equi-join to a nested-loop product (the withScalar r8 class);
+    // eager, as both branches of the first hop's union read it at once
     val seed = probes.select(col("probe_id"), lit(entry).as("node"))
-      .once("hop.seed")
+      .shared("hop.seed")
     val b2 = hop(seed, adj2, math.max(2, beam / 2))
     val b1 = hop(b2, adj1, beam)
     val b0 = hop(hop(b1, adj0, beam), adj0, beam)

@@ -29,9 +29,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     of one plan that only start after the checkpoint's first
   *     reader completed (a scalar subquery's result, a loop-invariant
   *     input read once per round).
-  *   - `shared` — eager (one job, before any reader starts), the
-  *     plan's statistics kept. For a table that two readers run on at
-  *     once: both sides of a join or union, forked jobs.
+  *   - `shared` — eager (one job, before any reader starts), carrying
+  *     the measured row count and size. For a table that two readers
+  *     run on at once: both sides of a join or union, forked jobs. The
+  *     measured size never compounds, so a loop iterate read twice per
+  *     round is `shared` as well.
   *
   * A table read by one stage needs no barrier: the stage computes the
   * plan either way, and the checkpoint only adds a block write. The
@@ -60,9 +62,9 @@ object PlanBarrier {
     def once(site: String): DataFrame =
       GraftBarrier.checkpoint(df, site, eager = false, keepStats = true)
 
-    /** Eager, statistics reset: readers that run at the same time. */
+    /** Eager, statistics measured: readers that run at the same time. */
     def shared(site: String): DataFrame =
-      GraftBarrier.checkpoint(df, site, eager = true, keepStats = false)
+      GraftBarrier.checkpoint(df, site, eager = true, keepStats = true)
   }
 
   /** Drop the blocks of a local checkpoint. `Dataset.unpersist()`

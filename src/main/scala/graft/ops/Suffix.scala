@@ -42,10 +42,11 @@ import graft.ops.PlanBarrier.Barrier
   * below partitions by doc_id.
   *
   * Loop hygiene: the carried rank table is re-joined against itself
-  * every round, so each round crosses a [[PlanBarrier.cut]] — the
-  * lineage + statistics barrier that keeps per-round plan-build cost
-  * constant (the r12 geometric-stats fix; without it a self-join loop
-  * SQUARES the carried sizeInBytes estimate per round).
+  * every round, so each round crosses a [[PlanBarrier]] `shared` or
+  * `cut` — lineage barriers whose statistics are measured or reset,
+  * which keeps per-round plan-build cost constant (the r12
+  * geometric-stats fix; without it a self-join loop SQUARES the
+  * carried sizeInBytes estimate per round).
   *
   * 100 TB audit: the position table is ~the corpus token count; each
   * doubling round is 2 shuffles of (long, long, long) rows plus one
@@ -211,9 +212,9 @@ object Suffix {
         col("doc_id") * (col("mx") + lit(2L)) + col("pos") + lit(1L))
       .select(col("doc_id"), col("pos"), col("gpos"), gram.as("g"))
     val seedIds = seeded.groupBy("g").agg(min("gpos").as("nr"))
-    var ranks = 
-      seeded.join(seedIds, "g")
-        .select(col("doc_id"), col("pos"), col("gpos"), col("nr").as("r")).cut("suffixRankLevels.ranks")
+    var ranks = seeded.join(seedIds, "g")
+      .select(col("doc_id"), col("pos"), col("gpos"), col("nr").as("r"))
+      .shared("suffixRankLevels.ranks")
     var out = Map.empty[Int, DataFrame]
     def snap(level: Int): Unit =
       if (levels.contains(level))
@@ -222,11 +223,12 @@ object Suffix {
     snap(k)
     while (k < prefixLen) {
       val next = doubleOnce(ranks, k)
-      // the carried table is self-joined next round (every intermediate
-      // level is therefore cut — snapshots included); the final level
-      // is consumed only by the caller and needs no barrier
+      // the carried table is self-joined next round, both sides at once
+      // (every intermediate level is therefore shared — snapshots
+      // included); the final level is consumed only by the caller and
+      // needs no barrier
       k *= 2
-      ranks = if (k < prefixLen) next.cut("snap.ranks") else next
+      ranks = if (k < prefixLen) next.shared("snap.ranks") else next
       snap(k)
     }
     out
@@ -291,7 +293,7 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).once("dupSpanStats.p")
+        val p = positions(docs).shared("dupSpanStats.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -354,7 +356,7 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).once("dupSpans.p")
+        val p = positions(docs).shared("dupSpans.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
@@ -410,14 +412,14 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).once("applySpanRemoval.p")
+        val p = positions(docs).shared("applySpanRemoval.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
     val starts = ranks.join(lens, "doc_id")
       .filter(col("pos") + spanLen <= col("n_tokens"))
       .select("doc_id", "pos", "r")
-      .once("applySpanRemoval.starts") // rank-frequency count AND the dup flags
+      .shared("applySpanRemoval.starts") // rank-frequency count AND the dup flags
     val dupRanks = starts.groupBy("r").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("r")
     val flags = starts.join(dupRanks, Seq("r"), "left_semi")
@@ -458,7 +460,7 @@ object Suffix {
     val (pos, byLevel) = pre match {
       case Some((p, lv)) if levels.forall(lv.contains) => (p, lv)
       case _ =>
-        val p = positions(docs).once("dupSpanSweep.p")
+        val p = positions(docs).shared("dupSpanSweep.p")
         (p, suffixRankLevels(p, levels))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))
@@ -580,7 +582,7 @@ object Suffix {
     val (pos, ranks) = pre match {
       case Some((p, lv)) if lv.contains(spanLen) => (p, lv(spanLen))
       case _ =>
-        val p = positions(docs).once("dupSpanSources.p")
+        val p = positions(docs).shared("dupSpanSources.p")
         (p, suffixRanks(p, spanLen))
     }
     val lens = pos.groupBy("doc_id").agg(count(lit(1)).as("n_toks"))

@@ -112,7 +112,9 @@ object MetaQueries {
     // affected kind reads off the dbt unique_id prefix. Self rows
     // (hop 0) are excluded — impact means DOWNSTREAM.
     "meta_impact" -> ((s, _) => {
-      val p = parsed(s)
+      // the section unions below read the entity table from several
+      // tasks at once
+      val p = parsed(s).shared("meta_impact.entities")
       val edges = Manifest.nodes(p)
         .select(col("unique_id").as("dst"), explode(col("depends_on.nodes")).as("src"))
         .unionByName(Manifest.metrics(p)

@@ -675,6 +675,7 @@ object OlapQueries {
       val s3 = e.filter(col("event_type") === "purchase").join(s2, "user_id")
         .filter(col("ts_us") > col("t2") && col("ts_us") <= col("t2") + winUs)
         .groupBy("user_id").agg(min("ts_us").as("t3"))
+        .once("events_funnel.s3")
       // the three 1-row step counts combine via Scalars.withScalar
       // (broadcast hash join on a degenerate key, 1-row contract
       // enforced) — no product-join operator anywhere in the plan

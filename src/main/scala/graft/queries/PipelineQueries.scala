@@ -1245,9 +1245,9 @@ object PipelineQueries {
     // LSH TUNING CURVE: average recall@5 of the hyperplane index at 4,
     // 6, and 8 planes against the shared brute-force ground truth —
     // the measurement that picks the bucket granularity (recall halves
-    // as buckets shrink; this query shows exactly where). Ground truth
-    // is computed ONCE (checkpointed) and each sweep point is the same
-    // bounded probe join as ann_lsh.
+    // as buckets shrink; this query shows exactly where). Every sweep
+    // point joins the same ground-truth plan and is the same bounded
+    // probe join as ann_lsh.
     "ann_plane_sweep" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val brute = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
@@ -1278,6 +1278,7 @@ object PipelineQueries {
       val emb = Tables.embeddings(s, dir)
       val brute = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
         .select(col("probe_id"), col("neighbor_id"))
+        .once("ann_ivf_cells_sweep.brute") // keeps the nested loop out of the sweep plan
       Seq(4, 8, 16).map { cells =>
         val ivf = Similarity.ivfTopK(emb, col("vec_id") < 10, k = 5,
             cells = cells, nprobe = math.max(1, cells / 4))
@@ -1344,6 +1345,7 @@ object PipelineQueries {
       val ix = CorpusArtifacts.hnswIndex(s, dir)
       val brute = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
         .select(col("probe_id"), col("neighbor_id"))
+        .once("ann_hnsw_beam_sweep.brute") // keeps the nested loop out of the sweep plan
       Seq(4, 8, 16).map { beam =>
         val hw = graft.ops.Hnsw.search(ix, col("vec_id") < 10, k = 5, beam = beam)
           .select(col("probe_id").as("hp"), col("neighbor_id").as("hn"))

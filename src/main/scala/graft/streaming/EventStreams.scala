@@ -1033,7 +1033,7 @@ object EventStreams {
             .filter(col("full"))
             .join(batch.select("doc_id", "source"), "doc_id")
             .select("doc_id", "source", "h")
-            .once("substringIngest.g") // counters AND the store append
+            .shared("substringIngest.g") // counters AND the store append
           val hist = g.join(snapshot, Seq("h"), "left_semi")
             .groupBy("source").agg(count(lit(1)).as("n_hist_dup_starts"))
           val local = g.groupBy("source").agg(count(lit(1)).as("n_grams"))
@@ -1120,9 +1120,10 @@ object EventStreams {
         .write.mode("overwrite").parquet(acctDir)
     })
     landGens(spark, docs, genThreshold(docs), stage) { src =>
-      eachBatch(spark, src, ckpt) { (batch0, bid) =>
-        // one cached copy of the landing text feeds all four extracts
-        val batch = batch0.shared("fold.batch")
+      eachBatch(spark, src, ckpt) { (batch, bid) =>
+        // each extract re-reads the batch's staged files: a checkpoint
+        // of the landing text would be read by the four concurrent
+        // writes at once and so cost one more job per batch
         val st = graft.ops.FunnelStore.extract(batch)
         // compact appends: a landing shard writes a few well-sized
         // files per store, not one file per shuffle partition — the

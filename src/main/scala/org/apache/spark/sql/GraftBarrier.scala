@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Package-private Spark API bridge for [[graft.ops.PlanBarrier]], the
@@ -37,20 +39,26 @@ object GraftBarrier {
     * caching without copy corrupts) and marked for local checkpoint;
     * `eager` computes it now (one job), otherwise the first stage that
     * reads it does. With `keepStats` the leaf carries the source plan's
-    * statistics, constraints and output partitioning, as
-    * `Dataset.localCheckpoint` does; without, it carries DEFAULT
-    * statistics (`spark.sql.defaultSizeInBytes`), so it never
-    * auto-broadcasts statically — correct for loop iterates, and AQE
-    * still converts small shuffle sides to broadcast at runtime. */
+    * constraints and output partitioning, as `Dataset.localCheckpoint`
+    * does, and its statistics: the source plan's estimate when lazy,
+    * the measured row count and size when eager (so an eager loop
+    * iterate does not compound the estimate either). Without, it
+    * carries DEFAULT statistics (`spark.sql.defaultSizeInBytes`), so it
+    * never auto-broadcasts statically — correct for loop iterates, and
+    * AQE still converts small shuffle sides to broadcast at runtime. */
   def checkpoint(df: Dataset[Row], site: String, eager: Boolean,
                  keepStats: Boolean): DataFrame = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
     val rdd = cds.queryExecution.toRdd.map(_.copy()).setName(site)
     rdd.localCheckpoint()
-    if (eager) rdd.count()
-    if (keepStats)
-      classic.Dataset.ofRows(cds.sparkSession,
-        LogicalRDD.fromDataset(rdd, cds, cds.isStreaming))
-    else cds.sparkSession.internalCreateDataFrame(rdd, cds.schema)
+    val rows = if (eager) Some(rdd.count()) else None
+    if (keepStats) {
+      val leaf = LogicalRDD.fromDataset(rdd, cds, cds.isStreaming)
+      classic.Dataset.ofRows(cds.sparkSession, rows.fold(leaf) { n =>
+        val stats = Statistics(
+          EstimationUtils.getOutputSize(leaf.output, BigInt(n)), Some(BigInt(n)))
+        leaf.copy()(cds.sparkSession, Some(stats), Some(leaf.constraints))
+      })
+    } else cds.sparkSession.internalCreateDataFrame(rdd, cds.schema)
   }
 }

@@ -609,7 +609,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     val ex = Dedup.shingleSets(docs, n)
       .select(col("doc_id"), explode(col("sh")).as("s"))
-      .localCheckpoint(false) // feeds df, sizes, prefixes, and the verify
+      .localCheckpoint(true) // feeds df, sizes, prefixes, and the verify
     val df    = ex.groupBy("s").agg(count(lit(1)).as("df"))
     val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val w = Window.partitionBy("doc_id").orderBy(col("df"), col("s"))
@@ -618,7 +618,7 @@ class DedupSpec extends AnyFunSuite {
       .filter(col("rn") <=
         col("n") - expr(s"(n * $tNum + ${tDen - 1}) div $tDen") + 1)
       .select("doc_id", "s")
-      .localCheckpoint(false) // both sides of the candidate self-join
+      .localCheckpoint(true) // both sides of the candidate self-join
     val cands = pre.select(col("doc_id").as("id1"), col("s"))
       .join(pre.select(col("doc_id").as("id2"), col("s")), Seq("s"))
       .filter(col("id1") < col("id2"))
